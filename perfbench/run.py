@@ -1,6 +1,6 @@
 """Rollup-engine benchmark: ``ingest``, ``lifecycle`` and ``query``.
 
-    python3 perfbench/run.py --workload ingest --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload ingest --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout of the repository. The workload's
 inputs are generated from ``--seed`` and written as parquet; the engine
@@ -12,14 +12,15 @@ inputs are generated from ``--seed`` and written as parquet; the engine
    own first operations (checked, not timed). ``setup_s`` = session
    start + median build + preparation + warm-up;
 2. runs the workload's operation in a closed loop for ``--seconds``
-   (at least a few operations), with tracing off;
+   (at least a few operations);
 3. checks every operation's output; a failed check or an error counts
    the operation as failed;
-4. with ``--trace 1``, restarts the session with an uncompressed event
-   log, measures again with every call wrapped in a span, adds the
-   workload's stage-split runs and the driver-side kernel and codec
-   probes, and derives the per-layer metrics (see LAYERS.md); a last
-   untraced phase, run the same way, gives the tracing overhead.
+4. with ``--trace 1``, the session has an uncompressed event log and
+   every measured call is wrapped in a span; the workload's stage-split
+   runs and the driver-side kernel and codec probes follow, and the
+   per-layer metrics are derived from all of them (see LAYERS.md). A
+   last phase restarts the Spark context without the event log and
+   measures again, which gives the tracing overhead.
 
 The last line of standard output is one JSON object: ``correct``,
 ``attempted``, ``failed`` and ``metrics`` (end-to-end metrics without
@@ -102,8 +103,9 @@ def main(argv=None) -> int:
     ctx = common.Ctx(seed=args.seed, work=work, tracer=Tracer())
     try:
         # -- set-up -------------------------------------------------------
+        log_dir = ctx.path("eventlog") if args.trace else None
         t0 = time.perf_counter()
-        ctx.spark = harness.start_spark("perfbench", harness.host_conf(work))
+        ctx.spark = harness.start_spark("perfbench", harness.host_conf(work, log_dir))
         session_s = time.perf_counter() - t0
         builds = []
         for i in range(BUILD_REPS):
@@ -124,8 +126,10 @@ def main(argv=None) -> int:
             "setup": {"session_s": session_s, "build_s": builds,
                       "prepare_s": prepare_s, "warmup_s": warmup_s},
         })
-        # -- measurement, tracing off --------------------------------------
+        # -- measurement ----------------------------------------------------
         ctx.tracer = Tracer()
+        if args.trace:
+            ctx.tracer.attach(ctx.spark.sparkContext)
         with harness.RssSampler() as rss:
             m = wl.measure(ctx, b, args.seconds)
         e2e = end_to_end(m, setup_s, rss.peak_mb)
@@ -133,7 +137,7 @@ def main(argv=None) -> int:
         ctx.record["samples"] = {"op_ms": m.op_ms, "op_walls": m.op_walls}
         metrics = e2e
         if args.trace:
-            metrics, t_att, t_fail = traced(ctx, wl, b, setup_s, args, probes, harness)
+            metrics, t_att, t_fail = traced(ctx, wl, b, m, e2e, args, probes, harness)
             attempted += t_att
             failed += t_fail
     finally:
@@ -156,34 +160,15 @@ def main(argv=None) -> int:
     return 0
 
 
-def _phase(ctx, wl, b, harness, seconds: float, log_dir: str | None = None):
-    """Restart the Spark context (with an event log and span tagging when
-    ``log_dir`` is set), warm its new Python workers, then measure.
-    Returns (warm-up, measurement, peak memory MB)."""
+def traced(ctx, wl, b, m, e2e_traced, args, probes, harness):
+    """After the traced measurement: stage splits, probes, the event log,
+    then an untraced phase for the overhead; returns (per-layer metrics,
+    attempted, failed)."""
+    import eventlog
     from spans import Tracer
 
-    ctx.spark.stop()
-    ctx.spark = harness.start_spark("perfbench", harness.host_conf(ctx.work, log_dir))
-    ctx.tracer = Tracer()
-    warm = wl.measure(ctx, b, 0, min_ops=wl.WARM_OPS)
-    ctx.tracer = Tracer()
-    if log_dir:
-        ctx.tracer.attach(ctx.spark.sparkContext)
-    with harness.RssSampler() as rss:
-        m = wl.measure(ctx, b, seconds)
-    return warm, m, rss.peak_mb
-
-
-def traced(ctx, wl, b, setup_s, args, probes, harness):
-    """The traced phase, then an untraced phase run the same way to
-    measure tracing overhead; returns (per-layer metrics, attempted,
-    failed)."""
-    import eventlog
-
     log_dir = ctx.path("eventlog")
-    warm, m, peak = _phase(ctx, wl, b, harness, args.seconds, log_dir)
     tracer = ctx.tracer
-    e2e_traced = end_to_end(m, setup_s, peak)
     if hasattr(wl, "splits"):
         m.extra["splits"] = wl.splits(ctx, b)
     kern, blocks = probes.kernel_probe(args.seed)
@@ -195,10 +180,14 @@ def traced(ctx, wl, b, setup_s, args, probes, harness):
     layers = wl.layer_metrics(ctx, b, m, rows)
     layers.update(kern)
     layers.update(codec)
-    # the untraced comparison runs after the traced phase, on a JVM at
-    # least as warm, so the overhead is not flattered by JIT warm-up
-    warm2, m2, peak2 = _phase(ctx, wl, b, harness, 0)
-    e2e_plain = end_to_end(m2, setup_s, peak2)
+    # untraced side of the overhead: a fresh context, warmed up the same
+    # way; it runs on a JVM at least as warm as the traced phase had
+    ctx.spark = harness.start_spark("perfbench", harness.host_conf(ctx.work))
+    ctx.tracer = Tracer()
+    warm = wl.measure(ctx, b, 0, min_ops=wl.WARM_OPS)
+    with harness.RssSampler() as rss:
+        plain = wl.measure(ctx, b, 0)
+    e2e_plain = end_to_end(plain, e2e_traced["setup_s"]["value"], rss.peak_mb)
     key = "op_p50_ms"
     layers["trace.overhead_frac"] = e2e_traced[key]["value"] / e2e_plain[key]["value"] - 1.0
     ctx.tracer = tracer
@@ -210,8 +199,8 @@ def traced(ctx, wl, b, setup_s, args, probes, harness):
     units = per_layer_units()
     metrics = {k: {"value": float(layers.get(k, 0.0)), "unit": u} for k, u in units.items()}
     ctx.record["layers_missing"] = sorted(set(units) - set(layers))
-    attempted = warm.attempted + m.attempted + 1 + warm2.attempted + m2.attempted
-    failed = warm.failed + m.failed + (0 if exact else 1) + warm2.failed + m2.failed
+    attempted = 1 + warm.attempted + plain.attempted
+    failed = (0 if exact else 1) + warm.failed + plain.failed
     return metrics, attempted, failed
 
 
