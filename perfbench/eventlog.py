@@ -48,18 +48,12 @@ _PY_METRICS = {
 
 
 def _event_files(log_dir: str) -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(log_dir):
-        for f in files:
-            if not f.startswith(".") and not f.startswith("appstatus"):
-                out.append(os.path.join(root, f))
-    # rolled logs are events_<n>_<app>; order by part number
-    def key(p):
-        base = os.path.basename(p)
-        parts = base.split("_")
-        return (os.path.dirname(p), int(parts[1]) if len(parts) > 2 and parts[1].isdigit() else 0)
-
-    return sorted(out, key=key)
+    """The log file of each application (the benchmark turns rolling
+    off, so there is one file per context)."""
+    return sorted(
+        os.path.join(log_dir, f) for f in os.listdir(log_dir)
+        if not f.startswith(".")  # Hadoop's .crc side files
+    )
 
 
 def _walk_plan(node: dict, acc_map: dict) -> None:

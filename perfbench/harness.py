@@ -15,6 +15,8 @@ import subprocess
 import threading
 import time
 
+RSS_INTERVAL_S = 0.2
+
 
 def nproc() -> int:
     return len(os.sched_getaffinity(0))
@@ -30,8 +32,10 @@ def mem_total_mb() -> int:
 
 def host_conf(work: str, event_log: str | None = None) -> dict[str, str]:
     """Spark settings fitted to this host; ``event_log`` turns on an
-    uncompressed, unrolled event log in that directory."""
-    heap_mb = max(1024, min(4096, mem_total_mb() // 16))
+    uncompressed, unrolled event log in that directory. Without it the
+    log is turned off explicitly: a context restarted in the same JVM
+    would otherwise inherit the first context's setting."""
+    heap_mb = max(1024, min(4096, mem_total_mb() // 8))
     conf = {
         "spark.driver.memory": f"{heap_mb}m",
         # a fixed-size heap: the JVM's share of RSS then depends on the
@@ -48,6 +52,8 @@ def host_conf(work: str, event_log: str | None = None) -> dict[str, str]:
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         })
+    else:
+        conf["spark.eventLog.enabled"] = "false"
     return conf
 
 
@@ -131,8 +137,7 @@ class RssSampler:
     driver JVM and its Python workers), sampled from /proc as the sum of
     their proportional set sizes."""
 
-    def __init__(self, interval: float = 0.2) -> None:
-        self.interval = interval
+    def __init__(self) -> None:
         self.peak_kb = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -142,7 +147,7 @@ class RssSampler:
         while not self._stop.is_set():
             total = sum(_pss_kb(p) for p in [me, *descendants(me)])
             self.peak_kb = max(self.peak_kb, total)
-            self._stop.wait(self.interval)
+            self._stop.wait(RSS_INTERVAL_S)
 
     def __enter__(self):
         self._thread.start()

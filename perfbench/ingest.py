@@ -19,7 +19,7 @@ import time
 import inputs
 from common import LAGS, Ctx, Measured, dir_bytes, expected_windows, fresh_dir, median
 
-N_DOCS = 1000
+N_DOCS = 600
 MIN_OPS = 3
 WARM_OPS = 1
 SPLIT_REPS = 3

@@ -26,6 +26,7 @@ N_SOURCES = 20
 ZIPF_A = 1.2
 MIN_TOK, MAX_TOK = 64, 16384
 AR_KERNEL_LEN = 64
+ID_SEED = 0
 
 _M1 = np.uint64(0x9E3779B97F4A7C15)
 _M2 = np.uint64(0xBF58476D1CE4E5B9)
@@ -48,11 +49,12 @@ def make_sequences(seed: int, n_docs: int) -> dict:
     """Generate the seeded table in memory: per-doc token arrays plus
     the scalar columns, rows in file order (see ``write_sequences``).
 
-    The seed draws the token values, the sources, the doc ids and the
-    row order. Lengths are the fixed log-uniform grid (one per
-    equal-width stratum of log length), so every seed gives the
-    workload the same shape: the same windows per tier, parent groups
-    and chunks, and with it the same amount of work.
+    The seed draws the token values, the sources and the row order.
+    Lengths are the fixed log-uniform grid (one per equal-width stratum
+    of log length) and each length keeps the same doc id on every seed,
+    so every seed gives the workload the same shape: the same windows
+    per tier, parent groups and chunks, and the same docs in each hash
+    partition and salt bucket (both are hashed from ``doc_id``).
     """
     rng = np.random.default_rng(seed)
     u = (np.arange(n_docs) + 0.5) / n_docs
@@ -75,9 +77,9 @@ def make_sequences(seed: int, n_docs: int) -> dict:
         tokens.append(
             np.clip(np.round(VOCAB / 2 + scale * x), 0, VOCAB - 1).astype("<i4")
         )
-    ids = rng.permutation(n_docs)
+    ids = np.random.default_rng(ID_SEED).permutation(n_docs)
     return {
-        "doc_id": [f"d{seed:06d}_{int(k):06d}" for k in ids],
+        "doc_id": [f"d{int(k):06d}" for k in ids],
         "tokens": tokens,
         "n_tok": lengths,
         "source": [f"src{int(s):02d}" for s in src_idx],

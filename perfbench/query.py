@@ -1,11 +1,14 @@
 """``query``: a closed loop with one client over the stores a
 maintenance pass leaves behind.
 
-Set-up builds the lifecycle workload's store and runs one pass over it.
-The client then sends a seeded mix, cycling through eight slots so
-every class gets the same share on every seed (each slot alternates
-between two docs of fixed length rank, and a timed loop ends on a
-whole period of sixteen requests):
+Set-up builds a store the way the lifecycle workload does, from
+``N_DOCS`` docs, and runs one maintenance pass over it. The store is
+smaller than lifecycle's: a request's latency is mostly fixed per-job
+cost, and a full-size store would put a second full pass into every
+query set-up.
+The client then sends a seeded mix, cycling through the twelve slots
+of ``SLOTS`` so every class keeps its share on every seed (each slot
+names a doc by length rank, and a timed loop ends on a whole period):
 
 - ``range``: a per-doc window-range read of the chunked tier-0 store,
   filtered on the partition columns so only the chunks in range open;
@@ -14,6 +17,12 @@ whole period of sixteen requests):
 - ``residual``: ``rollup_at_resolution`` at B = 32 or 64 (a residual
   cascade merge on top of tier 1);
 - ``decode``: one document from ``read_compressed_store``.
+
+Range and direct reads take about a third of the time of residual
+merges and decodes. With the four classes in equal shares the median
+request fell in the gap between the two groups, and moved by a quarter
+from run to run; residual merges and decodes are therefore two thirds
+of the mix, which puts the median inside the slower group.
 
 Each distinct request's answer is checked after the loop against a
 recompute from the plain tier-0 table. Loads the read side of codec and
@@ -29,19 +38,20 @@ import numpy as np
 import lifecycle
 from common import FEATURES, GROUP, Ctx, Measured, fresh_dir, same_values
 
-N_DOCS = lifecycle.N_DOCS
-MIN_OPS = 32
-SLOTS = [("range", 0), ("direct", 16), ("residual", 32), ("decode", 0),
-         ("range", 0), ("direct", 256), ("residual", 64), ("decode", 0)]
-WARM_OPS = len(SLOTS)
-PERIOD = 2 * len(SLOTS)
+N_DOCS = 24
+# (kind, B, length rank of the doc among those long enough for it)
+SLOTS = [("range", 0, 0.25), ("residual", 32, 0.25), ("decode", 0, 0.25),
+         ("direct", 16, 0.25), ("residual", 64, 0.25), ("decode", 0, 0.75),
+         ("range", 0, 0.75), ("residual", 32, 0.75), ("decode", 0, 0.25),
+         ("direct", 256, 0.75), ("residual", 64, 0.75), ("decode", 0, 0.75)]
+PERIOD = len(SLOTS)
+WARM_OPS = PERIOD // 2  # every class once
+MIN_OPS = PERIOD
 RANGE_WINDOWS = 32
 
 
 def build(ctx: Ctx, d: str) -> dict:
-    b = lifecycle.build(ctx, d)
-    b["dir"] = d
-    return b
+    return lifecycle.build_store(ctx, d, N_DOCS)
 
 
 def prepare(ctx: Ctx, b: dict) -> None:
@@ -62,23 +72,23 @@ def prepare(ctx: Ctx, b: dict) -> None:
 def _requests(ctx: Ctx, b: dict):
     """Endless request stream: (kind, doc, a, z, B).
 
-    Each slot alternates between two docs at fixed length ranks (the
-    first and third quartile of the docs long enough for it), so every
-    seed asks for the same amount of work in every period of
-    ``PERIOD`` requests; the seed decides the doc ids and values behind
-    those ranks and where each range starts."""
+    Each slot names a doc by a fixed length rank (the first or third
+    quartile of the docs long enough for it), so every seed asks for
+    the same amount of work in every period of ``PERIOD`` requests; the
+    seed decides the values behind those ranks and where each range
+    starts."""
     rng = np.random.default_rng(ctx.seed + 7)
     counts = {doc: len(g) for doc, g in b["t0"].items()}
     by_len = sorted(counts, key=lambda d: (counts[d], d))
     picks = {}
-    for kind, B in SLOTS:
+    for kind, B, q in SLOTS:
         need = b["keep_from"] + RANGE_WINDOWS if kind == "range" else B
         ok = [d for d in by_len if counts[d] >= need]
-        picks[kind, B] = [ok[int(q * len(ok))] for q in (0.25, 0.75)]
+        picks[kind, B, q] = ok[int(q * len(ok))]
     i = 0
     while True:
-        kind, B = SLOTS[i % len(SLOTS)]
-        doc = picks[kind, B][(i // len(SLOTS)) % 2]
+        kind, B, q = SLOTS[i % PERIOD]
+        doc = picks[kind, B, q]
         i += 1
         if kind == "range":
             a = int(rng.integers(b["keep_from"], counts[doc] - RANGE_WINDOWS + 1))
@@ -153,8 +163,8 @@ def _check(b: dict, req, rows: list) -> bool:
 def measure(ctx: Ctx, b: dict, seconds: float, min_ops: int = MIN_OPS) -> Measured:
     m = Measured()
     answers: dict = {}
-    m.extra["kinds"] = {k: [] for k, _ in SLOTS}
-    m.extra["spans"] = {k: [] for k, _ in SLOTS}
+    m.extra["kinds"] = {k: [] for k, _, _ in SLOTS}
+    m.extra["spans"] = {k: [] for k, _, _ in SLOTS}
     stream = _requests(ctx, b)
     deadline = time.perf_counter() + seconds
     # a timed loop stops on a whole period, so every run serves the same

@@ -9,18 +9,19 @@ inputs are generated from ``--seed`` and written as parquet; the engine
 1. set-up: starts a host-fitted Spark session, builds the inputs and
    fresh stores ``BUILD_REPS`` times, runs any one-off preparation (the
    query workload's maintenance pass) and warms up with the workload's
-   own first operations (checked, not timed). ``setup_s`` = session
+   own first operations (checked, not timed; lifecycle warms up on a
+   small store made in preparation). ``setup_s`` = session
    start + median build + preparation + warm-up;
 2. runs the workload's operation in a closed loop for ``--seconds``
-   (at least a few operations);
+   (at least the workload's ``MIN_OPS`` operations);
 3. checks every operation's output; a failed check or an error counts
    the operation as failed;
 4. with ``--trace 1``, the session has an uncompressed event log and
    every measured call is wrapped in a span; the workload's stage-split
    runs and the driver-side kernel and codec probes follow, and the
    per-layer metrics are derived from all of them (see LAYERS.md). A
-   last phase restarts the Spark context without the event log and
-   measures again, which gives the tracing overhead.
+   last phase restarts the Spark context with the event log turned off
+   and measures again, which gives the tracing overhead.
 
 The last line of standard output is one JSON object: ``correct``,
 ``attempted``, ``failed`` and ``metrics`` (end-to-end metrics without
@@ -117,7 +118,7 @@ def main(argv=None) -> int:
             wl.prepare(ctx, b)
         prepare_s = time.perf_counter() - t0
         t0 = time.perf_counter()
-        warm = wl.measure(ctx, b, 0, min_ops=wl.WARM_OPS)
+        warm = wl.measure(ctx, b.get("warm", b), 0, min_ops=wl.WARM_OPS)
         warmup_s = time.perf_counter() - t0
         setup_s = session_s + common.median(builds) + prepare_s + warmup_s
         ctx.record.update({
@@ -149,7 +150,7 @@ def main(argv=None) -> int:
         json.dump(ctx.record, f, indent=1, default=str)
     brief = {k: v for k, v in ctx.record.items() if k != "trace"}
     if "trace" in ctx.record:
-        brief["trace"] = {k: ctx.record["trace"][k] for k in ("untraced", "traced")}
+        brief["trace"] = {k: ctx.record["trace"][k] for k in ("untraced", "untraced_conf", "traced")}
     print(json.dumps({"record": brief}, default=str))
     print(json.dumps({
         "correct": failed == 0 and not ctx.problems,
@@ -184,7 +185,7 @@ def traced(ctx, wl, b, m, e2e_traced, args, probes, harness):
     # way; it runs on a JVM at least as warm as the traced phase had
     ctx.spark = harness.start_spark("perfbench", harness.host_conf(ctx.work))
     ctx.tracer = Tracer()
-    warm = wl.measure(ctx, b, 0, min_ops=wl.WARM_OPS)
+    warm = wl.measure(ctx, b.get("warm", b), 0, min_ops=wl.WARM_OPS)
     with harness.RssSampler() as rss:
         plain = wl.measure(ctx, b, 0)
     e2e_plain = end_to_end(plain, e2e_traced["setup_s"]["value"], rss.peak_mb)
@@ -193,6 +194,7 @@ def traced(ctx, wl, b, m, e2e_traced, args, probes, harness):
     ctx.tracer = tracer
     ctx.record["trace"] = {
         "untraced": {k: v["value"] for k, v in e2e_plain.items()},
+        "untraced_conf": harness.effective_conf(ctx.spark),
         "traced": {k: v["value"] for k, v in e2e_traced.items()},
         "eventlog_rows": list(rows.values()),
     }

@@ -1,6 +1,6 @@
 """Spans around the benchmark's calls into the engine.
 
-A span records name, start, end, parent span and free-form attributes.
+A span records name, start, end and parent span.
 Spans are kept in memory and written once, when the run ends. When a
 SparkContext is attached, entering a span also sets the job description
 and a ``perfbench.span`` local property, so every Spark job the call
@@ -35,12 +35,11 @@ class Tracer:
         self._sc.setLocalProperty(SPAN_PROPERTY, str(rec["id"]) if rec else None)
 
     @contextmanager
-    def span(self, name: str, **attrs):
+    def span(self, name: str):
         rec = {
             "id": len(self.spans) + 1,
             "name": name,
             "parent": self._stack[-1]["id"] if self._stack else None,
-            "attrs": attrs,
             "start": time.perf_counter(),
             "end": None,
         }

@@ -1,8 +1,9 @@
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/steady.py --workload query --seeds 1-10 [--seconds 10]
+    python3 perfbench/steady.py --workload query --seeds 1-10
 
-Runs the benchmark once per seed (tracing off), then prints, per
+Runs the benchmark once per seed (tracing off, ``run_seconds`` from
+BENCHMARK.json), then prints, per
 metric, the median, the quartiles and the spread: the distance between
 the first and third quartile (``statistics.quantiles(values, n=4)``)
 as a share of the median, next to the metric's bound from
@@ -28,16 +29,14 @@ def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", default="1-10")
-    p.add_argument("--seconds", type=int, default=None)
     args = p.parse_args()
     with open("BENCHMARK.json") as f:
         bench = json.load(f)
-    secs = args.seconds or bench["run_seconds"]
     values: dict[str, list[float]] = {}
     for s in seeds(args.seeds):
         out = subprocess.run(
             [sys.executable, os.path.join("perfbench", "run.py"), "--workload", args.workload,
-             "--seed", str(s), "--seconds", str(secs), "--trace", "0"],
+             "--seed", str(s), "--seconds", str(bench["run_seconds"]), "--trace", "0"],
             capture_output=True, text=True, check=True,
         ).stdout.strip().splitlines()[-1]
         res = json.loads(out)
