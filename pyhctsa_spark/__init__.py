@@ -7,7 +7,7 @@ Built Spark-first over tables of pre-tokenized sequences
 - tiered continuous aggregates (1x -> 16x -> 256x) of per-window summary
   statistics (mean, variance, spread, autocorrelation-at-lag, burstiness,
   and a wide kernel library), computed in vectorized numpy inside
-  Arrow-batched ``mapInPandas`` / ``applyInPandas`` — zero per-row Python;
+  Arrow-batched ``mapInArrow`` / ``applyInArrow`` — zero per-row Python;
 - algebraic (ALG) merge states so higher tiers are *merged*, not
   recomputed — the cascade is shuffle-free when raw rows are present and
   a groupBy-merge when only the materialized store remains;

@@ -122,24 +122,6 @@ def gaussian_kde_eval(
     return dens
 
 
-def find_peaks_simple(
-    x: np.ndarray, min_height: float | None = None
-) -> tuple[np.ndarray, np.ndarray]:
-    """Local maxima (strictly greater than both neighbors; plateaus take
-    the first index), MATLAB findpeaks-like. Returns (indices, heights)."""
-    x = np.asarray(x, dtype=np.float64)
-    if len(x) < 3:
-        return np.array([], dtype=np.int64), np.array([])
-    d = np.diff(x)
-    idx = np.flatnonzero((d[:-1] > 0) & (d[1:] <= 0)) + 1
-    # drop plateau continuations
-    keep = x[idx] > x[idx - 1]
-    idx = idx[keep]
-    if min_height is not None:
-        idx = idx[x[idx] >= min_height]
-    return idx, x[idx]
-
-
 def xcorr(x: np.ndarray, y: np.ndarray, normed: bool = True,
           maxlags: int | None = 10) -> tuple[np.ndarray, np.ndarray]:
     """Cross-correlation coefficients at lags -maxlags..maxlags

@@ -130,13 +130,6 @@ def merge_groups(regs: np.ndarray, group: int) -> np.ndarray:
     return regs[: k2 * group].reshape(k2, group, M).max(axis=1)
 
 
-def merge_all(regs: np.ndarray) -> np.ndarray:
-    """(k, M) -> (M,): one union register array."""
-    if regs.shape[0] == 0:
-        return np.zeros(M, dtype=np.uint8)
-    return regs.max(axis=0)
-
-
 def finalize(regs: np.ndarray) -> dict[str, np.ndarray]:
     """(k, M) registers -> integer-exact summary + the estimate.
 

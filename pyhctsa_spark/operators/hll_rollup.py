@@ -40,10 +40,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from pyhctsa_spark.functions import hll_state as HLL
-from pyhctsa_spark.operators.rollup import _var_width_view
+from pyhctsa_spark.operators.rollup import _var_width_view, store_cascade
 
 HLL_SCHEMA = (
     "doc_id string, source string, tier int, window_idx long, n long, "
@@ -152,55 +152,23 @@ def hll_cascade_from_store(tier_df: DataFrame, group: int = 16) -> DataFrame:
     """Tier k+1 from a materialized tier-k HLL table alone — register
     max, BIT-IDENTICAL to the direct computation, no raw revisit.
 
-    Physical shape: repartition(doc_id, tier) -> in-partition sort ->
-    ONE Arrow pass over sorted key-runs (operators/seq_runs) — per-key
-    ``applyInPandas`` pays ~4 ms of batch assembly per group, which
-    measured 6x the total kernel cost at 1,300 groups; the run walker
-    amortizes it to one stream. Within a doc all parent windows merge
-    in one vectorized ``maximum.reduceat``. A parent is complete iff
-    all ``group`` child windows are present (window_idx is unique per
-    doc/tier, so presence == count); incomplete or gapped parents emit
-    nothing, matching the direct path's trailing-partial drop."""
-    from pyhctsa_spark.operators.seq_runs import map_sorted_runs
+    Physical shape: rollup.store_cascade, the one shape of every
+    store-side cascade — one ``applyInArrow`` call per (doc, tier)
+    merges every complete parent of the run in one register-max
+    ``merge_groups``; a parent with a missing or duplicated child
+    emits nothing, matching the direct path's trailing-partial drop."""
 
-    def run(tbl: pa.Table) -> pa.Table | None:
-        widx = tbl.column("window_idx").to_numpy(zero_copy_only=False)
-        parent = widx // group
-        cut = np.flatnonzero(np.r_[True, parent[1:] != parent[:-1]])
-        seg_len = np.diff(np.r_[cut, len(parent)])
-        full = seg_len == group
-        if not full.any():
-            return None
-        regs = HLL.unpack_blobs(tbl.column("hll_bin").to_pylist())
-        merged = np.maximum.reduceat(regs, cut, axis=0)[full]
-        n = np.add.reduceat(
-            tbl.column("n").to_numpy(zero_copy_only=False), cut
-        )[full]
-        fin = HLL.finalize(merged)
-        k = merged.shape[0]
-        doc = tbl.column("doc_id")[0].as_py()
-        src = tbl.column("source")[0].as_py()
-        tier = int(tbl.column("tier")[0].as_py()) + 1
-        return pa.Table.from_arrays(
-            [
-                pa.array([doc] * k, type=pa.string()),
-                pa.array([src] * k, type=pa.string()),
-                pa.array(np.full(k, tier, dtype=np.int32)),
-                pa.array(parent[cut][full].astype(np.int64)),
-                pa.array(n.astype(np.int64)),
-                pa.array(fin["hll_zeros"].astype(np.int32)),
-                pa.array(fin["hll_denom"]),
-                pa.array(fin["est"]),
-                HLL.pack_arrow(merged),
-            ],
-            schema=_PA_SCHEMA,
+    def merge(kept, parents, doc_id, source, tier):
+        regs = HLL.merge_groups(
+            HLL.unpack_blobs(kept.column("hll_bin").to_pylist()), group
         )
+        block = _tier_block(doc_id, source, tier, 0, regs)
+        block["window_idx"] = parents
+        block["n"] = kept.column("n").to_numpy().reshape(-1, group).sum(1)
+        return pa.Table.from_batches([_blocks_to_batch([block])])
 
-    return map_sorted_runs(
-        tier_df.select([f.name for f in _PA_SCHEMA]),
-        by=["doc_id", "tier"], order=["window_idx"],
-        run_fn=run, out_schema=HLL_SCHEMA,
-    )
+    return store_cascade(tier_df, _PA_SCHEMA.names, group, merge,
+                         _PA_SCHEMA)
 
 
 def _hash_struct_udf():

@@ -51,30 +51,6 @@ def salted_repartition(
     )
 
 
-def source_skew_stats(df: DataFrame) -> list[dict]:
-    """Per-source row/token counts — the lineage-side skew report that
-    motivates the salting factors."""
-    rows = (
-        df.groupBy("source")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum("n_tok").alias("tokens"),
-        )
-        .orderBy(F.desc("tokens"))
-        .collect()
-    )
-    total = sum(r["tokens"] for r in rows) or 1
-    return [
-        {
-            "source": r["source"],
-            "rows": r["rows"],
-            "tokens": r["tokens"],
-            "token_share": round(r["tokens"] / total, 4),
-        }
-        for r in rows
-    ]
-
-
 def rebalance_degenerate(df: DataFrame, min_bytes: int = 8 << 20) -> DataFrame:
     """Round-robin repartition an input whose scan collapsed to fewer
     partitions than cores — the unsplittable-file / single-row-group

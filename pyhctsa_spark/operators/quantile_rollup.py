@@ -29,12 +29,11 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from pyhctsa_spark.functions import hist_state as H
-from pyhctsa_spark.operators.rollup import _var_width_view
+from pyhctsa_spark.operators.rollup import _var_width_view, store_cascade
 
 QROLLUP_SCHEMA = (
     "doc_id string, source string, tier int, window_idx long, n long, "
@@ -214,53 +213,18 @@ def quantile_cascade_from_store(
     """Tier k+1 from a materialized tier-k hist table alone — EXACT for
     every output column (quantiles, mode, distinct), no raw revisit.
 
-    Physical shape: repartition(doc_id, tier) -> in-partition sort ->
-    ONE Arrow pass over sorted key-runs (operators/seq_runs) — the
-    previous per-(doc, parent-window) ``applyInPandas`` paid ~4 ms of
-    batch assembly per 16-row group, measured ~6x the total kernel cost
-    (the same pathology fixed in hll_rollup.hll_cascade_from_store).
-    Tier participates in the run key, so multi-tier input (the whole
-    materialized store) cascades each tier independently. A parent is
-    complete iff all ``group`` child windows are present (window_idx
-    unique per doc/tier ⇒ presence == count); incomplete parents emit
-    nothing — the direct path's trailing-partial drop."""
-    from pyhctsa_spark.operators.seq_runs import map_sorted_runs
+    Physical shape: rollup.store_cascade, the one shape of every
+    store-side cascade — one ``applyInArrow`` call per (doc, tier)
+    merges every complete parent of the run in one histogram
+    ``merge_groups``; a parent with a missing or duplicated child
+    emits nothing (the direct path's trailing-partial drop)."""
 
-    cols = list(_OUT_COLS)
-
-    def run(tbl: pa.Table) -> pa.Table | None:
-        widx = tbl.column("window_idx").to_numpy(zero_copy_only=False)
-        parent = widx // group
-        cut = np.flatnonzero(np.r_[True, parent[1:] != parent[:-1]])
-        seg_len = np.diff(np.r_[cut, len(parent)])
-        full = seg_len == group
-        if not full.any():
-            return None
-        keep = np.repeat(full, seg_len)
-        state = H.unpack_blobs(
-            [b for b, k in zip(tbl.column("hist_bin").to_pylist(), keep)
-             if k]
+    def merge(kept, parents, doc_id, source, tier):
+        merged = H.merge_groups(
+            H.unpack_blobs(kept.column("hist_bin").to_pylist()), group
         )
-        merged = H.merge_groups(state, group)
-        block = _tier_block(
-            tbl.column("doc_id")[0].as_py(),
-            tbl.column("source")[0].as_py(),
-            int(tbl.column("tier")[0].as_py()) + 1,
-            merged,
-        )
-        block["window_idx"] = parent[cut][full].astype(np.int64)
-        arrays = []
-        for c in cols:
-            if c in ("doc_id", "source"):
-                arrays.append(pa.array(block[c], type=pa.string()))
-            elif c == "hist_bin":
-                arrays.append(H.pack_arrow(merged))
-            else:
-                arrays.append(pa.array(block[c]))
-        return pa.Table.from_arrays(arrays, schema=_PA_SCHEMA)
+        block = _tier_block(doc_id, source, tier, merged)
+        block["window_idx"] = parents
+        return pa.Table.from_batches([_assemble([block])])
 
-    return map_sorted_runs(
-        tier_df.select(cols),
-        by=["doc_id", "tier"], order=["window_idx"],
-        run_fn=run, out_schema=QROLLUP_SCHEMA,
-    )
+    return store_cascade(tier_df, _OUT_COLS, group, merge, _PA_SCHEMA)

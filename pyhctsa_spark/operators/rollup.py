@@ -18,8 +18,10 @@ Two physical strategies for the same logical computation:
    (profiled: pandas block assembly cost ~4x the actual feature math).
 
 2. ``cascade_from_store``: the retention path — raw is gone, only a
-   materialized tier table remains. Tier k+1 = groupBy(doc_id,
-   parent_window) + applyInPandas merge of stored states. ALG features
+   materialized tier table remains. Tier k+1 = groupBy(doc_id, tier) +
+   ONE ``applyInArrow`` call per (doc, tier) that merges every complete
+   parent window's stored states at once (``store_cascade``, the shape
+   the quantile and HLL store cascades share). ALG features
    (mean/variance/spread_std/ac*_td/burstiness) are exact; HOL features
    are NULL (documented engine semantics for late cascades).
 
@@ -38,9 +40,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from pyhctsa_spark.functions import kernels as K
 from pyhctsa_spark.functions import stats_state as S
@@ -177,9 +179,11 @@ def _binary_array(mat: np.ndarray) -> pa.Array:
 
 
 def _assemble_arrow(blocks: list[dict], schema: pa.Schema = _PA_SCHEMA,
-                    n_feat: int = 0) -> pa.RecordBatch:
+                    n_feat: int = 0, nan_as_null: bool = False
+                    ) -> pa.RecordBatch:
     """Concatenate per-doc-tier column blocks into ONE RecordBatch built
-    straight from numpy — no pandas block manager in the hot path."""
+    straight from numpy — no pandas block manager in the hot path.
+    ``nan_as_null`` writes NaN doubles as NULL."""
     cols = []
     for c in _OUT_COLS:
         parts = [b[c] for b in blocks]
@@ -191,31 +195,13 @@ def _assemble_arrow(blocks: list[dict], schema: pa.Schema = _PA_SCHEMA,
         elif c == _STATE_COL:
             cols.append(_binary_array(np.concatenate(parts, axis=0)))
         else:
-            cols.append(pa.array(np.concatenate(parts)))
+            cols.append(pa.array(np.concatenate(parts),
+                                 from_pandas=nan_as_null))
     if n_feat:
         M = np.concatenate([b["_featmat"] for b in blocks], axis=0)
         for j in range(n_feat):
             cols.append(pa.array(np.ascontiguousarray(M[:, j])))
     return pa.RecordBatch.from_arrays(cols, schema=schema)
-
-
-def _assemble_pandas(blocks: list[dict]) -> pd.DataFrame:
-    """pandas variant for the (small-group) applyInPandas cascade path."""
-    out = {}
-    for c in _OUT_COLS:
-        parts = [b[c] for b in blocks]
-        if c in _LIST_COLS:
-            vals: list = []
-            for p in parts:
-                vals.extend(p)
-            out[c] = vals
-        elif c == _STATE_COL:
-            out[c] = [
-                row.tobytes() for row in np.concatenate(parts, axis=0)
-            ]
-        else:
-            out[c] = np.concatenate(parts)
-    return pd.DataFrame(out)
 
 
 def _var_width_view(col: pa.Array) -> tuple[np.ndarray, np.ndarray, bool]:
@@ -404,35 +390,66 @@ def rollup_tiers(
 # Retention-path cascade over the materialized store (no raw values)
 # ---------------------------------------------------------------------------
 
-def _make_cascade_fn(group: int, lags: list[int]):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("window_idx")
-        k = len(pdf)
-        state: S.State = {
-            "n": pdf["n"].to_numpy(np.int64),
-            "s1": pdf["s1"].to_numpy(np.float64),
-            "s2": pdf["s2"].to_numpy(np.float64),
-            **unpack_states(pdf["state_bin"].tolist(), lags),
-        }
-        # child windows must be contiguous and complete
-        widx = pdf["window_idx"].to_numpy(np.int64)
-        if k != group or np.any(np.diff(widx) != 1):
-            return pd.DataFrame(columns=_OUT_COLS)
-        merged = S.merge_groups(state, group, lags)
-        out = _assemble_pandas([
-            _tier_cols(
-                pdf["doc_id"].iloc[0],
-                pdf["source"].iloc[0],
-                int(pdf["tier"].iloc[0]) + 1,
-                merged,
-                lags,
-                None,
-            )
-        ])
-        out["window_idx"] = widx[0] // group
-        return out[_OUT_COLS]
+def complete_parents(
+    widx: np.ndarray, group: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Complete parent windows of one (doc, tier) run of child
+    ``window_idx`` values sorted ascending.
 
-    return fn
+    Parent p is complete iff its children are exactly
+    ``p*group … p*group+group-1``, each present once; a parent with a
+    missing or duplicated child emits nothing (the direct path's
+    trailing-partial drop). Returns (parent indices, row mask selecting
+    the children of complete parents, ``group`` consecutive rows each).
+    """
+    parent = widx // group
+    cut = np.flatnonzero(np.r_[True, parent[1:] != parent[:-1]])
+    seg_len = np.diff(np.r_[cut, len(widx)])
+    dup = np.r_[False, widx[1:] == widx[:-1]]
+    full = (seg_len == group) & ~np.logical_or.reduceat(dup, cut)
+    return parent[cut][full], np.repeat(full, seg_len)
+
+
+def store_cascade(
+    tier_df: DataFrame,
+    cols: list[str],
+    group: int,
+    merge,
+    schema: pa.Schema,
+) -> DataFrame:
+    """The physical shape every store-side cascade shares:
+    ``groupBy(doc_id, tier).applyInArrow`` — one Arrow call per (doc,
+    tier), never one per parent window. Tier is part of the key, so
+    multi-tier input cascades each tier independently. A store bucketed
+    by doc_id (store.write_tier_bucketed) satisfies the grouping with no
+    Exchange; any other input pays one hashpartitioning on the doc keys.
+
+    Each call sorts its run by ``window_idx``, keeps the children of the
+    complete parents (``complete_parents``) and hands them to
+    ``merge(kept, parents, doc_id, source, tier + 1)``, which returns
+    the tier k+1 rows as a ``pa.Table`` matching ``schema``.
+    """
+    empty = schema.empty_table()
+
+    def run(tbl):
+        tbl = tbl.sort_by("window_idx")
+        parents, keep = complete_parents(
+            tbl.column("window_idx").to_numpy(), group
+        )
+        if not len(parents):
+            return empty
+        return merge(
+            tbl.filter(keep), parents,
+            tbl.column("doc_id")[0].as_py(),
+            tbl.column("source")[0].as_py(),
+            tbl.column("tier")[0].as_py() + 1,
+        )
+
+    return (
+        tier_df.select(*cols)
+        .groupBy("doc_id", "tier")
+        .applyInArrow(run, schema=from_arrow_schema(schema))
+    )
 
 
 def cascade_from_store(
@@ -441,21 +458,31 @@ def cascade_from_store(
     """Compute tier k+1 from a materialized tier-k table alone.
 
     Exact for ALG features; HOL columns (spread_iqr, ac1_fourier) are
-    NULL. This is the continuous-aggregate/retention path: groupBy
-    (doc_id, window_idx // group) — one shuffle keyed on fine-grained doc
-    ids, so no source-level skew; AQE handles stragglers.
+    NULL. This is the continuous-aggregate/retention path: one
+    ``store_cascade`` pass keyed on (doc_id, tier) — fine-grained doc
+    ids, so no source-level skew — whose per-(doc, tier) call merges
+    all complete parents in one ``merge_groups``.
     """
     lags = lags or DEFAULT_LAGS
-    keyed = tier_df.withColumn(
-        "parent_idx", F.floor(F.col("window_idx") / F.lit(group)).cast("long")
-    )
-    # tier participates in the grouping: multi-tier input cascades each
-    # tier independently instead of mixing tiers into one group whose
-    # contiguity check silently drops everything
-    return (
-        keyed.groupBy("doc_id", "tier", "parent_idx")
-        .applyInPandas(_make_cascade_fn(group, lags), schema=ROLLUP_SCHEMA)
-    )
+
+    def merge(kept, parents, doc_id, source, tier):
+        state: S.State = {
+            "n": kept.column("n").to_numpy(),
+            "s1": kept.column("s1").to_numpy(),
+            "s2": kept.column("s2").to_numpy(),
+            **unpack_states(kept.column("state_bin").to_pylist(), lags),
+        }
+        block = _tier_cols(doc_id, source, tier,
+                           S.merge_groups(state, group, lags), lags, None)
+        block["window_idx"] = parents
+        # NaN -> NULL: the documented NULL HOL columns of a late cascade
+        return pa.Table.from_batches(
+            [_assemble_arrow([block], nan_as_null=True)]
+        )
+
+    cols = ["doc_id", "source", "tier", "window_idx", "n", "s1", "s2",
+            "state_bin"]
+    return store_cascade(tier_df, cols, group, merge, _PA_SCHEMA)
 
 
 def rollup_at_resolution(

@@ -81,13 +81,6 @@ def build_inverted_index(
     )
 
 
-def corpus_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """1-row ``(n_docs, avgdl)`` — the BM25 normalization constants."""
-    return _doc_words(df, text_col, id_col).agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-
-
 def bm25_topk(
     df: DataFrame,
     query_terms: list[str],

@@ -8,15 +8,18 @@ retention-tier layout — long-lived tiers compress ~5-20x vs plain
 doubles while staying random-accessible per doc.
 
 ``write_compressed_store`` groups by (doc_id, tier) — fine-grained keys,
-so the shuffle has no source-level skew. ``read_compressed_store``
-restores the plain per-window table (ALG + HOL feature columns).
+so the shuffle has no source-level skew — and encodes each group in one
+``applyInArrow`` call. ``read_compressed_store`` restores the plain
+per-window table (ALG + HOL feature columns).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from pyhctsa_spark.functions.codec import (
     dod_decode,
@@ -30,42 +33,46 @@ FEATURES = [
     "ac1_td", "ac2_td", "ac1_fourier", "burst_b", "burst_b_kim",
 ]
 
-_BLOCK_SCHEMA = (
-    "doc_id string, source string, tier int, n_windows int, n long, "
-    "widx_bin binary, "
-    + ", ".join(f"{f}_bin binary" for f in FEATURES)
-    + ", raw_bytes long, comp_bytes long"
+_BLOCK_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("source", pa.string()), ("tier", pa.int32()),
+     ("n_windows", pa.int32()), ("n", pa.int64()), ("widx_bin", pa.binary())]
+    + [(f"{f}_bin", pa.binary()) for f in FEATURES]
+    + [("raw_bytes", pa.int64()), ("comp_bytes", pa.int64())]
 )
 
 
-def _encode_block(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("window_idx")
-    widx = pdf["window_idx"].to_numpy(np.int64)
+def _encode_block(tbl: pa.Table) -> pa.Table:
+    """One (doc_id, tier) group -> one encoded block row."""
+    tbl = tbl.sort_by("window_idx")
+    widx = tbl.column("window_idx").to_numpy()
     blobs = {"widx_bin": dod_encode(widx)}
     raw = widx.nbytes
     for f in FEATURES:
-        vals = pdf[f].to_numpy(np.float64)
+        vals = tbl.column(f).to_numpy()  # NULL -> NaN
         blobs[f"{f}_bin"] = gorilla_encode(vals)
         raw += vals.nbytes
     comp = sum(len(b) for b in blobs.values())
-    return pd.DataFrame(
+    return pa.Table.from_pylist(
         [{
-            "doc_id": pdf["doc_id"].iloc[0],
-            "source": pdf["source"].iloc[0],
-            "tier": int(pdf["tier"].iloc[0]),
-            "n_windows": len(pdf),
-            "n": int(pdf["n"].iloc[0]),
+            "doc_id": tbl.column("doc_id")[0].as_py(),
+            "source": tbl.column("source")[0].as_py(),
+            "tier": tbl.column("tier")[0].as_py(),
+            "n_windows": tbl.num_rows,
+            "n": tbl.column("n")[0].as_py(),
             **blobs,
             "raw_bytes": raw,
             "comp_bytes": comp,
-        }]
+        }],
+        schema=_BLOCK_SCHEMA,
     )
 
 
 def write_compressed_store(tier_df: DataFrame, path: str) -> None:
+    cols = ["doc_id", "source", "tier", "window_idx", "n", *FEATURES]
     (
-        tier_df.groupBy("doc_id", "tier")
-        .applyInPandas(_encode_block, schema=_BLOCK_SCHEMA)
+        tier_df.select(*cols)
+        .groupBy("doc_id", "tier")
+        .applyInArrow(_encode_block, schema=from_arrow_schema(_BLOCK_SCHEMA))
         .write.mode("overwrite")
         .parquet(path)
     )
@@ -78,12 +85,12 @@ def write_tier_bucketed(
 
     HashPartitioning(doc_id) satisfies the clustered distribution of
     every downstream per-doc operation, so reads from this table feed
-    ``cascade_from_store`` (groupBy doc_id, parent_idx) and any per-doc
-    rollup/aggregation with ZERO shuffle — the Exchange disappears from
-    the plan (pytest-enforced). This is the continuous-aggregate layout
-    at warehouse scale: each retention cascade is a bucket-local
-    map-side aggregation; size num_buckets to the cluster (e.g. 2-4x
-    executor count).
+    the store cascades (``rollup.store_cascade``: groupBy doc_id, tier)
+    and any per-doc rollup/aggregation with ZERO shuffle — the Exchange
+    disappears from the plan (pytest-enforced). This is the
+    continuous-aggregate layout at warehouse scale: each retention
+    cascade is a bucket-local map-side aggregation; size num_buckets to
+    the cluster (e.g. 2-4x executor count).
     """
     (
         tier_df.write.mode("overwrite")

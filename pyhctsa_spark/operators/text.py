@@ -234,21 +234,6 @@ def contamination_check(
     )
 
 
-BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def token_count_bpe(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Tokenizer-approximate token budget: counts GPT-style
-    pre-tokenizer units (letter runs, digit runs, individual
-    non-alphanumeric marks) — a much closer proxy for real tokenizer
-    output than whitespace splitting. Mirrors the driver-oracled
-    doc_token_count_bpe query."""
-    return df.withColumn(
-        "n_bpe_tokens",
-        F.regexp_count(F.col(text_col), F.lit(BPE_TOKEN_PATTERN)).cast("long"),
-    )
-
-
 QF_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for"]
 
 

@@ -111,10 +111,6 @@ def make_doc(doc_index: int) -> tuple[str, np.ndarray, str]:
     return doc_id, tokens, source
 
 
-def doc_index_of(doc_id: str) -> int:
-    return int(doc_id[3:])
-
-
 def _gen_batches(binary: bool):
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -189,16 +185,6 @@ def gapped_sequences_df(spark, n_docs: int, gap_frac: float = 0.03, partitions: 
     parts = partitions or max(8, spark.sparkContext.defaultParallelism)
     base = spark.range(0, n_docs, 1, parts)
     return base.mapInPandas(_gen_gapped_batches(gap_frac), schema=GAPPED_SCHEMA)
-
-
-def write_sequences(
-    spark, path: str, n_docs: int, partitions: int | None = None, binary: bool = True
-) -> None:
-    """Materialize the sequences table as parquet partitioned by source
-    (the Iceberg layout stand-in: partition pruning on `source`)."""
-    sequences_df(spark, n_docs, partitions, binary=binary).write.mode(
-        "overwrite"
-    ).partitionBy("source").parquet(path)
 
 
 CHUNK_SCHEMA = (

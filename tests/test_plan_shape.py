@@ -34,7 +34,7 @@ def test_cascade_plan_single_exchange_on_doc_keys(spark):
     df = sequences_df(spark, 10, partitions=2, binary=True)
     t0 = rollup_tiers(df, n_tiers=1)
     plan = _plan(cascade_from_store(t0))
-    # exactly one shuffle, keyed on (doc_id, parent_idx) — no source keys
+    # exactly one shuffle, keyed on (doc_id, tier) — no source keys
     assert plan.count("Exchange hashpartitioning") == 1
     assert "doc_id" in plan.split("Exchange hashpartitioning", 1)[1].splitlines()[0]
 
@@ -73,35 +73,29 @@ def test_pipeline_join_strategies(spark):
     assert "Exchange hashpartitioning(nid" not in ivf_plan
 
 
-def test_bucketed_store_cascade_has_no_exchange(spark, tmp_path_factory):
+def test_bucketed_store_cascade_has_no_exchange(
+    spark, tmp_path_factory, cascade_family
+):
     """Tier-0 materialized with write_tier_bucketed (bucketBy doc_id)
-    feeds the retention cascade with ZERO shuffle: HashPartitioning
-    (doc_id) satisfies the (doc_id, parent_idx) clustered distribution.
-    Values must equal the plain-store cascade bit-for-bit."""
+    feeds each family's retention cascade with ZERO shuffle:
+    HashPartitioning(doc_id) satisfies the (doc_id, tier) clustered
+    distribution. Values must equal the plain-store cascade
+    bit-for-bit."""
     from pyhctsa_spark.operators.store import read_tier_table, write_tier_bucketed
 
+    tier0, cascade = cascade_family
     path = str(tmp_path_factory.mktemp("bstore") / "t0")
     df = sequences_df(spark, 12, partitions=3, binary=True)
-    t0 = rollup_tiers(df, n_tiers=1)
+    t0 = tier0(df)
     spark.sql("DROP TABLE IF EXISTS _t0_bucketed_test")
     write_tier_bucketed(t0, "_t0_bucketed_test", path, num_buckets=4)
     back = read_tier_table(spark, "_t0_bucketed_test")
-    plan = _plan(cascade_from_store(back))
-    assert "Exchange" not in plan
+    assert "Exchange" not in _plan(cascade(back))
     # equality vs the plain (shuffled) path
-    a = (
-        cascade_from_store(back)
-        .orderBy("doc_id", "window_idx")
-        .select("doc_id", "window_idx", "n", "mean", "variance", "ac1_td")
-        .toPandas()
-    )
-    b = (
-        cascade_from_store(t0)
-        .orderBy("doc_id", "window_idx")
-        .select("doc_id", "window_idx", "n", "mean", "variance", "ac1_td")
-        .toPandas()
-    )
-    assert a.equals(b)
+    keys = ["doc_id", "tier", "window_idx"]
+    a = cascade(back).orderBy(*keys).toPandas()
+    b = cascade(t0).orderBy(*keys).toPandas()
+    assert len(a) > 0 and a.equals(b)
     spark.sql("DROP TABLE IF EXISTS _t0_bucketed_test")
 
 

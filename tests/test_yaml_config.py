@@ -1,17 +1,60 @@
 """YAML-config compatibility: the reference's own Configurations/*.yaml
 drive the engine directly (the 'switch from the reference' story)."""
 
+import os
 import warnings
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from ref_parity import REF_ROOT
 
-BASIC = "/root/reference/pyhctsa/Configurations/basic.yaml"
+BASIC = f"{REF_ROOT}/Configurations/basic.yaml"
 
 pytestmark = pytest.mark.slow
 
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REF_ROOT),
+    reason="reference tree not present — these tests read its "
+           "Configurations/*.yaml",
+)
 
+
+def test_yaml_dialect_on_inline_config(tmp_path):
+    """The YAML dialect without the reference tree: the ``!range``
+    inclusive tag, ordered_args label mangling, stub entries skipped,
+    unknown operations reported as unmapped."""
+    from pyhctsa_spark.plans.yaml_config import (
+        load_yaml_operations,
+        yaml_feature_set,
+    )
+
+    cfg = tmp_path / "inline.yaml"
+    cfg.write_text(
+        "Correlation:\n"
+        "  AutoCorr:\n"
+        "    base_name: AC\n"
+        "    ordered_args: [tau]\n"
+        "    configs:\n"
+        "      - tau: !range [1, 3]\n"
+        "  NoSuchOperation:\n"
+        "    configs: [{}]\n"
+        "Medical:\n"
+        "  HRVClassic:\n"
+    )
+    ops, unmapped = load_yaml_operations(str(cfg))
+    assert unmapped == ["Correlation.NoSuchOperation"]
+    assert len(ops) == 1
+    assert ops[0].configs == [{"tau": [1, 2, 3]}]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        fs = yaml_feature_set(str(cfg))
+    assert [f.label for f in fs.features] == ["AC_1", "AC_2", "AC_3"]
+    y = np.random.default_rng(1).standard_normal(300)
+    assert all(np.isfinite(f(y)) for f in fs.features)
+
+
+@needs_reference
 def test_basic_yaml_fully_mapped():
     from pyhctsa_spark.plans.yaml_config import load_yaml_operations
 
@@ -20,19 +63,21 @@ def test_basic_yaml_fully_mapped():
     assert len(ops) == 95  # every operation in basic.yaml
 
 
+@needs_reference
 def test_all_reference_configs_map():
     import glob
 
     from pyhctsa_spark.plans.yaml_config import load_yaml_operations
 
     total = 0
-    for path in sorted(glob.glob("/root/reference/pyhctsa/Configurations/*.yaml")):
+    for path in sorted(glob.glob(f"{REF_ROOT}/Configurations/*.yaml")):
         ops, unmapped = load_yaml_operations(path)
         assert unmapped == [], f"{path}: {unmapped}"
         total += len(ops)
     assert total >= 190  # every configured operation across all 17 files
 
 
+@needs_reference
 def test_basic_yaml_feature_set_runs():
     from pyhctsa_spark.plans.yaml_config import yaml_feature_set
 
@@ -59,6 +104,7 @@ def test_basic_yaml_feature_set_runs():
     assert failing == []
 
 
+@needs_reference
 def test_yaml_feature_set_distributed(spark):
     from pyhctsa_spark.operators.features import extract_features, make_feature_counters
     from pyhctsa_spark.plans.yaml_config import yaml_feature_set
