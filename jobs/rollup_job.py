@@ -24,6 +24,8 @@ import sys
 
 
 def parse_args(argv):
+    from pyhctsa_spark.operators.rollup import FAMILIES
+
     p = argparse.ArgumentParser(description="pyhctsa_spark tiered rollup job")
     p.add_argument("--input", required=True,
                    help="parquet directory of sequences (doc_id, tokens|tokens_bin, n_tok, source[, tok_checksum])")
@@ -37,7 +39,7 @@ def parse_args(argv):
     p.add_argument("--buckets", type=int, default=8,
                    help="salt buckets = units of restartable work")
     p.add_argument("--family", default="alg",
-                   choices=["alg", "quantile", "hll", "fused"],
+                   choices=list(FAMILIES),
                    help="tier aggregate family (moments / exact order "
                         "statistics / HLL distinct / all three fused)")
     p.add_argument("--gapped", action="store_true",

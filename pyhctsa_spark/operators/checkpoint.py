@@ -23,7 +23,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyhctsa_spark.operators.rollup import make_counters, rollup_tiers
+from pyhctsa_spark.operators.rollup import FAMILIES, make_counters, walk_tiers
 
 
 class RollupJob:
@@ -37,7 +37,7 @@ class RollupJob:
         lags: list[int] | None = None,
         family: str = "alg",
     ) -> None:
-        if family not in ("alg", "quantile", "hll", "fused"):
+        if family not in FAMILIES:
             raise ValueError(f"unknown rollup family {family!r}")
         self.store_path = store_path
         self.n_buckets = n_buckets
@@ -90,41 +90,10 @@ class RollupJob:
             counters = make_counters(spark)
             t0 = time.perf_counter()
             part = bucketed.where(F.col("_bucket") == b).drop("_bucket")
-            # any tier family runs under the same bucket manifest; the
-            # per-row lineage counters are the ALG kernel's surface
-            if self.family == "alg":
-                out = rollup_tiers(
-                    part, window=self.window, group=self.group,
-                    n_tiers=self.n_tiers, lags=self.lags,
-                    counters=counters,
-                )
-            elif self.family == "quantile":
-                from pyhctsa_spark.operators.quantile_rollup import (
-                    rollup_quantile_tiers,
-                )
-
-                out = rollup_quantile_tiers(
-                    part, window=self.window, group=self.group,
-                    n_tiers=self.n_tiers,
-                )
-            elif self.family == "hll":
-                from pyhctsa_spark.operators.hll_rollup import (
-                    rollup_hll_tiers,
-                )
-
-                out = rollup_hll_tiers(
-                    part, window=self.window, group=self.group,
-                    n_tiers=self.n_tiers,
-                )
-            else:
-                from pyhctsa_spark.operators.fused_rollup import (
-                    rollup_fused_tiers,
-                )
-
-                out = rollup_fused_tiers(
-                    part, window=self.window, group=self.group,
-                    n_tiers=self.n_tiers, lags=self.lags,
-                )
+            out = walk_tiers(
+                part, FAMILIES[self.family](self.lags), window=self.window,
+                group=self.group, n_tiers=self.n_tiers, counters=counters,
+            )
             dest = os.path.join(self.store_path, "tier_data", f"bucket={b}")
             out.write.mode("overwrite").parquet(dest)
             wall = time.perf_counter() - t0
@@ -137,8 +106,6 @@ class RollupJob:
                 {
                     "bucket": b,
                     "family": self.family,
-                    # per-row lineage counters are the ALG kernel's
-                    # surface; other families record zeros here
                     "rows_read": counters["rows_read"].value,
                     "windows_emitted": counters["windows_emitted"].value,
                     "checksum_mismatches": counters["checksum_mismatches"].value,

@@ -8,9 +8,10 @@ per-family math on the windows in hand is cheap by comparison. Running
 the ALG, quantile and HLL rollups separately re-pays the scan three
 times for three outputs over identical windows. The fused pass pays it
 once — bench.py records fused wall vs the three-pass sum (the ratio IS
-the scan-dominance measurement) — and the plan stays
-``Scan → Project → MapInArrow → Sink`` with zero Exchange, identical to
-the flagship (pytest-enforced).
+the scan-dominance measurement). It is the tier walker
+(``rollup.walk_tiers``) given all three families (``rollup.FAMILIES
+["fused"]``), so the plan stays ``Scan → Project → MapInArrow → Sink``
+with zero Exchange, identical to the flagship (pytest-enforced).
 
 Exactness contract: every family's tier k+1 is a pure state merge
 (moment sums add, histogram counts add, registers max), so each fused
@@ -20,127 +21,16 @@ rollup_hll_tiers in tests, and value-oracled end-to-end
 (rollup_fused: one DuckDB query recomputes all three families per
 window from raw events).
 
-The fused output carries finalized columns only (no state blobs): the
-specialized operators remain the store/cascade path; this is the
-one-pass ANSWER surface.
+The fused output carries finalized columns only (no IQR, no state
+blobs): the single-family rollups, whose outputs carry the state
+blobs, feed the store cascades; this is the one-pass ANSWER surface.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from pyhctsa_spark.functions import hist_state as H
-from pyhctsa_spark.functions import hll_state as HLL
-from pyhctsa_spark.functions import stats_state as S
-from pyhctsa_spark.operators.rollup import _var_width_view
-
-FUSED_SCHEMA = (
-    "doc_id string, source string, tier int, window_idx long, n long, "
-    "mean double, variance double, spread_std double, ac1_td double, "
-    "burst_b double, burst_b_kim double, "
-    "n_distinct long, mode_tok int, p50 int, "
-    "hll_zeros int, hll_denom long, est_distinct double"
-)
-
-_PA_SCHEMA = pa.schema([
-    ("doc_id", pa.string()), ("source", pa.string()), ("tier", pa.int32()),
-    ("window_idx", pa.int64()), ("n", pa.int64()),
-    ("mean", pa.float64()), ("variance", pa.float64()),
-    ("spread_std", pa.float64()), ("ac1_td", pa.float64()),
-    ("burst_b", pa.float64()), ("burst_b_kim", pa.float64()),
-    ("n_distinct", pa.int64()), ("mode_tok", pa.int32()),
-    ("p50", pa.int32()),
-    ("hll_zeros", pa.int32()), ("hll_denom", pa.int64()),
-    ("est_distinct", pa.float64()),
-])
-
-_OUT_COLS = [f.name for f in _PA_SCHEMA]
-
-
-def _tier_block(doc_id, source, tier, alg, hist, regs, lags) -> dict:
-    fa = S.finalize(alg, lags)
-    fh = H.finalize(hist)
-    fl = HLL.finalize(regs)
-    k = regs.shape[0]
-    return {
-        "doc_id": [doc_id] * k,
-        "source": [source] * k,
-        "tier": np.full(k, tier, dtype=np.int32),
-        "window_idx": np.arange(k, dtype=np.int64),
-        "n": alg["n"],
-        "mean": fa["mean"],
-        "variance": fa["variance"],
-        "spread_std": fa["spread_std"],
-        "ac1_td": fa.get("ac1_td", np.full(k, np.nan)),
-        "burst_b": fa["burst_b"],
-        "burst_b_kim": fa["burst_b_kim"],
-        "n_distinct": fh["n_distinct"].astype(np.int64),
-        "mode_tok": fh["mode_tok"].astype(np.int32),
-        "p50": fh["p50"].astype(np.int32),
-        "hll_zeros": fl["hll_zeros"].astype(np.int32),
-        "hll_denom": fl["hll_denom"],
-        "est_distinct": fl["est"],
-    }
-
-
-def _assemble(blocks: list[dict]) -> pa.RecordBatch:
-    cols = []
-    for c in _OUT_COLS:
-        if c in ("doc_id", "source"):
-            vals: list = []
-            for b in blocks:
-                vals.extend(b[c])
-            cols.append(pa.array(vals, type=pa.string()))
-        else:
-            cols.append(pa.array(np.concatenate([b[c] for b in blocks])))
-    return pa.RecordBatch.from_arrays(cols, schema=_PA_SCHEMA)
-
-
-def _make_fn(window: int, group: int, n_tiers: int, lags: list[int]):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            names = rb.schema.names
-            doc_ids = rb.column(names.index("doc_id")).to_pylist()
-            sources = rb.column(names.index("source")).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-            FLUSH_ROWS = 1 << 16
-            blocks: list[dict] = []
-            n_acc = 0
-            for r in range(rb.num_rows):
-                raw = flat[offs[r]: offs[r + 1]]
-                toks = (raw.view("<i4") if is_bin else raw).astype(np.int64)
-                if len(toks) < window:
-                    continue
-                k0 = len(toks) // window
-                Yi = toks[: k0 * window].reshape(k0, window)
-                alg = S.states_from_windows(Yi.astype(np.float64), lags)
-                hist = H.hist_from_windows(Yi)
-                regs = HLL.registers_from_windows(Yi)
-                blocks.append(_tier_block(doc_ids[r], sources[r], 0,
-                                          alg, hist, regs, lags))
-                n_acc += k0
-                for tier in range(1, n_tiers):
-                    alg = S.merge_groups(alg, group, lags)
-                    hist = H.merge_groups(hist, group)
-                    regs = HLL.merge_groups(regs, group)
-                    if regs.shape[0] == 0:
-                        break
-                    blocks.append(_tier_block(doc_ids[r], sources[r],
-                                              tier, alg, hist, regs, lags))
-                    n_acc += regs.shape[0]
-                if n_acc >= FLUSH_ROWS:
-                    yield _assemble(blocks)
-                    blocks = []
-                    n_acc = 0
-            if blocks:
-                yield _assemble(blocks)
-
-    return fn
+from pyhctsa_spark.operators.rollup import FAMILIES, walk_tiers
 
 
 def rollup_fused_tiers(
@@ -151,9 +41,4 @@ def rollup_fused_tiers(
     lags: list[int] | None = None,
 ) -> DataFrame:
     """Single-pass fused tier rollup (module docstring)."""
-    lags = lags or [1]
-    needed = [c for c in ("doc_id", "source", "tokens_bin", "tokens")
-              if c in df.columns]
-    return df.select(*needed).mapInArrow(
-        _make_fn(window, group, n_tiers, lags), schema=FUSED_SCHEMA
-    )
+    return walk_tiers(df, FAMILIES["fused"](lags), window, group, n_tiers)

@@ -1,21 +1,21 @@
 """Approximate-distinct tier rollup: HyperLogLog register state per
 window, carried through the retention cascade.
 
-Same physical strategies as the flagship ALG rollup (operators/rollup.py)
-and the exact-quantile rollup (operators/quantile_rollup.py); the new
-logical column is an approximate distinct-token count whose per-window
-state is FIXED-SIZE (2^p bytes) regardless of window length or
+The family itself (``rollup.HLL_FAMILY``) lives next to the tier walker
+and the store cascade it runs on, in operators/rollup.py, like the ALG
+and exact-quantile families. Its logical column is an approximate
+distinct-token count whose per-window state is FIXED-SIZE (2^p bytes) regardless of window length or
 vocabulary — the state to carry when the token domain is open (hashed
 n-grams, ids, urls) and the exact histogram's min(n, |vocab|) blobs
 would grow without bound at coarse tiers.
 
-1. ``rollup_hll_tiers``: ONE shuffle-free ``mapInArrow`` pass. Tier 0
-   registers come from the tokens in hand; tier k+1 is the elementwise
+1. ``rollup_hll_tiers``: the tier walker (``rollup.walk_tiers``), ONE
+   shuffle-free ``mapInArrow`` pass. Tier 0 registers come from the tokens in hand; tier k+1 is the elementwise
    MAX of tier-k registers — exact, associative, idempotent — so the
    plan stays Scan -> Project -> MapInArrow -> Sink with zero Exchange.
 
-2. ``hll_cascade_from_store``: the retention path — raw tokens are
-   gone, only the materialized tier table with its ``hll_bin`` column
+2. ``hll_cascade_from_store``: the retention path
+   (``rollup.store_cascade``) — raw tokens are gone, only the materialized tier table with its ``hll_bin`` column
    remains. Register max makes the cascaded tier BIT-IDENTICAL to the
    direct computation (asserted in tests), the defining property of the
    sketch: a 100 TB store can be re-tiered forever without raw revisit.
@@ -43,96 +43,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from pyhctsa_spark.functions import hll_state as HLL
-from pyhctsa_spark.operators.rollup import _var_width_view, store_cascade
-
-HLL_SCHEMA = (
-    "doc_id string, source string, tier int, window_idx long, n long, "
-    "hll_zeros int, hll_denom long, est_distinct double, hll_bin binary"
+from pyhctsa_spark.operators.rollup import (
+    HLL_FAMILY,
+    _var_width_view,
+    store_cascade,
+    walk_tiers,
 )
-
-_PA_SCHEMA = pa.schema([
-    ("doc_id", pa.string()), ("source", pa.string()), ("tier", pa.int32()),
-    ("window_idx", pa.int64()), ("n", pa.int64()),
-    ("hll_zeros", pa.int32()), ("hll_denom", pa.int64()),
-    ("est_distinct", pa.float64()), ("hll_bin", pa.binary()),
-])
-
-
-def _blocks_to_batch(blocks: list[dict]) -> pa.RecordBatch:
-    cols: list[pa.Array] = []
-    for name in (f.name for f in _PA_SCHEMA):
-        if name in ("doc_id", "source"):
-            vals: list = []
-            for b in blocks:
-                vals.extend(b[name])
-            cols.append(pa.array(vals, type=pa.string()))
-        elif name == "hll_bin":
-            cols.append(HLL.pack_arrow(
-                np.concatenate([b["_regs"] for b in blocks])
-            ))
-        else:
-            cols.append(pa.array(np.concatenate([b[name] for b in blocks])))
-    return pa.RecordBatch.from_arrays(cols, schema=_PA_SCHEMA)
-
-
-def _tier_block(doc_id: str, source: str, tier: int, wlen: int,
-                regs: np.ndarray) -> dict:
-    fin = HLL.finalize(regs)
-    k = regs.shape[0]
-    return {
-        "doc_id": [doc_id] * k,
-        "source": [source] * k,
-        "tier": np.full(k, tier, dtype=np.int32),
-        "window_idx": np.arange(k, dtype=np.int64),
-        "n": np.full(k, wlen, dtype=np.int64),
-        "hll_zeros": fin["hll_zeros"].astype(np.int32),
-        "hll_denom": fin["hll_denom"],
-        "est_distinct": fin["est"],
-        "_regs": regs,
-    }
-
-
-def _make_fn(window: int, group: int, n_tiers: int):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            names = rb.schema.names
-            doc_ids = rb.column(names.index("doc_id")).to_pylist()
-            sources = rb.column(names.index("source")).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-            FLUSH_ROWS = 1 << 16
-            blocks: list[dict] = []
-            n_acc = 0
-            for r in range(rb.num_rows):
-                raw = flat[offs[r]: offs[r + 1]]
-                toks = (raw.view("<i4") if is_bin else raw).astype(np.int64)
-                if len(toks) < window:
-                    continue
-                k0 = len(toks) // window
-                regs = HLL.registers_from_windows(
-                    toks[: k0 * window].reshape(k0, window)
-                )
-                blocks.append(_tier_block(doc_ids[r], sources[r], 0,
-                                          window, regs))
-                n_acc += k0
-                wlen = window
-                for tier in range(1, n_tiers):
-                    regs = HLL.merge_groups(regs, group)
-                    wlen *= group
-                    if regs.shape[0] == 0:
-                        break
-                    blocks.append(_tier_block(doc_ids[r], sources[r],
-                                              tier, wlen, regs))
-                    n_acc += regs.shape[0]
-                if n_acc >= FLUSH_ROWS:
-                    yield _blocks_to_batch(blocks)
-                    blocks = []
-                    n_acc = 0
-            if blocks:
-                yield _blocks_to_batch(blocks)
-
-    return fn
-
 
 def rollup_hll_tiers(
     df: DataFrame,
@@ -141,11 +57,7 @@ def rollup_hll_tiers(
     n_tiers: int = 3,
 ) -> DataFrame:
     """Single-pass approximate-distinct tier rollup (module docstring)."""
-    needed = [c for c in ("doc_id", "source", "tokens_bin", "tokens")
-              if c in df.columns]
-    return df.select(*needed).mapInArrow(
-        _make_fn(window, group, n_tiers), schema=HLL_SCHEMA
-    )
+    return walk_tiers(df, [HLL_FAMILY], window, group, n_tiers)
 
 
 def hll_cascade_from_store(tier_df: DataFrame, group: int = 16) -> DataFrame:
@@ -158,17 +70,7 @@ def hll_cascade_from_store(tier_df: DataFrame, group: int = 16) -> DataFrame:
     ``merge_groups``; a parent with a missing or duplicated child
     emits nothing, matching the direct path's trailing-partial drop."""
 
-    def merge(kept, parents, doc_id, source, tier):
-        regs = HLL.merge_groups(
-            HLL.unpack_blobs(kept.column("hll_bin").to_pylist()), group
-        )
-        block = _tier_block(doc_id, source, tier, 0, regs)
-        block["window_idx"] = parents
-        block["n"] = kept.column("n").to_numpy().reshape(-1, group).sum(1)
-        return pa.Table.from_batches([_blocks_to_batch([block])])
-
-    return store_cascade(tier_df, _PA_SCHEMA.names, group, merge,
-                         _PA_SCHEMA)
+    return store_cascade(tier_df, HLL_FAMILY, group)
 
 
 def _hash_struct_udf():

@@ -2,12 +2,13 @@
 typed metadata, processed by Arrow-batched pandas UDFs.
 
 The Spark-side plumbing — schema, partitioning, UDF signatures, batch
-shapes — is real and tested. The codec step itself is STUBBED: the
-image/audio libraries are not in this container, so ``decode_fn``
-defaults to a deterministic fake decoder (hash-seeded pseudo-pixels /
-samples with the declared shape); passing ``use_real_codecs=True``
-raises NotImplementedError at the exact point where Pillow/torchaudio
-would be called on a real cluster.
+shapes — is real and tested. The default decoder is a deterministic
+stand-in (hash-seeded pseudo-pixels / samples with the declared shape)
+for plumbing tests; ``use_real_codecs=True`` decodes through the codec
+registry of operators/codecs.py — in-repo pure-numpy codecs (WAV, PNM,
+BMP, PNG, GIF, JPEG, MJPEG AVI, FLAC, WebP) plus Pillow / soundfile /
+pyav adapters where those libraries are installed — and raises
+NotImplementedError for a container no registered codec recognizes.
 """
 
 from __future__ import annotations

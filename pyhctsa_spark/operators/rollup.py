@@ -3,7 +3,11 @@
 Two physical strategies for the same logical computation:
 
 1. ``rollup_tiers``: ONE shuffle-free Arrow-native ``mapInArrow`` pass
-   computes tier 0 AND the 16x / 256x tiers. Every window of a doc lives
+   computes tier 0 AND the 16x / 256x tiers. It runs on ``walk_tiers``,
+   the one tier walker of every family (ALG, exact quantile, HLL, fused):
+   the walker decodes tokens, bounds giant documents, loops the tiers,
+   flushes, counts lineage and assembles Arrow; a ``Family`` supplies
+   only its state functions and columns (``FAMILIES`` by name). Every window of a doc lives
    inside its input row, so the tier cascade needs no shuffle at all:
    tier k+1 is produced by MERGING tier-k ALG states
    (functions/stats_state.py) in-kernel. HOL features (hazen IQR,
@@ -21,7 +25,7 @@ Two physical strategies for the same logical computation:
    materialized tier table remains. Tier k+1 = groupBy(doc_id, tier) +
    ONE ``applyInArrow`` call per (doc, tier) that merges every complete
    parent window's stored states at once (``store_cascade``, the shape
-   the quantile and HLL store cascades share). ALG features
+   and row assembly the quantile and HLL store cascades share). ALG features
    (mean/variance/spread_std/ac*_td/burstiness) are exact; HOL features
    are NULL (documented engine semantics for late cascades).
 
@@ -37,13 +41,17 @@ window * group**t.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from pyhctsa_spark.functions import hist_state as H
+from pyhctsa_spark.functions import hll_state as HLL
 from pyhctsa_spark.functions import kernels as K
 from pyhctsa_spark.functions import stats_state as S
 from pyhctsa_spark.functions.gapfill import gap_fill
@@ -54,76 +62,51 @@ DEFAULT_GROUP = 16
 DEFAULT_LAGS = [1, 2]
 # Per-row segment bound (tokens): a giant document is processed in
 # coarsest-tier-aligned segments of at most this many tokens, so one
-# pathological row can't blow worker memory (see _make_rollup_fn).
+# pathological row can't blow worker memory (see walk_tiers).
 _SEG_TOKENS = 1 << 22
+# Output-side memory bound: the walker flushes a RecordBatch whenever
+# the accumulated window count passes this, instead of materializing a
+# whole input batch's output at once. A 10k-row Arrow batch of long docs
+# can expand to >10M output rows (GBs per worker x 32 workers = OOM,
+# observed); the input batch stays bounded by the scan's partition bytes.
+_FLUSH_ROWS = 1 << 16
 
-ROLLUP_SCHEMA = (
-    "doc_id string, source string, tier int, window_idx long, n long, "
-    "mean double, variance double, spread_std double, spread_iqr double, "
-    "ac1_td double, ac2_td double, ac1_fourier double, "
-    "burst_b double, burst_b_kim double, "
-    "s1 double, s2 double, state_bin binary"
-)
-
-_OUT_COLS = [
-    "doc_id", "source", "tier", "window_idx", "n",
-    "mean", "variance", "spread_std", "spread_iqr",
-    "ac1_td", "ac2_td", "ac1_fourier", "burst_b", "burst_b_kim",
-    "s1", "s2", "state_bin",
-]
+_KEY_FIELDS = [("doc_id", pa.string()), ("source", pa.string()),
+               ("tier", pa.int32()), ("window_idx", pa.int64())]
 
 
-def _tier_cols(
-    doc_id: str,
-    source: str,
-    tier: int,
-    state: S.State,
-    lags: list[int],
-    Y_raw: np.ndarray | None,
-    feature_set=None,
-    widx0: int = 0,
-) -> dict:
-    """One tier's output columns for one doc as numpy arrays (no pandas
-    objects in the hot loop). ``Y_raw`` present -> HOL features computed;
-    else NULL (store-cascade path). A compiled FeatureSet (plans/registry)
-    contributes one extra double column per label, computed per raw
-    window — the registry generates the tier struct schema (SURVEY §1.2).
+class Family(NamedTuple):
+    """One mergeable aggregate family, as the tier walker and the store
+    cascade see it.
+
+    - ``dtype``: element type of the windows ``from_windows`` reads.
+    - ``fields``: every output column the family supplies, in order.
+    - ``from_windows``: (k, window) matrix -> per-window states.
+    - ``merge_groups``: (states, group) -> one state per ``group``
+      consecutive windows; a trailing partial group is dropped.
+    - ``columns``: (states, names, raw) -> dict covering ``names``;
+      ``raw()`` returns the tier's raw windows and is None on the store
+      path, where no raw values remain.
+    - ``store_cols`` / ``from_store``: the stored columns and the
+      pa.Table -> states rebuild of the store cascade.
+    - ``pack``: blob column -> (per-block parts -> Arrow array); every
+      other column is concatenated.
     """
-    fin = S.finalize(state, lags)
-    k = len(state["n"])
-    iqr = K.iqr_hazen_2d(Y_raw) if Y_raw is not None else np.full(k, np.nan)
-    # ac1_fourier comes from the merge state (see stats_state.finalize) —
-    # exact algebra, no FFT pass over raw values
-    ac1_f = fin.get("ac1_fourier", np.full(k, np.nan))
-    out = {
-        "doc_id": [doc_id] * k,
-        "source": [source] * k,
-        "tier": np.full(k, tier, dtype=np.int32),
-        "window_idx": np.arange(widx0, widx0 + k, dtype=np.int64),
-        "n": state["n"],
-        "mean": fin["mean"],
-        "variance": fin["variance"],
-        "spread_std": fin["spread_std"],
-        "spread_iqr": iqr,
-        "ac1_td": fin.get("ac1_td", np.full(k, np.nan)),
-        "ac2_td": fin.get("ac2_td", np.full(k, np.nan)),
-        "ac1_fourier": ac1_f,
-        "burst_b": fin["burst_b"],
-        "burst_b_kim": fin["burst_b_kim"],
-        "s1": state["s1"],
-        "s2": state["s2"],
-        # packed merge state: [sxy(len(lags)) | head(tau_max) | tail(tau_max)]
-        # float64s per row -> ONE binary column (parquet/Arrow handle it
-        # as a memcpy; list<double> columns measured ~8x slower to write)
-        "state_bin": np.hstack([state["sxy"], state["head"], state["tail"]]),
-    }
-    if feature_set is not None:
-        if Y_raw is not None:
-            M, _ = feature_set.compute_matrix(Y_raw)
-        else:
-            M = np.full((k, len(feature_set.columns)), np.nan)
-        out["_featmat"] = M
-    return out
+
+    dtype: type
+    fields: list
+    from_windows: Callable
+    merge_groups: Callable
+    columns: Callable
+    store_cols: tuple
+    from_store: Callable
+    pack: dict
+
+
+def _only(family: Family, names: str) -> Family:
+    """``family`` restricted to the space-separated output columns."""
+    keep = names.split()
+    return family._replace(fields=[f for f in family.fields if f[0] in keep])
 
 
 def unpack_states(blobs, lags: list[int]) -> S.State | None:
@@ -139,33 +122,6 @@ def unpack_states(blobs, lags: list[int]) -> S.State | None:
     }
 
 
-_LIST_COLS = ("doc_id", "source")
-_STATE_COL = "state_bin"
-
-_PA_BASE_FIELDS = [
-    ("doc_id", pa.string()), ("source", pa.string()), ("tier", pa.int32()),
-    ("window_idx", pa.int64()), ("n", pa.int64()), ("mean", pa.float64()),
-    ("variance", pa.float64()), ("spread_std", pa.float64()),
-    ("spread_iqr", pa.float64()), ("ac1_td", pa.float64()),
-    ("ac2_td", pa.float64()), ("ac1_fourier", pa.float64()),
-    ("burst_b", pa.float64()), ("burst_b_kim", pa.float64()),
-    ("s1", pa.float64()), ("s2", pa.float64()),
-    ("state_bin", pa.binary()),
-]
-_PA_SCHEMA = pa.schema(_PA_BASE_FIELDS)
-
-
-def _schemas_for(feature_set):
-    """(ddl, arrow schema, feature column list) for an optional
-    registry FeatureSet extending the tier struct."""
-    if feature_set is None:
-        return ROLLUP_SCHEMA, _PA_SCHEMA, []
-    cols = list(feature_set.columns)
-    ddl = ROLLUP_SCHEMA + ", " + ", ".join(f"`{c}` double" for c in cols)
-    schema = pa.schema(_PA_BASE_FIELDS + [(c, pa.float64()) for c in cols])
-    return ddl, schema, cols
-
-
 def _binary_array(mat: np.ndarray) -> pa.Array:
     """(k, w) float64 matrix -> Arrow binary column of w*8-byte rows,
     built from raw buffers (no per-row bytes objects)."""
@@ -178,29 +134,182 @@ def _binary_array(mat: np.ndarray) -> pa.Array:
     )
 
 
-def _assemble_arrow(blocks: list[dict], schema: pa.Schema = _PA_SCHEMA,
-                    n_feat: int = 0, nan_as_null: bool = False
-                    ) -> pa.RecordBatch:
-    """Concatenate per-doc-tier column blocks into ONE RecordBatch built
+_ALG_FIELDS = [
+    ("n", pa.int64()), ("mean", pa.float64()), ("variance", pa.float64()),
+    ("spread_std", pa.float64()), ("spread_iqr", pa.float64()),
+    ("ac1_td", pa.float64()), ("ac2_td", pa.float64()),
+    ("ac1_fourier", pa.float64()), ("burst_b", pa.float64()),
+    ("burst_b_kim", pa.float64()), ("s1", pa.float64()),
+    ("s2", pa.float64()), ("state_bin", pa.binary()),
+]
+
+
+def alg_family(lags: list[int], feature_set=None) -> Family:
+    """ALG moment states (functions/stats_state.py). The HOL columns —
+    hazen IQR and, for a compiled registry FeatureSet (plans/registry),
+    one double column per label — are computed per tier from the raw
+    windows, still in hand in the walker; the store path, which has no
+    raw windows, writes a NaN IQR."""
+    feat = list(feature_set.columns) if feature_set is not None else []
+
+    def columns(state, names, raw):
+        fin = S.finalize(state, lags)
+        nan = np.full(len(state["n"]), np.nan)
+        Y = raw() if raw is not None and ("spread_iqr" in names or feat) else None
+        out = {
+            "n": state["n"],
+            "mean": fin["mean"],
+            "variance": fin["variance"],
+            "spread_std": fin["spread_std"],
+            "ac1_td": fin.get("ac1_td", nan),
+            "ac2_td": fin.get("ac2_td", nan),
+            # ac1_fourier comes from the merge state (see
+            # stats_state.finalize) — exact algebra, no FFT pass
+            "ac1_fourier": fin.get("ac1_fourier", nan),
+            "burst_b": fin["burst_b"],
+            "burst_b_kim": fin["burst_b_kim"],
+            "s1": state["s1"],
+            "s2": state["s2"],
+        }
+        if "spread_iqr" in names:
+            out["spread_iqr"] = nan if Y is None else K.iqr_hazen_2d(Y)
+        if "state_bin" in names:
+            # packed merge state: [sxy(len(lags)) | head(tau_max) |
+            # tail(tau_max)] float64s per row -> ONE binary column
+            # (parquet/Arrow handle it as a memcpy; list<double> columns
+            # measured ~8x slower to write)
+            out["state_bin"] = np.hstack(
+                [state["sxy"], state["head"], state["tail"]])
+        if feat:
+            out.update(zip(feat, feature_set.compute_matrix(Y)[0].T))
+        return out
+
+    def from_store(t):
+        return {
+            "n": t.column("n").to_numpy(),
+            "s1": t.column("s1").to_numpy(),
+            "s2": t.column("s2").to_numpy(),
+            **unpack_states(t.column("state_bin").to_pylist(), lags),
+        }
+
+    return Family(
+        np.float64, _ALG_FIELDS + [(c, pa.float64()) for c in feat],
+        lambda Y: S.states_from_windows(Y, lags),
+        lambda state, group: S.merge_groups(state, group, lags),
+        columns, ("n", "s1", "s2", "state_bin"), from_store,
+        {"state_bin": lambda parts: _binary_array(np.concatenate(parts))},
+    )
+
+
+_HIST_INT32 = {"mode_tok", "p25", "p50", "p75", "p90"}
+
+
+def _hist_columns(state, names, raw):
+    fin = H.finalize(state)
+    out = {c: fin[c].astype(np.int32 if c in _HIST_INT32 else np.int64)
+           for c in names if c != "hist_bin"}
+    out["hist_bin"] = state
+    return out
+
+
+# Exact token histograms (functions/hist_state.py): inverted-CDF
+# quantiles, mode and distinct count, every column exact after a merge.
+HIST_FAMILY = Family(
+    np.int64,
+    [("n", pa.int64()), ("n_distinct", pa.int64()), ("mode_tok", pa.int32()),
+     ("mode_count", pa.int64()), ("p25", pa.int32()), ("p50", pa.int32()),
+     ("p75", pa.int32()), ("p90", pa.int32()), ("hist_bin", pa.binary())],
+    H.hist_from_windows, H.merge_groups, _hist_columns, ("hist_bin",),
+    lambda t: H.unpack_blobs(t.column("hist_bin").to_pylist()),
+    {"hist_bin": lambda parts: H.pack_arrow(H.merge_stack(parts))},
+)
+
+
+def _hll_merge(state, group):
+    regs = HLL.merge_groups(state["regs"], group)
+    n = state["n"][: len(regs) * group].reshape(-1, group).sum(1)
+    return {"regs": regs, "n": n}
+
+
+def _hll_columns(state, names, raw):
+    fin = HLL.finalize(state["regs"])
+    return {"n": state["n"], "hll_zeros": fin["hll_zeros"].astype(np.int32),
+            "hll_denom": fin["hll_denom"], "est_distinct": fin["est"],
+            "hll_bin": state["regs"]}
+
+
+# HyperLogLog registers (functions/hll_state.py): fixed 2^p bytes per
+# window, merged by elementwise max; the state also carries n.
+HLL_FAMILY = Family(
+    np.int64,
+    [("n", pa.int64()), ("hll_zeros", pa.int32()), ("hll_denom", pa.int64()),
+     ("est_distinct", pa.float64()), ("hll_bin", pa.binary())],
+    lambda Y: {"regs": HLL.registers_from_windows(Y),
+               "n": np.full(len(Y), Y.shape[1], dtype=np.int64)},
+    _hll_merge, _hll_columns, ("n", "hll_bin"),
+    lambda t: {"regs": HLL.unpack_blobs(t.column("hll_bin").to_pylist()),
+               "n": t.column("n").to_numpy()},
+    {"hll_bin": lambda parts: HLL.pack_arrow(np.concatenate(parts))},
+)
+
+# Family name -> (lags -> the walker's family list). The fused entry is
+# the one-pass answer surface: finalized columns of all three families
+# over one scan, no IQR and no state blobs.
+FAMILIES = {
+    "alg": lambda lags=None: [alg_family(lags or DEFAULT_LAGS)],
+    "quantile": lambda lags=None: [HIST_FAMILY],
+    "hll": lambda lags=None: [HLL_FAMILY],
+    "fused": lambda lags=None: [
+        _only(alg_family(lags or [1]),
+              "n mean variance spread_std ac1_td burst_b burst_b_kim"),
+        _only(HIST_FAMILY, "n_distinct mode_tok p50"),
+        _only(HLL_FAMILY, "hll_zeros hll_denom est_distinct"),
+    ],
+}
+
+
+def _layout(families: list[Family]) -> tuple[pa.Schema, list[list[str]]]:
+    """Output schema (key columns, then each family's fields in order)
+    and, per family, the columns it is asked for: a column two families
+    supply comes from the first."""
+    fields = dict(_KEY_FIELDS)
+    wanted = []
+    for f in families:
+        mine = [(name, t) for name, t in f.fields if name not in fields]
+        fields.update(mine)
+        wanted.append([name for name, _ in mine])
+    return pa.schema(list(fields.items())), wanted
+
+
+def _block(families, wanted, states, doc_id, source, tier, widx, raw):
+    """One (doc, tier) run of output rows as numpy columns. ``raw(dtype)``
+    returns the run's raw windows; None on the store path."""
+    block = {"doc_id": doc_id, "source": source, "window_idx": widx,
+             "tier": np.full(len(widx), tier, dtype=np.int32)}
+    for f, state, names in zip(families, states, wanted):
+        cols = f.columns(state, names,
+                         None if raw is None else partial(raw, f.dtype))
+        block.update((c, cols[c]) for c in names)
+    return block
+
+
+def _assemble(blocks: list[dict], schema: pa.Schema, pack: dict,
+              nan_as_null: bool = False) -> pa.RecordBatch:
+    """Concatenate per-(doc, tier) blocks into ONE RecordBatch built
     straight from numpy — no pandas block manager in the hot path.
     ``nan_as_null`` writes NaN doubles as NULL."""
     cols = []
-    for c in _OUT_COLS:
-        parts = [b[c] for b in blocks]
-        if c in _LIST_COLS:
+    for c in schema.names:
+        if c in ("doc_id", "source"):
             vals: list = []
-            for p in parts:
-                vals.extend(p)
+            for b in blocks:
+                vals.extend([b[c]] * len(b["window_idx"]))
             cols.append(pa.array(vals, type=pa.string()))
-        elif c == _STATE_COL:
-            cols.append(_binary_array(np.concatenate(parts, axis=0)))
+        elif c in pack:
+            cols.append(pack[c]([b[c] for b in blocks]))
         else:
-            cols.append(pa.array(np.concatenate(parts),
+            cols.append(pa.array(np.concatenate([b[c] for b in blocks]),
                                  from_pandas=nan_as_null))
-    if n_feat:
-        M = np.concatenate([b["_featmat"] for b in blocks], axis=0)
-        for j in range(n_feat):
-            cols.append(pa.array(np.ascontiguousarray(M[:, j])))
     return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
@@ -230,118 +339,117 @@ def _var_width_view(col: pa.Array) -> tuple[np.ndarray, np.ndarray, bool]:
     raise TypeError(f"unsupported token column type {col.type}")
 
 
-def _make_rollup_fn(
-    window: int,
-    group: int,
-    n_tiers: int,
-    lags: list[int],
-    gapped: bool,
-    counters: dict | None,
-    feature_set=None,
+def walk_tiers(
+    df: DataFrame,
+    families: list[Family],
+    window: int = DEFAULT_WINDOW,
+    group: int = DEFAULT_GROUP,
+    n_tiers: int = 3,
+    gapped: bool = False,
+    counters: dict | None = None,
     seg_tokens: int = _SEG_TOKENS,
-):
-    _, pa_schema, feat_cols = _schemas_for(feature_set)
+) -> DataFrame:
+    """The one tier walker behind every rollup family: ONE shuffle-free
+    ``mapInArrow`` pass over documents -> windows -> tiers.
+
+    Per document it decodes the tokens (dense ``tokens_bin``/``tokens``,
+    or gapped ``offsets``/``values`` through gap_fill), builds every
+    family's tier-0 states from the same windows and merges them tier by
+    tier; each family adds only its output columns. ``counters``
+    (make_counters) receive rows read, windows emitted and — when the
+    input carries ``tok_checksum`` — token checksum mismatches.
+    """
+    if gapped and any(f.dtype is not np.float64 for f in families):
+        raise ValueError("gap-filled values only feed float families")
+    schema, wanted = _layout(families)
+    pack = {c: p for f in families for c, p in f.pack.items()}
+    dtypes = {f.dtype for f in families}
+    if gapped:
+        needed = ["offsets", "values", "n_tok"]
+    else:
+        needed = ["tokens_bin" if "tokens_bin" in df.columns else "tokens"]
+        if counters is not None and "tok_checksum" in df.columns:
+            needed.append("tok_checksum")
+    # Pathological-row bound: a single giant document is processed in
+    # SEGMENTS aligned to the coarsest tier length, so peak memory and
+    # the flush cadence scale with the segment, not the row. Exact: every
+    # tier's window length divides the segment, so window boundaries,
+    # cascade groups, and leftover-window handling are identical to the
+    # unchunked sweep — window_idx just carries the segment's offset.
+    coarse = window * group ** (n_tiers - 1)
+    seg = max(coarse, (seg_tokens // coarse) * coarse)
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            names = rb.schema.names
-            doc_ids = rb.column(names.index("doc_id")).to_pylist()
-            sources = rb.column(names.index("source")).to_pylist()
-            n_rows = rb.num_rows
+            col = dict(zip(rb.schema.names, rb.columns))
+            doc_ids = col["doc_id"].to_pylist()
+            sources = col["source"].to_pylist()
+            cksums = None
             if gapped:
-                off_flat, off_offs, _ = _var_width_view(
-                    rb.column(names.index("offsets"))
-                )
-                val_flat, val_offs, _ = _var_width_view(
-                    rb.column(names.index("values"))
-                )
-                n_toks = rb.column(names.index("n_tok")).to_numpy()
+                off_flat, off_offs, _ = _var_width_view(col["offsets"])
+                val_flat, val_offs, _ = _var_width_view(col["values"])
+                n_toks = col["n_tok"].to_numpy()
             else:
-                tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-                flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-                if "tok_checksum" in names:
-                    cks = rb.column(names.index("tok_checksum"))
-                    cksums = None if cks.null_count == n_rows else cks.to_pylist()
-                else:
-                    cksums = None
-
-            # Output-side memory bound: flush a RecordBatch whenever the
-            # accumulated window count passes the threshold, instead of
-            # materializing the whole input batch's output at once. A
-            # 10k-row Arrow batch of long docs can expand to >10M output
-            # rows (GBs per worker x 32 workers = OOM, observed); the
-            # input batch stays bounded by the scan's partition bytes.
-            FLUSH_ROWS = 1 << 16
+                flat, offs, is_bin = _var_width_view(col[needed[0]])
+                cks = col.get("tok_checksum")
+                if cks is not None and cks.null_count < len(cks):
+                    cksums = cks.to_pylist()
             blocks: list[dict] = []
-            n_acc = 0
-            n_windows = 0
-            n_bad = 0
-            for r in range(n_rows):
+            n_acc = n_windows = n_bad = 0
+            for r in range(rb.num_rows):
                 if gapped:
-                    o = off_flat[off_offs[r] : off_offs[r + 1]]
-                    v = val_flat[val_offs[r] : val_offs[r + 1]]
-                    vals = gap_fill(
-                        np.asarray(o, dtype=np.int64),
-                        np.asarray(v, dtype=np.float64),
+                    x = gap_fill(
+                        np.asarray(off_flat[off_offs[r] : off_offs[r + 1]],
+                                   dtype=np.int64),
+                        np.asarray(val_flat[val_offs[r] : val_offs[r + 1]],
+                                   dtype=np.float64),
                         int(n_toks[r]),
                     )
                 else:
                     raw = flat[offs[r] : offs[r + 1]]
-                    toks = raw.view("<i4") if is_bin else raw
+                    x = raw.view("<i4") if is_bin else raw
                     # per-row token-array integrity invariant
                     if cksums is not None and cksums[r] is not None:
-                        if token_checksum(toks) != int(cksums[r]):
+                        if token_checksum(x) != int(cksums[r]):
                             n_bad += 1
-                    vals = toks.astype(np.float64)
-                if len(vals) < window:
+                if len(x) < window:
                     continue
-                # Pathological-row bound: a single giant document is
-                # processed in SEGMENTS aligned to the coarsest tier
-                # length, so peak memory and the flush cadence scale
-                # with the segment, not the row. Exact: every tier's
-                # window length divides the segment, so window
-                # boundaries, cascade groups, and leftover-window
-                # handling are identical to the unchunked sweep —
-                # window_idx just carries the segment's offset.
-                coarse = window * group ** (n_tiers - 1)
-                seg = max(coarse, (seg_tokens // coarse) * coarse)
-                for s0 in range(0, len(vals) - window + 1, seg):
-                    sv = vals[s0 : s0 + seg]
-                    if len(sv) < window:
-                        break
-                    Y0 = K.make_buffer(sv, window)
-                    state = S.states_from_windows(Y0, lags)
-                    blocks.append(
-                        _tier_cols(doc_ids[r], sources[r], 0, state, lags,
-                                   Y0, feature_set, widx0=s0 // window)
-                    )
-                    n_windows += len(state["n"])
-                    n_acc += len(state["n"])
-                    for tier in range(1, n_tiers):
-                        state = S.merge_groups(state, group, lags)
-                        if len(state["n"]) == 0:
-                            break
+                for s0 in range(0, len(x) - window + 1, seg):
+                    sx = {dt: x[s0 : s0 + seg].astype(dt, copy=False)
+                          for dt in dtypes}
+                    k = min(seg, len(x) - s0) // window
+                    states = [f.from_windows(K.make_buffer(sx[f.dtype], window))
+                              for f in families]
+                    for tier in range(n_tiers):
+                        if tier:
+                            k //= group
+                            if k == 0:
+                                break
+                            states = [f.merge_groups(st, group)
+                                      for f, st in zip(families, states)]
                         wlen = window * group**tier
-                        Yt = K.make_buffer(sv, wlen)
-                        blocks.append(
-                            _tier_cols(doc_ids[r], sources[r], tier, state,
-                                       lags, Yt, feature_set,
-                                       widx0=s0 // wlen)
-                        )
-                        n_windows += len(state["n"])
-                        n_acc += len(state["n"])
-                    if n_acc >= FLUSH_ROWS:
-                        yield _assemble_arrow(blocks, pa_schema,
-                                              len(feat_cols))
+                        blocks.append(_block(
+                            families, wanted, states, doc_ids[r], sources[r],
+                            tier, np.arange(s0 // wlen, s0 // wlen + k,
+                                            dtype=np.int64),
+                            lambda dt, wlen=wlen: K.make_buffer(sx[dt], wlen),
+                        ))
+                        n_windows += k
+                        n_acc += k
+                    if n_acc >= _FLUSH_ROWS:
+                        yield _assemble(blocks, schema, pack)
                         blocks = []
                         n_acc = 0
             if counters is not None:
-                counters["rows_read"].add(n_rows)
+                counters["rows_read"].add(rb.num_rows)
                 counters["windows_emitted"].add(n_windows)
                 counters["checksum_mismatches"].add(n_bad)
             if blocks:
-                yield _assemble_arrow(blocks, pa_schema, len(feat_cols))
+                yield _assemble(blocks, schema, pack)
 
-    return fn
+    return df.select("doc_id", "source", *needed).mapInArrow(
+        fn, schema=from_arrow_schema(schema)
+    )
 
 
 def make_counters(spark) -> dict:
@@ -366,24 +474,16 @@ def rollup_tiers(
     feature_set=None,
     seg_tokens: int = _SEG_TOKENS,
 ) -> DataFrame:
-    """Single-pass 3-tier rollup (see module docstring).
+    """Single-pass 3-tier ALG rollup (see module docstring).
 
-    Input: sequences table (dense: doc_id/tokens|tokens_bin/n_tok/source
+    Input: sequences table (dense: doc_id/tokens|tokens_bin/source
     [/tok_checksum]; gapped=True: doc_id/offsets/values/n_tok/source).
     Only the needed columns cross the Arrow boundary (explicit pruning —
-    mapInArrow ships every column of its input otherwise).
+    mapInArrow ships every column of its input otherwise). A compiled
+    FeatureSet (plans/registry) adds one double column per label.
     """
-    lags = lags or DEFAULT_LAGS
-    needed = [
-        c
-        for c in ("doc_id", "source", "n_tok", "tokens_bin", "tokens",
-                  "offsets", "values", "tok_checksum")
-        if c in df.columns
-    ]
-    ddl, _, _ = _schemas_for(feature_set)
-    fn = _make_rollup_fn(window, group, n_tiers, lags, gapped, counters,
-                         feature_set, seg_tokens)
-    return df.select(*needed).mapInArrow(fn, schema=ddl)
+    return walk_tiers(df, [alg_family(lags or DEFAULT_LAGS, feature_set)],
+                      window, group, n_tiers, gapped, counters, seg_tokens)
 
 
 # ---------------------------------------------------------------------------
@@ -412,10 +512,9 @@ def complete_parents(
 
 def store_cascade(
     tier_df: DataFrame,
-    cols: list[str],
+    family: Family,
     group: int,
-    merge,
-    schema: pa.Schema,
+    nan_as_null: bool = False,
 ) -> DataFrame:
     """The physical shape every store-side cascade shares:
     ``groupBy(doc_id, tier).applyInArrow`` — one Arrow call per (doc,
@@ -425,10 +524,12 @@ def store_cascade(
     Exchange; any other input pays one hashpartitioning on the doc keys.
 
     Each call sorts its run by ``window_idx``, keeps the children of the
-    complete parents (``complete_parents``) and hands them to
-    ``merge(kept, parents, doc_id, source, tier + 1)``, which returns
-    the tier k+1 rows as a ``pa.Table`` matching ``schema``.
+    complete parents (``complete_parents``), rebuilds the family's
+    states from the stored columns, merges them in one
+    ``merge_groups`` and emits the tier k+1 rows through the walker's
+    column functions and assembler.
     """
+    schema, wanted = _layout([family])
     empty = schema.empty_table()
 
     def run(tbl):
@@ -438,15 +539,19 @@ def store_cascade(
         )
         if not len(parents):
             return empty
-        return merge(
-            tbl.filter(keep), parents,
-            tbl.column("doc_id")[0].as_py(),
+        state = family.merge_groups(family.from_store(tbl.filter(keep)), group)
+        block = _block(
+            [family], wanted, [state], tbl.column("doc_id")[0].as_py(),
             tbl.column("source")[0].as_py(),
-            tbl.column("tier")[0].as_py() + 1,
+            tbl.column("tier")[0].as_py() + 1, parents, None,
+        )
+        return pa.Table.from_batches(
+            [_assemble([block], schema, family.pack, nan_as_null)]
         )
 
     return (
-        tier_df.select(*cols)
+        tier_df.select("doc_id", "source", "tier", "window_idx",
+                       *family.store_cols)
         .groupBy("doc_id", "tier")
         .applyInArrow(run, schema=from_arrow_schema(schema))
     )
@@ -463,26 +568,9 @@ def cascade_from_store(
     ids, so no source-level skew — whose per-(doc, tier) call merges
     all complete parents in one ``merge_groups``.
     """
-    lags = lags or DEFAULT_LAGS
-
-    def merge(kept, parents, doc_id, source, tier):
-        state: S.State = {
-            "n": kept.column("n").to_numpy(),
-            "s1": kept.column("s1").to_numpy(),
-            "s2": kept.column("s2").to_numpy(),
-            **unpack_states(kept.column("state_bin").to_pylist(), lags),
-        }
-        block = _tier_cols(doc_id, source, tier,
-                           S.merge_groups(state, group, lags), lags, None)
-        block["window_idx"] = parents
-        # NaN -> NULL: the documented NULL HOL columns of a late cascade
-        return pa.Table.from_batches(
-            [_assemble_arrow([block], nan_as_null=True)]
-        )
-
-    cols = ["doc_id", "source", "tier", "window_idx", "n", "s1", "s2",
-            "state_bin"]
-    return store_cascade(tier_df, cols, group, merge, _PA_SCHEMA)
+    # NaN -> NULL: the documented NULL HOL columns of a late cascade
+    return store_cascade(tier_df, alg_family(lags or DEFAULT_LAGS), group,
+                         nan_as_null=True)
 
 
 def rollup_at_resolution(

@@ -1,10 +1,10 @@
 """Structured-streaming rollup: continuous ingestion of sequence files.
 
 The tier rollup is stateless per input row (every window of a doc lives
-in its row), so the same Arrow-native kernel runs unchanged under
-Structured Streaming: ``readStream`` on a parquet directory of
-sequences -> ``rollup_tiers`` -> ``writeStream`` with exactly-once file
-sink + checkpoint. New docs appearing in the source directory flow into
+in its row), so the same Arrow-native tier walker (``rollup.walk_tiers``,
+any family) runs unchanged under Structured Streaming: ``readStream`` on
+a parquet directory of sequences -> ``walk_tiers`` -> ``writeStream``
+with exactly-once file sink + checkpoint. New docs appearing in the source directory flow into
 new tier rows; combined with ``cascade_from_store`` this gives a
 continuously-maintained continuous aggregate (the streaming analogue of
 a TSDB's refresh policy).
@@ -15,11 +15,26 @@ engine-native extension mandated by the Spark-first design.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from pyhctsa_spark.operators.rollup import rollup_tiers
+from pyhctsa_spark.operators.rollup import FAMILIES, walk_tiers
 from pyhctsa_spark.sources.synthetic import SEQ_BIN_SCHEMA, SEQ_SCHEMA
+
+
+def _sink(df: DataFrame, sink_dir: str, checkpoint_dir: str,
+          available_now: bool) -> StreamingQuery:
+    """Start an append-mode parquet ``writeStream`` with exactly-once file
+    sink + checkpoint; ``available_now`` drains what is there and stops."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_rollup(
@@ -33,130 +48,23 @@ def stream_rollup(
     lags: list[int] | None = None,
     binary: bool = True,
     available_now: bool = False,
-    max_files_per_trigger: int | None = None,
+    family: str = "alg",
 ) -> StreamingQuery:
-    """Start the streaming rollup; returns the StreamingQuery handle.
+    """Start the streaming rollup of one tier family (``rollup.FAMILIES``:
+    alg, quantile, hll or fused); returns the StreamingQuery handle.
 
-    ``available_now=True`` drains the current directory contents and
-    stops (used for catch-up runs and tests); otherwise the query keeps
-    following the directory.
+    The state-carrying families keep late store cascades exact: the
+    ``hist_bin`` histograms never degrade order statistics to NULL, and
+    HLL register max is idempotent, so even a replayed batch merged into
+    downstream state is harmless. ``available_now=True`` drains the
+    current directory contents and stops (used for catch-up runs and
+    tests); otherwise the query keeps following the directory.
     """
     schema = SEQ_BIN_SCHEMA if binary else SEQ_SCHEMA
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    seq = reader.parquet(source_dir)
-    tiers = rollup_tiers(seq, window=window, group=group, n_tiers=n_tiers, lags=lags)
-    writer = (
-        tiers.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_quantile_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    window: int = 32,
-    group: int = 16,
-    n_tiers: int = 3,
-    binary: bool = True,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming exact-quantile tier rollup: the same stateless
-    mapInArrow histogram kernel (operators/quantile_rollup) under
-    Structured Streaming — per-window inverted-CDF quantiles / mode /
-    distinct plus the mergeable ``hist_bin`` state column, exactly-once
-    into the sink. The stored state keeps late ``quantile_cascade_from_
-    store`` refreshes exact (order statistics never degrade to NULL)."""
-    from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
-
-    schema = SEQ_BIN_SCHEMA if binary else SEQ_SCHEMA
     seq = spark.readStream.schema(schema).parquet(source_dir)
-    tiers = rollup_quantile_tiers(seq, window=window, group=group,
-                                  n_tiers=n_tiers)
-    writer = (
-        tiers.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_hll_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    window: int = 32,
-    group: int = 16,
-    n_tiers: int = 3,
-    binary: bool = True,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming approximate-distinct tier rollup: the stateless HLL
-    mapInArrow kernel (operators/hll_rollup) under Structured Streaming
-    — per-window register state + estimate, exactly-once into the sink.
-    Because register merge is idempotent max, even a REPLAYED batch
-    merged into downstream state is harmless (strictly stronger than
-    the histogram's add-merge, which relies on the sink's exactly-once
-    file tracking alone)."""
-    from pyhctsa_spark.operators.hll_rollup import rollup_hll_tiers
-
-    schema = SEQ_BIN_SCHEMA if binary else SEQ_SCHEMA
-    seq = spark.readStream.schema(schema).parquet(source_dir)
-    tiers = rollup_hll_tiers(seq, window=window, group=group,
-                             n_tiers=n_tiers)
-    writer = (
-        tiers.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_fused_rollup(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    window: int = 32,
-    group: int = 16,
-    n_tiers: int = 3,
-    binary: bool = True,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Streaming fused three-family rollup (operators/fused_rollup):
-    ALG moments + exact order statistics + HLL distinct, one stateless
-    scan per micro-batch, exactly-once into the sink — the one-pass
-    answer surface under continuous ingestion."""
-    from pyhctsa_spark.operators.fused_rollup import rollup_fused_tiers
-
-    schema = SEQ_BIN_SCHEMA if binary else SEQ_SCHEMA
-    seq = spark.readStream.schema(schema).parquet(source_dir)
-    tiers = rollup_fused_tiers(seq, window=window, group=group,
-                               n_tiers=n_tiers)
-    writer = (
-        tiers.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    tiers = walk_tiers(seq, FAMILIES[family](lags), window=window,
+                       group=group, n_tiers=n_tiers)
+    return _sink(tiers, sink_dir, checkpoint_dir, available_now)
 
 
 def stream_rollup_chunks(
@@ -270,15 +178,7 @@ def stream_rollup_chunks(
     rolled = reader.groupBy("doc_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
-    writer = (
-        rolled.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _sink(rolled, sink_dir, checkpoint_dir, available_now)
 
 
 def stream_features(
@@ -301,12 +201,4 @@ def stream_features(
     schema = SEQ_BIN_SCHEMA if binary else SEQ_SCHEMA
     seq = spark.readStream.schema(schema).parquet(source_dir)
     feats = extract_features(seq, feature_set, window=window)
-    writer = (
-        feats.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _sink(feats, sink_dir, checkpoint_dir, available_now)

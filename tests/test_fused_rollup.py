@@ -59,14 +59,23 @@ def test_fused_plan_has_zero_exchange(spark, seq):
     assert "MapInArrow" in plan
 
 
-def test_fused_short_docs_and_empty(spark):
+@pytest.mark.parametrize("family", ["alg", "quantile", "hll", "fused"])
+def test_fused_short_docs_and_empty(spark, family):
+    """Every family's entry point skips a doc shorter than one window,
+    handles an empty row, and an empty table, without crashing."""
     from pyhctsa_spark.operators.fused_rollup import rollup_fused_tiers
+    from pyhctsa_spark.operators.hll_rollup import rollup_hll_tiers
+    from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
+    from pyhctsa_spark.operators.rollup import rollup_tiers
 
+    rollup = {"alg": rollup_tiers, "quantile": rollup_quantile_tiers,
+              "hll": rollup_hll_tiers, "fused": rollup_fused_tiers}[family]
     df = spark.createDataFrame(
         [("a", "s", list(range(5))), ("b", "s", [])],
         "doc_id string, source string, tokens array<int>",
     )
-    assert rollup_fused_tiers(df, window=8).count() == 0
+    assert rollup(df, window=8).count() == 0
+    assert rollup(df.limit(0), window=8).count() == 0
 
 
 def test_streaming_fused_rollup_matches_batch(spark, tmp_path_factory):
@@ -74,12 +83,13 @@ def test_streaming_fused_rollup_matches_batch(spark, tmp_path_factory):
 
     from pyhctsa_spark.operators.fused_rollup import rollup_fused_tiers
     from pyhctsa_spark.sources.synthetic import sequences_df
-    from pyhctsa_spark.streaming.rollup_stream import stream_fused_rollup
+    from pyhctsa_spark.streaming.rollup_stream import stream_rollup
 
     base = tmp_path_factory.mktemp("fstream")
     src, sink, ckpt = str(base / "src"), str(base / "sink"), str(base / "ckpt")
     sequences_df(spark, 10, partitions=2, binary=True).write.parquet(src)
-    q = stream_fused_rollup(spark, src, sink, ckpt, available_now=True)
+    q = stream_rollup(spark, src, sink, ckpt, available_now=True,
+                      family="fused")
     q.awaitTermination(120)
     got = (
         spark.read.parquet(sink).toPandas()

@@ -262,12 +262,13 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path_factory):
 
     from pyhctsa_spark.operators.hll_rollup import rollup_hll_tiers
     from pyhctsa_spark.sources.synthetic import sequences_df
-    from pyhctsa_spark.streaming.rollup_stream import stream_hll_rollup
+    from pyhctsa_spark.streaming.rollup_stream import stream_rollup
 
     base = tmp_path_factory.mktemp("hllstream")
     src, sink, ckpt = str(base / "src"), str(base / "sink"), str(base / "ckpt")
     sequences_df(spark, 10, partitions=2, binary=True).write.parquet(src)
-    q = stream_hll_rollup(spark, src, sink, ckpt, available_now=True)
+    q = stream_rollup(spark, src, sink, ckpt, available_now=True,
+                      family="hll")
     q.awaitTermination(120)
     got = (
         spark.read.parquet(sink).toPandas()

@@ -292,7 +292,7 @@ def test_streaming_rollup_matches_batch(spark, tmp_path_factory):
     seq = sequences_df(spark, 20, partitions=2, binary=True)
     seq.write.mode("overwrite").parquet(src)
 
-    q = stream_rollup(spark, src, sink, ckpt, available_now=True)
+    q = stream_rollup(spark, src, sink, ckpt, available_now=True, family="alg")
     q.awaitTermination(120)
     got = (
         spark.read.parquet(sink).toPandas()
@@ -309,7 +309,8 @@ def test_streaming_rollup_matches_batch(spark, tmp_path_factory):
         F.col("doc_id") >= "doc0000000020"
     )
     seq2.write.mode("append").parquet(src)
-    q2 = stream_rollup(spark, src, sink, ckpt, available_now=True)
+    q2 = stream_rollup(spark, src, sink, ckpt, available_now=True,
+                       family="alg")
     q2.awaitTermination(120)
     total = spark.read.parquet(sink).count()
     full = rollup_tiers(spark.read.parquet(src)).count()

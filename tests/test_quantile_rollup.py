@@ -213,12 +213,13 @@ def test_streaming_quantile_rollup_matches_batch(spark, tmp_path_factory):
 
     from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
     from pyhctsa_spark.sources.synthetic import sequences_df
-    from pyhctsa_spark.streaming.rollup_stream import stream_quantile_rollup
+    from pyhctsa_spark.streaming.rollup_stream import stream_rollup
 
     base = tmp_path_factory.mktemp("qstream")
     src, sink, ckpt = str(base / "src"), str(base / "sink"), str(base / "ckpt")
     sequences_df(spark, 10, partitions=2, binary=True).write.parquet(src)
-    q = stream_quantile_rollup(spark, src, sink, ckpt, available_now=True)
+    q = stream_rollup(spark, src, sink, ckpt, available_now=True,
+                      family="quantile")
     q.awaitTermination(120)
     got = (
         spark.read.parquet(sink).toPandas()

@@ -10,9 +10,11 @@ from pyhctsa_spark.functions import kernels as K
 from pyhctsa_spark.functions import stats_state as S
 from pyhctsa_spark.functions.gapfill import gap_fill
 from pyhctsa_spark.operators.rollup import (
+    FAMILIES,
     cascade_from_store,
     make_counters,
     rollup_tiers,
+    walk_tiers,
 )
 from pyhctsa_spark.sources.synthetic import (
     gapped_sequences_df,
@@ -160,26 +162,28 @@ def test_partitioning_invariance(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_segment_chunking_is_exact(spark):
-    """Giant-row segmentation must be invisible in the output: forcing
-    tiny segments (seg_tokens small enough that every doc spans several)
-    gives bit-identical rows to the default single-segment sweep —
-    window boundaries, cascade groups, window_idx, and HOL features all
-    align because the segment length is a multiple of every tier's
-    window length."""
+@pytest.mark.parametrize("family", list(FAMILIES))
+def test_segment_chunking_is_exact(spark, family):
+    """Giant-row segmentation must be invisible in the output of every
+    family: forcing tiny segments (seg_tokens small enough that every
+    doc spans several) gives bit-identical rows to the default
+    single-segment sweep — window boundaries, cascade groups,
+    window_idx, HOL features and state blobs all align because the
+    segment length is a multiple of every tier's window length."""
     df = sequences_df(spark, 30, partitions=4)
     a = (
-        rollup_tiers(df).toPandas()
+        walk_tiers(df, FAMILIES[family]()).toPandas()
         .sort_values(["doc_id", "tier", "window_idx"])
         .reset_index(drop=True)
     )
     # coarsest tier = 32*16^2 = 8192 tokens; seg_tokens=8192 forces one
     # coarse window per segment, so any doc > 8192 tokens is chunked
     b = (
-        rollup_tiers(df, seg_tokens=8192).toPandas()
+        walk_tiers(df, FAMILIES[family](), seg_tokens=8192).toPandas()
         .sort_values(["doc_id", "tier", "window_idx"])
         .reset_index(drop=True)
     )
+    assert (a["tier"] == 2).any()
     pd.testing.assert_frame_equal(a, b)
 
 

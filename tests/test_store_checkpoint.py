@@ -170,3 +170,25 @@ def test_rollup_job_families(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown rollup family"):
         RollupJob(str(tmp_path / "x"), family="nope")
+
+
+@pytest.mark.parametrize("family", ["alg", "quantile", "hll", "fused"])
+def test_rollup_job_lineage_counters_every_family(spark, tmp_path, family):
+    """Every family feeds the bucket manifest's lineage counters: rows
+    read, windows emitted (= rows written) and the one corrupted token
+    checksum."""
+    from pyspark.sql import functions as F
+
+    seq = sequences_df(spark, 8, binary=True).withColumn(
+        "tok_checksum",
+        F.when(F.col("doc_id") == "doc0000000003", F.col("tok_checksum") + 1)
+        .otherwise(F.col("tok_checksum")),
+    ).cache()
+    store = str(tmp_path / "store")
+    snap = RollupJob(store, n_buckets=2, window=16, group=4, n_tiers=2,
+                     family=family).run(spark, seq)
+    written = spark.read.parquet(os.path.join(store, "tier_data")).count()
+    assert snap["rows_read"] == 8
+    assert snap["checksum_mismatches"] == 1
+    assert snap["windows_emitted"] == written > 0
+    seq.unpersist()
