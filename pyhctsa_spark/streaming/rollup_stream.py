@@ -4,10 +4,10 @@ The tier rollup is stateless per input row (every window of a doc lives
 in its row), so the same Arrow-native tier walker (``rollup.walk_tiers``,
 any family) runs unchanged under Structured Streaming: ``readStream`` on
 a parquet directory of sequences -> ``walk_tiers`` -> ``writeStream``
-with exactly-once file sink + checkpoint. New docs appearing in the source directory flow into
-new tier rows; combined with ``cascade_from_store`` this gives a
-continuously-maintained continuous aggregate (the streaming analogue of
-a TSDB's refresh policy).
+with exactly-once file sink + checkpoint. New docs appearing in the
+source directory flow into new tier rows; combined with
+``cascade_from_store`` this gives a continuously-maintained continuous
+aggregate (the streaming analogue of a TSDB's refresh policy).
 
 The reference has no streaming surface (SURVEY.md §2.0); this is the
 engine-native extension mandated by the Spark-first design.
