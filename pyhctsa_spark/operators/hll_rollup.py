@@ -4,21 +4,24 @@ window, carried through the retention cascade.
 The family itself (``rollup.HLL_FAMILY``) lives next to the tier walker
 and the store cascade it runs on, in operators/rollup.py, like the ALG
 and exact-quantile families. Its logical column is an approximate
-distinct-token count whose per-window state is FIXED-SIZE (2^p bytes) regardless of window length or
-vocabulary — the state to carry when the token domain is open (hashed
-n-grams, ids, urls) and the exact histogram's min(n, |vocab|) blobs
-would grow without bound at coarse tiers.
+distinct-token count whose per-window state is FIXED-SIZE (2^p bytes)
+regardless of window length or vocabulary — the state to carry when the
+token domain is open (hashed n-grams, ids, urls) and the exact
+histogram's min(n, |vocab|) blobs would grow without bound at coarse
+tiers.
 
 1. ``rollup_hll_tiers``: the tier walker (``rollup.walk_tiers``), ONE
-   shuffle-free ``mapInArrow`` pass. Tier 0 registers come from the tokens in hand; tier k+1 is the elementwise
-   MAX of tier-k registers — exact, associative, idempotent — so the
-   plan stays Scan -> Project -> MapInArrow -> Sink with zero Exchange.
+   shuffle-free ``mapInArrow`` pass. Tier 0 registers come from the
+   tokens in hand; tier k+1 is the elementwise MAX of tier-k registers —
+   exact, associative, idempotent — so the plan stays Scan -> Project ->
+   MapInArrow -> Sink with zero Exchange.
 
 2. ``hll_cascade_from_store``: the retention path
-   (``rollup.store_cascade``) — raw tokens are gone, only the materialized tier table with its ``hll_bin`` column
-   remains. Register max makes the cascaded tier BIT-IDENTICAL to the
-   direct computation (asserted in tests), the defining property of the
-   sketch: a 100 TB store can be re-tiered forever without raw revisit.
+   (``rollup.store_cascade``) — raw tokens are gone, only the
+   materialized tier table with its ``hll_bin`` column remains. Register
+   max makes the cascaded tier BIT-IDENTICAL to the direct computation
+   (asserted in tests), the defining property of the sketch: a 100 TB
+   store can be re-tiered forever without raw revisit.
 
 3. ``hll_distinct_by_source``: a cross-document union — registers are
    unioned per source key. Map-side each task emits at most

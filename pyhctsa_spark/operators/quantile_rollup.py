@@ -7,18 +7,20 @@ lives next to the tier walker and the store cascade it runs on, in
 operators/rollup.py; this module holds its entry points.
 
 1. ``rollup_quantile_tiers``: the tier walker (``rollup.walk_tiers``),
-   ONE shuffle-free ``mapInArrow`` pass. Tier 0 histograms are built from the tokens in hand; tier k+1 is a
-   pure histogram MERGE of tier-k state (integer adds — exact and
-   associative), so the plan stays Scan -> Project -> MapInArrow ->
-   Sink with zero Exchange, embarrassingly parallel at any scale.
+   ONE shuffle-free ``mapInArrow`` pass. Tier 0 histograms are built
+   from the tokens in hand; tier k+1 is a pure histogram MERGE of tier-k
+   state (integer adds — exact and associative), so the plan stays
+   Scan -> Project -> MapInArrow -> Sink with zero Exchange,
+   embarrassingly parallel at any scale.
 
 2. ``quantile_cascade_from_store``: the retention path
-   (``rollup.store_cascade``) — raw tokens are gone, only a materialized tier table with its ``hist_bin`` column
-   remains. Unlike the ALG cascade (whose HOL columns go NULL), EVERY
-   column here is exact after the merge: this is the reason to carry a
-   histogram state in the store at all. State per window is bounded by
-   min(n, |vocab|), so a coarse tier's blob saturates at the vocabulary
-   size regardless of how many points it summarizes.
+   (``rollup.store_cascade``) — raw tokens are gone, only a materialized
+   tier table with its ``hist_bin`` column remains. Unlike the ALG
+   cascade (whose HOL columns go NULL), EVERY column here is exact after
+   the merge: this is the reason to carry a histogram state in the store
+   at all. State per window is bounded by min(n, |vocab|), so a coarse
+   tier's blob saturates at the vocabulary size regardless of how many
+   points it summarizes.
 
 Window semantics match the flagship: non-overlapping windows, trailing
 partial dropped (make_buffer, reference Utilities/utils.py:292-319),

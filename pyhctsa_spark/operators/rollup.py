@@ -4,13 +4,13 @@ Two physical strategies for the same logical computation:
 
 1. ``rollup_tiers``: ONE shuffle-free Arrow-native ``mapInArrow`` pass
    computes tier 0 AND the 16x / 256x tiers. It runs on ``walk_tiers``,
-   the one tier walker of every family (ALG, exact quantile, HLL, fused):
-   the walker decodes tokens, bounds giant documents, loops the tiers,
-   flushes, counts lineage and assembles Arrow; a ``Family`` supplies
-   only its state functions and columns (``FAMILIES`` by name). Every window of a doc lives
-   inside its input row, so the tier cascade needs no shuffle at all:
-   tier k+1 is produced by MERGING tier-k ALG states
-   (functions/stats_state.py) in-kernel. HOL features (hazen IQR,
+   the one tier walker of every family (ALG, exact quantile, HLL,
+   fused): the walker decodes tokens, bounds giant documents, loops the
+   tiers, flushes, counts lineage and assembles Arrow; a ``Family``
+   supplies only its state functions and columns (``FAMILIES`` by name).
+   Every window of a doc lives inside its input row, so the tier cascade
+   needs no shuffle at all: tier k+1 is produced by MERGING tier-k ALG
+   states (functions/stats_state.py) in-kernel. HOL features (hazen IQR,
    Fourier ACF) are recomputed per tier from the raw values, which are
    still in hand. At 100 TB this plan is embarrassingly parallel:
    scan -> python worker -> write, with partition balance set by input
