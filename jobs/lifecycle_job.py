@@ -12,11 +12,12 @@ background jobs or an Iceberg maintenance pipeline):
         --chunk-windows 64 --compact-target-files 1
 
 Order of operations is retention FIRST, then compaction — never pay to
-rewrite a chunk that is about to be dropped. Both phases are per-chunk
-metadata decisions; only compaction rewrites live data (and only the
-fragmented chunks it selected). Watermarks are derived from the newest
-chunk per tier (partition-pruned scan, O(one chunk) regardless of store
-size) unless --watermark overrides are given.
+rewrite a chunk that is about to be dropped. Both phases choose their
+chunks from directory metadata; only compaction rewrites live data: the
+fragmented chunks it selected, all in one Spark job, each then swapped
+in through its crash-recoverable tmp/old rename. Watermarks are derived
+from the newest chunk per tier, all tiers in one scan (O(one chunk) per
+tier regardless of store size), unless --watermark overrides are given.
 
 Prints one JSON line: evicted chunks, compacted chunks, bytes
 reclaimed/rewritten — the job's lineage counters (full per-chunk audit
@@ -56,20 +57,12 @@ def parse_args(argv):
     p.add_argument("--compact-target-files", type=int, default=1)
     p.add_argument("--compact-small-bytes", type=int, default=8 * 1024 * 1024)
     p.add_argument("--no-compact", action="store_true")
-    p.add_argument("--compact-bulk", action="store_true",
-                   help="compact all fragmented chunks in ONE Spark job "
-                        "(dynamic partition overwrite) instead of one "
-                        "job per chunk — use when the candidate count "
-                        "is large")
     return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv if argv is not None else sys.argv[1:])
-    from pyhctsa_spark.operators.compaction import (
-        compact_chunks,
-        compact_chunks_bulk,
-    )
+    from pyhctsa_spark.operators.compaction import compact_chunks
     from pyhctsa_spark.operators.retention import (
         RetentionPolicy,
         apply_retention,
@@ -97,8 +90,7 @@ def main(argv=None) -> int:
         )
     compacted: list[dict] = []
     if not args.no_compact:
-        compact_fn = compact_chunks_bulk if args.compact_bulk else compact_chunks
-        compacted = compact_fn(
+        compacted = compact_chunks(
             spark,
             args.store,
             target_files=args.compact_target_files,

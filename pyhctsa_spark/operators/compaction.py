@@ -15,23 +15,30 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
   more than ``target_files`` parts AND at least one part below
   ``small_bytes`` (few-but-large parts are healthy and left alone).
   No parquet file is opened to decide.
-- Rewrite is per-chunk and idempotent: read the chunk, sort by
-  (doc_id, window_idx) for run-clustered scans downstream, coalesce to
-  ``target_files``, write to a HIDDEN ``_compact_tmp...`` sibling
+- One Spark write rewrites every candidate: one scan of all candidate
+  chunks (``basePath``, so ``tier``/``chunk`` come back as partition
+  columns), a shuffle on (tier, chunk) — plus ``pmod(xxhash64(doc_id),
+  target_files)`` when ``target_files > 1`` — so each chunk's rows land
+  in at most ``target_files`` tasks, a local sort on (tier, chunk,
+  doc_id, window_idx) for run-clustered scans downstream, and one
+  partitioned write into the HIDDEN ``<store>/_compact_stage/``
   (underscore-prefixed, so Spark partition discovery and _chunk_dirs
-  never see it), then swap directories. A crash before the swap leaves
-  the original intact; after it, the compacted version; in the brief
-  two-rename window, ``_recover_chunk`` restores the original on the
-  next invocation.
+  never see it). The number of Spark jobs does not grow with the
+  candidate count, so a backlog of many small chunks costs one job's
+  fixed overhead, not one per chunk.
+- The driver then moves each staged chunk in through the per-chunk
+  tmp -> old -> live swap. A crash during the staged write or before a
+  chunk's swap leaves that chunk's original intact; after it, the
+  compacted version; in the brief two-rename window, ``_recover_chunk``
+  restores the original on the next invocation, and ``_recover_store``
+  drops a leftover stage.
 - Every rewrite appends a lineage row (tier, chunk, files/bytes before
   and after, rows, wall) to ``_compaction_log`` under the store, the
-  same audit contract as ``_retention_log``.
-
-On a cluster, chunks compact independently (one job per chunk here for
-sandbox simplicity; a driver loop over chunks is fine because each
-chunk rewrite is itself a distributed job — the driver only sequences
-metadata). Sorting within a chunk costs one local sort per output file,
-not a global shuffle.
+  same audit contract as ``_retention_log``. ``rows`` is summed from
+  the staged parts' parquet footers (no Spark job), and the log is
+  written BEFORE any swap: a crash can leave a logged chunk that the
+  next run compacts and logs again, never a swapped chunk with no
+  audit row.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators.retention import _chunk_dirs
@@ -48,6 +56,7 @@ _LOG_SCHEMA = (
     "tier int, chunk long, files_before long, bytes_before long, "
     "files_after long, bytes_after long, rows long, compacted_at double"
 )
+_STAGE = "_compact_stage"
 
 
 def _parquet_parts(d: str) -> list[str]:
@@ -85,11 +94,15 @@ def _recover_chunk(d: str) -> None:
 
 
 def _recover_store(path: str) -> None:
-    """Sweep every tier directory for swap leftovers. Needed because a
-    chunk that crashed between the two renames has NO live ``chunk=``
-    directory, so candidate listing alone would never find it."""
+    """Drop a leftover stage and sweep every tier directory for swap
+    leftovers. The sweep is needed because a chunk that crashed between
+    the two renames has NO live ``chunk=`` directory, so candidate
+    listing alone would never find it. A staged chunk not yet swapped
+    is discarded: its live original is still intact."""
     if not os.path.isdir(path):
         return
+    if os.path.exists(os.path.join(path, _STAGE)):
+        shutil.rmtree(os.path.join(path, _STAGE))
     for tdir in os.listdir(path):
         if not tdir.startswith("tier="):
             continue
@@ -128,57 +141,59 @@ def compaction_candidates(
     return out
 
 
-def compact_chunks_bulk(
+def compact_chunks(
     spark: SparkSession,
     path: str,
     target_files: int = 1,
     small_bytes: int = 8 * 1024 * 1024,
     sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
 ) -> list[dict]:
-    """ONE Spark job compacting every fragmented chunk at once.
+    """Rewrite every fragmented (tier, chunk) partition into at most
+    ``target_files`` sorted parquet parts; append lineage to
+    ``<path>/_compaction_log``. Returns the lineage rows.
 
-    The per-chunk loop in ``compact_chunks`` sequences one job per
-    chunk — right for dozens of candidates, wrong for the 10^5 a
-    day-old ingest backlog can fragment. Here all candidates are read
-    in a single scan, repartitioned on (tier, chunk) so each chunk's
-    rows land in exactly one task (one output part per chunk dir),
-    locally sorted, and written back with DYNAMIC partition overwrite —
-    which stages in _temporary and replaces only the listed partitions
-    at job commit, so a crash mid-job leaves every original chunk
-    intact (stronger than the loop's per-chunk swap). Lineage rows are
-    appended to the same ``_compaction_log``.
+    One Spark write covers every candidate, however many there are.
+    Idempotent: a second invocation finds no candidates and is a no-op.
     """
     _recover_store(path)
     cands = compaction_candidates(path, target_files, small_bytes)
     if not cands:
         return []
-    before = {(t, c): _part_stats(d) for t, c, d in cands}
-    paths = [d for _t, _c, d in cands]
-    df = (
-        spark.read.option("basePath", path).parquet(*paths)
-    )
+    stage = os.path.join(path, _STAGE)
+    # live chunk dir -> where the one write stages its rewrite
+    staged = {
+        d: os.path.join(stage, f"tier={t}", f"chunk={c}") for t, c, d in cands
+    }
+    df = spark.read.option("basePath", path).parquet(*staged)
+    keys = [F.col("tier"), F.col("chunk")]
+    if target_files > 1:
+        keys.append(F.pmod(F.xxhash64("doc_id"), F.lit(target_files)))
     present = [c for c in sort_cols if c in df.columns]
-    out = df.repartition("tier", "chunk")
-    if present:
-        out = out.sortWithinPartitions(*present)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("tier", "chunk").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # (tier, chunk) lead the sort so the partitioned writer's required
+    # ordering is already met: it adds no second sort that could undo
+    # the (doc_id, window_idx) order inside each file
+    (
+        df.repartition(*keys)
+        .sortWithinPartitions("tier", "chunk", *present)
+        .write.mode("overwrite")
+        .partitionBy("tier", "chunk")
+        .parquet(stage)
+    )
     now = time.time()
     rows = []
-    for (t, c), (fb, bb) in sorted(before.items()):
-        fa, ba = _part_stats(
-            os.path.join(path, f"tier={t}", f"chunk={c}")
-        )
+    for tier, chunk, d in cands:
+        files_before, bytes_before = _part_stats(d)
+        files_after, bytes_after = _part_stats(staged[d])
         rows.append({
-            "tier": t, "chunk": c,
-            "files_before": fb, "bytes_before": bb,
-            "files_after": fa, "bytes_after": ba,
-            "rows": -1,  # not re-counted in bulk mode (one job, no per-
-            #              chunk action); -1 marks "not recorded"
+            "tier": tier,
+            "chunk": chunk,
+            "files_before": files_before,
+            "bytes_before": bytes_before,
+            "files_after": files_after,
+            "bytes_after": bytes_after,
+            "rows": sum(
+                pq.read_metadata(f).num_rows for f in _parquet_parts(staged[d])
+            ),
             "compacted_at": now,
         })
     from pyhctsa_spark.operators._local_df import one_slice_df
@@ -188,61 +203,13 @@ def compact_chunks_bulk(
         .write.mode("append")
         .parquet(os.path.join(path, "_compaction_log"))
     )
-    return rows
-
-
-def compact_chunks(
-    spark: SparkSession,
-    path: str,
-    target_files: int = 1,
-    small_bytes: int = 8 * 1024 * 1024,
-    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
-) -> list[dict]:
-    """Rewrite every fragmented (tier, chunk) partition into
-    ``target_files`` sorted parquet parts; append lineage to
-    ``<path>/_compaction_log``. Returns the lineage rows.
-
-    Idempotent: a second invocation finds no candidates and is a no-op.
-    Per-chunk jobs — use ``compact_chunks_bulk`` when the candidate
-    count is large (one job for all chunks).
-    """
-    _recover_store(path)
-    rows: list[dict] = []
-    for tier, chunk, d in compaction_candidates(path, target_files, small_bytes):
-        files_before, bytes_before = _part_stats(d)
-        df = spark.read.parquet(d)
-        present = [c for c in sort_cols if c in df.columns]
-        if present:
-            # sortWithinPartitions after coalesce = one local sort per
-            # output file; no shuffle enters the plan
-            df = df.coalesce(target_files).sortWithinPartitions(*present)
-        else:
-            df = df.coalesce(target_files)
+    for d, src in staged.items():
         tmp, old = _swap_names(d)
-        df.write.mode("overwrite").parquet(tmp)
-        n_rows = spark.read.parquet(tmp).count()
+        os.rename(src, tmp)
         os.rename(d, old)
         os.rename(tmp, d)
         shutil.rmtree(old)
-        files_after, bytes_after = _part_stats(d)
-        rows.append({
-            "tier": tier,
-            "chunk": chunk,
-            "files_before": files_before,
-            "bytes_before": bytes_before,
-            "files_after": files_after,
-            "bytes_after": bytes_after,
-            "rows": n_rows,
-            "compacted_at": time.time(),
-        })
-    if rows:
-        from pyhctsa_spark.operators._local_df import one_slice_df
-
-        (
-            one_slice_df(spark, rows, _LOG_SCHEMA)
-            .write.mode("append")
-            .parquet(os.path.join(path, "_compaction_log"))
-        )
+    shutil.rmtree(stage)
     return rows
 
 

@@ -24,7 +24,7 @@ Scale shape:
    just those directories), filtered, and written with DYNAMIC
    partition overwrite — untouched chunks are never opened, and a
    crash mid-job leaves every original partition intact (job-commit
-   atomicity, the compact_chunks_bulk pattern).
+   atomicity of dynamic partition overwrite).
 4. SWEEP: a chunk whose every row belonged to doomed docs produces no
    output rows, so dynamic overwrite cannot replace it — those now
    fully-dead directories are removed explicitly afterwards.

@@ -143,20 +143,19 @@ def _dir_stats(d: str) -> tuple[int, int]:
 
 def tier_watermarks(spark: SparkSession, path: str) -> dict[int, int]:
     """{tier: max window_idx} read from the NEWEST chunk of each tier
-    only — partition pruning keeps this O(one chunk) per tier no matter
-    how large the store is, so deriving watermarks stays metadata-cheap
-    even at 10^12 sequences."""
-    out: dict[int, int] = {}
-    for tier, chunks in _chunk_dirs(path).items():
-        newest = chunks[max(chunks)]
-        wm = (
-            spark.read.parquet(newest)
-            .agg(F.max("window_idx").alias("m"))
-            .first()["m"]
-        )
-        if wm is not None:
-            out[tier] = int(wm)
-    return out
+    only, all tiers in one scan (``basePath``, so ``tier`` comes back as
+    a partition column) and one ``groupBy("tier")`` aggregate. The read
+    stays O(one chunk) per tier no matter how large the store is, and
+    the number of Spark jobs does not grow with the tier count."""
+    newest = [chunks[max(chunks)] for chunks in _chunk_dirs(path).values()]
+    if not newest:
+        return {}
+    rows = (
+        spark.read.option("basePath", path).parquet(*newest)
+        .groupBy("tier").agg(F.max("window_idx").alias("m"))
+        .collect()
+    )
+    return {int(r["tier"]): int(r["m"]) for r in rows if r["m"] is not None}
 
 
 def apply_retention(
