@@ -15,7 +15,7 @@ Order of operations is retention FIRST, then compaction — never pay to
 rewrite a chunk that is about to be dropped. Both phases choose their
 chunks from directory metadata; only compaction rewrites live data: the
 fragmented chunks it selected, all in one Spark job, each then swapped
-in through its crash-recoverable tmp/old rename. Watermarks are derived
+in through the crash-recoverable tablefs swap. Watermarks are derived
 from the newest chunk per tier, all tiers in one scan (O(one chunk) per
 tier regardless of store size), unless --watermark overrides are given.
 

@@ -45,6 +45,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators import tablefs
+
 STATE_COLS = [
     "n", "s1", "s2", "low", "high",
     "t_open", "open", "t_close", "close", "t_high", "t_low",
@@ -239,7 +241,7 @@ class CaggSnapshotStore:
       directories are IMMUTABLE once referenced;
     - ``_MANIFEST.json`` maps each chunk to the generation that owns it,
       plus the committed-batch high-water mark; it is the ONLY mutable state
-      and is published atomically (tmp + os.replace);
+      and is published atomically (``tablefs.publish``);
     - a refresh writes its touched chunks into a brand-new generation,
       then publishes a manifest pointing those chunks at it. Crash
       before publish: the old manifest still references the old chunk
@@ -329,7 +331,7 @@ class CaggSnapshotStore:
         # last-moment ownership check: if our lease expired during a
         # long Spark write and another writer took over, abort LOUDLY
         # instead of publishing over its commit (silent lost update).
-        # A steal between this read and os.replace remains possible in
+        # A steal between this read and the publish remains possible in
         # a microsecond window — content-CAS needs a real catalog
         # (Iceberg/Delta commit); this is the sandbox stand-in.
         tok = getattr(self, "_lease_token", None)
@@ -345,24 +347,21 @@ class CaggSnapshotStore:
                     "commit (lease expired mid-write and another writer "
                     "took over) — aborting publish; re-run the refresh"
                 )
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path())  # atomic on POSIX
+        tablefs.publish(self._manifest_path(), json.dumps(man))
         # record the committed snapshot for time travel: a copy of the
         # chunk map keyed by generation, written AFTER the commit point
         # (a crash between the two leaves the store fully consistent —
         # the snapshot is then recorded lazily by _snapshot_maps's
         # current-manifest fallback)
-        sdir = os.path.join(self.path, self.SNAPSHOT_DIR)
-        os.makedirs(sdir, exist_ok=True)
-        with open(os.path.join(sdir, f"gen={man['gen']}.json.tmp"), "w") as f:
-            json.dump({"gen": man["gen"],
-                       "chunks": dict(man["chunks"]),
-                       "last_batch": man.get("last_batch"),
-                       "committed_at": time.time()}, f)
-        os.replace(os.path.join(sdir, f"gen={man['gen']}.json.tmp"),
-                   os.path.join(sdir, f"gen={man['gen']}.json"))
+        tablefs.publish(
+            os.path.join(
+                self.path, self.SNAPSHOT_DIR, f"gen={man['gen']}.json"
+            ),
+            json.dumps({"gen": man["gen"],
+                        "chunks": dict(man["chunks"]),
+                        "last_batch": man.get("last_batch"),
+                        "committed_at": time.time()}),
+        )
 
     # -- snapshots (time travel) -------------------------------------------
     def _snapshot_maps(self) -> dict[int, dict]:

@@ -23,6 +23,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.rollup import FAMILIES, make_counters, walk_tiers
 
 
@@ -63,11 +64,7 @@ class RollupJob:
         return out
 
     def _commit(self, entry: dict) -> None:
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        tmp = self._entry_path(entry["bucket"]) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        os.replace(tmp, self._entry_path(entry["bucket"]))  # atomic commit
+        tablefs.publish(self._entry_path(entry["bucket"]), json.dumps(entry))
 
     # -- execution ---------------------------------------------------------
     def run(
@@ -129,8 +126,10 @@ class RollupJob:
             "checksum_mismatches": sum(e["checksum_mismatches"] for e in entries),
             "output_bytes": sum(e["output_bytes"] for e in entries),
         }
-        with open(os.path.join(self.store_path, "_SNAPSHOT.json"), "w") as f:
-            json.dump(snap, f, indent=2)
+        tablefs.publish(
+            os.path.join(self.store_path, "_SNAPSHOT.json"),
+            json.dumps(snap, indent=2),
+        )
         return snap
 
     def result(self, spark: SparkSession) -> DataFrame:

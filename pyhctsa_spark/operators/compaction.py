@@ -27,11 +27,11 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
   candidate count, so a backlog of many small chunks costs one job's
   fixed overhead, not one per chunk.
 - The driver then moves each staged chunk in through the per-chunk
-  tmp -> old -> live swap. A crash during the staged write or before a
-  chunk's swap leaves that chunk's original intact; after it, the
-  compacted version; in the brief two-rename window, ``_recover_chunk``
-  restores the original on the next invocation, and ``_recover_store``
-  drops a leftover stage.
+  ``tablefs.replace_dir`` swap. A crash during the staged write or
+  before a chunk's swap leaves that chunk's original intact; after it,
+  the compacted version; in the brief two-rename window,
+  ``tablefs.recover`` restores the original on the next invocation,
+  and ``_recover_store`` drops a leftover stage.
 - Every rewrite appends a lineage row (tier, chunk, files/bytes before
   and after, rows, wall) to ``_compaction_log`` under the store, the
   same audit contract as ``_retention_log``. ``rows`` is summed from
@@ -50,6 +50,7 @@ import time
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.retention import _chunk_dirs
 
 _LOG_SCHEMA = (
@@ -67,34 +68,8 @@ def _parquet_parts(d: str) -> list[str]:
     ]
 
 
-def _swap_names(d: str) -> tuple[str, str]:
-    """Hidden tmp/old sibling names for the atomic swap: underscore
-    prefix on the BASENAME, so neither Spark partition discovery nor
-    retention's _chunk_dirs (which match 'chunk=' prefixes) can ever
-    see a half-swapped directory as a live chunk."""
-    parent, base = os.path.dirname(d), os.path.basename(d)
-    return (
-        os.path.join(parent, f"_compact_tmp.{base}"),
-        os.path.join(parent, f"_compact_old.{base}"),
-    )
-
-
-def _recover_chunk(d: str) -> None:
-    """Repair leftovers from a compaction crash. States possible:
-    tmp exists (crash before swap) -> drop it; old exists and d
-    missing (crash between the two renames) -> restore the original;
-    old exists and d exists (crash before cleanup) -> drop old."""
-    tmp, old = _swap_names(d)
-    if os.path.exists(old) and not os.path.exists(d):
-        os.rename(old, d)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-
-
 def _recover_store(path: str) -> None:
-    """Drop a leftover stage and sweep every tier directory for swap
+    """Drop a leftover stage and repair every tier directory's swap
     leftovers. The sweep is needed because a chunk that crashed between
     the two renames has NO live ``chunk=`` directory, so candidate
     listing alone would never find it. A staged chunk not yet swapped
@@ -104,13 +79,8 @@ def _recover_store(path: str) -> None:
     if os.path.exists(os.path.join(path, _STAGE)):
         shutil.rmtree(os.path.join(path, _STAGE))
     for tdir in os.listdir(path):
-        if not tdir.startswith("tier="):
-            continue
-        tpath = os.path.join(path, tdir)
-        for e in os.listdir(tpath):
-            if e.startswith(("_compact_tmp.", "_compact_old.")):
-                live = os.path.join(tpath, e.split(".", 1)[1])
-                _recover_chunk(live)
+        if tdir.startswith("tier="):
+            tablefs.recover(os.path.join(path, tdir))
 
 
 def _part_stats(d: str) -> tuple[int, int]:
@@ -204,11 +174,7 @@ def compact_chunks(
         .parquet(os.path.join(path, "_compaction_log"))
     )
     for d, src in staged.items():
-        tmp, old = _swap_names(d)
-        os.rename(src, tmp)
-        os.rename(d, old)
-        os.rename(tmp, d)
-        shutil.rmtree(old)
+        tablefs.replace_dir(src, d)
     shutil.rmtree(stage)
     return rows
 

@@ -43,10 +43,10 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.dedup import (
     _rep_election,
     _shingle_df,
@@ -171,41 +171,13 @@ def build_minhash_index(
         "threshold": float(threshold),
         "id_type": df.select(id_col).schema[0].dataType.simpleString(),
     }
-    with open(os.path.join(path, _META), "w") as fh:
-        json.dump(meta, fh)
+    tablefs.publish(os.path.join(path, _META), json.dumps(meta))
     return meta
 
 
 def read_index_meta(path: str) -> dict:
     with open(os.path.join(path, _META)) as fh:
         return json.load(fh)
-
-
-def _swap_names(d: str) -> tuple[str, str]:
-    """Hidden tmp/old sibling names for the compact swap — same
-    convention as operators/compaction.py, so a half-swapped table can
-    never be mistaken for the live one."""
-    parent, base = os.path.dirname(d), os.path.basename(d)
-    return (
-        os.path.join(parent, f"_compact_tmp.{base}"),
-        os.path.join(parent, f"_compact_old.{base}"),
-    )
-
-
-def _recover_index(path: str) -> None:
-    """Repair leftovers from a compact_minhash_index crash: tmp exists
-    (crash before swap) -> drop; old exists and live missing (crash
-    between renames) -> restore; both exist (crash before cleanup) ->
-    drop old. Called by every entry point that touches the index."""
-    for table in ("sigs", "bands"):
-        d = os.path.join(path, table)
-        tmp, old = _swap_names(d)
-        if os.path.exists(old) and not os.path.exists(d):
-            os.rename(old, d)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
 
 
 def compact_minhash_index(
@@ -219,13 +191,14 @@ def compact_minhash_index(
     ``drop_ids`` is given, ERASE those documents from the index — the
     right-to-be-forgotten path (operators/deletion.py removes the
     documents; this removes their searchability). Atomic per table via
-    the tmp/old rename swap (crash-recoverable, see _recover_index);
-    a reader holding the old DataFrame may need to re-read after the
-    swap — same single-writer convention as the chunk-store compactor.
+    the tablefs swap (crash-recoverable by tablefs.recover, which every
+    entry point runs first); a reader holding the old DataFrame may
+    need to re-read after the swap — same single-writer convention as
+    the chunk-store compactor.
 
     Returns {table: (rows_before, rows_after)} lineage counts.
     """
-    _recover_index(path)
+    tablefs.recover(path)
     stats: dict = {}
     drops = (
         F.broadcast(drop_ids.select(F.col(id_col).alias("doc_id")).distinct())
@@ -243,12 +216,10 @@ def compact_minhash_index(
             clean = df.dropDuplicates(["band_id", "band_hash", "doc_id"])
         if drops is not None:
             clean = clean.join(drops, "doc_id", "left_anti")
-        tmp, old = _swap_names(d)
+        tmp = tablefs.swap_names(d)[0]
         clean.write.mode("overwrite").parquet(tmp)
         after = spark.read.parquet(tmp).count()
-        os.rename(d, old)
-        os.rename(tmp, d)
-        shutil.rmtree(old)
+        tablefs.replace_dir(tmp, d)
         stats[table] = (int(before), int(after))
     return stats
 
@@ -266,7 +237,7 @@ def append_to_minhash_index(
     not already present (re-appending a doc duplicates its band rows;
     query-time pair dedup keeps results correct but wastes probes —
     compact_minhash_index cleans them up)."""
-    _recover_index(path)
+    tablefs.recover(path)
     meta = read_index_meta(path)
     sh = _shingle_df(df, text_col, id_col, meta["shingle_k"]).persist()
     sigs = minhash_signatures(
@@ -312,7 +283,7 @@ def query_minhash_index(
     the result is materialized, so per-batch cache does not accumulate.
     """
     spark: SparkSession = delta.sparkSession
-    _recover_index(path)
+    tablefs.recover(path)
     meta = read_index_meta(path)
     if threshold is None:
         threshold = float(meta["threshold"])

@@ -40,11 +40,15 @@ lists next to brute-force and IVF ANN.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from pyhctsa_spark.operators.similarity import _as_double, _norm
+from pyhctsa_spark.operators import tablefs
+from pyhctsa_spark.operators.similarity import (
+    _as_double,
+    _compact_ivf_lists,
+    _norm,
+)
 
 
 def _list_col_matrix(col, n_rows: int):
@@ -528,7 +532,7 @@ def ivfpq_write_index(
         ivf_list_stats,
     )
 
-    _recover_pq_index(path)
+    tablefs.recover(path)
     if num_centroids is None or write_salt is None:
         # same salt derivation as ivf_write_index: one salt bucket per
         # ~100k rows of a list (PQ rows are ~m*2 bytes, so this is
@@ -576,8 +580,7 @@ def ivfpq_write_index(
         "write_salt": int(write_salt),
         "id_type": corpus.select(id_col).schema[0].dataType.simpleString(),
     }
-    with open(os.path.join(path, _PQ_META), "w") as fh:
-        json.dump(meta, fh)
+    tablefs.publish(os.path.join(path, _PQ_META), json.dumps(meta))
     return ivf_list_stats(spark.read.parquet(f"{path}/lists"))
 
 
@@ -589,23 +592,6 @@ def read_pq_meta(path: str) -> dict:
 
     with open(os.path.join(path, _PQ_META)) as fh:
         return json.load(fh)
-
-
-def _recover_pq_index(path: str) -> None:
-    """Repair leftovers from a crashed compact swap — same protocol as
-    the IVF index (see similarity._recover_ivf_index). Called by every
-    entry point that touches the index."""
-    from pyhctsa_spark.operators.similarity import _ivf_swap_names
-
-    for table in ("lists", "centroids", "codebooks"):
-        d = os.path.join(path, table)
-        tmp, old = _ivf_swap_names(d)
-        if os.path.exists(old) and not os.path.exists(d):
-            os.rename(old, d)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
 
 
 def append_to_ivfpq_index(
@@ -636,7 +622,7 @@ def append_to_ivfpq_index(
     )
 
     spark = df.sparkSession
-    _recover_pq_index(path)
+    tablefs.recover(path)
     C = _centroid_matrix(spark, path)
     books = read_codebooks(spark, path)
     base = df.select(
@@ -670,42 +656,16 @@ def compact_ivfpq_index(
 ) -> dict:
     """Fold the append heap into the cid= partition layout,
     de-duplicate replayed appends, and erase ``drop_ids`` (the
-    right-to-be-forgotten path for the code index). Atomic via the
-    tmp/old rename swap; heap dropped only after the swap lands (a
-    crash in between leaves re-dedupable duplicates, never lost rows).
+    right-to-be-forgotten path for the code index). The same list fold
+    as ``similarity.compact_ivf_index``, salted by this index's own
+    ``write_salt``: atomic via the ``tablefs`` swap, heap dropped only
+    after the swap lands (a crash in between leaves re-dedupable
+    duplicates, never lost rows).
 
     Returns {"lists": (rows_before, rows_after)} lineage counts."""
-    from pyhctsa_spark.operators.similarity import (
-        _ivf_swap_names,
-        _with_delta,
+    return _compact_ivf_lists(
+        spark, path, drop_ids, id_col, read_pq_meta(path)["write_salt"]
     )
-
-    _recover_pq_index(path)
-    meta = read_pq_meta(path)
-    d = f"{path}/lists"
-    df = _with_delta(spark, path, spark.read.parquet(d))
-    before = df.count()
-    clean = df.dropDuplicates(["nid"])
-    if drop_ids is not None:
-        drops = F.broadcast(
-            drop_ids.select(F.col(id_col).alias("nid")).distinct()
-        )
-        clean = clean.join(drops, "nid", "left_anti")
-    clean = clean.repartition(
-        F.col("cid"),
-        F.pmod(
-            F.xxhash64(F.col("nid").cast("string")),
-            F.lit(meta["write_salt"]),
-        ),
-    )
-    tmp, old = _ivf_swap_names(d)
-    clean.write.mode("overwrite").partitionBy("cid").parquet(tmp)
-    after = spark.read.parquet(tmp).count()
-    os.rename(d, old)
-    os.rename(tmp, d)
-    shutil.rmtree(old)
-    shutil.rmtree(os.path.join(path, "lists_delta"), ignore_errors=True)
-    return {"lists": (int(before), int(after))}
 
 
 def read_codebooks(spark: SparkSession, path: str):
@@ -748,7 +708,7 @@ def knn_ivfpq_index(
         )
     from pyhctsa_spark.operators.similarity import _probes_for, _with_delta
 
-    _recover_pq_index(path)
+    tablefs.recover(path)
 
     cents = spark.read.parquet(f"{path}/centroids")
     books = read_codebooks(spark, path)

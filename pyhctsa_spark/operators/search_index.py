@@ -41,7 +41,7 @@ Scale contract:
 - ``compact_search_index(drop_ids=...)`` is the right-to-be-forgotten
   path (the searchability sibling of operators/deletion.py): rewrites
   postings without the dropped docs and RECOMPUTES df/stats from the
-  surviving postings, atomic per table via the tmp/old rename swap.
+  surviving postings, atomic per table via the ``tablefs`` swap.
 
 Scores are identical (to the 6-decimal in-query rounding) to
 ``search.bm25_topk`` run against the same corpus — the equality is a
@@ -55,10 +55,10 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.search import BM25_B, BM25_K1, _doc_words
 
 _META = "_search_meta.json"
@@ -85,44 +85,6 @@ def _term_buckets(spark: SparkSession, terms: list[str], n_buckets: int) -> list
         ]
     ).head()
     return sorted({int(v) for v in row})
-
-
-def _swap_names(d: str) -> tuple[str, str]:
-    parent, base = os.path.dirname(d), os.path.basename(d)
-    return (
-        os.path.join(parent, f"_compact_tmp.{base}"),
-        os.path.join(parent, f"_compact_old.{base}"),
-    )
-
-
-def _recover_index(path: str) -> None:
-    """Repair a crashed swap, same protocol as dedup_index._recover_index:
-    old-without-live -> restore, then drop any tmp/old leftovers."""
-    for table in ("postings", "df", "stats"):
-        d = os.path.join(path, table)
-        tmp, old = _swap_names(d)
-        if os.path.exists(old) and not os.path.exists(d):
-            os.rename(old, d)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-
-
-def _swap_in(spark_df: DataFrame, d: str, partition_col: str | None = None) -> None:
-    """Write ``spark_df`` to a tmp sibling, then atomically (two renames)
-    replace ``d`` with it. Single-writer convention, crash-recoverable
-    by _recover_index."""
-    tmp, old = _swap_names(d)
-    w = spark_df.write.mode("overwrite")
-    if partition_col is not None:
-        w = w.partitionBy(partition_col)
-    w.parquet(tmp)
-    if os.path.exists(d):
-        os.rename(d, old)
-    os.rename(tmp, d)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 def _postings(df: DataFrame, text_col: str, id_col: str, n_buckets: int) -> DataFrame:
@@ -221,8 +183,7 @@ def build_search_index(
         "tokenizer": "whitespace",
         "id_type": df.select(id_col).schema[0].dataType.simpleString(),
     }
-    with open(os.path.join(path, _META), "w") as fh:
-        json.dump(meta, fh)
+    tablefs.publish(os.path.join(path, _META), json.dumps(meta))
     return meta
 
 
@@ -267,7 +228,7 @@ def query_search_index(
     TakeOrderedAndProject. Nothing in the plan scales with corpus size
     except the pruned bucket scan itself.
     """
-    _recover_index(path)
+    tablefs.recover(path)
     meta = read_index_meta(path)
     terms = sorted(set(query_terms))
     if not terms:
@@ -349,7 +310,7 @@ def append_to_search_index(
     present. A replayed append duplicates (term, doc) rows and df
     partials — ``compact_search_index`` repairs both.
     """
-    _recover_index(path)
+    tablefs.recover(path)
     meta = read_index_meta(path)
     spark = df.sparkSession
     nb = int(meta["n_buckets"])
@@ -383,7 +344,10 @@ def append_to_search_index(
         ],
         "n_docs long, n_dl long, sum_dl long",
     )
-    _swap_in(merged_stats, os.path.join(path, "stats"))
+    d = os.path.join(path, "stats")
+    tmp = tablefs.swap_names(d)[0]
+    merged_stats.write.mode("overwrite").parquet(tmp)
+    tablefs.replace_dir(tmp, d)
     post.unpersist()
 
 
@@ -398,7 +362,7 @@ def compact_search_index(
     searchability (the governance sibling of operators/deletion.py).
     df/ and stats/ are RECOMPUTED from the surviving postings, so a
     compacted index is self-consistent whatever state appends left it
-    in. Atomic per table via the tmp/old swap.
+    in. Atomic per table via the ``tablefs`` swap.
 
     Returns {"postings": (rows_before, rows_after)}.
 
@@ -407,10 +371,11 @@ def compact_search_index(
     ``bm25_topk`` over the erased base table, which is the invariant
     that matters.
     """
-    _recover_index(path)
+    tablefs.recover(path)
     meta = read_index_meta(path)
-    d = os.path.join(path, "postings")
-    post = _read_or_empty(spark, d, _postings_schema(meta))
+    post = _read_or_empty(
+        spark, os.path.join(path, "postings"), _postings_schema(meta)
+    )
     before = post.count()
     clean = post.dropDuplicates(["term", "doc_id"])
     if drop_ids is not None:
@@ -425,20 +390,18 @@ def compact_search_index(
     ).localCheckpoint(eager=True)
     after = clean.count()
 
-    _swap_in(
-        clean.repartition("term_bucket").sortWithinPartitions("term"),
-        d,
-        partition_col="term_bucket",
-    )
-    _swap_in(
-        _df_from_postings(clean).repartition("term_bucket"),
-        os.path.join(path, "df"),
-        partition_col="term_bucket",
-    )
-    _swap_in(
-        _stats_from_postings(clean).coalesce(1),
-        os.path.join(path, "stats"),
-    )
+    for table, out, part in (
+        ("postings",
+         clean.repartition("term_bucket").sortWithinPartitions("term"),
+         ["term_bucket"]),
+        ("df", _df_from_postings(clean).repartition("term_bucket"),
+         ["term_bucket"]),
+        ("stats", _stats_from_postings(clean).coalesce(1), []),
+    ):
+        d = os.path.join(path, table)
+        tmp = tablefs.swap_names(d)[0]
+        out.write.mode("overwrite").partitionBy(*part).parquet(tmp)
+        tablefs.replace_dir(tmp, d)
     from pyhctsa_spark.operators.dedup import _release_local_checkpoint
 
     _release_local_checkpoint(clean)

@@ -31,7 +31,7 @@ probes union in — the LSM shape, so a batch never shatters into
 nlist tiny files — with a quantizer-drift counter), and
 ``compact_ivf_index`` folds the heap into the partition layout,
 de-duplicates replayed appends, and erases dropped ids
-(right-to-be-forgotten) through a crash-recoverable tmp/old swap.
+(right-to-be-forgotten) through the crash-recoverable ``tablefs`` swap.
 
 Everything stays in DataFrame expressions (zip_with/aggregate dot
 products in whole-stage codegen); the one Python stage is the
@@ -44,6 +44,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from pyhctsa_spark.operators import tablefs
 
 
 def _as_double(col):
@@ -495,7 +497,7 @@ def ivf_write_index(
     skewed lists still fan out. Returns the list-size skew stats
     (``ivf_list_stats``) so the caller can gate on quantizer health at
     build time."""
-    _recover_ivf_index(path)
+    tablefs.recover(path)
     if num_centroids is None or write_salt is None:
         n_corpus = corpus.count()
         if num_centroids is None:
@@ -534,8 +536,7 @@ def ivf_write_index(
     }
     import json
 
-    with open(os.path.join(path, _IVF_META), "w") as fh:
-        json.dump(meta, fh)
+    tablefs.publish(os.path.join(path, _IVF_META), json.dumps(meta))
     return ivf_list_stats(spark.read.parquet(f"{path}/lists"))
 
 
@@ -572,33 +573,6 @@ def read_ivf_meta(path: str) -> dict:
 
     with open(os.path.join(path, _IVF_META)) as fh:
         return json.load(fh)
-
-
-def _ivf_swap_names(d: str) -> tuple[str, str]:
-    """Hidden tmp/old sibling names for the compact swap — the same
-    convention as dedup_index/search_index, so a half-swapped table can
-    never be mistaken for the live one."""
-    parent, base = os.path.dirname(d), os.path.basename(d)
-    return (
-        os.path.join(parent, f"_compact_tmp.{base}"),
-        os.path.join(parent, f"_compact_old.{base}"),
-    )
-
-
-def _recover_ivf_index(path: str) -> None:
-    """Repair leftovers from a crashed compact: tmp exists (crash before
-    swap) -> drop; old exists and live missing (crash between renames)
-    -> restore; both exist (crash before cleanup) -> drop old. Called by
-    every entry point that touches the index."""
-    for table in ("lists", "centroids"):
-        d = os.path.join(path, table)
-        tmp, old = _ivf_swap_names(d)
-        if os.path.exists(old) and not os.path.exists(d):
-            os.rename(old, d)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
 
 
 def _centroid_matrix(spark: SparkSession, path: str):
@@ -667,7 +641,7 @@ def append_to_ivf_index(
     centroids rather than continuing to append.
     """
     spark = df.sparkSession
-    _recover_ivf_index(path)
+    tablefs.recover(path)
     meta = read_ivf_meta(path)
     C = _centroid_matrix(spark, path)
     base = df.select(
@@ -707,14 +681,29 @@ def compact_ivf_index(
     searchability sibling of operators/deletion.py, same as
     compact_minhash_index / compact_search_index). Centroids are
     untouched: removing vectors never moves an assignment. Atomic via
-    the tmp/old rename swap (crash-recoverable, see
-    _recover_ivf_index); single-writer convention as the chunk-store
-    compactor.
+    the ``tablefs`` swap (crash-recoverable by tablefs.recover, which
+    every entry point runs first); single-writer convention as the
+    chunk-store compactor.
 
     Returns {"lists": (rows_before, rows_after)} lineage counts.
     """
-    _recover_ivf_index(path)
-    meta = read_ivf_meta(path)
+    return _compact_ivf_lists(
+        spark, path, drop_ids, id_col, read_ivf_meta(path)["write_salt"]
+    )
+
+
+def _compact_ivf_lists(
+    spark: SparkSession,
+    path: str,
+    drop_ids: DataFrame | None,
+    id_col: str,
+    write_salt: int,
+) -> dict:
+    """The list fold shared by the IVF and IVFPQ indexes: union the
+    append heap into ``lists/``, keep one row per nid, anti-join
+    ``drop_ids``, rewrite salted by (cid, xxhash64(nid) % write_salt)
+    and swap the result in; the heap is dropped last."""
+    tablefs.recover(path)
     d = f"{path}/lists"
     df = _with_delta(spark, path, spark.read.parquet(d))
     before = df.count()
@@ -729,17 +718,12 @@ def compact_ivf_index(
         clean = clean.join(drops, "nid", "left_anti")
     clean = clean.repartition(
         F.col("cid"),
-        F.pmod(
-            F.xxhash64(F.col("nid").cast("string")),
-            F.lit(meta["write_salt"]),
-        ),
+        F.pmod(F.xxhash64(F.col("nid").cast("string")), F.lit(write_salt)),
     )
-    tmp, old = _ivf_swap_names(d)
+    tmp = tablefs.swap_names(d)[0]
     clean.write.mode("overwrite").partitionBy("cid").parquet(tmp)
     after = spark.read.parquet(tmp).count()
-    os.rename(d, old)
-    os.rename(tmp, d)
-    shutil.rmtree(old)
+    tablefs.replace_dir(tmp, d)
     # the heap is folded into the rewritten lists — drop it LAST: a
     # crash here leaves its rows duplicated in both places, which the
     # next compact's nid-dedup repairs (same class as a replayed
@@ -765,7 +749,7 @@ def knn_ivf_index(
     other nlist - |probed| directories entirely). Scan cost is
     ~nprobe/nlist of the corpus in actual I/O, not just in compute —
     the property that makes IVF worth materializing."""
-    _recover_ivf_index(path)
+    tablefs.recover(path)
     if queries.limit(max_broadcast_queries + 1).count() > max_broadcast_queries:
         raise ValueError(
             f"query batch exceeds max_broadcast_queries="

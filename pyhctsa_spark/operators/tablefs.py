@@ -1,0 +1,94 @@
+"""Table lifecycle on the filesystem: the one directory swap, the one
+crash recovery and the one atomic file publish that the chunk store,
+the four persistent indexes, the rollup checkpoint, the snapshot
+continuous aggregate and the streaming batch markers share.
+
+Directory swap. A table directory ``d`` is rewritten into a sibling and
+moved in with two renames: ``d`` -> ``_compact_old.<base>``, the new
+directory -> ``d``, then the old copy is deleted. The hidden sibling
+names (``swap_names``) start with an underscore, so neither Spark
+partition discovery nor retention's ``chunk=`` listing ever reads a
+half-swapped directory as live data. ``_compact_tmp.<base>`` is where
+writers stage the new copy next to ``d``. A crash leaves one of three
+states, and ``recover`` repairs each of them the same way everywhere:
+
+- ``_compact_tmp.<base>`` exists (crash before the swap): drop it; the
+  live table is intact.
+- ``_compact_old.<base>`` exists and ``d`` does not (crash between the
+  two renames): rename the old copy back to ``d``.
+- both exist (crash before the old copy was deleted): drop the old copy.
+
+``recover`` sweeps a whole parent directory for these names, so a
+caller never lists which of its tables can be mid-swap.
+
+File publish. ``publish`` writes ``path + ".tmp"`` and moves it over
+``path`` with ``os.replace``: a reader sees the previous file or the
+new one, never a truncated one, and a failed write leaves the previous
+file in place and no ``.tmp`` behind.
+
+Guarantees. ``os.rename`` and ``os.replace`` are atomic within one POSIX
+filesystem, so each step above is all-or-nothing against a process
+crash, under the single-writer rule every caller already states (one
+writer per table; readers may need to re-read after a swap). Nothing
+is fsynced, so a power loss can still lose the last step. On object
+stores a rename is a copy plus a delete: there the swap is NOT atomic,
+and a reader can see a partly copied directory.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+
+_TMP = "_compact_tmp."
+_OLD = "_compact_old."
+
+
+def swap_names(d: str) -> tuple[str, str]:
+    """The hidden (tmp, old) sibling paths of table directory ``d``."""
+    parent, base = os.path.split(d)
+    return os.path.join(parent, _TMP + base), os.path.join(parent, _OLD + base)
+
+
+def replace_dir(src: str, d: str) -> None:
+    """Move directory ``src`` in as ``d``: ``d`` -> old, ``src`` -> ``d``,
+    drop old. ``d`` may be absent (the first write of a table)."""
+    old = swap_names(d)[1]
+    had_live = os.path.exists(d)
+    if had_live:
+        os.rename(d, old)
+    os.rename(src, d)
+    if had_live:
+        shutil.rmtree(old)
+
+
+def recover(parent: str) -> None:
+    """Repair every swap a crash left unfinished under ``parent`` (see
+    the module docstring for the three states). A missing ``parent``
+    and a second call are no-ops."""
+    if not os.path.isdir(parent):
+        return
+    for e in os.listdir(parent):
+        p = os.path.join(parent, e)
+        if e.startswith(_TMP):
+            shutil.rmtree(p)
+        elif e.startswith(_OLD):
+            live = os.path.join(parent, e[len(_OLD):])
+            if os.path.exists(live):
+                shutil.rmtree(p)
+            else:
+                os.rename(p, live)
+
+
+def publish(path: str, text: str) -> None:
+    """Atomically replace the file ``path`` with ``text``, creating its
+    parent directory if needed."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)

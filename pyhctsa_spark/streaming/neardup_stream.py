@@ -46,6 +46,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.dedup import near_dup_clusters
 from pyhctsa_spark.operators.dedup_index import (
     append_to_minhash_index,
@@ -151,11 +152,7 @@ def process_neardup_batch(
     survivors.unpersist()
     for df in probe_cache:  # per-batch probe caches must not accumulate
         df.unpersist()
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("committed")
-    os.replace(tmp, marker)
+    tablefs.publish(marker, "committed")
 
 
 def stream_neardup_dedup(

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.search_index import (
     append_to_search_index,
     compact_search_index,
@@ -53,14 +54,6 @@ DOC_STREAM_SCHEMA = "doc_id long, text string, source string"
 
 def _marker(index_path: str, kind: str, batch_id: int) -> str:
     return os.path.join(index_path, kind, str(int(batch_id)))
-
-
-def _write_marker(path: str) -> None:
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write("x")
-    os.replace(tmp, path)
 
 
 def process_index_batch(
@@ -75,10 +68,34 @@ def process_index_batch(
     """The foreachBatch body, callable directly for batch-mode replays
     and tests. Idempotent per ``batch_id``; self-heals a crash-window
     replay by compacting before re-appending (see module docstring)."""
+    _marked_index_batch(
+        batch_df, batch_id, index_path, sink_dir,
+        append=lambda b: append_to_search_index(
+            b, index_path, text_col=text_col, id_col=id_col
+        ),
+        drop_batch=lambda b: compact_search_index(
+            b.sparkSession, index_path,
+            drop_ids=b.select(F.col(id_col).alias("doc_id")),
+        ),
+    )
+
+
+def _marked_index_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    index_path: str,
+    sink_dir: str,
+    append,
+    drop_batch,
+) -> None:
+    """The exactly-once batch body shared by the search and vector
+    streams: sink the batch, then ``append(batch)`` to the index between
+    the pending and commit markers. ``drop_batch(batch)`` compacts the
+    batch's own ids out of the index; it runs only on a replay of a
+    batch whose earlier attempt crashed inside its append."""
     commit = _marker(index_path, "_stream_commits", batch_id)
     if os.path.exists(commit):
         return
-    spark = batch_df.sparkSession
     pending = _marker(index_path, "_stream_pending", batch_id)
     batch_df = batch_df.persist()
 
@@ -93,22 +110,16 @@ def process_index_batch(
 
     # 2. index append, bracketed by the pending/commit markers
     if os.path.exists(pending):
-        # a previous attempt died inside its append — its postings (and
-        # possibly its df/stats merge) may be partially present. One
-        # compact that DROPS the batch's own ids erases whatever the
-        # crashed attempt landed and recomputes df/stats from the
-        # surviving postings, so the re-append below starts exact.
-        compact_search_index(
-            spark,
-            index_path,
-            drop_ids=batch_df.select(F.col(id_col).alias("doc_id")),
-        )
-    _write_marker(pending)
+        # a previous attempt died inside its append — some of the
+        # batch's rows (and, for the search index, possibly its df/stats
+        # merge) may already be in the index. One compact that DROPS the
+        # batch's own ids erases whatever the crashed attempt landed, so
+        # the re-append below starts exact.
+        drop_batch(batch_df)
+    tablefs.publish(pending, "x")
     if batch_df.limit(1).count():
-        append_to_search_index(
-            batch_df, index_path, text_col=text_col, id_col=id_col
-        )
-    _write_marker(commit)
+        append(batch_df)
+    tablefs.publish(commit, "x")
     batch_df.unpersist()
 
 

@@ -12,7 +12,7 @@ Per micro-batch (``foreachBatch``):
      map-side assignment against the index's own centroids, written to
      the cid-sorted LSM append heap).
 
-Exactly-once contract, same marker protocol as the search stream: a
+Exactly-once contract, the search stream's batch body and markers: a
 replayed IVF append duplicates (cid, nid) rows, and a duplicated
 neighbor occupies two top-k slots — wrong results, not just waste. So
 the batch body brackets the index append with two markers:
@@ -44,8 +44,6 @@ maintenance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -53,7 +51,7 @@ from pyhctsa_spark.operators.similarity import (
     append_to_ivf_index,
     compact_ivf_index,
 )
-from pyhctsa_spark.streaming.search_stream import _marker, _write_marker
+from pyhctsa_spark.streaming.search_stream import _marked_index_batch
 
 VEC_STREAM_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -71,41 +69,17 @@ def process_vector_batch(
     and tests. Idempotent per ``batch_id``; self-heals a crash-window
     replay by compacting out the batch's own ids before re-appending
     (see module docstring)."""
-    commit = _marker(index_path, "_stream_commits", batch_id)
-    if os.path.exists(commit):
-        return
-    spark = batch_df.sparkSession
-    pending = _marker(index_path, "_stream_pending", batch_id)
-    batch_df = batch_df.persist()
-
-    # 1. sink, exactly-once via batch-partition overwrite
-    (
-        batch_df.withColumn("batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(sink_dir)
-    )
-
-    # 2. index append, bracketed by the pending/commit markers
-    if os.path.exists(pending):
-        # a previous attempt died inside its append — some of the
-        # batch's rows may already sit in the heap. One compact that
-        # DROPS the batch's own ids erases whatever the crashed attempt
-        # landed, so the re-append below starts exact.
-        compact_ivf_index(
-            spark,
-            index_path,
-            drop_ids=batch_df.select(F.col(id_col).alias("vec_id")),
+    _marked_index_batch(
+        batch_df, batch_id, index_path, sink_dir,
+        append=lambda b: append_to_ivf_index(
+            b, index_path, vec_col=vec_col, id_col=id_col
+        ),
+        drop_batch=lambda b: compact_ivf_index(
+            b.sparkSession, index_path,
+            drop_ids=b.select(F.col(id_col).alias("vec_id")),
             id_col="vec_id",
-        )
-    _write_marker(pending)
-    if batch_df.limit(1).count():
-        append_to_ivf_index(
-            batch_df, index_path, vec_col=vec_col, id_col=id_col
-        )
-    _write_marker(commit)
-    batch_df.unpersist()
+        ),
+    )
 
 
 def stream_vector_indexing(

@@ -141,8 +141,8 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
     from pyhctsa_spark.operators.compaction import (
         _parquet_parts,
         _recover_store,
-        _swap_names,
     )
+    from pyhctsa_spark.operators.tablefs import swap_names
 
     path = str(tmp_path / "store")
     _fragmented_store(spark, path, n_parts=4)
@@ -153,9 +153,9 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
     d0 = os.path.join(path, "tier=0", "chunk=0")
     d1 = os.path.join(path, "tier=0", "chunk=1")
     d2 = os.path.join(path, "tier=0", "chunk=2")
-    tmp0, _ = _swap_names(d0)
-    _, old1 = _swap_names(d1)
-    _, old2 = _swap_names(d2)
+    tmp0, _ = swap_names(d0)
+    _, old1 = swap_names(d1)
+    _, old2 = swap_names(d2)
     shutil.copytree(d0, tmp0)       # crash before swap
     shutil.copytree(d1, old1)       # crash before cleanup
     os.rename(d2, old2)             # crash BETWEEN the renames
@@ -180,8 +180,9 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
                 for e in os.listdir(os.path.join(path, tdir))
             )
     # crash states of the staging directory: the injected crash hits
-    # the move of the k-th staged chunk (k = 0: after the staged write,
-    # before any swap; k = 2: two chunks swapped, three still staged)
+    # the move of the k-th staged chunk, which is then caught between
+    # its two renames (k = 0: no chunk swapped yet; k = 2: two chunks
+    # swapped, three still staged)
     real_rename = os.rename
     for k in (0, 2):
         p = str(tmp_path / f"staged{k}")

@@ -16,13 +16,13 @@ from pyspark.sql import functions as F
 
 from pyhctsa_spark.operators.dedup import minhash_verified_pairs
 from pyhctsa_spark.operators.dedup_index import (
-    _swap_names,
     append_to_minhash_index,
     build_minhash_index,
     compact_minhash_index,
     query_minhash_index,
     read_index_meta,
 )
+from pyhctsa_spark.operators.tablefs import swap_names
 
 WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 
@@ -159,7 +159,7 @@ def test_crash_recovery_restores_live_tables(spark, corpus, tmp_path):
     path = str(tmp_path / "idx")
     build_minhash_index(base, path, threshold=0.3)
     live = os.path.join(path, "bands")
-    tmp, old = _swap_names(live)
+    tmp, old = swap_names(live)
     # simulate a crash between the two renames: live missing, old present
     os.rename(live, old)
     assert not os.path.exists(live)

@@ -322,3 +322,38 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
                                  rerank=500, corpus=base).collect()
     }
     assert got2 == base_exact
+
+
+def test_ivfpq_crash_recovery_restores_live_tables(spark, tmp_path):
+    """A compact that crashed between the two renames of its lists/
+    swap leaves only _compact_old.lists; the next compact_ivfpq_index
+    restores it before reading, so no row is lost or changed."""
+    import os
+
+    from pyhctsa_spark.operators.pq import (
+        compact_ivfpq_index,
+        ivfpq_write_index,
+    )
+    from pyhctsa_spark.operators.tablefs import swap_names
+
+    emb = _emb_df(spark, np.random.default_rng(5).normal(size=(200, 16)))
+    idx = str(tmp_path / "ivfpq")
+    ivfpq_write_index(emb, idx, m=8, ksub=16, num_centroids=4,
+                      pq_train_iters=0, ivf_train_iters=2)
+    live = os.path.join(idx, "lists")
+
+    def rows():
+        return sorted(
+            (r["nid"], r["cid"], tuple(r["code"]))
+            for r in spark.read.parquet(live).collect()
+        )
+
+    want = rows()
+    _, old = swap_names(live)
+    # simulate a crash between the two renames: live missing, old present
+    os.rename(live, old)
+    assert not os.path.exists(live)
+    stats = compact_ivfpq_index(spark, idx)  # entry recovers first
+    assert os.path.exists(live) and not os.path.exists(old)
+    assert stats["lists"] == (emb.count(), emb.count())
+    assert rows() == want

@@ -1,0 +1,150 @@
+"""The table lifecycle (operators/tablefs.py): crash repair of the
+tmp/old directory swap on plain directories, the swap itself, and the
+atomic file publish that the checkpoint snapshot and the index meta
+files go through — a write that fails halfway must leave the previous
+file byte-identical and no ``.tmp`` behind."""
+
+import builtins
+import errno
+import json
+import os
+
+import pytest
+
+from pyhctsa_spark.operators.tablefs import recover, replace_dir, swap_names
+
+
+def _table(d, tag):
+    os.makedirs(d)
+    with open(os.path.join(d, "part-0.parquet"), "w") as f:
+        f.write(tag)
+
+
+def _tag(d):
+    with open(os.path.join(d, "part-0.parquet")) as f:
+        return f.read()
+
+
+def test_recover_repairs_each_crash_state(tmp_path):
+    parent = str(tmp_path)
+    # crash before the swap: a staged tmp next to the intact live table
+    a = os.path.join(parent, "a")
+    _table(a, "a-live")
+    _table(swap_names(a)[0], "a-new")
+    # crash between the two renames: only the old copy is left
+    b = os.path.join(parent, "b")
+    _table(swap_names(b)[1], "b-live")
+    # crash before cleanup: the new table is live, the old copy remains
+    c = os.path.join(parent, "c")
+    _table(c, "c-new")
+    _table(swap_names(c)[1], "c-old")
+
+    recover(parent)
+    assert (_tag(a), _tag(b), _tag(c)) == ("a-live", "b-live", "c-new")
+    assert sorted(os.listdir(parent)) == ["a", "b", "c"]
+    # a second pass finds nothing to repair and changes nothing
+    recover(parent)
+    assert sorted(os.listdir(parent)) == ["a", "b", "c"]
+    assert (_tag(a), _tag(b), _tag(c)) == ("a-live", "b-live", "c-new")
+    recover(os.path.join(parent, "missing"))  # no parent: a no-op
+
+
+def test_replace_dir_with_and_without_live_table(tmp_path):
+    d = str(tmp_path / "t")
+    tmp, old = swap_names(d)
+    _table(tmp, "first")
+    replace_dir(tmp, d)  # d absent: the first write of a table
+    assert _tag(d) == "first"
+    _table(tmp, "second")
+    replace_dir(tmp, d)
+    assert _tag(d) == "second"
+    assert os.listdir(str(tmp_path)) == ["t"]
+    assert not os.path.exists(old)
+
+
+@pytest.fixture
+def torn_write(monkeypatch):
+    """``arm(name)``: from then on, opening a file called ``name`` (or
+    ``name + ".tmp"``) for writing returns a file whose first write
+    stores half its text and then fails with ENOSPC — a write that dies
+    partway, whichever code path serializes the JSON."""
+    real_open = builtins.open
+
+    class _Torn:
+        def __init__(self, f):
+            self._f = f
+
+        def write(self, text):
+            self._f.write(text[: len(text) // 2])
+            self._f.flush()
+            raise OSError(errno.ENOSPC, "injected: disk full mid-write")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+    def arm(name):
+        def torn_open(file, mode="r", *args, **kwargs):
+            f = real_open(file, mode, *args, **kwargs)
+            base = os.path.basename(str(file))
+            if "w" in mode and base in (name, name + ".tmp"):
+                return _Torn(f)
+            return f
+
+        monkeypatch.setattr(builtins, "open", torn_open)
+
+    return arm
+
+
+def _assert_survived(path, before):
+    with open(path, "rb") as f:
+        assert f.read() == before
+    assert not os.path.exists(path + ".tmp")
+
+
+def test_failed_snapshot_write_keeps_previous_snapshot(tmp_path, torn_write):
+    from pyhctsa_spark.operators.checkpoint import RollupJob
+
+    job = RollupJob(str(tmp_path / "store"), n_buckets=2)
+    for b in range(2):
+        job._commit({
+            "bucket": b, "rows_read": 10, "windows_emitted": 3,
+            "checksum_mismatches": 0, "output_bytes": 100,
+        })
+    job.snapshot()
+    path = os.path.join(job.store_path, "_SNAPSHOT.json")
+    with open(path, "rb") as f:
+        before = f.read()
+
+    torn_write("_SNAPSHOT.json")
+    with pytest.raises(OSError, match="disk full"):
+        job.snapshot()
+    _assert_survived(path, before)
+    assert json.loads(before)["complete"] is True
+
+
+def test_failed_index_meta_write_keeps_previous_meta(
+    spark, tmp_path, torn_write
+):
+    from pyhctsa_spark.operators.search_index import (
+        build_search_index,
+        read_index_meta,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "beta gamma delta")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    meta = build_search_index(docs, idx, n_buckets=4)
+    path = os.path.join(idx, "_search_meta.json")
+    with open(path, "rb") as f:
+        before = f.read()
+
+    torn_write("_search_meta.json")
+    with pytest.raises(OSError, match="disk full"):
+        build_search_index(docs, idx, n_buckets=4)
+    _assert_survived(path, before)
+    assert read_index_meta(idx) == meta

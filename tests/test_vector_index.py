@@ -22,7 +22,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyhctsa_spark.operators.similarity import (
-    _ivf_swap_names,
     append_to_ivf_index,
     compact_ivf_index,
     ivf_write_index,
@@ -30,6 +29,7 @@ from pyhctsa_spark.operators.similarity import (
     knn_ivf_index,
     read_ivf_meta,
 )
+from pyhctsa_spark.operators.tablefs import swap_names
 
 SF = "/root/testdata/sf0.001"
 
@@ -164,7 +164,7 @@ def test_crash_recovery_restores_live_tables(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     ivf_write_index(emb, path, num_centroids=8)
     live = os.path.join(path, "lists")
-    tmp, old = _ivf_swap_names(live)
+    tmp, old = swap_names(live)
     # simulate a crash between the two renames: live missing, old present
     os.rename(live, old)
     assert not os.path.exists(live)
