@@ -6,14 +6,16 @@ Usage (cluster):
     spark-submit --py-files dist/pyhctsa_spark.zip \\
         jobs/rollup_job.py \\
         --input  s3://bucket/sequences/      \\
-        --store  s3://bucket/rollup_store/   \\
+        --store  /mnt/shared/rollup_store/   \\
         --window 32 --group 16 --tiers 3 --lags 1,2 --buckets 256
 
 The job is resumable: each salt bucket commits an atomic manifest entry
 with per-partition lineage counters (rows read, windows emitted,
 checksum mismatches, wall, bytes); on restart, completed buckets are
-skipped (operators/checkpoint.RollupJob). No ``--master`` is set here —
-spark-submit / the cluster manager decides.
+skipped (operators/checkpoint.RollupJob). The executors write the
+bucket files themselves, so ``--store`` must be a POSIX path that the
+driver and every executor can write to (a shared mount). No
+``--master`` is set here — spark-submit / the cluster manager decides.
 """
 
 from __future__ import annotations

@@ -359,6 +359,25 @@ def walk_tiers(
     (make_counters) receive rows read, windows emitted and — when the
     input carries ``tok_checksum`` — token checksum mismatches.
     """
+    src, fn, schema = _tier_walker(df, families, window, group, n_tiers,
+                                   gapped, counters, seg_tokens)
+    return src.mapInArrow(fn, schema=from_arrow_schema(schema))
+
+
+def _tier_walker(
+    df: DataFrame,
+    families: list[Family],
+    window: int,
+    group: int,
+    n_tiers: int,
+    gapped: bool = False,
+    counters: dict | None = None,
+    seg_tokens: int = _SEG_TOKENS,
+) -> tuple[DataFrame, Callable, pa.Schema]:
+    """``walk_tiers`` in parts: (the projected input, the per-partition
+    RecordBatch function, its output Arrow schema), for a caller that
+    consumes the batches inside the task (``checkpoint.RollupJob``
+    writes them to parquet there)."""
     if gapped and any(f.dtype is not np.float64 for f in families):
         raise ValueError("gap-filled values only feed float families")
     schema, wanted = _layout(families)
@@ -447,9 +466,7 @@ def walk_tiers(
             if blocks:
                 yield _assemble(blocks, schema, pack)
 
-    return df.select("doc_id", "source", *needed).mapInArrow(
-        fn, schema=from_arrow_schema(schema)
-    )
+    return df.select("doc_id", "source", *needed), fn, schema
 
 
 def make_counters(spark) -> dict:

@@ -24,7 +24,9 @@ caller never lists which of its tables can be mid-swap.
 File publish. ``publish`` writes ``path + ".tmp"`` and moves it over
 ``path`` with ``os.replace``: a reader sees the previous file or the
 new one, never a truncated one, and a failed write leaves the previous
-file in place and no ``.tmp`` behind.
+file in place and no ``.tmp`` behind. ``staged`` is that step for a
+caller that writes the temporary file itself (the rollup checkpoint's
+parquet parts, staged under hidden ``.part-*`` names).
 
 Guarantees. ``os.rename`` and ``os.replace`` are atomic within one POSIX
 filesystem, so each step above is all-or-nothing against a process
@@ -39,6 +41,8 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 _TMP = "_compact_tmp."
 _OLD = "_compact_old."
@@ -80,15 +84,22 @@ def recover(parent: str) -> None:
                 os.rename(p, live)
 
 
-def publish(path: str, text: str) -> None:
-    """Atomically replace the file ``path`` with ``text``, creating its
-    parent directory if needed."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + ".tmp"
+@contextmanager
+def staged(tmp: str, path: str) -> Iterator[str]:
+    """Write the file ``path`` through ``tmp``: a clean exit moves
+    ``tmp`` over ``path`` with ``os.replace``, an error removes ``tmp``
+    and leaves ``path`` as it was."""
     try:
-        with open(tmp, "w") as f:
-            f.write(text)
+        yield tmp
         os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.remove(tmp)
+
+
+def publish(path: str, text: str) -> None:
+    """Atomically replace the file ``path`` with ``text``, creating its
+    parent directory if needed."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with staged(path + ".tmp", path) as tmp, open(tmp, "w") as f:
+        f.write(text)

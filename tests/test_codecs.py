@@ -364,7 +364,7 @@ def test_media_audio_golden_is_current():
 
     r = subprocess.run(
         [sys.executable, "scripts/gen_media_audio_golden.py", "--check"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=dirname(dirname(abspath(__file__))),
     )
     assert r.returncode == 0, r.stdout + r.stderr
 

@@ -4,6 +4,7 @@ residuals), hand-built streams for the decoder paths the encoder never
 emits (LPC, stereo decorrelation, wasted bits, Rice escape), CRC
 verification, and registry dispatch."""
 
+import pathlib
 import struct
 
 import numpy as np
@@ -14,6 +15,8 @@ from pyhctsa_spark.operators.codecs_flac import (
     _Bits, _BitsW, _crc8, _crc16, decode_flac, decode_flac_int,
     encode_flac,
 )
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 @pytest.mark.parametrize("mode", ["verbatim", "fixed0", "fixed1", "fixed2"])
@@ -200,7 +203,7 @@ def test_media_flac_golden_is_current():
 
     r = subprocess.run(
         [sys.executable, "scripts/gen_media_flac_golden.py", "--check"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stdout + r.stderr
 

@@ -4,6 +4,8 @@ predictor, precision and component count, because the format has no
 quantization. A hand-built two-sample stream pins the wire format
 independent of the encoder."""
 
+import pathlib
+
 import numpy as np
 import pytest
 
@@ -13,6 +15,7 @@ from pyhctsa_spark.operators.codecs_jpeg_lossless import (
     encode_jpeg_lossless,
 )
 
+REPO = pathlib.Path(__file__).resolve().parents[1]
 RNG = np.random.default_rng(20260818)
 
 
@@ -127,6 +130,6 @@ def test_media_jpegls_golden_is_current():
 
     r = subprocess.run(
         [sys.executable, "scripts/gen_media_jpegls_golden.py", "--check"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stdout + r.stderr

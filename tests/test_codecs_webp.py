@@ -8,6 +8,7 @@ code-to-plane table vs the spec's published head, registry dispatch,
 typed failure modes, wire-format byte stability, and golden currency."""
 
 import hashlib
+import pathlib
 import struct
 
 import numpy as np
@@ -24,6 +25,8 @@ from pyhctsa_spark.operators.codecs_webp import (
     decode_webp,
     encode_webp_lossless,
 )
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 def _rgb(i: int, h: int, w: int, ch: int = 3) -> np.ndarray:
@@ -397,6 +400,6 @@ def test_media_webp_golden_is_current():
 
     r = subprocess.run(
         [sys.executable, "scripts/gen_media_webp_golden.py", "--check"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stdout + r.stderr

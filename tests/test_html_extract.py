@@ -8,14 +8,16 @@ zero-Exchange plan gate.
 from __future__ import annotations
 
 import hashlib
+import pathlib
 
 import pyarrow.parquet as pq
 import pytest
 
 from pyhctsa_spark.operators.html_extract import extract_text, html_extract
 
-FIX = "/root/repo/tests/fixtures/html_docs.parquet"
-GOLD = "/root/repo/tests/golden/html_extract_60.parquet"
+REPO = pathlib.Path(__file__).resolve().parents[1]
+FIX = str(REPO / "tests" / "fixtures" / "html_docs.parquet")
+GOLD = str(REPO / "tests" / "golden" / "html_extract_60.parquet")
 
 
 def txt(s: str) -> str:
@@ -224,7 +226,7 @@ class TestSparkWiring:
         from pyhctsa_spark.sources.warc import read_warc_responses
 
         docs = read_warc_responses(
-            spark, "/root/repo/tests/fixtures/html_warc/*.warc.gz"
+            spark, str(REPO / "tests" / "fixtures" / "html_warc" / "*.warc.gz")
         ).select("url", F.col("text").alias("html"))
         out = html_extract(docs, rebalance=False).select(
             F.regexp_extract("url", r"(\d+)$", 1).cast("long").alias("doc_id"),

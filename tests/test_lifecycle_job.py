@@ -1,6 +1,7 @@
 """Chunk-lifecycle job: retention-then-compaction under the spark-submit
 CLI contract, watermark derivation, and --retain spec parsing."""
 
+import pathlib
 import sys
 
 from pyspark.sql import functions as F
@@ -10,6 +11,8 @@ from pyhctsa_spark.operators.retention import (
     tier_watermarks,
     write_tier_chunked,
 )
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 def _store(spark, path, n_docs=4, n_w0=256, n_parts=6):
@@ -39,7 +42,7 @@ def test_tier_watermarks_reads_only_newest_chunk(spark, tmp_path):
 
 
 def test_parse_retain():
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     from lifecycle_job import parse_retain
 
     assert parse_retain("0:168,1:2160,2:keep") == {0: 168, 1: 2160, 2: None}
@@ -50,7 +53,7 @@ def test_lifecycle_job_cli_end_to_end(spark, tmp_path, capsys):
 
     path = str(tmp_path / "store")
     _store(spark, path)
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     import lifecycle_job
 
     # tier-0 horizon 128 windows, watermark 255 -> chunks 0,1 evicted;
@@ -86,7 +89,7 @@ def test_cagg_job_cli_full_lifecycle(spark, tmp_path, capsys):
 
     from pyspark.sql import functions as F2
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     import cagg_job
 
     root = str(tmp_path)

@@ -1,13 +1,18 @@
 """Compressed-store round-trip + resumable checkpointed job semantics."""
 
+import glob
 import os
+import pathlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from pyhctsa_spark.operators import checkpoint
 from pyhctsa_spark.operators.checkpoint import RollupJob
-from pyhctsa_spark.operators.rollup import rollup_tiers
+from pyhctsa_spark.operators.rollup import FAMILIES, rollup_tiers, walk_tiers
 from pyhctsa_spark.operators.store import (
     FEATURES,
     compression_report,
@@ -15,6 +20,9 @@ from pyhctsa_spark.operators.store import (
     write_compressed_store,
 )
 from pyhctsa_spark.sources.synthetic import sequences_df
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
+SMALL = {"window": 16, "group": 4, "n_tiers": 2}
 
 
 @pytest.fixture(scope="module")
@@ -99,7 +107,7 @@ def test_packaged_zip_imports_and_job_cli_runs(spark, tmp_path):
     import subprocess
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, str(REPO / "scripts"))
     from package import build
 
     zip_path = build(str(tmp_path / "pyhctsa_spark.zip"))
@@ -107,14 +115,14 @@ def test_packaged_zip_imports_and_job_cli_runs(spark, tmp_path):
     probe = subprocess.run(
         [sys.executable, "-c",
          "import sys; sys.path.insert(0, sys.argv[1]); "
-         "sys.path = [p for p in sys.path if p not in ('', '/root/repo')]; "
+         "sys.path = [p for p in sys.path if p not in ('', sys.argv[2])]; "
          "import pyhctsa_spark.functions.kernels as K; import numpy as np; "
          "print(K.mean_(np.arange(10.0))); "
          # data resources must load from INSIDE the zip too
          # (importlib.resources, not a filesystem path)
          "from pyhctsa_spark.operators.bpe import load_merges; "
          "print(len(load_merges()) > 0)",
-         zip_path],
+         zip_path, str(REPO)],
         capture_output=True, text=True, timeout=120, cwd=str(tmp_path),
     )
     assert probe.returncode == 0, probe.stderr[-500:]
@@ -125,7 +133,7 @@ def test_packaged_zip_imports_and_job_cli_runs(spark, tmp_path):
     src = str(tmp_path / "seq")
     sequences_df(spark, 12, binary=True).write.parquet(src)
     store = str(tmp_path / "store")
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(REPO / "jobs"))
     import rollup_job
 
     rc = rollup_job.main([
@@ -192,3 +200,120 @@ def test_rollup_job_lineage_counters_every_family(spark, tmp_path, family):
     assert snap["checksum_mismatches"] == 1
     assert snap["windows_emitted"] == written > 0
     seq.unpersist()
+
+
+def _bits(t: pa.Table) -> pa.Table:
+    """``t`` sorted by its key, doubles as their int64 bit patterns."""
+    t = t.sort_by([("doc_id", "ascending"), ("tier", "ascending"),
+                   ("window_idx", "ascending")])
+    cols = [c.combine_chunks() for c in t.columns]
+    cols = [c.view(pa.int64()) if pa.types.is_float64(c.type) else c
+            for c in cols]
+    return pa.table(cols, names=t.column_names)
+
+
+def _part_bytes(d) -> int:
+    return sum(os.path.getsize(f) for f in glob.glob(os.path.join(d, "part-*")))
+
+
+@pytest.mark.parametrize("family", ["alg", "quantile", "hll", "fused"])
+def test_rollup_job_files_match_walker_and_spark_writer(spark, tmp_path, family):
+    """The bucket files the walker tasks write read back as walk_tiers'
+    rows bit for bit (doubles as int64 bits, blobs byte for byte) with
+    its Spark schema, and take no more bytes than Spark's own parquet
+    writer spends on the same rows in the same partitions."""
+    seq = sequences_df(spark, 12, binary=True).cache()
+    job = RollupJob(str(tmp_path / "store"), n_buckets=1, lags=[1],
+                    family=family, **SMALL)
+    snap = job.run(spark, seq)
+    want = walk_tiers(seq, FAMILIES[family]([1]), **SMALL)
+    got = job.result(spark).drop("bucket")
+    assert got.schema == want.schema
+    assert _bits(got.toArrow()).equals(_bits(want.toArrow()))
+
+    want.write.parquet(str(tmp_path / "spark"))
+    ours = _part_bytes(tmp_path / "store" / "tier_data" / "bucket=0")
+    assert snap["output_bytes"] == ours
+    assert 0 < ours <= _part_bytes(tmp_path / "spark")
+    seq.unpersist()
+
+
+def test_failed_attempt_leftovers_removed_before_commit(spark, tmp_path,
+                                                        monkeypatch):
+    """What a failed or retried task attempt leaves in the bucket
+    directory (a finished part, a hidden half-written one) is gone
+    before the bucket's manifest entry is published."""
+    store = tmp_path / "store"
+    walker = checkpoint._tier_walker
+
+    def leaky_walker(*args, **kwargs):
+        src, fn, schema = walker(*args, **kwargs)
+
+        def fn_with_leftovers(batches):
+            for d in glob.glob(str(store / "tier_data" / "bucket=*")):
+                bucket = d.rsplit("=", 1)[1]
+                if (store / "_manifest" / f"bucket_{bucket}.json").exists():
+                    continue  # committed: this is not its job
+                for name in ("part-09999-failed.parquet",
+                             ".part-09998-failed.parquet"):
+                    with open(os.path.join(d, name), "wb") as f:
+                        f.write(b"torn")
+            yield from fn(batches)
+
+        return src, fn_with_leftovers, schema
+
+    at_commit = {}
+    commit = RollupJob._commit
+
+    def listing_commit(self, entry):
+        d = store / "tier_data" / f"bucket={entry['bucket']}"
+        at_commit[entry["bucket"]] = os.listdir(d)
+        commit(self, entry)
+
+    monkeypatch.setattr(checkpoint, "_tier_walker", leaky_walker)
+    monkeypatch.setattr(RollupJob, "_commit", listing_commit)
+    seq = sequences_df(spark, 12, binary=True)
+    job = RollupJob(str(store), n_buckets=2, **SMALL)
+    snap = job.run(spark, seq)
+    assert sorted(at_commit) == [0, 1]
+    for names in at_commit.values():
+        assert names and not [n for n in names if "failed" in n]
+    assert job.result(spark).count() == snap["windows_emitted"] > 0
+
+
+def test_bucket_without_windows_reads_back_with_walker_schema(spark, tmp_path):
+    """Documents shorter than one window give no rows; the bucket still
+    leaves one schema-only file, so the committed view and a plain read
+    of the store both infer the walker's schema."""
+    seq = sequences_df(spark, 4, binary=True)
+    wide = dict(SMALL, window=1 << 20)
+    job = RollupJob(str(tmp_path / "store"), n_buckets=2, **wide)
+    snap = job.run(spark, seq)
+    assert snap["complete"] and snap["windows_emitted"] == 0
+    want = walk_tiers(seq, FAMILIES["alg"]([1, 2]), **wide).schema
+    got = job.result(spark)
+    assert got.count() == 0
+    assert got.drop("bucket").schema == want
+    store = spark.read.parquet(str(tmp_path / "store" / "tier_data"))
+    assert store.drop("bucket").schema == want
+    assert "bucket" in store.columns
+
+
+def test_rollup_job_writes_the_session_parquet_codec(spark, tmp_path):
+    """The bucket files use the session's parquet codec, as Spark's
+    writer did; a codec pyarrow cannot write is refused up front."""
+    key = "spark.sql.parquet.compression.codec"
+    before = spark.conf.get(key)
+    seq = sequences_df(spark, 4, binary=True)
+    try:
+        spark.conf.set(key, "zstd")
+        RollupJob(str(tmp_path / "z"), n_buckets=1, **SMALL).run(spark, seq)
+        files = glob.glob(str(tmp_path / "z" / "tier_data" / "bucket=0" / "part-*"))
+        meta = pq.ParquetFile(files[0]).metadata
+        assert meta.row_group(0).column(0).compression == "ZSTD"
+        spark.conf.set(key, "lzo")
+        with pytest.raises(ValueError, match="lzo"):
+            RollupJob(str(tmp_path / "l"), n_buckets=1, **SMALL).run(spark, seq)
+        assert not os.path.exists(tmp_path / "l" / "_manifest")
+    finally:
+        spark.conf.set(key, before)
