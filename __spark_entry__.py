@@ -16,7 +16,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from pyhctsa_spark.plans import oracle_queries as OQ  # noqa: E402
 
@@ -1146,7 +1147,9 @@ def _wet_ingest_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyhctsa_spark.sources.warc import read_wet
 
-    docs = read_wet(spark, "/root/repo/tests/fixtures/wet/*.warc.wet.gz")
+    docs = read_wet(
+        spark, os.path.join(_ROOT, "tests", "fixtures", "wet", "*.warc.wet.gz")
+    )
     return docs.select(
         "doc_id", "url", "ts", "content_type", "n_bytes",
         F.size(F.filter(F.split("text", r"\s+"),
@@ -1168,7 +1171,9 @@ def _html_extract_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyhctsa_spark.operators.html_extract import html_extract
 
-    docs = spark.read.parquet("/root/repo/tests/fixtures/html_docs.parquet")
+    docs = spark.read.parquet(
+        os.path.join(_ROOT, "tests", "fixtures", "html_docs.parquet")
+    )
     out = html_extract(docs)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1194,7 +1199,8 @@ def _warc_html_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyhctsa_spark.sources.warc import read_warc_responses
 
     docs = read_warc_responses(
-        spark, "/root/repo/tests/fixtures/html_warc/*.warc.gz"
+        spark,
+        os.path.join(_ROOT, "tests", "fixtures", "html_warc", "*.warc.gz"),
     ).select("url", F.col("text").alias("html"))
     out = html_extract(docs)
     return out.select(

@@ -16,8 +16,9 @@ rewrite a chunk that is about to be dropped. Both phases choose their
 chunks from directory metadata; only compaction rewrites live data: the
 fragmented chunks it selected, all in one Spark job, each then swapped
 in through the crash-recoverable tablefs swap. Watermarks are derived
-from the newest chunk per tier, all tiers in one scan (O(one chunk) per
-tier regardless of store size), unless --watermark overrides are given.
+from the parquet footers of the newest chunk per tier, read with
+pyarrow and no Spark job (O(one chunk) per tier regardless of store
+size), unless --watermark overrides are given.
 
 Prints one JSON line: evicted chunks, compacted chunks, bytes
 reclaimed/rewritten — the job's lineage counters (full per-chunk audit

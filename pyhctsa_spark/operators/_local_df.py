@@ -1,4 +1,4 @@
-"""One-slice local-collection DataFrames for tiny audit/log writes.
+"""One-slice local-collection DataFrames for tiny local row lists.
 
 ``spark.createDataFrame(list)`` parallelizes the rows into
 defaultParallelism slices, and the conventional ``.coalesce(1)`` before

@@ -17,15 +17,18 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
   No parquet file is opened to decide.
 - One Spark write rewrites every candidate: one scan of all candidate
   chunks (``basePath``, so ``tier``/``chunk`` come back as partition
-  columns), a shuffle on (tier, chunk) — plus ``pmod(xxhash64(doc_id),
-  target_files)`` when ``target_files > 1`` — so each chunk's rows land
-  in at most ``target_files`` tasks, a local sort on (tier, chunk,
-  doc_id, window_idx) for run-clustered scans downstream, and one
-  partitioned write into the HIDDEN ``<store>/_compact_stage/``
-  (underscore-prefixed, so Spark partition discovery and _chunk_dirs
-  never see it). The number of Spark jobs does not grow with the
-  candidate count, so a backlog of many small chunks costs one job's
-  fixed overhead, not one per chunk.
+  columns) through the chunk store's one write shape,
+  ``retention._write_chunks``: a shuffle on (tier, chunk) — plus
+  ``pmod(xxhash64(doc_id), target_files)`` when ``target_files > 1`` —
+  so each chunk's rows land in at most ``target_files`` tasks, a local
+  sort on (tier, chunk, doc_id, window_idx) for run-clustered scans
+  downstream, and one partitioned write into the HIDDEN
+  ``<store>/_compact_stage/`` (underscore-prefixed, so Spark partition
+  discovery and _chunk_dirs never see it). The number of Spark jobs
+  does not grow with the candidate count, so a backlog of many small
+  chunks costs one job's fixed overhead, not one per chunk.
+  ``write_tier_chunked`` writes the same shape, so a freshly written
+  store has no candidates and compacting it runs no Spark job.
 - The driver then moves each staged chunk in through the per-chunk
   ``tablefs.replace_dir`` swap. A crash during the staged write or
   before a chunk's swap leaves that chunk's original intact; after it,
@@ -35,7 +38,8 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
 - Every rewrite appends a lineage row (tier, chunk, files/bytes before
   and after, rows, wall) to ``_compaction_log`` under the store, the
   same audit contract as ``_retention_log``. ``rows`` is summed from
-  the staged parts' parquet footers (no Spark job), and the log is
+  the staged parts' parquet footers and the row is appended by
+  ``tablefs.append_rows`` (no Spark job for either), and the log is
   written BEFORE any swap: a crash can leave a logged chunk that the
   next run compacts and logs again, never a swapped chunk with no
   audit row.
@@ -47,16 +51,19 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators import tablefs
-from pyhctsa_spark.operators.retention import _chunk_dirs
+from pyhctsa_spark.operators.retention import _chunk_dirs, _write_chunks
 
-_LOG_SCHEMA = (
-    "tier int, chunk long, files_before long, bytes_before long, "
-    "files_after long, bytes_after long, rows long, compacted_at double"
-)
+_LOG_SCHEMA = pa.schema([
+    ("tier", pa.int32()), ("chunk", pa.int64()),
+    ("files_before", pa.int64()), ("bytes_before", pa.int64()),
+    ("files_after", pa.int64()), ("bytes_after", pa.int64()),
+    ("rows", pa.int64()), ("compacted_at", pa.float64()),
+])
 _STAGE = "_compact_stage"
 
 
@@ -134,21 +141,10 @@ def compact_chunks(
     staged = {
         d: os.path.join(stage, f"tier={t}", f"chunk={c}") for t, c, d in cands
     }
-    df = spark.read.option("basePath", path).parquet(*staged)
-    keys = [F.col("tier"), F.col("chunk")]
-    if target_files > 1:
-        keys.append(F.pmod(F.xxhash64("doc_id"), F.lit(target_files)))
-    present = [c for c in sort_cols if c in df.columns]
-    # (tier, chunk) lead the sort so the partitioned writer's required
-    # ordering is already met: it adds no second sort that could undo
-    # the (doc_id, window_idx) order inside each file
-    (
-        df.repartition(*keys)
-        .sortWithinPartitions("tier", "chunk", *present)
-        .write.mode("overwrite")
-        .partitionBy("tier", "chunk")
-        .parquet(stage)
-    )
+    keys = ((F.pmod(F.xxhash64("doc_id"), F.lit(target_files)),)
+            if target_files > 1 else ())
+    _write_chunks(spark.read.option("basePath", path).parquet(*staged),
+                  stage, keys=keys, sort_cols=sort_cols)
     now = time.time()
     rows = []
     for tier, chunk, d in cands:
@@ -166,13 +162,8 @@ def compact_chunks(
             ),
             "compacted_at": now,
         })
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    (
-        one_slice_df(spark, rows, _LOG_SCHEMA)
-        .write.mode("append")
-        .parquet(os.path.join(path, "_compaction_log"))
-    )
+    tablefs.append_rows(os.path.join(path, "_compaction_log"), rows,
+                        _LOG_SCHEMA)
     for d, src in staged.items():
         tablefs.replace_dir(src, d)
     shutil.rmtree(stage)

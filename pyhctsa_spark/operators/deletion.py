@@ -17,14 +17,16 @@ Scale shape:
    The doomed set itself is broadcast as an isin literal (erasure
    batches are thousands of ids, not millions; batch bigger requests).
 2. AUDIT: one `_deletion_log` row per (doc, tier, chunk) is appended
-   BEFORE any data is touched (same log-before-delete contract as
-   retention.apply_retention) — a crash mid-run can leave a logged but
-   incomplete erasure, never an unlogged one; re-running converges.
+   by ``tablefs.append_rows`` BEFORE any data is touched (same
+   log-before-delete contract as retention.apply_retention) — a crash
+   mid-run can leave a logged but incomplete erasure, never an unlogged
+   one; re-running converges.
 3. REWRITE: the touched partitions are read back (basePath listing of
-   just those directories), filtered, and written with DYNAMIC
-   partition overwrite — untouched chunks are never opened, and a
-   crash mid-job leaves every original partition intact (job-commit
-   atomicity of dynamic partition overwrite).
+   just those directories), filtered, and written in the chunk store's
+   one write shape (``retention._write_chunks``: one sorted file per
+   chunk) with DYNAMIC partition overwrite — untouched chunks are never
+   opened, and a crash mid-job leaves every original partition intact
+   (job-commit atomicity of dynamic partition overwrite).
 4. SWEEP: a chunk whose every row belonged to doomed docs produces no
    output rows, so dynamic overwrite cannot replace it — those now
    fully-dead directories are removed explicitly afterwards.
@@ -39,11 +41,17 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-_LOG_SCHEMA = (
-    "doc_id string, tier int, chunk long, n_rows long, requested_at double"
-)
+from pyhctsa_spark.operators import tablefs
+from pyhctsa_spark.operators.retention import _write_chunks
+
+_LOG_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("tier", pa.int32()), ("chunk", pa.int64()),
+    ("n_rows", pa.int64()), ("requested_at", pa.float64()),
+])
 
 
 def _store_has_data(path: str) -> bool:
@@ -118,15 +126,9 @@ def delete_docs(
          "requested_at": now}
         for r in probe
     ]
-    # AUDIT before any mutation (one-slice local DF: a coalesce(1)
-    # here cost ~2.8 s of serial per-slice Python runners — _local_df)
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    (
-        one_slice_df(spark, log_rows, _LOG_SCHEMA)
-        .write.mode("append")
-        .parquet(os.path.join(path, "_deletion_log"))
-    )
+    # AUDIT before any mutation
+    tablefs.append_rows(os.path.join(path, "_deletion_log"), log_rows,
+                        _LOG_SCHEMA)
     touched = sorted({(int(r["tier"]), int(r["chunk"])) for r in probe})
     paths = [
         os.path.join(path, f"tier={t}", f"chunk={c}") for t, c in touched
@@ -143,12 +145,7 @@ def delete_docs(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         if survivors:
-            (
-                kept.repartition("tier", "chunk")
-                .write.mode("overwrite")
-                .partitionBy("tier", "chunk")
-                .parquet(path)
-            )
+            _write_chunks(kept, path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     removed = []
@@ -170,7 +167,7 @@ def delete_docs(
 def deletion_log(spark: SparkSession, path: str) -> DataFrame:
     """The erasure audit trail (may contain rows for re-run requests —
     duplicates are the idempotence record, not an error)."""
-    return spark.read.schema(_LOG_SCHEMA).parquet(
+    return spark.read.schema(from_arrow_schema(_LOG_SCHEMA)).parquet(
         os.path.join(path, "_deletion_log")
     )
 

@@ -11,14 +11,21 @@ TimescaleDB's `drop_chunks` / Iceberg's partition-level delete:
   ``(tier, chunk)`` where ``chunk = window_idx // chunk_windows``.
   Directory-level partitioning gives readers free partition pruning
   (a window_idx range filter never opens expired-adjacent chunks) and
-  gives retention a whole-directory unit of deletion.
+  gives retention a whole-directory unit of deletion. Each chunk is
+  written by one task as one file sorted by (doc_id, window_idx), the
+  same write shape compaction uses, so a fresh store has nothing to
+  compact.
+- ``tier_watermarks`` reads each tier's newest-chunk maximum from the
+  ``window_idx`` statistics in the parquet footers, read with pyarrow
+  in the calling process.
 - ``apply_retention`` evicts every chunk strictly older than the
   per-tier horizon. Expiry is decided from partition VALUES (directory
   names) — no data files are opened. Each eviction appends a lineage
-  row (tier, chunk, files, bytes, row estimate, watermark, wall time)
-  to a ``_retention_log`` parquet under the store, so an auditor can
-  reconstruct what was dropped when, and counters mirror the flagship
-  rollup's per-partition lineage contract.
+  row (tier, chunk, files, bytes, watermark, horizon, wall time) to a
+  ``_retention_log`` parquet under the store, so an auditor can
+  reconstruct what was dropped when. The row is one parquet part
+  written by ``tablefs.append_rows``; the whole maintenance step runs
+  no Spark job.
 - Cascade-before-evict guard: tier k chunks may only be dropped if the
   coarser tier k+1 already COVERS their window range (the
   cascade_from_store output exists) — otherwise the summary of that
@@ -40,12 +47,18 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_LOG_SCHEMA = (
-    "tier int, chunk long, n_files long, bytes long, "
-    "watermark_widx long, horizon_windows long, evicted_at double"
-)
+from pyhctsa_spark.operators import tablefs
+
+_LOG_SCHEMA = pa.schema([
+    ("tier", pa.int32()), ("chunk", pa.int64()), ("n_files", pa.int64()),
+    ("bytes", pa.int64()), ("watermark_widx", pa.int64()),
+    ("horizon_windows", pa.int64()), ("evicted_at", pa.float64()),
+])
 
 
 @dataclass
@@ -79,6 +92,27 @@ class RetentionPolicy:
         return keep_from_widx // self.chunk_windows
 
 
+def _write_chunks(
+    df: DataFrame, path: str, mode: str = "overwrite", keys: tuple = (),
+    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
+) -> None:
+    """The one write shape of the chunk store: a shuffle on (tier,
+    chunk) plus ``keys``, so each chunk's rows land in one task per
+    distinct ``keys`` value, a local sort on (tier, chunk, *sort_cols)
+    and a write partitioned by (tier, chunk). (tier, chunk) lead the
+    sort so the partitioned writer's required ordering is already met:
+    it adds no second sort that could undo the ``sort_cols`` order
+    inside each file."""
+    present = [c for c in sort_cols if c in df.columns]
+    (
+        df.repartition("tier", "chunk", *keys)
+        .sortWithinPartitions("tier", "chunk", *present)
+        .write.mode(mode)
+        .partitionBy("tier", "chunk")
+        .parquet(path)
+    )
+
+
 def write_tier_chunked(
     tier_df: DataFrame, path: str, chunk_windows: int = 64,
     mode: str = "overwrite",
@@ -90,25 +124,26 @@ def write_tier_chunked(
     cluster scale (bigger chunks = fewer partitions to track, coarser
     eviction granularity).
 
+    Each chunk is written by one task as one parquet file, its rows
+    sorted by (doc_id, window_idx), so parquet row-group min/max
+    statistics on doc_id are TIGHT — a doc-targeted read
+    (deletion.delete_docs probe, per-doc backfill) then skips most row
+    groups instead of scanning every chunk. This is compaction's write
+    shape (``_write_chunks``), so a fresh store has no compaction
+    candidates.
+
     ``mode="append"`` is the incremental-ingest path: fresh windows land
     in fresh chunk directories (time moves forward), so appends never
-    rewrite history; the small files they accrete are the compaction
-    operator's job, and retention ages them out chunk-wise like any
-    other data.
-
-    Rows are sorted (doc_id, window_idx) within each write task so
-    parquet row-group min/max statistics on doc_id are TIGHT — a
-    doc-targeted read (deletion.delete_docs probe, per-doc backfill)
-    then skips most row groups instead of scanning every chunk. Same
-    zone-map discipline as compaction's in-partition sort."""
-    keyed = tier_df.withColumn(
-        "chunk",
-        (F.col("window_idx") / F.lit(int(chunk_windows))).cast("long"),
+    rewrite history; each append adds one file per chunk it touches,
+    which the compaction operator merges, and retention ages them out
+    chunk-wise like any other data."""
+    _write_chunks(
+        tier_df.withColumn(
+            "chunk",
+            (F.col("window_idx") / F.lit(int(chunk_windows))).cast("long"),
+        ),
+        path, mode,
     )
-    sort_cols = [c for c in ("doc_id", "window_idx") if c in keyed.columns]
-    if sort_cols:
-        keyed = keyed.sortWithinPartitions(*sort_cols)
-    keyed.write.mode(mode).partitionBy("tier", "chunk").parquet(path)
 
 
 def read_tier_chunked(spark: SparkSession, path: str) -> DataFrame:
@@ -141,21 +176,44 @@ def _dir_stats(d: str) -> tuple[int, int]:
     return n_files, n_bytes
 
 
+def _file_max_window_idx(f: str) -> int | None:
+    """max(window_idx) of one parquet file from its footer's row-group
+    statistics; a row group without min/max makes it read the column.
+    None for a zero-row file or one without the column."""
+    md = pq.read_metadata(f)
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    if "window_idx" not in names:
+        return None
+    col = names.index("window_idx")
+    maxes = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(col).statistics
+        if st is not None and st.has_min_max:
+            maxes.append(st.max)
+        elif md.row_group(g).num_rows:
+            widx = pq.ParquetFile(f).read(columns=["window_idx"]).column(0)
+            return pc.max(widx).as_py()
+    return max(maxes, default=None)
+
+
 def tier_watermarks(spark: SparkSession, path: str) -> dict[int, int]:
-    """{tier: max window_idx} read from the NEWEST chunk of each tier
-    only, all tiers in one scan (``basePath``, so ``tier`` comes back as
-    a partition column) and one ``groupBy("tier")`` aggregate. The read
-    stays O(one chunk) per tier no matter how large the store is, and
-    the number of Spark jobs does not grow with the tier count."""
-    newest = [chunks[max(chunks)] for chunks in _chunk_dirs(path).values()]
-    if not newest:
-        return {}
-    rows = (
-        spark.read.option("basePath", path).parquet(*newest)
-        .groupBy("tier").agg(F.max("window_idx").alias("m"))
-        .collect()
-    )
-    return {int(r["tier"]): int(r["m"]) for r in rows if r["m"] is not None}
+    """{tier: max window_idx} of the NEWEST chunk of each tier, read
+    from the parquet footers of that chunk's files with pyarrow (see
+    ``_file_max_window_idx``; files Spark skips, names starting with
+    ``_`` or ``.``, are skipped too). No Spark job runs, and the cost
+    stays O(one chunk's footers) per tier however large the store is.
+    A tier whose newest chunk holds no rows is left out."""
+    out = {}
+    for tier, chunks in _chunk_dirs(path).items():
+        d = chunks[max(chunks)]
+        maxes = [_file_max_window_idx(os.path.join(d, f))
+                 for f in os.listdir(d)
+                 if not f.startswith(("_", "."))
+                 and os.path.isfile(os.path.join(d, f))]
+        maxes = [m for m in maxes if m is not None]
+        if maxes:
+            out[tier] = max(maxes)
+    return out
 
 
 def apply_retention(
@@ -176,7 +234,9 @@ def apply_retention(
     16x tier ratio, reaches past the evicted range) — the
     cascade-before-evict invariant. ``force=True`` skips the check.
 
-    Returns the lineage rows for this invocation.
+    The lineage rows go to the log through ``tablefs.append_rows``, so
+    the whole call runs no Spark job. Returns the lineage rows for this
+    invocation.
     """
     layout = _chunk_dirs(path)
     now = time.time()
@@ -238,14 +298,8 @@ def apply_retention(
                 "horizon_windows": int(policy.horizons[tier]),
                 "evicted_at": now,
             })
-    if evicted:
-        from pyhctsa_spark.operators._local_df import one_slice_df
-
-        (
-            one_slice_df(spark, evicted, _LOG_SCHEMA)
-            .write.mode("append")
-            .parquet(os.path.join(path, "_retention_log"))
-        )
+    tablefs.append_rows(os.path.join(path, "_retention_log"), evicted,
+                        _LOG_SCHEMA)
     for tier, _wm, doomed in plan:
         for c in doomed:
             shutil.rmtree(layout[tier][c])

@@ -26,7 +26,9 @@ File publish. ``publish`` writes ``path + ".tmp"`` and moves it over
 new one, never a truncated one, and a failed write leaves the previous
 file in place and no ``.tmp`` behind. ``staged`` is that step for a
 caller that writes the temporary file itself (the rollup checkpoint's
-parquet parts, staged under hidden ``.part-*`` names).
+parquet parts, staged under hidden ``.part-*`` names). ``append_rows``
+adds one such staged parquet part to a table directory: the audit logs
+of retention, compaction and deletion grow this way, with no Spark job.
 
 Guarantees. ``os.rename`` and ``os.replace`` are atomic within one POSIX
 filesystem, so each step above is all-or-nothing against a process
@@ -41,8 +43,12 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 _TMP = "_compact_tmp."
 _OLD = "_compact_old."
@@ -103,3 +109,18 @@ def publish(path: str, text: str) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with staged(path + ".tmp", path) as tmp, open(tmp, "w") as f:
         f.write(text)
+
+
+def append_rows(d: str, rows: list[dict], schema: pa.Schema) -> None:
+    """Append ``rows`` to the parquet table directory ``d`` as one new
+    part file, written under a hidden ``.part-*`` name and moved in by
+    ``staged``: a reader sees all of the rows or none of them. No rows
+    write nothing and leave ``d`` uncreated."""
+    if not rows:
+        return
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    path = os.path.join(d, name)
+    with staged(os.path.join(d, "." + name), path) as tmp:
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp,
+                       compression="snappy", store_schema=False)

@@ -17,6 +17,14 @@ driver's order-insensitive value-hash is stable across engines.
 
 from __future__ import annotations
 
+import os
+
+# golden parquet files the oracles read, in this checkout
+_GOLDEN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests", "golden",
+)
+
 W = 16  # oracle window length
 _SQ17 = "sqrt(17.0)"  # sqrt(W+1)
 _SQ15 = "sqrt(15.0)"  # sqrt(W-1)
@@ -1969,37 +1977,37 @@ ENGINE_ORACLES["knn_ivf_index_delta"] = QUERIES["knn_cosine_top3"]["duck"]
 # Multimodal decode->featurize: the fake decoder is seeded and
 # deterministic, so the engine output is reproducible bit-for-bit; the
 # oracle reads the committed golden snapshot (scripts/gen_media_golden.py).
-ENGINE_ORACLES["media_features"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_features_48.parquet')
+ENGINE_ORACLES["media_features"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_features_48.parquet')
 """
 
 # Video frame sampling (operators/multimodal.sample_video_frames): the
 # golden is generated from the spec by scripts/gen_media_golden.py with
 # plain numpy (no shared code path with the operator).
-ENGINE_ORACLES["media_frames"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_frames_48.parquet')
+ENGINE_ORACLES["media_frames"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_frames_48.parquet')
 """
 
 # REAL-codec decode (WAV/PPM/BMP/P6-stream payloads through the
 # pure-numpy spec parsers, operators/codecs.py): golden derived from the
 # container SPECS by scripts/gen_media_real_golden.py — header lengths,
 # PCM quantization, and row padding recomputed with no engine import.
-ENGINE_ORACLES["media_real_decode"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_real_48.parquet')
+ENGINE_ORACLES["media_real_decode"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_real_48.parquet')
 """
 
 # PNG/GIF in-repo decode: golden recomputed from spec-side content by
 # scripts/gen_media_compressed_golden.py (losslessness makes decoded
 # output == generated content; no engine import in the generator).
-ENGINE_ORACLES["media_compressed_decode"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_compressed_48.parquet')
+ENGINE_ORACLES["media_compressed_decode"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_compressed_48.parquet')
 """
 
 # WET crawl ingestion: archives AND golden are both written spec-side
 # by scripts/gen_wet_fixtures.py (its own serializer, no engine
 # import); the engine's parser must reproduce the golden exactly.
-ENGINE_ORACLES["wet_ingest"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/wet_ingest_90.parquet')
+ENGINE_ORACLES["wet_ingest"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/wet_ingest_90.parquet')
 """
 
 # HTML -> clean-text extraction: fixture corpus AND golden are written
@@ -2007,8 +2015,8 @@ SELECT * FROM read_parquet('/root/repo/tests/golden/wet_ingest_90.parquet')
 # CONSTRUCTION (documents are templated around known canonical
 # paragraphs; markup/entity/boilerplate noise must canonicalize back) —
 # no second extractor implementation exists anywhere.
-ENGINE_ORACLES["doc_html_extract"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/html_extract_60.parquet')
+ENGINE_ORACLES["doc_html_extract"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/html_extract_60.parquet')
 """
 
 # Full crawl path (WARC archive -> response parse -> HTTP strip ->
@@ -6264,7 +6272,7 @@ FROM agg a JOIN wb w ON w.user_id = a.user_id
 # symbols, the 20%-memory window match probability per sampled t,
 # -ln(p) with the p=0 -> 1 quirk, and the statistics over the FULL
 # 500-slot store (unused slots contribute zeros, bug-for-bug).
-QUERIES["user_surprise"] = _q2("""
+QUERIES["user_surprise"] = _q2(f"""
 WITH series AS (
   SELECT user_id,
          CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,
@@ -6304,7 +6312,7 @@ sym AS (
 rsl AS (
   SELECT nn.user_id, L.t,
          CAST(round(nn.n * CAST(0.2 AS DOUBLE)) AS BIGINT) AS mem
-  FROM nn JOIN parquet.`/root/repo/tests/golden/surprise_rs.parquet` L
+  FROM nn JOIN parquet.`{_GOLDEN}/surprise_rs.parquet` L
     ON L.n = nn.n
 ),
 pv AS (
@@ -6377,9 +6385,8 @@ FROM (
 ) st
 JOIN sqv q25 ON q25.user_id = st.user_id AND q25.i = 1
 JOIN sqv q75 ON q75.user_id = st.user_id AND q75.i = 2
-""".replace("parquet.`/root/repo/tests/golden/surprise_rs.parquet`",
-            "parquet.`/root/repo/tests/golden/surprise_rs.parquet`"),
-"""
+""",
+f"""
 WITH series AS (
   SELECT user_id,
          CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,
@@ -6419,7 +6426,7 @@ sym AS (
 rsl AS (
   SELECT nn.user_id, L.t,
          CAST(round(nn.n * CAST(0.2 AS DOUBLE)) AS BIGINT) AS mem
-  FROM nn JOIN read_parquet('/root/repo/tests/golden/surprise_rs.parquet') L
+  FROM nn JOIN read_parquet('{_GOLDEN}/surprise_rs.parquet') L
     ON L.n = nn.n
 ),
 pv AS (
@@ -6502,7 +6509,7 @@ JOIN sqv q75 ON q75.user_id = st.user_id AND q75.i = 2
 # the oracle replays the detrend as a matvec join, then the raw
 # autocovariance to ceil(N/3), the strict slope-sign peak/trough scan,
 # and the seven-threshold first-qualifying-peak rule (default 1).
-QUERIES["user_periodicity_wang"] = _q2("""
+QUERIES["user_periodicity_wang"] = _q2(f"""
 WITH series AS (
   SELECT user_id,
          CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,
@@ -6514,7 +6521,7 @@ hres AS (
   SELECT s.user_id, s.rn AS i, s.v - sum(H.h * b.v) AS r
   FROM series s
   JOIN nn ON nn.user_id = s.user_id
-  JOIN parquet.`/root/repo/tests/golden/spline_hat.parquet` H
+  JOIN parquet.`{_GOLDEN}/spline_hat.parquet` H
     ON H.n = nn.n AND H.i = s.rn
   JOIN series b ON b.user_id = s.user_id AND b.rn = H.j
   GROUP BY s.user_id, s.rn, s.v
@@ -6582,7 +6589,7 @@ SELECT user_id,
        round(coalesce(max(CASE WHEN k = 7 THEN CAST(p AS DOUBLE) END), CAST(1.0 AS DOUBLE)), 6) AS th7
 FROM wins GROUP BY user_id
 """,
-"""
+f"""
 WITH series AS (
   SELECT user_id,
          CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,
@@ -6594,7 +6601,7 @@ hres AS (
   SELECT s.user_id, s.rn AS i, s.v - sum(H.h * b.v) AS r
   FROM series s
   JOIN nn ON nn.user_id = s.user_id
-  JOIN read_parquet('/root/repo/tests/golden/spline_hat.parquet') H
+  JOIN read_parquet('{_GOLDEN}/spline_hat.parquet') H
     ON H.n = nn.n AND H.i = s.rn
   JOIN series b ON b.user_id = s.user_id AND b.rn = H.j
   GROUP BY s.user_id, s.rn, s.v
@@ -6673,7 +6680,7 @@ FROM wins GROUP BY user_id
 # computes the per-level |detail| mean/median/max plus the cross-level
 # statistics (argmax, largest/second ratio, sum-ratio selector, std,
 # max-vs-median correlation) from the data.
-QUERIES["user_wl_detailcoeffs"] = _q2('\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\ndets AS (\n  SELECT s.user_id, D.level, s.rn AS i, abs(sum(D.d * b.v)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN parquet.`/root/repo/tests/golden/wavelet_detail.parquet` D ON D.n = nn.n AND D.i = s.rn\n  JOIN series b ON b.user_id = s.user_id AND b.rn = D.j\n  GROUP BY s.user_id, D.level, s.rn\n),\nfull_dets AS (\n  SELECT s.user_id, lv.level, s.rn AS i,\n         coalesce(d.ad, CAST(0.0 AS DOUBLE)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN (SELECT DISTINCT n, level FROM parquet.`/root/repo/tests/golden/wavelet_detail.parquet`) lv ON lv.n = nn.n\n  LEFT JOIN dets d ON d.user_id = s.user_id AND d.level = lv.level\n                  AND d.i = s.rn\n),\npl AS (\n  SELECT user_id, level,\n         avg(ad) AS m_mean, median(ad) AS m_med, max(ad) AS m_max\n  FROM full_dets GROUP BY user_id, level\n),\nplw AS (\n  SELECT user_id, level, m_mean, m_med, m_max,\n         max(m_mean) OVER (PARTITION BY user_id) AS g_mean,\n         max(m_med)  OVER (PARTITION BY user_id) AS g_med,\n         max(m_max)  OVER (PARTITION BY user_id) AS g_max,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_mean DESC, level) AS r_mean,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_med DESC, level) AS r_med,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_max DESC, level) AS r_max\n  FROM pl\n),\npv AS (\n  SELECT user_id, count(*) AS k,\n         max(CASE WHEN level = 1 THEN m_mean END) AS mean1,\n         max(CASE WHEN level = 2 THEN m_mean END) AS mean2,\n         max(CASE WHEN level = 3 THEN m_mean END) AS mean3,\n         max(CASE WHEN level = 4 THEN m_mean END) AS mean4,\n         max(CASE WHEN level = 1 THEN m_med END) AS med1,\n         max(CASE WHEN level = 2 THEN m_med END) AS med2,\n         max(CASE WHEN level = 3 THEN m_med END) AS med3,\n         max(CASE WHEN level = 4 THEN m_med END) AS med4,\n         max(m_mean) AS mx_mean, stddev_samp(m_mean) AS sd_mean,\n         max(m_med) AS mx_med, stddev_samp(m_med) AS sd_med,\n         max(m_max) AS mx_max, stddev_samp(m_max) AS sd_max,\n         min(CASE WHEN m_mean = g_mean THEN level END) - 1 AS wm_mean,\n         min(CASE WHEN m_med = g_med THEN level END) - 1 AS wm_med,\n         min(CASE WHEN m_max = g_max THEN level END) - 1 AS wm_max,\n         max(CASE WHEN r_mean = 2 THEN m_mean END) AS second_mean,\n         max(CASE WHEN r_med = 2 THEN m_med END) AS second_med,\n         max(CASE WHEN r_max = 2 THEN m_max END) AS second_max,\n         corr(m_max, m_med) AS ccf\n  FROM plw GROUP BY user_id\n)\nSELECT user_id,\n       round(mx_mean, 6) AS max_mean,\n       round(sd_mean, 6) AS std_mean,\n       round(CAST(wm_mean AS DOUBLE), 6) AS wheremax_mean,\n       round(mx_mean / nullif(second_mean, CAST(0.0 AS DOUBLE)), 6) AS max1on2_mean,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(mean1 / nullif(mean3 + mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((mean1 + mean2) / nullif(mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_mean,\n       round(mx_med, 6) AS max_median,\n       round(sd_med, 6) AS std_median,\n       round(CAST(wm_med AS DOUBLE), 6) AS wheremax_median,\n       round(mx_med / nullif(second_med, CAST(0.0 AS DOUBLE)), 6) AS max1on2_median,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(med1 / nullif(med3 + med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((med1 + med2) / nullif(med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_median,\n       round(mx_max, 6) AS max_max,\n       round(sd_max, 6) AS std_max,\n       round(CAST(wm_max AS DOUBLE), 6) AS wheremax_max,\n       round(mx_max / nullif(second_max, CAST(0.0 AS DOUBLE)), 6) AS max1on2_max,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(g1.max1 / nullif(g1.max3 + g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((g1.max1 + g1.max2) / nullif(g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_max,\n       round(ccf, 6) AS corrcoef_max_medians\nFROM pv\nJOIN (SELECT user_id AS uid2,\n             max(CASE WHEN level = 1 THEN m_max END) AS max1,\n             max(CASE WHEN level = 2 THEN m_max END) AS max2,\n             max(CASE WHEN level = 3 THEN m_max END) AS max3,\n             max(CASE WHEN level = 4 THEN m_max END) AS max4\n      FROM pl GROUP BY user_id) g1 ON g1.uid2 = pv.user_id\n', "\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\ndets AS (\n  SELECT s.user_id, D.level, s.rn AS i, abs(sum(D.d * b.v)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN read_parquet('/root/repo/tests/golden/wavelet_detail.parquet') D ON D.n = nn.n AND D.i = s.rn\n  JOIN series b ON b.user_id = s.user_id AND b.rn = D.j\n  GROUP BY s.user_id, D.level, s.rn\n),\nfull_dets AS (\n  SELECT s.user_id, lv.level, s.rn AS i,\n         coalesce(d.ad, CAST(0.0 AS DOUBLE)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN (SELECT DISTINCT n, level FROM read_parquet('/root/repo/tests/golden/wavelet_detail.parquet')) lv ON lv.n = nn.n\n  LEFT JOIN dets d ON d.user_id = s.user_id AND d.level = lv.level\n                  AND d.i = s.rn\n),\npl AS (\n  SELECT user_id, level,\n         avg(ad) AS m_mean, median(ad) AS m_med, max(ad) AS m_max\n  FROM full_dets GROUP BY user_id, level\n),\nplw AS (\n  SELECT user_id, level, m_mean, m_med, m_max,\n         max(m_mean) OVER (PARTITION BY user_id) AS g_mean,\n         max(m_med)  OVER (PARTITION BY user_id) AS g_med,\n         max(m_max)  OVER (PARTITION BY user_id) AS g_max,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_mean DESC, level) AS r_mean,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_med DESC, level) AS r_med,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_max DESC, level) AS r_max\n  FROM pl\n),\npv AS (\n  SELECT user_id, count(*) AS k,\n         max(CASE WHEN level = 1 THEN m_mean END) AS mean1,\n         max(CASE WHEN level = 2 THEN m_mean END) AS mean2,\n         max(CASE WHEN level = 3 THEN m_mean END) AS mean3,\n         max(CASE WHEN level = 4 THEN m_mean END) AS mean4,\n         max(CASE WHEN level = 1 THEN m_med END) AS med1,\n         max(CASE WHEN level = 2 THEN m_med END) AS med2,\n         max(CASE WHEN level = 3 THEN m_med END) AS med3,\n         max(CASE WHEN level = 4 THEN m_med END) AS med4,\n         max(m_mean) AS mx_mean, stddev_samp(m_mean) AS sd_mean,\n         max(m_med) AS mx_med, stddev_samp(m_med) AS sd_med,\n         max(m_max) AS mx_max, stddev_samp(m_max) AS sd_max,\n         min(CASE WHEN m_mean = g_mean THEN level END) - 1 AS wm_mean,\n         min(CASE WHEN m_med = g_med THEN level END) - 1 AS wm_med,\n         min(CASE WHEN m_max = g_max THEN level END) - 1 AS wm_max,\n         max(CASE WHEN r_mean = 2 THEN m_mean END) AS second_mean,\n         max(CASE WHEN r_med = 2 THEN m_med END) AS second_med,\n         max(CASE WHEN r_max = 2 THEN m_max END) AS second_max,\n         corr(m_max, m_med) AS ccf\n  FROM plw GROUP BY user_id\n)\nSELECT user_id,\n       round(mx_mean, 6) AS max_mean,\n       round(sd_mean, 6) AS std_mean,\n       round(CAST(wm_mean AS DOUBLE), 6) AS wheremax_mean,\n       round(mx_mean / nullif(second_mean, CAST(0.0 AS DOUBLE)), 6) AS max1on2_mean,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(mean1 / nullif(mean3 + mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((mean1 + mean2) / nullif(mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_mean,\n       round(mx_med, 6) AS max_median,\n       round(sd_med, 6) AS std_median,\n       round(CAST(wm_med AS DOUBLE), 6) AS wheremax_median,\n       round(mx_med / nullif(second_med, CAST(0.0 AS DOUBLE)), 6) AS max1on2_median,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(med1 / nullif(med3 + med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((med1 + med2) / nullif(med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_median,\n       round(mx_max, 6) AS max_max,\n       round(sd_max, 6) AS std_max,\n       round(CAST(wm_max AS DOUBLE), 6) AS wheremax_max,\n       round(mx_max / nullif(second_max, CAST(0.0 AS DOUBLE)), 6) AS max1on2_max,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(g1.max1 / nullif(g1.max3 + g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((g1.max1 + g1.max2) / nullif(g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_max,\n       round(ccf, 6) AS corrcoef_max_medians\nFROM pv\nJOIN (SELECT user_id AS uid2,\n             max(CASE WHEN level = 1 THEN m_max END) AS max1,\n             max(CASE WHEN level = 2 THEN m_max END) AS max2,\n             max(CASE WHEN level = 3 THEN m_max END) AS max3,\n             max(CASE WHEN level = 4 THEN m_max END) AS max4\n      FROM pl GROUP BY user_id) g1 ON g1.uid2 = pv.user_id\n")
+QUERIES["user_wl_detailcoeffs"] = _q2(f'\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\ndets AS (\n  SELECT s.user_id, D.level, s.rn AS i, abs(sum(D.d * b.v)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN parquet.`{_GOLDEN}/wavelet_detail.parquet` D ON D.n = nn.n AND D.i = s.rn\n  JOIN series b ON b.user_id = s.user_id AND b.rn = D.j\n  GROUP BY s.user_id, D.level, s.rn\n),\nfull_dets AS (\n  SELECT s.user_id, lv.level, s.rn AS i,\n         coalesce(d.ad, CAST(0.0 AS DOUBLE)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN (SELECT DISTINCT n, level FROM parquet.`{_GOLDEN}/wavelet_detail.parquet`) lv ON lv.n = nn.n\n  LEFT JOIN dets d ON d.user_id = s.user_id AND d.level = lv.level\n                  AND d.i = s.rn\n),\npl AS (\n  SELECT user_id, level,\n         avg(ad) AS m_mean, median(ad) AS m_med, max(ad) AS m_max\n  FROM full_dets GROUP BY user_id, level\n),\nplw AS (\n  SELECT user_id, level, m_mean, m_med, m_max,\n         max(m_mean) OVER (PARTITION BY user_id) AS g_mean,\n         max(m_med)  OVER (PARTITION BY user_id) AS g_med,\n         max(m_max)  OVER (PARTITION BY user_id) AS g_max,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_mean DESC, level) AS r_mean,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_med DESC, level) AS r_med,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_max DESC, level) AS r_max\n  FROM pl\n),\npv AS (\n  SELECT user_id, count(*) AS k,\n         max(CASE WHEN level = 1 THEN m_mean END) AS mean1,\n         max(CASE WHEN level = 2 THEN m_mean END) AS mean2,\n         max(CASE WHEN level = 3 THEN m_mean END) AS mean3,\n         max(CASE WHEN level = 4 THEN m_mean END) AS mean4,\n         max(CASE WHEN level = 1 THEN m_med END) AS med1,\n         max(CASE WHEN level = 2 THEN m_med END) AS med2,\n         max(CASE WHEN level = 3 THEN m_med END) AS med3,\n         max(CASE WHEN level = 4 THEN m_med END) AS med4,\n         max(m_mean) AS mx_mean, stddev_samp(m_mean) AS sd_mean,\n         max(m_med) AS mx_med, stddev_samp(m_med) AS sd_med,\n         max(m_max) AS mx_max, stddev_samp(m_max) AS sd_max,\n         min(CASE WHEN m_mean = g_mean THEN level END) - 1 AS wm_mean,\n         min(CASE WHEN m_med = g_med THEN level END) - 1 AS wm_med,\n         min(CASE WHEN m_max = g_max THEN level END) - 1 AS wm_max,\n         max(CASE WHEN r_mean = 2 THEN m_mean END) AS second_mean,\n         max(CASE WHEN r_med = 2 THEN m_med END) AS second_med,\n         max(CASE WHEN r_max = 2 THEN m_max END) AS second_max,\n         corr(m_max, m_med) AS ccf\n  FROM plw GROUP BY user_id\n)\nSELECT user_id,\n       round(mx_mean, 6) AS max_mean,\n       round(sd_mean, 6) AS std_mean,\n       round(CAST(wm_mean AS DOUBLE), 6) AS wheremax_mean,\n       round(mx_mean / nullif(second_mean, CAST(0.0 AS DOUBLE)), 6) AS max1on2_mean,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(mean1 / nullif(mean3 + mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((mean1 + mean2) / nullif(mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_mean,\n       round(mx_med, 6) AS max_median,\n       round(sd_med, 6) AS std_median,\n       round(CAST(wm_med AS DOUBLE), 6) AS wheremax_median,\n       round(mx_med / nullif(second_med, CAST(0.0 AS DOUBLE)), 6) AS max1on2_median,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(med1 / nullif(med3 + med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((med1 + med2) / nullif(med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_median,\n       round(mx_max, 6) AS max_max,\n       round(sd_max, 6) AS std_max,\n       round(CAST(wm_max AS DOUBLE), 6) AS wheremax_max,\n       round(mx_max / nullif(second_max, CAST(0.0 AS DOUBLE)), 6) AS max1on2_max,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(g1.max1 / nullif(g1.max3 + g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((g1.max1 + g1.max2) / nullif(g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_max,\n       round(ccf, 6) AS corrcoef_max_medians\nFROM pv\nJOIN (SELECT user_id AS uid2,\n             max(CASE WHEN level = 1 THEN m_max END) AS max1,\n             max(CASE WHEN level = 2 THEN m_max END) AS max2,\n             max(CASE WHEN level = 3 THEN m_max END) AS max3,\n             max(CASE WHEN level = 4 THEN m_max END) AS max4\n      FROM pl GROUP BY user_id) g1 ON g1.uid2 = pv.user_id\n', f"\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\ndets AS (\n  SELECT s.user_id, D.level, s.rn AS i, abs(sum(D.d * b.v)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN read_parquet('{_GOLDEN}/wavelet_detail.parquet') D ON D.n = nn.n AND D.i = s.rn\n  JOIN series b ON b.user_id = s.user_id AND b.rn = D.j\n  GROUP BY s.user_id, D.level, s.rn\n),\nfull_dets AS (\n  SELECT s.user_id, lv.level, s.rn AS i,\n         coalesce(d.ad, CAST(0.0 AS DOUBLE)) AS ad\n  FROM series s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN (SELECT DISTINCT n, level FROM read_parquet('{_GOLDEN}/wavelet_detail.parquet')) lv ON lv.n = nn.n\n  LEFT JOIN dets d ON d.user_id = s.user_id AND d.level = lv.level\n                  AND d.i = s.rn\n),\npl AS (\n  SELECT user_id, level,\n         avg(ad) AS m_mean, median(ad) AS m_med, max(ad) AS m_max\n  FROM full_dets GROUP BY user_id, level\n),\nplw AS (\n  SELECT user_id, level, m_mean, m_med, m_max,\n         max(m_mean) OVER (PARTITION BY user_id) AS g_mean,\n         max(m_med)  OVER (PARTITION BY user_id) AS g_med,\n         max(m_max)  OVER (PARTITION BY user_id) AS g_max,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_mean DESC, level) AS r_mean,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_med DESC, level) AS r_med,\n         row_number() OVER (PARTITION BY user_id ORDER BY m_max DESC, level) AS r_max\n  FROM pl\n),\npv AS (\n  SELECT user_id, count(*) AS k,\n         max(CASE WHEN level = 1 THEN m_mean END) AS mean1,\n         max(CASE WHEN level = 2 THEN m_mean END) AS mean2,\n         max(CASE WHEN level = 3 THEN m_mean END) AS mean3,\n         max(CASE WHEN level = 4 THEN m_mean END) AS mean4,\n         max(CASE WHEN level = 1 THEN m_med END) AS med1,\n         max(CASE WHEN level = 2 THEN m_med END) AS med2,\n         max(CASE WHEN level = 3 THEN m_med END) AS med3,\n         max(CASE WHEN level = 4 THEN m_med END) AS med4,\n         max(m_mean) AS mx_mean, stddev_samp(m_mean) AS sd_mean,\n         max(m_med) AS mx_med, stddev_samp(m_med) AS sd_med,\n         max(m_max) AS mx_max, stddev_samp(m_max) AS sd_max,\n         min(CASE WHEN m_mean = g_mean THEN level END) - 1 AS wm_mean,\n         min(CASE WHEN m_med = g_med THEN level END) - 1 AS wm_med,\n         min(CASE WHEN m_max = g_max THEN level END) - 1 AS wm_max,\n         max(CASE WHEN r_mean = 2 THEN m_mean END) AS second_mean,\n         max(CASE WHEN r_med = 2 THEN m_med END) AS second_med,\n         max(CASE WHEN r_max = 2 THEN m_max END) AS second_max,\n         corr(m_max, m_med) AS ccf\n  FROM plw GROUP BY user_id\n)\nSELECT user_id,\n       round(mx_mean, 6) AS max_mean,\n       round(sd_mean, 6) AS std_mean,\n       round(CAST(wm_mean AS DOUBLE), 6) AS wheremax_mean,\n       round(mx_mean / nullif(second_mean, CAST(0.0 AS DOUBLE)), 6) AS max1on2_mean,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(mean1 / nullif(mean3 + mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((mean1 + mean2) / nullif(mean4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_mean,\n       round(mx_med, 6) AS max_median,\n       round(sd_med, 6) AS std_median,\n       round(CAST(wm_med AS DOUBLE), 6) AS wheremax_median,\n       round(mx_med / nullif(second_med, CAST(0.0 AS DOUBLE)), 6) AS max1on2_median,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(med1 / nullif(med3 + med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((med1 + med2) / nullif(med4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_median,\n       round(mx_max, 6) AS max_max,\n       round(sd_max, 6) AS std_max,\n       round(CAST(wm_max AS DOUBLE), 6) AS wheremax_max,\n       round(mx_max / nullif(second_max, CAST(0.0 AS DOUBLE)), 6) AS max1on2_max,\n       round(CASE WHEN k <= 3 THEN CAST(1.0 AS DOUBLE)\n                  WHEN abs(g1.max1 / nullif(g1.max3 + g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                       <= abs((g1.max1 + g1.max2) / nullif(g1.max4, CAST(0.0 AS DOUBLE)) - 1.0)\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(2.0 AS DOUBLE) END, 6) AS wslesr_max,\n       round(ccf, 6) AS corrcoef_max_medians\nFROM pv\nJOIN (SELECT user_id AS uid2,\n             max(CASE WHEN level = 1 THEN m_max END) AS max1,\n             max(CASE WHEN level = 2 THEN m_max END) AS max2,\n             max(CASE WHEN level = 3 THEN m_max END) AS max3,\n             max(CASE WHEN level = 4 THEN m_max END) AS max4\n      FROM pl GROUP BY user_id) g1 ON g1.uid2 = pv.user_id\n")
 
 
 # --- WL_cwt 'db3' max_scale=32 (Wavelet.py:8-98), complete ------------------
@@ -6685,7 +6692,7 @@ QUERIES["user_wl_detailcoeffs"] = _q2('\nWITH series AS (\n  SELECT user_id,\n  
 # zero-padded filter join and scores the complete surface incl. the
 # reference's pover98 key-98/threshold-0.88 quirk, the 2-D entropy,
 # scale-summed crossings, and np.array_split half/fifth stationarity.
-QUERIES["user_cwt_features"] = _q2('\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\nfmeta AS (\n  SELECT scale, count(*) AS lf,\n         CAST(floor((count(*) - 1) / 2.0) AS BIGINT) AS lo\n  FROM parquet.`/root/repo/tests/golden/cwt_filters.parquet` GROUP BY scale\n),\ncoef AS (\n  SELECT tgt.user_id, fm.scale, tgt.rn AS t,\n         sum(fl.f * coalesce(b.v, CAST(0.0 AS DOUBLE))) AS c\n  FROM series tgt\n  CROSS JOIN fmeta fm\n  JOIN parquet.`/root/repo/tests/golden/cwt_filters.parquet` fl ON fl.scale = fm.scale\n  LEFT JOIN series b ON b.user_id = tgt.user_id\n                    AND b.rn = tgt.rn + fm.lo - fl.k\n  GROUP BY tgt.user_id, fm.scale, tgt.rn\n),\nsc AS (\n  SELECT user_id, scale, t, c,\n         100.0 * (c * c) / sum(c * c) OVER (PARTITION BY user_id) AS s\n  FROM coef\n),\ngl AS (\n  SELECT user_id,\n         avg(c) AS meanc, avg(abs(c)) AS meanabsc,\n         median(abs(c)) AS medianabsc, max(abs(c)) AS maxabsc,\n         max(s) AS mxsc, avg(s) AS musc,\n         stddev_samp(s) AS sdsc, stddev_pop(s) AS sdsc0,\n         sum(s) AS sumsc,\n         CAST(count(*) AS DOUBLE) AS ne\n  FROM sc GROUP BY user_id\n),\npov AS (\n  SELECT s.user_id,\n         sum(s.s) FILTER (WHERE s.s > 0.99 * g.mxsc) / g.ne AS p99,\n         sum(s.s) FILTER (WHERE s.s > 0.88 * g.mxsc) / g.ne AS p98,\n         sum(s.s) FILTER (WHERE s.s > 0.95 * g.mxsc) / g.ne AS p95,\n         sum(s.s) FILTER (WHERE s.s > 0.90 * g.mxsc) / g.ne AS p90,\n         sum(s.s) FILTER (WHERE s.s > 0.80 * g.mxsc) / g.ne AS p80,\n         -sum((s.s / g.sumsc) * ln(s.s / g.sumsc))\n           FILTER (WHERE s.s > 0) AS sch\n  FROM sc s JOIN gl g ON g.user_id = s.user_id\n  GROUP BY s.user_id, g.ne, g.mxsc, g.sumsc\n),\nssc AS (\n  SELECT user_id, t, sum(s) AS v\n  FROM sc GROUP BY user_id, t\n),\nsscl AS (\n  SELECT user_id, t, v,\n         lead(v) OVER (PARTITION BY user_id ORDER BY t) AS v1,\n         max(v) OVER (PARTITION BY user_id) AS mx\n  FROM ssc\n),\nsscs AS (\n  SELECT s2.user_id,\n         max(s2.v) AS mx, min(s2.v) AS mn, median(s2.v) AS med,\n         stddev_pop(s2.v) AS sd0,\n         sum(CASE WHEN (s2.v - 0.5 * s2.mx) * (s2.v1 - 0.5 * s2.mx) < 0\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)\n           FILTER (WHERE s2.v1 IS NOT NULL) AS ncross,\n         CAST(count(*) AS DOUBLE) AS n\n  FROM sscl s2 GROUP BY s2.user_id\n),\nfcuts AS (\n  SELECT user_id,\n         CAST(floor(n / 5.0) AS BIGINT) AS q,\n         n - 5 * CAST(floor(n / 5.0) AS BIGINT) AS r\n  FROM nn\n),\nsegd AS (\n  SELECT s.user_id, s.s,\n         CASE WHEN s.t < CAST(floor(nn.n / 2.0) AS BIGINT) THEN 0 ELSE 1 END AS half,\n         CASE WHEN s.t < fc.q + least(fc.r, 1) THEN 0\n              WHEN s.t < 2 * fc.q + least(fc.r, 2) THEN 1\n              WHEN s.t < 3 * fc.q + least(fc.r, 3) THEN 2\n              WHEN s.t < 4 * fc.q + least(fc.r, 4) THEN 3\n              ELSE 4 END AS fifth\n  FROM sc s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN fcuts fc ON fc.user_id = s.user_id\n),\nhstats AS (\n  SELECT user_id,\n         avg(CASE WHEN half = 0 THEN s END) AS m1,\n         avg(CASE WHEN half = 1 THEN s END) AS m2,\n         stddev_samp(CASE WHEN half = 0 THEN s END) AS sd1,\n         stddev_samp(CASE WHEN half = 1 THEN s END) AS sd2\n  FROM segd GROUP BY user_id\n),\nfstats AS (\n  SELECT user_id, fifth, avg(s) AS m, stddev_samp(s) AS sd\n  FROM segd GROUP BY user_id, fifth\n),\nfagg AS (\n  SELECT user_id,\n         max(CASE WHEN fifth = 0 THEN m END) AS m51,\n         max(CASE WHEN fifth = 1 THEN m END) AS m52,\n         max(CASE WHEN fifth = 2 THEN m END) AS m53,\n         max(CASE WHEN fifth = 3 THEN m END) AS m54,\n         max(CASE WHEN fifth = 4 THEN m END) AS m55,\n         max(CASE WHEN fifth = 0 THEN sd END) AS s51,\n         max(CASE WHEN fifth = 1 THEN sd END) AS s52,\n         max(CASE WHEN fifth = 2 THEN sd END) AS s53,\n         max(CASE WHEN fifth = 3 THEN sd END) AS s54,\n         max(CASE WHEN fifth = 4 THEN sd END) AS s55,\n         avg(sd) AS msd, stddev_samp(m) AS sdm, stddev_samp(sd) AS sdsd\n  FROM fstats GROUP BY user_id\n)\nSELECT g.user_id,\n       round(g.meanc, 6) AS meanC,\n       round(g.meanabsc, 6) AS meanabsC,\n       round(g.medianabsc, 6) AS medianabsC,\n       round(g.maxabsc, 6) AS maxabsC,\n       round(g.maxabsc / nullif(g.meanabsc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanC,\n       round(g.mxsc / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanSC,\n       round(p.p99, 6) AS pover99, round(p.p98, 6) AS pover98,\n       round(p.p95, 6) AS pover95, round(p.p90, 6) AS pover90,\n       round(p.p80, 6) AS pover80,\n       round(p.sch, 6) AS SC_h,\n       round(ss.mx, 6) AS max_ssc, round(ss.mn, 6) AS min_ssc,\n       round(ss.mx / nullif(ss.med, CAST(0.0 AS DOUBLE)), 6) AS maxonmed_ssc,\n       round(ss.ncross / (ss.n - 1.0), 6) AS pcross_maxssc50,\n       round(ss.sd0, 6) AS std_ssc,\n       round((h.sd1 + h.sd2) / 2.0 / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_m_s,\n       round(abs(h.m1 - h.m2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_m,\n       round(abs(h.sd1 - h.sd2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_s,\n       round(f.m51, 6) AS mean5_1, round(f.m52, 6) AS mean5_2,\n       round(f.m53, 6) AS mean5_3, round(f.m54, 6) AS mean5_4,\n       round(f.m55, 6) AS mean5_5,\n       round(f.s51, 6) AS std5_1, round(f.s52, 6) AS std5_2,\n       round(f.s53, 6) AS std5_3, round(f.s54, 6) AS std5_4,\n       round(f.s55, 6) AS std5_5,\n       round(f.msd / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_m_s,\n       round(f.sdm / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_m,\n       round(f.sdsd / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_s\nFROM gl g\nJOIN pov p ON p.user_id = g.user_id\nJOIN sscs ss ON ss.user_id = g.user_id\nJOIN hstats h ON h.user_id = g.user_id\nJOIN fagg f ON f.user_id = g.user_id\n', "\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\nfmeta AS (\n  SELECT scale, count(*) AS lf,\n         CAST(floor((count(*) - 1) / 2.0) AS BIGINT) AS lo\n  FROM read_parquet('/root/repo/tests/golden/cwt_filters.parquet') GROUP BY scale\n),\ncoef AS (\n  SELECT tgt.user_id, fm.scale, tgt.rn AS t,\n         sum(fl.f * coalesce(b.v, CAST(0.0 AS DOUBLE))) AS c\n  FROM series tgt\n  CROSS JOIN fmeta fm\n  JOIN read_parquet('/root/repo/tests/golden/cwt_filters.parquet') fl ON fl.scale = fm.scale\n  LEFT JOIN series b ON b.user_id = tgt.user_id\n                    AND b.rn = tgt.rn + fm.lo - fl.k\n  GROUP BY tgt.user_id, fm.scale, tgt.rn\n),\nsc AS (\n  SELECT user_id, scale, t, c,\n         100.0 * (c * c) / sum(c * c) OVER (PARTITION BY user_id) AS s\n  FROM coef\n),\ngl AS (\n  SELECT user_id,\n         avg(c) AS meanc, avg(abs(c)) AS meanabsc,\n         median(abs(c)) AS medianabsc, max(abs(c)) AS maxabsc,\n         max(s) AS mxsc, avg(s) AS musc,\n         stddev_samp(s) AS sdsc, stddev_pop(s) AS sdsc0,\n         sum(s) AS sumsc,\n         CAST(count(*) AS DOUBLE) AS ne\n  FROM sc GROUP BY user_id\n),\npov AS (\n  SELECT s.user_id,\n         sum(s.s) FILTER (WHERE s.s > 0.99 * g.mxsc) / g.ne AS p99,\n         sum(s.s) FILTER (WHERE s.s > 0.88 * g.mxsc) / g.ne AS p98,\n         sum(s.s) FILTER (WHERE s.s > 0.95 * g.mxsc) / g.ne AS p95,\n         sum(s.s) FILTER (WHERE s.s > 0.90 * g.mxsc) / g.ne AS p90,\n         sum(s.s) FILTER (WHERE s.s > 0.80 * g.mxsc) / g.ne AS p80,\n         -sum((s.s / g.sumsc) * ln(s.s / g.sumsc))\n           FILTER (WHERE s.s > 0) AS sch\n  FROM sc s JOIN gl g ON g.user_id = s.user_id\n  GROUP BY s.user_id, g.ne, g.mxsc, g.sumsc\n),\nssc AS (\n  SELECT user_id, t, sum(s) AS v\n  FROM sc GROUP BY user_id, t\n),\nsscl AS (\n  SELECT user_id, t, v,\n         lead(v) OVER (PARTITION BY user_id ORDER BY t) AS v1,\n         max(v) OVER (PARTITION BY user_id) AS mx\n  FROM ssc\n),\nsscs AS (\n  SELECT s2.user_id,\n         max(s2.v) AS mx, min(s2.v) AS mn, median(s2.v) AS med,\n         stddev_pop(s2.v) AS sd0,\n         sum(CASE WHEN (s2.v - 0.5 * s2.mx) * (s2.v1 - 0.5 * s2.mx) < 0\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)\n           FILTER (WHERE s2.v1 IS NOT NULL) AS ncross,\n         CAST(count(*) AS DOUBLE) AS n\n  FROM sscl s2 GROUP BY s2.user_id\n),\nfcuts AS (\n  SELECT user_id,\n         CAST(floor(n / 5.0) AS BIGINT) AS q,\n         n - 5 * CAST(floor(n / 5.0) AS BIGINT) AS r\n  FROM nn\n),\nsegd AS (\n  SELECT s.user_id, s.s,\n         CASE WHEN s.t < CAST(floor(nn.n / 2.0) AS BIGINT) THEN 0 ELSE 1 END AS half,\n         CASE WHEN s.t < fc.q + least(fc.r, 1) THEN 0\n              WHEN s.t < 2 * fc.q + least(fc.r, 2) THEN 1\n              WHEN s.t < 3 * fc.q + least(fc.r, 3) THEN 2\n              WHEN s.t < 4 * fc.q + least(fc.r, 4) THEN 3\n              ELSE 4 END AS fifth\n  FROM sc s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN fcuts fc ON fc.user_id = s.user_id\n),\nhstats AS (\n  SELECT user_id,\n         avg(CASE WHEN half = 0 THEN s END) AS m1,\n         avg(CASE WHEN half = 1 THEN s END) AS m2,\n         stddev_samp(CASE WHEN half = 0 THEN s END) AS sd1,\n         stddev_samp(CASE WHEN half = 1 THEN s END) AS sd2\n  FROM segd GROUP BY user_id\n),\nfstats AS (\n  SELECT user_id, fifth, avg(s) AS m, stddev_samp(s) AS sd\n  FROM segd GROUP BY user_id, fifth\n),\nfagg AS (\n  SELECT user_id,\n         max(CASE WHEN fifth = 0 THEN m END) AS m51,\n         max(CASE WHEN fifth = 1 THEN m END) AS m52,\n         max(CASE WHEN fifth = 2 THEN m END) AS m53,\n         max(CASE WHEN fifth = 3 THEN m END) AS m54,\n         max(CASE WHEN fifth = 4 THEN m END) AS m55,\n         max(CASE WHEN fifth = 0 THEN sd END) AS s51,\n         max(CASE WHEN fifth = 1 THEN sd END) AS s52,\n         max(CASE WHEN fifth = 2 THEN sd END) AS s53,\n         max(CASE WHEN fifth = 3 THEN sd END) AS s54,\n         max(CASE WHEN fifth = 4 THEN sd END) AS s55,\n         avg(sd) AS msd, stddev_samp(m) AS sdm, stddev_samp(sd) AS sdsd\n  FROM fstats GROUP BY user_id\n)\nSELECT g.user_id,\n       round(g.meanc, 6) AS meanC,\n       round(g.meanabsc, 6) AS meanabsC,\n       round(g.medianabsc, 6) AS medianabsC,\n       round(g.maxabsc, 6) AS maxabsC,\n       round(g.maxabsc / nullif(g.meanabsc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanC,\n       round(g.mxsc / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanSC,\n       round(p.p99, 6) AS pover99, round(p.p98, 6) AS pover98,\n       round(p.p95, 6) AS pover95, round(p.p90, 6) AS pover90,\n       round(p.p80, 6) AS pover80,\n       round(p.sch, 6) AS SC_h,\n       round(ss.mx, 6) AS max_ssc, round(ss.mn, 6) AS min_ssc,\n       round(ss.mx / nullif(ss.med, CAST(0.0 AS DOUBLE)), 6) AS maxonmed_ssc,\n       round(ss.ncross / (ss.n - 1.0), 6) AS pcross_maxssc50,\n       round(ss.sd0, 6) AS std_ssc,\n       round((h.sd1 + h.sd2) / 2.0 / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_m_s,\n       round(abs(h.m1 - h.m2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_m,\n       round(abs(h.sd1 - h.sd2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_s,\n       round(f.m51, 6) AS mean5_1, round(f.m52, 6) AS mean5_2,\n       round(f.m53, 6) AS mean5_3, round(f.m54, 6) AS mean5_4,\n       round(f.m55, 6) AS mean5_5,\n       round(f.s51, 6) AS std5_1, round(f.s52, 6) AS std5_2,\n       round(f.s53, 6) AS std5_3, round(f.s54, 6) AS std5_4,\n       round(f.s55, 6) AS std5_5,\n       round(f.msd / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_m_s,\n       round(f.sdm / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_m,\n       round(f.sdsd / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_s\nFROM gl g\nJOIN pov p ON p.user_id = g.user_id\nJOIN sscs ss ON ss.user_id = g.user_id\nJOIN hstats h ON h.user_id = g.user_id\nJOIN fagg f ON f.user_id = g.user_id\n")
+QUERIES["user_cwt_features"] = _q2(f'\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\nfmeta AS (\n  SELECT scale, count(*) AS lf,\n         CAST(floor((count(*) - 1) / 2.0) AS BIGINT) AS lo\n  FROM parquet.`{_GOLDEN}/cwt_filters.parquet` GROUP BY scale\n),\ncoef AS (\n  SELECT tgt.user_id, fm.scale, tgt.rn AS t,\n         sum(fl.f * coalesce(b.v, CAST(0.0 AS DOUBLE))) AS c\n  FROM series tgt\n  CROSS JOIN fmeta fm\n  JOIN parquet.`{_GOLDEN}/cwt_filters.parquet` fl ON fl.scale = fm.scale\n  LEFT JOIN series b ON b.user_id = tgt.user_id\n                    AND b.rn = tgt.rn + fm.lo - fl.k\n  GROUP BY tgt.user_id, fm.scale, tgt.rn\n),\nsc AS (\n  SELECT user_id, scale, t, c,\n         100.0 * (c * c) / sum(c * c) OVER (PARTITION BY user_id) AS s\n  FROM coef\n),\ngl AS (\n  SELECT user_id,\n         avg(c) AS meanc, avg(abs(c)) AS meanabsc,\n         median(abs(c)) AS medianabsc, max(abs(c)) AS maxabsc,\n         max(s) AS mxsc, avg(s) AS musc,\n         stddev_samp(s) AS sdsc, stddev_pop(s) AS sdsc0,\n         sum(s) AS sumsc,\n         CAST(count(*) AS DOUBLE) AS ne\n  FROM sc GROUP BY user_id\n),\npov AS (\n  SELECT s.user_id,\n         sum(s.s) FILTER (WHERE s.s > 0.99 * g.mxsc) / g.ne AS p99,\n         sum(s.s) FILTER (WHERE s.s > 0.88 * g.mxsc) / g.ne AS p98,\n         sum(s.s) FILTER (WHERE s.s > 0.95 * g.mxsc) / g.ne AS p95,\n         sum(s.s) FILTER (WHERE s.s > 0.90 * g.mxsc) / g.ne AS p90,\n         sum(s.s) FILTER (WHERE s.s > 0.80 * g.mxsc) / g.ne AS p80,\n         -sum((s.s / g.sumsc) * ln(s.s / g.sumsc))\n           FILTER (WHERE s.s > 0) AS sch\n  FROM sc s JOIN gl g ON g.user_id = s.user_id\n  GROUP BY s.user_id, g.ne, g.mxsc, g.sumsc\n),\nssc AS (\n  SELECT user_id, t, sum(s) AS v\n  FROM sc GROUP BY user_id, t\n),\nsscl AS (\n  SELECT user_id, t, v,\n         lead(v) OVER (PARTITION BY user_id ORDER BY t) AS v1,\n         max(v) OVER (PARTITION BY user_id) AS mx\n  FROM ssc\n),\nsscs AS (\n  SELECT s2.user_id,\n         max(s2.v) AS mx, min(s2.v) AS mn, median(s2.v) AS med,\n         stddev_pop(s2.v) AS sd0,\n         sum(CASE WHEN (s2.v - 0.5 * s2.mx) * (s2.v1 - 0.5 * s2.mx) < 0\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)\n           FILTER (WHERE s2.v1 IS NOT NULL) AS ncross,\n         CAST(count(*) AS DOUBLE) AS n\n  FROM sscl s2 GROUP BY s2.user_id\n),\nfcuts AS (\n  SELECT user_id,\n         CAST(floor(n / 5.0) AS BIGINT) AS q,\n         n - 5 * CAST(floor(n / 5.0) AS BIGINT) AS r\n  FROM nn\n),\nsegd AS (\n  SELECT s.user_id, s.s,\n         CASE WHEN s.t < CAST(floor(nn.n / 2.0) AS BIGINT) THEN 0 ELSE 1 END AS half,\n         CASE WHEN s.t < fc.q + least(fc.r, 1) THEN 0\n              WHEN s.t < 2 * fc.q + least(fc.r, 2) THEN 1\n              WHEN s.t < 3 * fc.q + least(fc.r, 3) THEN 2\n              WHEN s.t < 4 * fc.q + least(fc.r, 4) THEN 3\n              ELSE 4 END AS fifth\n  FROM sc s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN fcuts fc ON fc.user_id = s.user_id\n),\nhstats AS (\n  SELECT user_id,\n         avg(CASE WHEN half = 0 THEN s END) AS m1,\n         avg(CASE WHEN half = 1 THEN s END) AS m2,\n         stddev_samp(CASE WHEN half = 0 THEN s END) AS sd1,\n         stddev_samp(CASE WHEN half = 1 THEN s END) AS sd2\n  FROM segd GROUP BY user_id\n),\nfstats AS (\n  SELECT user_id, fifth, avg(s) AS m, stddev_samp(s) AS sd\n  FROM segd GROUP BY user_id, fifth\n),\nfagg AS (\n  SELECT user_id,\n         max(CASE WHEN fifth = 0 THEN m END) AS m51,\n         max(CASE WHEN fifth = 1 THEN m END) AS m52,\n         max(CASE WHEN fifth = 2 THEN m END) AS m53,\n         max(CASE WHEN fifth = 3 THEN m END) AS m54,\n         max(CASE WHEN fifth = 4 THEN m END) AS m55,\n         max(CASE WHEN fifth = 0 THEN sd END) AS s51,\n         max(CASE WHEN fifth = 1 THEN sd END) AS s52,\n         max(CASE WHEN fifth = 2 THEN sd END) AS s53,\n         max(CASE WHEN fifth = 3 THEN sd END) AS s54,\n         max(CASE WHEN fifth = 4 THEN sd END) AS s55,\n         avg(sd) AS msd, stddev_samp(m) AS sdm, stddev_samp(sd) AS sdsd\n  FROM fstats GROUP BY user_id\n)\nSELECT g.user_id,\n       round(g.meanc, 6) AS meanC,\n       round(g.meanabsc, 6) AS meanabsC,\n       round(g.medianabsc, 6) AS medianabsC,\n       round(g.maxabsc, 6) AS maxabsC,\n       round(g.maxabsc / nullif(g.meanabsc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanC,\n       round(g.mxsc / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanSC,\n       round(p.p99, 6) AS pover99, round(p.p98, 6) AS pover98,\n       round(p.p95, 6) AS pover95, round(p.p90, 6) AS pover90,\n       round(p.p80, 6) AS pover80,\n       round(p.sch, 6) AS SC_h,\n       round(ss.mx, 6) AS max_ssc, round(ss.mn, 6) AS min_ssc,\n       round(ss.mx / nullif(ss.med, CAST(0.0 AS DOUBLE)), 6) AS maxonmed_ssc,\n       round(ss.ncross / (ss.n - 1.0), 6) AS pcross_maxssc50,\n       round(ss.sd0, 6) AS std_ssc,\n       round((h.sd1 + h.sd2) / 2.0 / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_m_s,\n       round(abs(h.m1 - h.m2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_m,\n       round(abs(h.sd1 - h.sd2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_s,\n       round(f.m51, 6) AS mean5_1, round(f.m52, 6) AS mean5_2,\n       round(f.m53, 6) AS mean5_3, round(f.m54, 6) AS mean5_4,\n       round(f.m55, 6) AS mean5_5,\n       round(f.s51, 6) AS std5_1, round(f.s52, 6) AS std5_2,\n       round(f.s53, 6) AS std5_3, round(f.s54, 6) AS std5_4,\n       round(f.s55, 6) AS std5_5,\n       round(f.msd / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_m_s,\n       round(f.sdm / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_m,\n       round(f.sdsd / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_s\nFROM gl g\nJOIN pov p ON p.user_id = g.user_id\nJOIN sscs ss ON ss.user_id = g.user_id\nJOIN hstats h ON h.user_id = g.user_id\nJOIN fagg f ON f.user_id = g.user_id\n', f"\nWITH series AS (\n  SELECT user_id,\n         CAST(row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS BIGINT) - 1 AS rn,\n         CAST(value AS DOUBLE) AS v\n  FROM events\n),\nnn AS (SELECT user_id, count(*) AS n FROM series GROUP BY user_id),\nfmeta AS (\n  SELECT scale, count(*) AS lf,\n         CAST(floor((count(*) - 1) / 2.0) AS BIGINT) AS lo\n  FROM read_parquet('{_GOLDEN}/cwt_filters.parquet') GROUP BY scale\n),\ncoef AS (\n  SELECT tgt.user_id, fm.scale, tgt.rn AS t,\n         sum(fl.f * coalesce(b.v, CAST(0.0 AS DOUBLE))) AS c\n  FROM series tgt\n  CROSS JOIN fmeta fm\n  JOIN read_parquet('{_GOLDEN}/cwt_filters.parquet') fl ON fl.scale = fm.scale\n  LEFT JOIN series b ON b.user_id = tgt.user_id\n                    AND b.rn = tgt.rn + fm.lo - fl.k\n  GROUP BY tgt.user_id, fm.scale, tgt.rn\n),\nsc AS (\n  SELECT user_id, scale, t, c,\n         100.0 * (c * c) / sum(c * c) OVER (PARTITION BY user_id) AS s\n  FROM coef\n),\ngl AS (\n  SELECT user_id,\n         avg(c) AS meanc, avg(abs(c)) AS meanabsc,\n         median(abs(c)) AS medianabsc, max(abs(c)) AS maxabsc,\n         max(s) AS mxsc, avg(s) AS musc,\n         stddev_samp(s) AS sdsc, stddev_pop(s) AS sdsc0,\n         sum(s) AS sumsc,\n         CAST(count(*) AS DOUBLE) AS ne\n  FROM sc GROUP BY user_id\n),\npov AS (\n  SELECT s.user_id,\n         sum(s.s) FILTER (WHERE s.s > 0.99 * g.mxsc) / g.ne AS p99,\n         sum(s.s) FILTER (WHERE s.s > 0.88 * g.mxsc) / g.ne AS p98,\n         sum(s.s) FILTER (WHERE s.s > 0.95 * g.mxsc) / g.ne AS p95,\n         sum(s.s) FILTER (WHERE s.s > 0.90 * g.mxsc) / g.ne AS p90,\n         sum(s.s) FILTER (WHERE s.s > 0.80 * g.mxsc) / g.ne AS p80,\n         -sum((s.s / g.sumsc) * ln(s.s / g.sumsc))\n           FILTER (WHERE s.s > 0) AS sch\n  FROM sc s JOIN gl g ON g.user_id = s.user_id\n  GROUP BY s.user_id, g.ne, g.mxsc, g.sumsc\n),\nssc AS (\n  SELECT user_id, t, sum(s) AS v\n  FROM sc GROUP BY user_id, t\n),\nsscl AS (\n  SELECT user_id, t, v,\n         lead(v) OVER (PARTITION BY user_id ORDER BY t) AS v1,\n         max(v) OVER (PARTITION BY user_id) AS mx\n  FROM ssc\n),\nsscs AS (\n  SELECT s2.user_id,\n         max(s2.v) AS mx, min(s2.v) AS mn, median(s2.v) AS med,\n         stddev_pop(s2.v) AS sd0,\n         sum(CASE WHEN (s2.v - 0.5 * s2.mx) * (s2.v1 - 0.5 * s2.mx) < 0\n                  THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)\n           FILTER (WHERE s2.v1 IS NOT NULL) AS ncross,\n         CAST(count(*) AS DOUBLE) AS n\n  FROM sscl s2 GROUP BY s2.user_id\n),\nfcuts AS (\n  SELECT user_id,\n         CAST(floor(n / 5.0) AS BIGINT) AS q,\n         n - 5 * CAST(floor(n / 5.0) AS BIGINT) AS r\n  FROM nn\n),\nsegd AS (\n  SELECT s.user_id, s.s,\n         CASE WHEN s.t < CAST(floor(nn.n / 2.0) AS BIGINT) THEN 0 ELSE 1 END AS half,\n         CASE WHEN s.t < fc.q + least(fc.r, 1) THEN 0\n              WHEN s.t < 2 * fc.q + least(fc.r, 2) THEN 1\n              WHEN s.t < 3 * fc.q + least(fc.r, 3) THEN 2\n              WHEN s.t < 4 * fc.q + least(fc.r, 4) THEN 3\n              ELSE 4 END AS fifth\n  FROM sc s\n  JOIN nn ON nn.user_id = s.user_id\n  JOIN fcuts fc ON fc.user_id = s.user_id\n),\nhstats AS (\n  SELECT user_id,\n         avg(CASE WHEN half = 0 THEN s END) AS m1,\n         avg(CASE WHEN half = 1 THEN s END) AS m2,\n         stddev_samp(CASE WHEN half = 0 THEN s END) AS sd1,\n         stddev_samp(CASE WHEN half = 1 THEN s END) AS sd2\n  FROM segd GROUP BY user_id\n),\nfstats AS (\n  SELECT user_id, fifth, avg(s) AS m, stddev_samp(s) AS sd\n  FROM segd GROUP BY user_id, fifth\n),\nfagg AS (\n  SELECT user_id,\n         max(CASE WHEN fifth = 0 THEN m END) AS m51,\n         max(CASE WHEN fifth = 1 THEN m END) AS m52,\n         max(CASE WHEN fifth = 2 THEN m END) AS m53,\n         max(CASE WHEN fifth = 3 THEN m END) AS m54,\n         max(CASE WHEN fifth = 4 THEN m END) AS m55,\n         max(CASE WHEN fifth = 0 THEN sd END) AS s51,\n         max(CASE WHEN fifth = 1 THEN sd END) AS s52,\n         max(CASE WHEN fifth = 2 THEN sd END) AS s53,\n         max(CASE WHEN fifth = 3 THEN sd END) AS s54,\n         max(CASE WHEN fifth = 4 THEN sd END) AS s55,\n         avg(sd) AS msd, stddev_samp(m) AS sdm, stddev_samp(sd) AS sdsd\n  FROM fstats GROUP BY user_id\n)\nSELECT g.user_id,\n       round(g.meanc, 6) AS meanC,\n       round(g.meanabsc, 6) AS meanabsC,\n       round(g.medianabsc, 6) AS medianabsC,\n       round(g.maxabsc, 6) AS maxabsC,\n       round(g.maxabsc / nullif(g.meanabsc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanC,\n       round(g.mxsc / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS maxonmeanSC,\n       round(p.p99, 6) AS pover99, round(p.p98, 6) AS pover98,\n       round(p.p95, 6) AS pover95, round(p.p90, 6) AS pover90,\n       round(p.p80, 6) AS pover80,\n       round(p.sch, 6) AS SC_h,\n       round(ss.mx, 6) AS max_ssc, round(ss.mn, 6) AS min_ssc,\n       round(ss.mx / nullif(ss.med, CAST(0.0 AS DOUBLE)), 6) AS maxonmed_ssc,\n       round(ss.ncross / (ss.n - 1.0), 6) AS pcross_maxssc50,\n       round(ss.sd0, 6) AS std_ssc,\n       round((h.sd1 + h.sd2) / 2.0 / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_m_s,\n       round(abs(h.m1 - h.m2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_m,\n       round(abs(h.sd1 - h.sd2) / sqrt(2.0)\n             / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_2_s_s,\n       round(f.m51, 6) AS mean5_1, round(f.m52, 6) AS mean5_2,\n       round(f.m53, 6) AS mean5_3, round(f.m54, 6) AS mean5_4,\n       round(f.m55, 6) AS mean5_5,\n       round(f.s51, 6) AS std5_1, round(f.s52, 6) AS std5_2,\n       round(f.s53, 6) AS std5_3, round(f.s54, 6) AS std5_4,\n       round(f.s55, 6) AS std5_5,\n       round(f.msd / nullif(g.musc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_m_s,\n       round(f.sdm / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_m,\n       round(f.sdsd / nullif(g.sdsc, CAST(0.0 AS DOUBLE)), 6) AS stat_5_s_s\nFROM gl g\nJOIN pov p ON p.user_id = g.user_id\nJOIN sscs ss ON ss.user_id = g.user_id\nJOIN hstats h ON h.user_id = g.user_id\nJOIN fagg f ON f.user_id = g.user_id\n")
 
 
 # --- CO_Embed2_AngleTau max_tau=10 (Correlation.py:133-195) -----------------
@@ -7851,16 +7858,16 @@ FROM r WHERE rn <= 10
 # implementation of the G.711 mu-law/A-law expansion and the IMA ADPCM
 # state machine from the published specs (no engine import); container
 # sizes are closed-form RIFF arithmetic.
-ENGINE_ORACLES["media_audio_compressed"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_audio_24.parquet')
+ENGINE_ORACLES["media_audio_compressed"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_audio_24.parquet')
 """
 
 # media_flac_decode: FLAC is lossless, so the golden
 # (scripts/gen_media_flac_golden.py) recomputes features from the raw
 # content samples — no codec in the loop; the engine decode must
 # reproduce the content bit-for-bit.
-ENGINE_ORACLES["media_flac_decode"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_flac_16.parquet')
+ENGINE_ORACLES["media_flac_decode"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_flac_16.parquet')
 """
 
 # exact_substring_dedup (operators/curation.py): Lee-et-al-style span
@@ -7924,8 +7931,8 @@ FROM docs d LEFT JOIN agg a ON d.doc_id = a.doc_id
 # (scripts/gen_media_jpegls_golden.py) recomputes features from the raw
 # content images AND n_bytes from an independent scalar replay of the
 # Annex H prediction/Huffman wire size — no engine code in the loop.
-ENGINE_ORACLES["media_jpeg_lossless"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_jpegls_16.parquet')
+ENGINE_ORACLES["media_jpeg_lossless"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_jpegls_16.parquet')
 """
 
 # containment_pairs (operators/dedup.py): asymmetric near-dup — pairs
@@ -8031,8 +8038,8 @@ LEFT JOIN scored s ON d.doc_id = s.doc_id
 # (scripts/gen_media_webp_golden.py) recomputes features from the raw
 # content pixels — no codec in the loop; the engine decode must
 # reproduce the content bit-for-bit.
-ENGINE_ORACLES["media_webp_decode"] = """
-SELECT * FROM read_parquet('/root/repo/tests/golden/media_webp_16.parquet')
+ENGINE_ORACLES["media_webp_decode"] = f"""
+SELECT * FROM read_parquet('{_GOLDEN}/media_webp_16.parquet')
 """
 
 # doc_semdedup: SemDeDup (operators/semdedup.py) with the

@@ -277,9 +277,11 @@ def main() -> None:
         goldens.append(golden)
 
     warc_bytes = build_warc_bytes(docs)
-    fix = "/root/repo/tests/fixtures/html_docs.parquet"
-    gold = "/root/repo/tests/golden/html_extract_60.parquet"
-    warc = "/root/repo/tests/fixtures/html_warc/part-00000.warc.gz"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    fix = os.path.join(root, "tests", "fixtures", "html_docs.parquet")
+    gold = os.path.join(root, "tests", "golden", "html_extract_60.parquet")
+    warc = os.path.join(root, "tests", "fixtures", "html_warc",
+                        "part-00000.warc.gz")
     if "--check" in sys.argv:
         old_docs = pq.read_table(fix).to_pylist()
         old_gold = pq.read_table(gold).to_pylist()

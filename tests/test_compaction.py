@@ -16,7 +16,9 @@ from pyhctsa_spark.operators.retention import (
     RetentionPolicy,
     apply_retention,
     read_tier_chunked,
+    retention_log,
     tier_watermarks,
+    write_tier_chunked,
 )
 
 
@@ -245,7 +247,7 @@ def _jobs_run(spark, fn, *args):
 
 def test_lifecycle_job_count_does_not_grow_with_store(spark, tmp_path):
     """Compaction runs the same number of Spark jobs for 5 and for 10
-    candidate chunks, and tier_watermarks the same for 2 and 3 tiers."""
+    candidate chunks, and tier_watermarks none for 2 and for 3 tiers."""
     compact_jobs = []
     # n_w0 // 64 tier-0 chunks plus one tier-1 chunk, all fragmented
     for n_w0, n_cands in ((256, 5), (576, 10)):
@@ -263,4 +265,25 @@ def test_lifecycle_job_count_does_not_grow_with_store(spark, tmp_path):
         wm, n_jobs = _jobs_run(spark, tier_watermarks, spark, path)
         assert wm == {t: 256 // 16**t - 1 for t in range(n_tiers)}
         wm_jobs.append(n_jobs)
-    assert wm_jobs[0] == wm_jobs[1] > 0
+    assert wm_jobs == [0, 0]
+
+
+def test_maintenance_of_fresh_store_runs_no_spark_job(spark, tmp_path):
+    """On a store fresh from write_tier_chunked, the watermarks, an
+    eviction (with its audit row) and compaction run no Spark job."""
+    rows = [(f"doc{d}", t, w, float(w)) for d in range(4)
+            for t, ratio in ((0, 1), (1, 16)) for w in range(256 // ratio)]
+    path = str(tmp_path / "store")
+    write_tier_chunked(
+        spark.createDataFrame(
+            rows, "doc_id string, tier int, window_idx long, mean double"),
+        path, chunk_windows=64)
+    wm, n_jobs = _jobs_run(spark, tier_watermarks, spark, path)
+    assert (wm, n_jobs) == ({0: 255, 1: 15}, 0)
+    policy = RetentionPolicy(horizons={0: 128, 1: None}, chunk_windows=64)
+    evicted, n_jobs = _jobs_run(spark, apply_retention, spark, path, policy, wm)
+    assert sorted(e["chunk"] for e in evicted) == [0, 1]
+    assert n_jobs == 0
+    assert retention_log(spark, path).count() == 2
+    compacted, n_jobs = _jobs_run(spark, compact_chunks, spark, path)
+    assert (compacted, n_jobs) == ([], 0)

@@ -174,3 +174,88 @@ def test_append_ingest_then_compact_then_retain(spark, tmp_path):
     assert sorted(e["chunk"] for e in evicted) == [0, 1, 2, 3]
     assert read_tier_chunked(spark, path).where("tier = 0").agg(
         F.min("window_idx")).first()[0] == 256
+
+
+def _file_paths(path):
+    """Every data file of a (tier, chunk) store, by chunk directory."""
+    out = {}
+    for tdir in sorted(os.listdir(path)):
+        if not tdir.startswith("tier="):
+            continue
+        for cdir in sorted(os.listdir(os.path.join(path, tdir))):
+            d = os.path.join(path, tdir, cdir)
+            out[d] = [os.path.join(d, f) for f in sorted(os.listdir(d))
+                      if not f.startswith(("_", "."))]
+    return out
+
+
+def test_fresh_chunked_write_is_one_sorted_file_per_chunk(spark, tmp_path):
+    """Each chunk is written by one task as one file sorted by
+    (doc_id, window_idx), so a fresh store has nothing to compact. The
+    input rows arrive shuffled over several partitions."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from pyhctsa_spark.operators.compaction import compaction_candidates
+
+    rows = [(f"doc{d}", t, w, float(w)) for d in range(8)
+            for t, ratio in ((0, 1), (1, 16), (2, 256))
+            for w in range(512 // ratio)]
+    random.Random(0).shuffle(rows)
+    df = spark.createDataFrame(
+        rows, "doc_id string, tier int, window_idx long, mean double"
+    ).repartition(6)
+    path = str(tmp_path / "store")
+    write_tier_chunked(df, path, chunk_windows=64)
+    files = _file_paths(path)
+    assert len(files) == 8 + 1 + 1
+    for chunk_files in files.values():
+        assert len(chunk_files) == 1
+        got = pq.ParquetFile(chunk_files[0]).read(
+            columns=["doc_id", "window_idx"]).to_pandas()
+        assert got.equals(
+            got.sort_values(["doc_id", "window_idx"]).reset_index(drop=True))
+    assert compaction_candidates(path) == []
+    assert read_tier_chunked(spark, path).count() == len(rows)
+
+
+def test_tier_watermarks_equal_spark_max_of_newest_chunks(spark, tmp_path):
+    """Footer watermarks equal a Spark max(window_idx) over each tier's
+    newest chunk. The newest tier-0 chunk holds two files, one written
+    without statistics (read through the column fallback) that holds
+    the maximum; tier 1's newest chunk also holds a zero-row file;
+    tier 2's holds a hidden file Spark skips; tier 3's newest chunk
+    holds only a zero-row file, so the tier is left out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyhctsa_spark.operators.retention import _chunk_dirs, tier_watermarks
+
+    path = str(tmp_path / "store")
+    write_tier_chunked(_tiers(spark).where("window_idx <= 500"), path,
+                       chunk_windows=64)
+    newest = _file_paths(path)
+    schema = pq.read_schema(newest[os.path.join(path, "tier=0", "chunk=7")][0])
+
+    def put(tier, chunk, name, widx, **kw):
+        d = os.path.join(path, f"tier={tier}", f"chunk={chunk}")
+        os.makedirs(d, exist_ok=True)
+        table = pa.Table.from_pylist(
+            [{"doc_id": "docx", "window_idx": w, "mean": 0.0} for w in widx],
+            schema=schema)
+        pq.write_table(table, os.path.join(d, name), **kw)
+
+    put(0, 7, "part-nostats.parquet", [505, 502], write_statistics=False)
+    put(1, 0, "part-empty.parquet", [])
+    put(2, 0, "_hidden.parquet", [9999])
+    put(3, 0, "part-empty.parquet", [])
+    dirs = [chunks[max(chunks)] for chunks in _chunk_dirs(path).values()]
+    want = {
+        int(r["tier"]): int(r["m"])
+        for r in spark.read.option("basePath", path).parquet(*dirs)
+        .groupBy("tier").agg(F.max("window_idx").alias("m")).collect()
+        if r["m"] is not None
+    }
+    assert want == {0: 505, 1: 31, 2: 1}
+    assert tier_watermarks(spark, path) == want

@@ -148,3 +148,90 @@ def test_failed_index_meta_write_keeps_previous_meta(
         build_search_index(docs, idx, n_buckets=4)
     _assert_survived(path, before)
     assert read_index_meta(idx) == meta
+
+
+# The audit-log DDLs that Spark-written logs already on disk carry.
+_LOG_DDLS = {
+    "retention": (
+        "tier int, chunk long, n_files long, bytes long, "
+        "watermark_widx long, horizon_windows long, evicted_at double"
+    ),
+    "compaction": (
+        "tier int, chunk long, files_before long, bytes_before long, "
+        "files_after long, bytes_after long, rows long, compacted_at double"
+    ),
+    "deletion": (
+        "doc_id string, tier int, chunk long, n_rows long, requested_at double"
+    ),
+}
+
+
+def _log_rows(ddl, seed):
+    """Two rows of distinct values for the columns of ``ddl``; longs
+    need more than 32 bits."""
+    value = {"int": lambda i: i, "long": lambda i: i << 33,
+             "double": lambda i: i / 7, "string": lambda i: f"doc{i}"}
+    cols = [c.split() for c in ddl.split(", ")]
+    return [{name: value[kind](seed * 100 + k * 10 + i)
+             for i, (name, kind) in enumerate(cols)} for k in (0, 1)]
+
+
+@pytest.mark.parametrize("log", sorted(_LOG_DDLS))
+def test_append_rows_extends_a_spark_written_log(spark, tmp_path, log):
+    """A log directory that already holds a Spark-written part reads
+    back through its reader with the same Spark schema and every row
+    after append_rows adds a part, and the appended part alone reads
+    back with that schema too."""
+    from pyhctsa_spark.operators import compaction, deletion, retention
+    from pyhctsa_spark.operators._local_df import one_slice_df
+    from pyhctsa_spark.operators.tablefs import append_rows
+
+    module, reader = {
+        "retention": (retention, retention.retention_log),
+        "compaction": (compaction, compaction.compaction_log),
+        "deletion": (deletion, deletion.deletion_log),
+    }[log]
+    ddl = _LOG_DDLS[log]
+    store = str(tmp_path / "store")
+    d = os.path.join(store, f"_{log}_log")
+    old, new = _log_rows(ddl, 1), _log_rows(ddl, 2)
+    one_slice_df(spark, old, ddl).write.parquet(d)
+    before = set(os.listdir(d))
+    append_rows(d, new, module._LOG_SCHEMA)
+    (part,) = set(os.listdir(d)) - before
+    want = spark.createDataFrame([], ddl).schema
+    got = reader(spark, store)
+    assert got.schema == want
+    assert sorted(got.collect()) == sorted(
+        spark.createDataFrame(old + new, ddl).collect())
+    assert spark.read.parquet(os.path.join(d, part)).schema == want
+
+
+def test_append_rows_writes_nothing_for_no_rows_or_a_failed_write(
+        tmp_path, monkeypatch):
+    """No rows create no directory; a write that fails halfway leaves no
+    part file, visible or hidden, and the earlier parts unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyhctsa_spark.operators import tablefs
+
+    schema = pa.schema([("tier", pa.int32()), ("chunk", pa.int64())])
+    d = str(tmp_path / "_log")
+    tablefs.append_rows(d, [], schema)
+    assert not os.path.exists(d)
+    tablefs.append_rows(d, [{"tier": 0, "chunk": 1}], schema)
+    before = {f: open(os.path.join(d, f), "rb").read() for f in os.listdir(d)}
+    real_write = pq.write_table
+
+    def torn_write(table, where, **kw):
+        real_write(table, where, **kw)
+        with open(where, "r+b") as f:
+            f.truncate(7)
+        raise OSError(errno.EIO, "injected crash")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    with pytest.raises(OSError, match="injected crash"):
+        tablefs.append_rows(d, [{"tier": 2, "chunk": 3}], schema)
+    assert {f: open(os.path.join(d, f), "rb").read()
+            for f in os.listdir(d)} == before
