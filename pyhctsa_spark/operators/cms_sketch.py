@@ -17,7 +17,10 @@ Engine shape, mirroring the HLL/KMV families:
 - the distributed state is RELATIONAL: non-zero (group, i, col, cnt)
   rows, merged by plain SUM — associative and combiner-friendly, so
   the shuffle moves at most tasks x groups x d*w pre-combined rows
-  regardless of corpus size;
+  regardless of corpus size. The map side is ``rollup._group_fold``,
+  the per-group token fold KMV and the per-source HLL union share;
+  this module supplies only the counter matrix, its sum and its
+  non-zero rows;
 - point queries join a broadcast probe table against the state and
   take min over the d rows (absent counters are exact zeros).
 
@@ -31,14 +34,12 @@ hll_state (distinct) and kmv_sketch (set algebra).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from pyhctsa_spark.functions.hll_state import splitmix64
-from pyhctsa_spark.operators.rollup import _var_width_view
+from pyhctsa_spark.operators.rollup import _group_fold
 
 D = 4          # hash rows
 W = 256        # counters per row (one byte of the hash each)
@@ -74,52 +75,24 @@ def cms_estimate(cms: np.ndarray, toks: np.ndarray) -> np.ndarray:
     return ests.min(axis=1)
 
 
-_PARTIAL_SCHEMA = "grp string, i int, col int, cnt long"
+_PARTIAL_SCHEMA = pa.schema([("grp", pa.string()), ("i", pa.int32()),
+                             ("col", pa.int32()), ("cnt", pa.int64())])
+
+
+def _nonzero_rows(m: np.ndarray, _n: int) -> tuple:
+    """(i, col, cnt) arrays of the non-zero counters of one matrix."""
+    ii, cc = np.nonzero(m)
+    return ii.astype(np.int32), cc.astype(np.int32), m[ii, cc]
 
 
 def cms_sketch_by(df: DataFrame, group_col: str = "source") -> DataFrame:
     """Relational CMS state per group: non-zero (group, i, col, cnt)
     rows. Map tasks pre-fold their partition into local counter
-    matrices, so the one shuffle moves at most tasks x groups x d*w
-    rows; the reduce is a plain combiner-friendly SUM."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[str, np.ndarray] = {}
-        for rb in batches:
-            names = rb.schema.names
-            grps = rb.column(names.index(group_col)).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-            for r in range(rb.num_rows):
-                raw = flat[offs[r]: offs[r + 1]]
-                toks = (raw.view("<i4") if is_bin else raw).astype(np.int64)
-                if len(toks) == 0:
-                    continue
-                g = grps[r]
-                m = cms_from_tokens(toks)
-                if g in acc:
-                    acc[g] += m
-                else:
-                    acc[g] = m
-        if acc:
-            g_col, i_col, c_col, n_col = [], [], [], []
-            for g, m in acc.items():
-                ii, cc = np.nonzero(m)
-                g_col.extend([g] * len(ii))
-                i_col.append(ii.astype(np.int32))
-                c_col.append(cc.astype(np.int32))
-                n_col.append(m[ii, cc])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(g_col, type=pa.string()),
-                 pa.array(np.concatenate(i_col)),
-                 pa.array(np.concatenate(c_col)),
-                 pa.array(np.concatenate(n_col))],
-                names=["grp", "i", "col", "cnt"],
-            )
-
-    needed = [c for c in (group_col, "tokens_bin", "tokens")
-              if c in df.columns]
-    partial = df.select(*needed).mapInArrow(fn, schema=_PARTIAL_SCHEMA)
+    matrices (``rollup._group_fold``), so the one shuffle moves at most
+    tasks x groups x d*w rows; the reduce is a plain combiner-friendly
+    SUM."""
+    partial = _group_fold(df, group_col, cms_from_tokens, np.add,
+                          _nonzero_rows, _PARTIAL_SCHEMA)
     return (
         partial.groupBy("grp", "i", "col")
         .agg(F.sum("cnt").alias("cnt"))

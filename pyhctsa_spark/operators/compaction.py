@@ -56,7 +56,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators import tablefs
-from pyhctsa_spark.operators.retention import _chunk_dirs, _write_chunks
+from pyhctsa_spark.operators.retention import (
+    _chunk_dirs,
+    _parquet_parts,
+    _part_stats,
+    _write_chunks,
+)
 
 _LOG_SCHEMA = pa.schema([
     ("tier", pa.int32()), ("chunk", pa.int64()),
@@ -65,14 +70,6 @@ _LOG_SCHEMA = pa.schema([
     ("rows", pa.int64()), ("compacted_at", pa.float64()),
 ])
 _STAGE = "_compact_stage"
-
-
-def _parquet_parts(d: str) -> list[str]:
-    return [
-        os.path.join(d, f)
-        for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
 
 
 def _recover_store(path: str) -> None:
@@ -88,13 +85,6 @@ def _recover_store(path: str) -> None:
     for tdir in os.listdir(path):
         if tdir.startswith("tier="):
             tablefs.recover(os.path.join(path, tdir))
-
-
-def _part_stats(d: str) -> tuple[int, int]:
-    """(n_parts, bytes) over DATA files only — markers like _SUCCESS
-    are excluded so before/after lineage compares like with like."""
-    parts = _parquet_parts(d)
-    return len(parts), sum(os.path.getsize(p) for p in parts)
 
 
 def compaction_candidates(

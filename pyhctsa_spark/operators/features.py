@@ -23,7 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from pyhctsa_spark.functions import kernels as K
-from pyhctsa_spark.operators.rollup import _var_width_view
+from pyhctsa_spark.operators.rollup import _token_col, _token_rows
 from pyhctsa_spark.plans.registry import FeatureSet
 
 
@@ -63,20 +63,15 @@ def extract_features(
             return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
         for rb in batches:
-            names = rb.schema.names
-            doc_ids = rb.column(names.index("doc_id")).to_pylist()
-            sources = rb.column(names.index("source")).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
+            doc_ids = rb.column("doc_id").to_pylist()
+            sources = rb.column("source").to_pylist()
             out_ids: list[str] = []
             out_src: list[str] = []
             out_widx: list[np.ndarray] = []
             mats: list[np.ndarray] = []
             n_acc = 0
             n_err = 0
-            for r in range(rb.num_rows):
-                raw = flat[offs[r] : offs[r + 1]]
-                toks = raw.view("<i4") if is_bin else raw
+            for doc, src, toks in zip(doc_ids, sources, _token_rows(rb)):
                 y = toks.astype(np.float64)
                 if window is None:
                     vals, ne = fs.compute(y)
@@ -92,8 +87,8 @@ def extract_features(
                     out_widx.append(np.arange(Y.shape[0], dtype=np.int64))
                     k = Y.shape[0]
                 n_err += ne
-                out_ids.extend([doc_ids[r]] * k)
-                out_src.extend([sources[r]] * k)
+                out_ids.extend([doc] * k)
+                out_src.extend([src] * k)
                 n_acc += k
                 if n_acc >= FLUSH_ROWS:
                     yield _emit(out_ids, out_src, out_widx, mats)
@@ -105,8 +100,8 @@ def extract_features(
             if mats:
                 yield _emit(out_ids, out_src, out_widx, mats)
 
-    needed = [c for c in ("doc_id", "source", "tokens_bin", "tokens") if c in df.columns]
-    return df.select(*needed).mapInArrow(fn, schema=ddl)
+    return df.select("doc_id", "source", _token_col(df.columns)).mapInArrow(
+        fn, schema=ddl)
 
 
 def make_feature_counters(spark) -> dict:

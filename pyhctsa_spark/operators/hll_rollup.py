@@ -24,7 +24,8 @@ tiers.
    store can be re-tiered forever without raw revisit.
 
 3. ``hll_distinct_by_source``: a cross-document union — registers are
-   unioned per source key. Map-side each task emits at most
+   unioned per source key by ``rollup._group_fold``, the per-group
+   token fold KMV and CMS share. Map-side each task emits at most
    |sources| x 2^p sparse (source, register j, value) rows (non-zero
    registers only), the ONE shuffle is those partial rows, and the
    reduce is groupBy(source, j).max — Catalyst's partial aggregation
@@ -39,8 +40,6 @@ tier t window length = window * group**t.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
@@ -48,7 +47,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyhctsa_spark.functions import hll_state as HLL
 from pyhctsa_spark.operators.rollup import (
     HLL_FAMILY,
-    _var_width_view,
+    _group_fold,
+    _serving_tier,
     store_cascade,
     walk_tiers,
 )
@@ -135,10 +135,24 @@ def hll_merge(states: DataFrame, by: list[str] | None = None) -> DataFrame:
 
 def hll_estimates(states: DataFrame, by: list[str] | None = None) -> DataFrame:
     """Per (by, widx): integer register summary + the distinct estimate
-    from the relational state rows — all-JVM (one grouped fold + a
-    broadcast libm lookup join for the linear-counting branch)."""
-    by = list(by or ["user_id"])
-    keys = [*by, "widx"]
+    from the relational state rows (``_estimate``)."""
+    return _estimate(states, [*(by or ["user_id"]), "widx"])
+
+
+def _estimate(regs: DataFrame, keys: list[str], *extra) -> DataFrame:
+    """The one HLL estimator over occupied (keys…, j, r) register rows,
+    all-JVM: one grouped fold per ``keys`` (``extra`` aggregates ride
+    along) to the integer denominator and zero count, then the estimate.
+
+    The float constant is pre-multiplied in Python with the same
+    operation order as hll_state.finalize, so both engines divide the
+    identical double by the identical integer. The linear-counting
+    branch joins a broadcast 256-row libm lookup table instead of
+    calling the JVM's Math.log, which differs from libm (and so from the
+    DuckDB oracle) in the last ulp on dozens of the 256 possible inputs
+    — measured, not hypothetical."""
+    # pyspark's shiftleft() wrapper only takes a literal int shift;
+    # the SQL function accepts an expression
     denom_expr = (
         F.sum(F.expr(
             f"shiftleft(CAST(1 AS BIGINT), {HLL.RSCALE} - least(r, {HLL.RSCALE}))"
@@ -146,15 +160,15 @@ def hll_estimates(states: DataFrame, by: list[str] | None = None) -> DataFrame:
         + (F.lit(HLL.M) - F.count("*")).cast("long")
         * F.lit(int(1) << HLL.RSCALE).cast("long")
     )
-    out = states.groupBy(*keys).agg(
+    out = regs.groupBy(*keys).agg(
+        *extra,
         denom_expr.cast("long").alias("hll_denom"),
         (F.lit(HLL.M) - F.count("*")).cast("int").alias("hll_zeros"),
     )
-    spark = states.sparkSession
     from pyhctsa_spark.operators._local_df import one_slice_df
 
     lut = one_slice_df(
-        spark,
+        regs.sparkSession,
         [(v, float(HLL.LC_TABLE[v])) for v in range(1, HLL.M + 1)],
         "hll_zeros int, lc double",
     )
@@ -187,13 +201,7 @@ def hll_at_resolution(
 
     Output rows carry ``tier`` = the SERVING tier and ``window_idx`` =
     bucket index at resolution B."""
-    if bucket_windows < 1:
-        raise ValueError("bucket_windows must be >= 1")
-    t = max(
-        k for k in range(n_tiers) if bucket_windows % (group ** k) == 0
-    )
-    residual = bucket_windows // group ** t
-    sel = tiers.where(F.col("tier") == t)
+    sel, t, residual = _serving_tier(tiers, bucket_windows, group, n_tiers)
     if residual == 1:
         return sel
     return hll_cascade_from_store(sel, group=residual).withColumn(
@@ -201,111 +209,38 @@ def hll_at_resolution(
     )
 
 
-_SRC_SCHEMA = "source string, n long, j int, r int"
+_SRC_SCHEMA = pa.schema([("source", pa.string()), ("n", pa.int64()),
+                         ("j", pa.int32()), ("r", pa.int32())])
+
+
+def _register_rows(regs: np.ndarray, n: int) -> tuple:
+    """(n, j, r) arrays of the non-zero registers of one union. The
+    task-local token count rides on the FIRST register row only (0
+    elsewhere), so the reduce-side per-source total is a plain sum over
+    rows — exact, no replication."""
+    nz = np.flatnonzero(regs)
+    return (np.r_[n, np.zeros(len(nz) - 1, dtype=np.int64)],
+            nz.astype(np.int32), regs[nz].astype(np.int32))
 
 
 def hll_distinct_by_source(df: DataFrame) -> DataFrame:
     """Approximate distinct tokens per source across ALL documents.
 
-    Map side: each task unions registers per source locally and emits
-    only NON-ZERO (source, register j, value r) rows plus the local
-    token count — at most |sources| x (2^p + 1) rows per task. Reduce
-    side: groupBy(source, j).max(r) with Catalyst partial aggregation
-    (map-side combine), then one 2^p-element in-row fold rebuilds the
+    Map side (``rollup._group_fold``): each task unions registers per
+    source locally and emits only NON-ZERO (source, register j, value r)
+    rows plus the local token count — at most |sources| x 2^p rows per
+    task. Reduce side: groupBy(source, j).max(r) with Catalyst partial
+    aggregation (map-side combine), then ``_estimate`` rebuilds the
     integer denominator. Shuffle volume is independent of corpus size —
     the sketch-union shape that makes distinct-count feasible at 100 TB
     (exact distinct would shuffle every unique token).
     """
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[str, np.ndarray] = {}
-        counts: dict[str, int] = {}
-        for rb in batches:
-            names = rb.schema.names
-            sources = rb.column(names.index("source")).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-            for r in range(rb.num_rows):
-                raw = flat[offs[r]: offs[r + 1]]
-                toks = (raw.view("<i4") if is_bin else raw).astype(np.int64)
-                if len(toks) == 0:
-                    continue
-                regs = HLL.registers_from_tokens(toks)
-                s = sources[r]
-                if s in acc:
-                    np.maximum(acc[s], regs, out=acc[s])
-                    counts[s] += len(toks)
-                else:
-                    acc[s] = regs
-                    counts[s] = len(toks)
-        if acc:
-            src_col, n_col, j_col, r_col = [], [], [], []
-            for s, regs in acc.items():
-                nz = np.nonzero(regs)[0]
-                src_col.extend([s] * len(nz))
-                # the task-local token count rides on the FIRST register
-                # row only (0 elsewhere), so the reduce-side per-source
-                # total is a plain sum over rows — exact, no replication
-                n_loc = np.zeros(len(nz), dtype=np.int64)
-                if len(nz):
-                    n_loc[0] = counts[s]
-                n_col.append(n_loc)
-                j_col.append(nz.astype(np.int32))
-                r_col.append(regs[nz].astype(np.int32))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(src_col, type=pa.string()),
-                 pa.array(np.concatenate(n_col)),
-                 pa.array(np.concatenate(j_col)),
-                 pa.array(np.concatenate(r_col))],
-                names=["source", "n", "j", "r"],
-            )
-
-    needed = [c for c in ("source", "tokens_bin", "tokens")
-              if c in df.columns]
-    partial = df.select(*needed).mapInArrow(fn, schema=_SRC_SCHEMA)
+    partial = _group_fold(df, "source", HLL.registers_from_tokens,
+                          np.maximum, _register_rows, _SRC_SCHEMA)
     # register value is max'd per (source, j); the piggybacked local
     # counts are summed. Both are combiner-friendly, so the real
     # shuffle is tasks x sources x <=256 pre-combined rows.
     regs = partial.groupBy("source", "j").agg(
         F.max("r").alias("r"), F.sum("n").alias("n_j")
     )
-    # pyspark's shiftleft() wrapper only takes a literal int shift;
-    # the SQL function accepts an expression
-    denom_expr = (
-        F.sum(F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), {HLL.RSCALE} - least(r, {HLL.RSCALE}))"
-        ))
-        + (F.lit(HLL.M) - F.count("*")).cast("long")
-        * F.lit(int(1) << HLL.RSCALE).cast("long")
-    )
-    out = regs.groupBy("source").agg(
-        F.sum("n_j").cast("long").alias("n"),
-        denom_expr.cast("long").alias("hll_denom"),
-        (F.lit(HLL.M) - F.count("*")).cast("int").alias("hll_zeros"),
-    )
-    # the float constant is pre-multiplied in Python with the same
-    # operation order as hll_state.finalize, so both engines divide the
-    # identical double by the identical integer. The linear-counting
-    # branch joins a broadcast 256-row libm lookup table instead of
-    # calling the JVM's Math.log, which differs from libm (and so from
-    # the DuckDB oracle) in the last ulp on dozens of the 256 possible
-    # inputs — measured, not hypothetical.
-    spark = df.sparkSession
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    lut = one_slice_df(
-        spark,
-        [(v, float(HLL.LC_TABLE[v])) for v in range(1, HLL.M + 1)],
-        "hll_zeros int, lc double",
-    )
-    alpha_num = F.lit(HLL.ALPHA * (HLL.M * HLL.M) * (2.0 ** HLL.RSCALE))
-    raw_est = alpha_num / F.col("hll_denom").cast("double")
-    est = F.when(
-        (raw_est <= F.lit(2.5 * HLL.M)) & (F.col("hll_zeros") > 0),
-        F.col("lc"),
-    ).otherwise(raw_est)
-    return (
-        out.join(F.broadcast(lut), "hll_zeros", "left")
-        .withColumn("est_distinct", est)
-        .drop("lc")
-    )
+    return _estimate(regs, ["source"], F.sum("n_j").cast("long").alias("n"))

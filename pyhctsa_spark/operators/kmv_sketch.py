@@ -11,7 +11,10 @@ Properties the engine exploits:
 - merge(union) == bottom-k(sketch(A) ∪ sketch(B)) — exact, associative,
   commutative, idempotent, so partial sketches combine map-side and the
   shuffle moves at most tasks x groups x k rows regardless of corpus
-  size (the same combiner-friendly shape as the HLL register union);
+  size (the same combiner-friendly shape as the HLL register union).
+  The map side is ``rollup._group_fold``, the per-group token fold the
+  CMS and the per-source HLL union share; this module supplies only
+  the bottom-k sketch, its merge and its output rows;
 - UNSATURATED sketches (fewer than k distinct hashes) are EXACT: the
   estimator degrades gracefully to a precise distinct count, and the
   oracle replays the same regime split;
@@ -35,14 +38,12 @@ hll_state (fixed-size approximate).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pyhctsa_spark.functions.hll_state import splitmix64
-from pyhctsa_spark.operators.rollup import _var_width_view
+from pyhctsa_spark.operators.rollup import _group_fold
 
 K_DEFAULT = 256
 
@@ -56,54 +57,22 @@ def kmv_hashes(toks: np.ndarray, k: int) -> np.ndarray:
     return np.unique(h)[:k]
 
 
-_PARTIAL_SCHEMA = "grp string, n long, h long"
+_PARTIAL_SCHEMA = pa.schema([("grp", pa.string()), ("n", pa.int64()),
+                             ("h", pa.int64())])
 
 
 def _kmv_partial(df: DataFrame, k: int, group_col: str) -> DataFrame:
-    """Map pass: per (task, group) bottom-k distinct hashes, token count
-    piggybacked on the first emitted row (0 elsewhere) so the reduce
-    side recovers exact per-group totals with a plain sum."""
+    """Map pass (``rollup._group_fold``): per (task, group) bottom-k
+    distinct hashes, token count piggybacked on the first emitted row (0
+    elsewhere) so the reduce side recovers exact per-group totals with a
+    plain sum."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[str, np.ndarray] = {}
-        counts: dict[str, int] = {}
-        for rb in batches:
-            names = rb.schema.names
-            grps = rb.column(names.index(group_col)).to_pylist()
-            tok_name = "tokens_bin" if "tokens_bin" in names else "tokens"
-            flat, offs, is_bin = _var_width_view(rb.column(names.index(tok_name)))
-            for r in range(rb.num_rows):
-                raw = flat[offs[r]: offs[r + 1]]
-                toks = (raw.view("<i4") if is_bin else raw).astype(np.int64)
-                if len(toks) == 0:
-                    continue
-                hs = kmv_hashes(toks, k)
-                g = grps[r]
-                if g in acc:
-                    acc[g] = np.unique(np.concatenate([acc[g], hs]))[:k]
-                    counts[g] += len(toks)
-                else:
-                    acc[g] = hs
-                    counts[g] = len(toks)
-        if acc:
-            g_col, n_col, h_col = [], [], []
-            for g, hs in acc.items():
-                g_col.extend([g] * len(hs))
-                n_loc = np.zeros(len(hs), dtype=np.int64)
-                if len(hs):
-                    n_loc[0] = counts[g]
-                n_col.append(n_loc)
-                h_col.append(hs)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(g_col, type=pa.string()),
-                 pa.array(np.concatenate(n_col)),
-                 pa.array(np.concatenate(h_col))],
-                names=["grp", "n", "h"],
-            )
-
-    needed = [c for c in (group_col, "tokens_bin", "tokens")
-              if c in df.columns]
-    return df.select(*needed).mapInArrow(fn, schema=_PARTIAL_SCHEMA)
+    return _group_fold(
+        df, group_col, lambda toks: kmv_hashes(toks, k),
+        lambda acc, hs: np.unique(np.concatenate([acc, hs]))[:k],
+        lambda hs, n: (np.r_[n, np.zeros(len(hs) - 1, dtype=np.int64)], hs),
+        _PARTIAL_SCHEMA,
+    )
 
 
 def kmv_sketch_by(df: DataFrame, k: int = K_DEFAULT,

@@ -167,13 +167,20 @@ def _chunk_dirs(path: str) -> dict[int, dict[int, str]]:
     return out
 
 
-def _dir_stats(d: str) -> tuple[int, int]:
-    n_files = n_bytes = 0
-    for root, _dirs, files in os.walk(d):
-        for f in files:
-            n_files += 1
-            n_bytes += os.path.getsize(os.path.join(root, f))
-    return n_files, n_bytes
+def _parquet_parts(d: str) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
+def _part_stats(d: str) -> tuple[int, int]:
+    """(n_parts, bytes) over DATA files only — checksum side files and
+    markers like _SUCCESS are excluded, so the retention and compaction
+    logs count like with like."""
+    parts = _parquet_parts(d)
+    return len(parts), sum(os.path.getsize(p) for p in parts)
 
 
 def _file_max_window_idx(f: str) -> int | None:
@@ -288,7 +295,7 @@ def apply_retention(
     for tier, wm, doomed in plan:
         for c in doomed:
             d = layout[tier][c]
-            n_files, n_bytes = _dir_stats(d)
+            n_files, n_bytes = _part_stats(d)
             evicted.append({
                 "tier": tier,
                 "chunk": c,

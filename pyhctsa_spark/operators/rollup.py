@@ -339,6 +339,67 @@ def _var_width_view(col: pa.Array) -> tuple[np.ndarray, np.ndarray, bool]:
     raise TypeError(f"unsupported token column type {col.type}")
 
 
+def _token_col(columns: list[str]) -> str:
+    """The one token column a dense input ships to Python: ``tokens_bin``
+    when present, else ``tokens``."""
+    return "tokens_bin" if "tokens_bin" in columns else "tokens"
+
+
+def _token_rows(rb: pa.RecordBatch) -> Iterator[np.ndarray]:
+    """Each row's tokens of ``rb``'s token column (``_token_col``),
+    zero-copy: packed ``tokens_bin`` bytes viewed as '<i4', ``tokens``
+    list values as they are."""
+    flat, offs, is_bin = _var_width_view(rb.column(_token_col(rb.schema.names)))
+    for r in range(rb.num_rows):
+        raw = flat[offs[r] : offs[r + 1]]
+        yield raw.view("<i4") if is_bin else raw
+
+
+def _group_fold(
+    df: DataFrame,
+    group_col: str,
+    sketch: Callable,
+    merge: Callable,
+    rows: Callable,
+    schema: pa.Schema,
+) -> DataFrame:
+    """The one map-side fold of the per-group source sketches (KMV, CMS,
+    HLL by source): ONE ``mapInArrow`` pass over ``group_col`` and the
+    token column. Per task, each non-empty row's int64 tokens become
+    ``sketch(toks)``, folded into its group's state by ``merge(acc,
+    state)`` while the group's token count is summed. At the end the task
+    emits one RecordBatch of ``schema``: per group, the group value
+    repeated beside the arrays ``rows(state, n_tokens)`` returns, so the
+    shuffle above moves at most tasks x groups x (rows per state)."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict = {}  # group -> (state, n_tokens)
+        for rb in batches:
+            grps = rb.column(group_col).to_pylist()
+            for g, toks in zip(grps, _token_rows(rb)):
+                if len(toks) == 0:
+                    continue
+                state = sketch(toks.astype(np.int64))
+                if g in acc:
+                    prev, n = acc[g]
+                    acc[g] = merge(prev, state), n + len(toks)
+                else:
+                    acc[g] = state, len(toks)
+        if acc:
+            parts = [rows(*sn) for sn in acc.values()]
+            g_col: list = []
+            for g, cols in zip(acc, parts):
+                g_col.extend([g] * len(cols[0]))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(g_col, type=pa.string())]
+                + [pa.array(np.concatenate(c)) for c in zip(*parts)],
+                schema=schema,
+            )
+
+    return df.select(group_col, _token_col(df.columns)).mapInArrow(
+        fn, schema=from_arrow_schema(schema))
+
+
 def walk_tiers(
     df: DataFrame,
     families: list[Family],
@@ -386,7 +447,7 @@ def _tier_walker(
     if gapped:
         needed = ["offsets", "values", "n_tok"]
     else:
-        needed = ["tokens_bin" if "tokens_bin" in df.columns else "tokens"]
+        needed = [_token_col(df.columns)]
         if counters is not None and "tok_checksum" in df.columns:
             needed.append("tok_checksum")
     # Pathological-row bound: a single giant document is processed in
@@ -612,13 +673,22 @@ def rollup_at_resolution(
     happens (same contract as cascade_from_store), and intact when a
     tier serves the resolution directly.
     """
+    sel, _t, residual = _serving_tier(tiers, bucket_windows, group, n_tiers)
+    if residual == 1:
+        return sel
+    return cascade_from_store(sel, group=residual, lags=lags)
+
+
+def _serving_tier(
+    tiers: DataFrame, bucket_windows: int, group: int, n_tiers: int
+) -> tuple[DataFrame, int, int]:
+    """The router's tier choice, shared by every ``*_at_resolution``:
+    (rows of the coarsest tier t whose ``group**t`` divides B, t, the
+    residual B / group**t tier-t rows per output bucket)."""
     if bucket_windows < 1:
         raise ValueError("bucket_windows must be >= 1")
     t = max(
         k for k in range(n_tiers) if bucket_windows % (group ** k) == 0
     )
-    residual = bucket_windows // group ** t
-    sel = tiers.where(F.col("tier") == t)
-    if residual == 1:
-        return sel
-    return cascade_from_store(sel, group=residual, lags=lags)
+    return (tiers.where(F.col("tier") == t), t,
+            bucket_windows // group ** t)

@@ -1,5 +1,6 @@
 """KMV bottom-k sketch: hash/bottom-k replay, merge algebra, estimator
-regimes, and the Spark by-group + pairwise-overlap surfaces."""
+regimes, and the Spark by-group + pairwise-overlap surfaces; the
+map-side bound of every source sketch on the shared per-group fold."""
 
 import numpy as np
 import pytest
@@ -110,13 +111,37 @@ def test_kmv_overlap_matches_replay_and_truth(spark):
     assert got[("srcA", "srcC")]["jaccard_est"] == 0.0
 
 
-def test_kmv_partial_shuffle_is_bounded(spark, seq):
-    """The pre-shuffle side emits at most tasks x groups x k rows: the
-    map output of the sketch pass must not scale with corpus tokens."""
+@pytest.mark.parametrize("sketch", ["kmv", "cms", "hll"])
+def test_kmv_partial_shuffle_is_bounded(spark, seq, sketch, monkeypatch):
+    """The pre-shuffle side emits at most tasks x groups x (rows per
+    state) rows — k for KMV, D*W for CMS, 2^p for the per-source HLL
+    union: the map output of the sketch pass must not scale with corpus
+    tokens. The CMS and HLL map sides are the ``_group_fold`` each
+    sketch builds, caught as it is called."""
+    from pyhctsa_spark.functions import hll_state as H
+    from pyhctsa_spark.operators import cms_sketch, hll_rollup
     from pyhctsa_spark.operators.kmv_sketch import _kmv_partial
+    from pyhctsa_spark.operators.rollup import _group_fold
 
     k = 16
-    cnt = _kmv_partial(seq, k, "source").count()
+    if sketch == "kmv":
+        partial, per_state = _kmv_partial(seq, k, "source"), k
+    else:
+        module, run, per_state = {
+            "cms": (cms_sketch, cms_sketch.cms_sketch_by,
+                    cms_sketch.D * cms_sketch.W),
+            "hll": (hll_rollup, hll_rollup.hll_distinct_by_source, H.M),
+        }[sketch]
+        folds = []
+
+        def spy(*args):
+            folds.append(_group_fold(*args))
+            return folds[-1]
+
+        monkeypatch.setattr(module, "_group_fold", spy)
+        run(seq)
+        (partial,) = folds
+    cnt = partial.count()
     n_src = seq.select("source").distinct().count()
     parts = seq.rdd.getNumPartitions()
-    assert cnt <= parts * n_src * k
+    assert 0 < cnt <= parts * n_src * per_state

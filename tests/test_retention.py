@@ -58,6 +58,27 @@ def test_retention_drops_only_expired_chunks(spark, tmp_path):
         spark, path, policy, watermark_widx={0: 511, 1: 31, 2: 1}) == []
 
 
+def test_retention_log_counts_data_files_only(spark, tmp_path):
+    """A chunk written by write_tier_chunked holds one parquet part
+    beside the writer's side files (checksums, markers): its eviction
+    logs n_files == 1 and that part's size as bytes."""
+    path = str(tmp_path / "store")
+    write_tier_chunked(_tiers(spark), path, chunk_windows=64)
+    d = os.path.join(path, "tier=0", "chunk=0")
+    parts = [os.path.join(d, f) for f in os.listdir(d)
+             if f.endswith(".parquet")]
+    assert len(parts) == 1
+    size = os.path.getsize(parts[0])
+    # keep widx >= 511 - 448 + 1 = 64: chunk 0 alone expires
+    evicted = apply_retention(
+        spark, path, RetentionPolicy(horizons={0: 448}, chunk_windows=64),
+        watermark_widx={0: 511})
+    assert [(e["chunk"], e["n_files"], e["bytes"]) for e in evicted] == [
+        (0, 1, size)]
+    log = retention_log(spark, path).toPandas()
+    assert log[["n_files", "bytes"]].values.tolist() == [[1, size]]
+
+
 def test_retention_guard_requires_cascade_coverage(spark, tmp_path):
     path = str(tmp_path / "store")
     # only tier 0 exists: no coarser tier to cover evicted range
