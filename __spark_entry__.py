@@ -1492,17 +1492,15 @@ def _resolution_router_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cagg_realtime_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-time continuous-aggregate view (operators/cagg.cagg_realtime):
     windows at/below the 80%-quantile-time watermark come from the
-    materialized chunk store (pruned scan), newer windows from an
-    on-the-fly partial over raw. Oracle = full recompute — the view
-    must be indistinguishable from recomputing everything."""
+    materialized snapshot store (only the chunks at/below the watermark
+    are read), newer windows from an on-the-fly partial over raw.
+    Oracle = full recompute — the view must be indistinguishable from
+    recomputing everything."""
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from pyhctsa_spark.operators.cagg import (
-        cagg_materialize,
-        cagg_realtime,
-    )
+    from pyhctsa_spark.operators.cagg import CaggSnapshotStore, cagg_realtime
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts"), "value",
@@ -1511,10 +1509,10 @@ def _cagg_realtime_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     wm_ts = ev.agg(F.expr("percentile(unix_micros(ts), 0.8)")).first()[0]
     wm_widx = int(wm_ts // win)
     hist = ev.where(F.floor(F.unix_micros("ts") / F.lit(win)) <= wm_widx)
-    path = tempfile.mkdtemp(prefix="cagg_rt_") + "/store"
-    cagg_materialize(hist, path, window_micros=win, chunk_windows=48)
-    out = cagg_realtime(spark, path, ev, wm_widx,
-                        window_micros=win, chunk_windows=48)
+    store = CaggSnapshotStore(tempfile.mkdtemp(prefix="cagg_rt_") + "/store",
+                              window_micros=win, chunk_windows=48)
+    store.materialize(hist)
+    out = cagg_realtime(spark, store, ev, wm_widx)
     return out.select(
         "user_id", "widx", "n_events",
         F.round("mean", 6).alias("mean"),
@@ -1560,31 +1558,27 @@ def _cagg_refresh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, refresh the chunk-partitioned store with the remaining
     fifth (interleaved in time = late data), finalize. The DuckDB
     oracle recomputes from ALL events — a hash match proves
-    refresh == full recompute. Refresh rewrites only the touched
-    chunks (dynamic partition overwrite); cost scales with the delta,
-    never the store."""
+    refresh == full recompute. Refresh writes only the touched chunks
+    as a new snapshot generation; cost scales with the delta, never
+    the store."""
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from pyhctsa_spark.operators.cagg import (
-        cagg_finalize,
-        cagg_materialize,
-        cagg_read,
-        cagg_refresh,
-    )
+    from pyhctsa_spark.operators.cagg import CaggSnapshotStore, cagg_finalize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"),
         "value",
     )
     win = 30 * 60 * 1_000_000
-    path = tempfile.mkdtemp(prefix="cagg_store_") + "/store"
-    cagg_materialize(ev.where("event_id % 5 != 4"), path,
-                     window_micros=win, chunk_windows=48)
-    cagg_refresh(spark, path, ev.where("event_id % 5 = 4"),
-                 window_micros=win, chunk_windows=48)
-    out = cagg_finalize(cagg_read(spark, path).drop("chunk"))
+    store = CaggSnapshotStore(
+        tempfile.mkdtemp(prefix="cagg_store_") + "/store",
+        window_micros=win, chunk_windows=48,
+    )
+    store.materialize(ev.where("event_id % 5 != 4"))
+    store.refresh(spark, ev.where("event_id % 5 = 4"))
+    out = cagg_finalize(store.read(spark).drop("chunk"))
     return out.select(
         "user_id", "widx", "n_events",
         F.round("mean", 6).alias("mean"),

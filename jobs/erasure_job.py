@@ -259,7 +259,11 @@ def main(argv=None) -> int:
         return 0 if left == 0 else 2
     from pyhctsa_spark.operators.cagg import CaggSnapshotStore
 
-    store = CaggSnapshotStore(args.cagg_store, by=[args.key_col])
+    # open the store in the layout it was materialized with: writes
+    # through any other layout are refused
+    layout = CaggSnapshotStore(args.cagg_store).manifest().get("layout", {})
+    store = CaggSnapshotStore(args.cagg_store,
+                              **{"by": [args.key_col], **layout})
     # coerce ALL ids to the STORE's key-column type (per-id best-effort
     # coercion built mixed int/str batches that crashed sorting and
     # compared int literals against string columns): numeric key column

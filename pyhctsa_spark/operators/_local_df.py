@@ -1,4 +1,5 @@
-"""One-slice local-collection DataFrames for tiny local row lists.
+"""One-slice local-collection DataFrames for tiny local row lists, and
+the key-set filter built on them.
 
 ``spark.createDataFrame(list)`` parallelizes the rows into
 defaultParallelism slices, and the conventional ``.coalesce(1)`` before
@@ -12,10 +13,35 @@ schema, same one-file layout, an order of magnitude less overhead
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
+
+# A literal IN keeps parquet row-group pruning, but Catalyst's planning
+# cost grows with the expression tree (a 100k-key IN cost about a
+# minute of planning in pq._exact_rerank); above this many keys the
+# filter is a broadcast join instead.
+IN_LIST_MAX_KEYS = 2048
 
 
 def one_slice_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema=schema
     )
+
+
+def key_set_filter(
+    spark: SparkSession, df: DataFrame, key: Column, keys: list,
+    keep: bool = False,
+) -> DataFrame:
+    """Rows of ``df`` whose ``key`` is in ``keys`` or, with ``keep``,
+    every other row. The kept side includes rows whose key is NULL: a
+    NULL key is in no key set, and erasure must not drop it. ``keys``
+    must already be of ``key``'s type."""
+    if len(keys) <= IN_LIST_MAX_KEYS:
+        hit = key.isin(keys)
+        return df.where(~hit | key.isNull()) if keep else df.where(hit)
+    dtype = df.select(key).schema.fields[0].dataType
+    ks = one_slice_df(spark, [(k,) for k in keys],
+                      StructType([StructField("_set_key", dtype)]))
+    return df.join(F.broadcast(ks), key == F.col("_set_key"),
+                   "left_anti" if keep else "left_semi")

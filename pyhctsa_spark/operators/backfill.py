@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pyhctsa_spark.operators._local_df import key_set_filter
 from pyhctsa_spark.operators.deletion import delete_docs
 from pyhctsa_spark.operators.retention import write_tier_chunked
 
@@ -52,22 +53,9 @@ def backfill_docs(
         return {"rows_deleted": 0, "rows_appended": 0,
                 "touched_chunks": []}
     info = delete_docs(spark, path, ids, id_col=id_col)
-    if len(ids) <= 2048:
-        target = corrected_seq.where(
-            F.col(id_col).cast("string").isin(ids)
-        )
-    else:
-        # large batches: broadcast semi-join (IN-list planning cost cap,
-        # same threshold as delete_docs)
-        from pyhctsa_spark.operators._local_df import one_slice_df
-
-        ids_df = one_slice_df(spark, [(i,) for i in ids],
-                              "_bf_id string")
-        target = corrected_seq.join(
-            F.broadcast(ids_df),
-            F.col(id_col).cast("string") == F.col("_bf_id"),
-            "left_semi",
-        )
+    target = key_set_filter(
+        spark, corrected_seq, F.col(id_col).cast("string"), ids
+    )
     # localCheckpoint: the Arrow rollup scan over corrected_seq is the
     # dominant cost — count() then write would otherwise run it twice
     fresh = rollup_fn(target).localCheckpoint(eager=True)

@@ -18,17 +18,20 @@ revisits raw history:
   partial(A ∪ B) bit-exactly (associative + commutative), which is the
   whole contract: late data, replays, and out-of-order deltas all
   reduce to "union states, merge".
-- ``cagg_materialize`` writes states partitioned by
-  ``chunk = widx // chunk_windows`` (same chunk unit as retention.py).
-- ``cagg_refresh`` is the incremental path: partial-aggregate the
-  delta, list the TOUCHED chunks (a driver-side collect bounded by the
-  refresh interval — a day of late-arriving data touches a handful of
-  chunks, never the store), read ONLY those chunks back (partition
-  pruning), merge, and rewrite just those chunk directories via dynamic
-  partition overwrite. Refresh cost ∝ delta size + touched-chunk size;
-  store size never enters.
+- ``CaggSnapshotStore`` holds the states partitioned by
+  ``chunk = widx // chunk_windows`` (same chunk unit as retention.py),
+  one immutable generation directory per commit and an atomically
+  published manifest naming each chunk's generation. A refresh
+  partial-aggregates the delta, finds the TOUCHED chunks with one
+  grouped probe (a driver-side collect bounded by the refresh interval
+  — a day of late-arriving data touches a handful of chunks, never the
+  store), reads back ONLY those chunk directories, merges, writes them
+  as a new generation and commits by publishing the manifest. Refresh
+  cost ∝ delta size + touched-chunk size; store size never enters.
 - ``cagg_finalize`` turns states into the user-facing columns
   (mean, variance, OHLC, extremes' timestamps).
+- ``cagg_realtime`` finalizes the store's states at or below a watermark
+  window together with partials of the raw tail above it.
 
 Invariant tested end-to-end: finalize(refresh(materialize(A), B)) ==
 finalize(partial(A ∪ B)) — the incremental store is indistinguishable
@@ -46,6 +49,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators import tablefs
+from pyhctsa_spark.operators._local_df import key_set_filter
 
 STATE_COLS = [
     "n", "s1", "s2", "low", "high",
@@ -143,99 +147,13 @@ def _with_chunk(df: DataFrame, chunk_windows: int) -> DataFrame:
     )
 
 
-def cagg_materialize(
-    events: DataFrame,
-    path: str,
-    on: str = "ts",
-    by: list[str] | None = None,
-    value_col: str = "value",
-    window_micros: int = 30 * 60 * 1_000_000,
-    chunk_windows: int = 48,
-) -> None:
-    """Full (re)build of the state store, chunk-partitioned."""
-    states = cagg_partial(events, on, by, value_col, window_micros)
-    (
-        _with_chunk(states, chunk_windows)
-        .repartition("chunk")  # one part per chunk dir
-        .write.mode("overwrite")
-        .partitionBy("chunk")
-        .parquet(path)
-    )
-
-
-def cagg_refresh(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    on: str = "ts",
-    by: list[str] | None = None,
-    value_col: str = "value",
-    window_micros: int = 30 * 60 * 1_000_000,
-    chunk_windows: int = 48,
-) -> dict:
-    """Merge a delta batch into the store, rewriting ONLY the chunks its
-    windows fall in. Returns {"touched_chunks": [...], "delta_states": n}.
-
-    The touched-chunk collect is bounded by the refresh cadence (windows
-    per delta / chunk_windows), independent of store size. Late rows are
-    just chunks further back in the touched list — same path, no special
-    case."""
-    by = list(by or ["user_id"])
-    dp = _with_chunk(
-        cagg_partial(delta, on, by, value_col, window_micros), chunk_windows
-    )
-    dp = dp.persist()
-    # one probe job for both the touched-chunk set and the delta count
-    # (was a distinct().collect() plus a separate count() — r6)
-    probe = dp.groupBy("chunk").count().collect()
-    touched = [r["chunk"] for r in probe]
-    if not touched:
-        dp.unpersist()
-        return {"touched_chunks": [], "delta_states": 0}
-    n_delta = sum(int(r["count"]) for r in probe)
-    # store absent/empty (first refresh creates it) is decided by an
-    # EXPLICIT listing, never by catching AnalysisException — a schema
-    # mismatch in the union must surface as an error, not silently
-    # replace touched chunks with delta-only states
-    store_has_chunks = os.path.isdir(path) and any(
-        e.startswith("chunk=") for e in os.listdir(path)
-    )
-    if store_has_chunks:
-        old = spark.read.parquet(path).where(F.col("chunk").isin(touched))
-        combined = old.drop("chunk").unionByName(dp.drop("chunk"))
-    else:
-        combined = dp.drop("chunk")
-    merged = _with_chunk(cagg_merge(combined, by), chunk_windows)
-    # Spark (rightly) refuses an overwrite whose plan reads the target
-    # path; materialize the merged states first. This is bounded by the
-    # touched chunks, not the store.
-    merged = merged.localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("chunk")  # one part per rewritten chunk
-            .write.mode("overwrite").partitionBy("chunk").parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    dp.unpersist()
-    return {"touched_chunks": sorted(touched), "delta_states": n_delta}
-
-
-def cagg_read(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 class CaggSnapshotStore:
     """Snapshot-committed continuous-aggregate store (Iceberg-lite).
 
-    The plain chunk store (``cagg_materialize``/``cagg_refresh``) is
-    not crash-atomic: dynamic partition overwrite mutates chunk
-    directories in place, so a failure mid-refresh (or a replayed
-    streaming batch after a crash between data write and commit marker)
-    can double-merge a delta. This store removes that window the way a
-    table format does:
+    Rewriting chunk directories in place is not crash-atomic: a failure
+    mid-refresh (or a replayed streaming batch after a crash between
+    data write and commit marker) could double-merge a delta. This
+    store removes that window the way a table format does:
 
     - chunk data lives under ``<path>/gen=<G>/chunk=<C>/`` — generation
       directories are IMMUTABLE once referenced;
@@ -319,6 +237,26 @@ class CaggSnapshotStore:
 
         with open(p) as f:
             return json.load(f)
+
+    def _layout(self) -> dict:
+        return {"window_micros": int(self.window_micros),
+                "chunk_windows": int(self.chunk_windows), "by": self.by}
+
+    def _checked_manifest(self) -> dict:
+        """The manifest, once this object's layout is known to be the
+        store's. Windows are numbered per ``window_micros`` and chunks
+        per ``chunk_windows``, so a write through another layout would
+        miss the states it must merge or evict and commit duplicate
+        (key, window) states. A manifest that records no layout (a store
+        written before layouts were recorded) is accepted as it is."""
+        man = self.manifest()
+        have = man.get("layout")
+        if have is not None and have != self._layout():
+            raise ValueError(
+                f"cagg store {self.path} was materialized with layout "
+                f"{have}; this store object has {self._layout()}"
+            )
+        return man
 
     def _publish(self, man: dict, prev: dict | None = None) -> None:
         import json
@@ -631,6 +569,7 @@ class CaggSnapshotStore:
                 "gen": 0,
                 "chunks": {str(c): 0 for c in chunks},
                 "last_batch": None,
+                "layout": self._layout(),
             })
 
     def refresh(
@@ -645,7 +584,9 @@ class CaggSnapshotStore:
         # manifest is read UNDER the lease — a concurrent refresh that
         # committed while we waited is visible here, so its generation
         # cannot be lost
-        man = self.manifest()
+        man = self._checked_manifest()
+        if man["gen"] < 0:  # this refresh creates the store
+            man["layout"] = self._layout()
         # streaming batch ids are MONOTONIC per checkpoint, so the
         # committed-batch state is a single high-water mark (a list
         # would grow without bound over a long-lived stream and cost a
@@ -662,11 +603,14 @@ class CaggSnapshotStore:
                           self.window_micros),
             self.chunk_windows,
         ).persist()
-        touched = [r["chunk"] for r in dp.select("chunk").distinct().collect()]
+        # one probe job gives both the touched chunks and the delta's
+        # state count
+        probe = dp.groupBy("chunk").count().collect()
+        touched = [r["chunk"] for r in probe]
         if not touched:
             dp.unpersist()
             return {"touched_chunks": [], "delta_states": 0}
-        n_delta = dp.count()
+        n_delta = sum(int(r["count"]) for r in probe)
         have = [c for c in touched if str(c) in man["chunks"]]
         combined = dp.drop("chunk")
         if have:
@@ -710,7 +654,7 @@ class CaggSnapshotStore:
         if not raw_keys:
             return {"touched_chunks": [], "states_deleted": 0}
         with self._writer_lease():
-            man = self.manifest()
+            man = self._checked_manifest()
             store = self.read(spark)
             # normalize the batch against the STORE's key type: a mixed
             # int/str list must neither crash Python's cross-type sort
@@ -733,50 +677,18 @@ class CaggSnapshotStore:
             else:
                 ks = sorted(raw_keys,
                             key=lambda k: (k.__class__.__name__, str(k)))
-            if len(ks) <= 2048:
-                # literal IN keeps parquet row-group pruning; large
-                # batches switch to broadcast joins (Catalyst planning
-                # cost grows with the expression tree — same threshold
-                # as deletion.delete_docs and pq._exact_rerank)
-                def _doomed(df: DataFrame) -> DataFrame:
-                    return df.where(F.col(key_col).isin(ks))
-
-                def _kept(df: DataFrame) -> DataFrame:
-                    return df.where(~F.col(key_col).isin(ks))
-            else:
-                from pyspark.sql.types import StructField, StructType
-
-                from pyhctsa_spark.operators._local_df import (
-                    one_slice_df,
-                )
-
-                ks_df = one_slice_df(
-                    spark,
-                    [(k,) for k in ks],
-                    StructType([StructField("_del_key", kdt)]),
-                )
-
-                def _doomed(df: DataFrame) -> DataFrame:
-                    return df.join(
-                        F.broadcast(ks_df),
-                        F.col(key_col) == F.col("_del_key"), "left_semi",
-                    )
-
-                def _kept(df: DataFrame) -> DataFrame:
-                    return df.join(
-                        F.broadcast(ks_df),
-                        F.col(key_col) == F.col("_del_key"), "left_anti",
-                    )
-
-            doomed = _doomed(store)
-            touched = sorted(
-                int(r["chunk"])
-                for r in doomed.select("chunk").distinct().collect()
+            key = F.col(key_col)
+            probe = (
+                key_set_filter(spark, store, key, ks)
+                .groupBy("chunk").count().collect()
             )
-            if not touched:
+            if not probe:
                 return {"touched_chunks": [], "states_deleted": 0}
-            n_del = doomed.count()
-            kept = _kept(self.read(spark, chunks=touched))
+            touched = sorted(int(r["chunk"]) for r in probe)
+            n_del = sum(int(r["count"]) for r in probe)
+            kept = key_set_filter(
+                spark, self.read(spark, chunks=touched), key, ks, keep=True
+            )
             gen = man["gen"] + 1
             self._write_generation(kept, gen)
             written = {
@@ -809,7 +721,7 @@ class CaggSnapshotStore:
                 man.pop("prev_chunks", None)
                 self._publish(man)
             self._gc(man)
-            return {"touched_chunks": touched, "states_deleted": int(n_del)}
+            return {"touched_chunks": touched, "states_deleted": n_del}
 
     def expire(self, keep_from_widx: int) -> list[int]:
         """Retention on the snapshot store: drop every chunk whose LAST
@@ -821,7 +733,7 @@ class CaggSnapshotStore:
         retention.RetentionPolicy.cutoff_chunk)."""
         with self._writer_lease():
             cut = keep_from_widx // self.chunk_windows
-            man = self.manifest()
+            man = self._checked_manifest()
             doomed = sorted(int(c) for c in man["chunks"] if int(c) < cut)
             if not doomed:
                 return []
@@ -840,37 +752,35 @@ class CaggSnapshotStore:
 
 def cagg_realtime(
     spark: SparkSession,
-    path: str,
+    store: CaggSnapshotStore,
     raw_tail: DataFrame,
     materialized_until_widx: int,
-    on: str = "ts",
-    by: list[str] | None = None,
-    value_col: str = "value",
-    window_micros: int = 30 * 60 * 1_000_000,
-    chunk_windows: int = 48,
 ) -> DataFrame:
     """Real-time continuous-aggregate view: finalized results over the
-    UNION of the materialized store (windows <= the materialization
+    UNION of the committed ``store`` (windows <= the materialization
     watermark) and an on-the-fly partial aggregate of the raw tail
-    (windows beyond it). TimescaleDB's real-time aggregate semantics:
-    queries see current data without waiting for the next refresh, and
-    the expensive history comes from the store, never from raw.
+    (windows beyond it), in the store's layout. TimescaleDB's real-time
+    aggregate semantics: queries see current data without waiting for
+    the next refresh, and the expensive history comes from the store,
+    never from raw.
 
-    The store scan prunes to chunks at/below the watermark chunk; the
-    raw tail is filtered to windows strictly above the watermark before
-    aggregating, so the two sides are disjoint by construction and no
-    merge across the boundary is needed (a window is either fully
-    materialized or fully fresh — refresh cadence defines the split).
+    The store read lists only the chunks at/below the watermark chunk;
+    the raw tail is filtered to windows strictly above the watermark
+    before aggregating, so the two sides are disjoint by construction
+    and no merge across the boundary is needed (a window is either
+    fully materialized or fully fresh — refresh cadence defines the
+    split).
     """
-    by = list(by or ["user_id"])
-    wm_chunk = materialized_until_widx // chunk_windows
+    fresh = cagg_partial(
+        raw_tail, store.on, store.by, store.value_col, store.window_micros
+    ).where(F.col("widx") > materialized_until_widx)
+    wm_chunk = materialized_until_widx // store.chunk_windows
+    chunks = [c for c in store.manifest()["chunks"] if int(c) <= wm_chunk]
+    if not chunks:
+        return cagg_finalize(fresh, store.by)
     hist = (
-        spark.read.parquet(path)
-        .where(F.col("chunk") <= wm_chunk)
+        store.read(spark, chunks=chunks)
         .where(F.col("widx") <= materialized_until_widx)
         .drop("chunk")
     )
-    fresh = cagg_partial(
-        raw_tail, on, by, value_col, window_micros
-    ).where(F.col("widx") > materialized_until_widx)
-    return cagg_finalize(hist.unionByName(fresh), by)
+    return cagg_finalize(hist.unionByName(fresh), store.by)

@@ -14,8 +14,8 @@ Scale shape:
 1. PROBE: find touched (tier, chunk) partitions with a column-pruned
    scan of doc_id (+ the partition columns) — parquet row-group
    statistics skip files whose doc_id range cannot contain a doomed id.
-   The doomed set itself is broadcast as an isin literal (erasure
-   batches are thousands of ids, not millions; batch bigger requests).
+   The doomed set is a literal IN up to ``IN_LIST_MAX_KEYS`` ids and a
+   broadcast join above (``_local_df.key_set_filter``).
 2. AUDIT: one `_deletion_log` row per (doc, tier, chunk) is appended
    by ``tablefs.append_rows`` BEFORE any data is touched (same
    log-before-delete contract as retention.apply_retention) — a crash
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from pyhctsa_spark.operators import tablefs
+from pyhctsa_spark.operators._local_df import key_set_filter
 from pyhctsa_spark.operators.retention import _write_chunks
 
 _LOG_SCHEMA = pa.schema([
@@ -82,33 +83,8 @@ def delete_docs(
         return {"touched_chunks": [], "rows_deleted": 0,
                 "chunks_removed": []}
     store = spark.read.parquet(path)
-
-    # a literal IN keeps parquet predicate pushdown (row groups whose
-    # doc_id range misses every id are skipped), but Catalyst planning
-    # cost grows with the expression tree — large erasure batches
-    # switch to broadcast joins (same threshold rationale as
-    # pq._exact_rerank, where a 100k-id IN cost ~a minute of planning)
-    use_isin = len(ids) <= 2048
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    ids_df = one_slice_df(spark, [(i,) for i in ids], f"{id_col} string")
-
-    def _doomed(df):
-        if use_isin:
-            return df.where(F.col(id_col).isin(ids))
-        return df.join(
-            F.broadcast(ids_df.withColumnRenamed(id_col, "_del_id")),
-            F.col(id_col).cast("string") == F.col("_del_id"),
-        ).drop("_del_id")
-
-    def _kept(df):
-        return df.join(
-            F.broadcast(ids_df.withColumnRenamed(id_col, "_del_id")),
-            F.col(id_col).cast("string") == F.col("_del_id"),
-            "left_anti",
-        )
-
-    doomed = _doomed(store)
+    key = F.col(id_col).cast("string")
+    doomed = key_set_filter(spark, store, key, ids)
     # PROBE: per-(doc, tier, chunk) row counts — doubles as the audit
     # payload. Column-pruned: only id + partition columns are read.
     probe = (
@@ -134,7 +110,7 @@ def delete_docs(
         os.path.join(path, f"tier={t}", f"chunk={c}") for t, c in touched
     ]
     sub = spark.read.option("basePath", path).parquet(*paths)
-    kept = _kept(sub)
+    kept = key_set_filter(spark, sub, key, ids, keep=True)
     # chunks with survivors get rewritten; fully-dead ones are swept
     survivors = {
         (int(r["tier"]), int(r["chunk"]))
@@ -184,12 +160,6 @@ def verify_erased(
     if not _store_has_data(path):
         return 0
     store = spark.read.parquet(path)
-    if len(ids) <= 2048:
-        return store.where(F.col(id_col).isin(ids)).count()
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    ids_df = one_slice_df(spark, [(i,) for i in ids], "_del_id string")
-    return store.join(
-        F.broadcast(ids_df),
-        F.col(id_col).cast("string") == F.col("_del_id"),
+    return key_set_filter(
+        spark, store, F.col(id_col).cast("string"), ids
     ).count()

@@ -156,7 +156,9 @@ def test_erasure_job_cli_cagg_store(spark, tmp_path, capsys):
         (F.col("id") % 50).cast("double").alias("value"),
     )
     path = str(tmp_path / "cs")
-    CaggSnapshotStore(path).materialize(ev)
+    # a non-default layout: the job must open the store in the layout
+    # its manifest records
+    CaggSnapshotStore(path, chunk_windows=16).materialize(ev)
     rc = main(["--cagg-store", path, "--ids", "1"])
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
