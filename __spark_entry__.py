@@ -924,9 +924,10 @@ def _bloom_contamination_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _delete_docs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion propagation end-to-end (operators/deletion.py): the
     quantile tier rollup is materialized chunk-partitioned, every doc
-    with id % 7 == 3 is erased via touched-chunk-only dynamic
-    overwrite (+ audit log + fully-dead-chunk sweep + verify_erased
-    compliance check), and the surviving store is read back. The
+    with id % 7 == 3 is erased via a touched-chunk-only rewrite staged
+    beside the store and swapped in chunk by chunk (+ audit log +
+    removal of chunks left empty + verify_erased compliance check),
+    and the surviving store is read back. The
     oracle recomputes the rollup from raw events EXCLUDING the erased
     users — the store after erasure must be indistinguishable from a
     world where those docs never existed."""

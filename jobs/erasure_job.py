@@ -15,48 +15,165 @@ Usage (cluster; run per erasure batch):
 
 Tier-store semantics (operators/deletion.delete_docs): audit rows land
 in `_deletion_log` BEFORE any data is touched; only chunks containing
-the doomed ids are rewritten (dynamic partition overwrite, job-commit
-atomic); fully-dead chunks are swept; the run ends with a
-`verify_erased` compliance check and FAILS (non-zero exit) if any row
-survives. Re-running a partially-applied batch converges.
+the doomed ids are rewritten, staged beside the store and swapped in
+chunk by chunk (a crash leaves each chunk its original or its rewrite,
+and the next run repairs a half-swapped chunk before it reads); chunks
+left with no rows are removed; the run ends with a `verify_erased`
+compliance check and FAILS (non-zero exit) if any row survives.
+Re-running a partially-applied batch converges.
 
 Cagg-store semantics (CaggSnapshotStore.delete_keys): the erasure is a
 snapshot COMMIT; by default the time-travel history is purged so no
 retained snapshot still resolves the erased bytes (--keep-history
 preserves the read_at window for audit workflows instead).
 
-Prints one JSON line of lineage counters.
+Every target runs the same sequence from one table (``_TARGETS``):
+coerce the ids to the target's id type, erase, count the rows that
+still hold an erased id, and print one JSON line of lineage counters
+(exit 2 when any remain).
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
+import importlib
 import json
 import sys
 import time
+from typing import Callable, NamedTuple
+
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def _typed_ids(ids: list[str], type_name: str) -> list:
+    """``ids`` coerced to a target's id type, all of them the same way
+    (per-id best-effort coercion built mixed int/str batches that
+    crashed sorting and compared int literals against string columns):
+    a numeric column -> every id must parse as int (a clear error beats
+    a silent non-match); a string column -> ids stay strings verbatim."""
+    return [int(i) for i in ids] if type_name in _INT_TYPES else list(ids)
+
+
+def _count_ids(dfs, col: str, typed: list) -> int:
+    """Rows of ``dfs`` whose ``col`` is one of the ids ``typed``."""
+    from pyspark.sql import functions as F
+
+    keys = [str(i) for i in typed]
+    return int(sum(
+        df.where(F.col(col).cast("string").isin(keys)).count() for df in dfs
+    ))
+
+
+def _erase_tier_store(spark, path, ids, args) -> dict:
+    from pyhctsa_spark.operators.deletion import delete_docs, verify_erased
+
+    info = delete_docs(spark, path, ids, id_col=args.id_col)
+    left = verify_erased(spark, path, ids, id_col=args.id_col)
+    return {
+        "rows_deleted": info["rows_deleted"],
+        "touched_chunks": len(info["touched_chunks"]),
+        "chunks_removed": len(info["chunks_removed"]),
+        "rows_remaining": int(left),
+    }
+
+
+def _erase_cagg_store(spark, path, ids, args) -> dict:
+    from pyhctsa_spark.operators.cagg import CaggSnapshotStore
+
+    # open the store in the layout it was materialized with: writes
+    # through any other layout are refused
+    man = CaggSnapshotStore(path).manifest()
+    store = CaggSnapshotStore(path, **{"by": [args.key_col],
+                                       **man.get("layout", {})})
+    # the key column's type from one chunk: no listing of the store
+    one = store.read(spark, chunks=list(man["chunks"])[:1])
+    typed = _typed_ids(
+        ids, one.schema[args.key_col].dataType.simpleString())
+    info = store.delete_keys(
+        spark, typed, key_col=args.key_col,
+        purge_history=not args.keep_history,
+    )
+    return {
+        "states_deleted": info["states_deleted"],
+        "touched_chunks": len(info["touched_chunks"]),
+        "history_purged": not args.keep_history,
+        "states_remaining": _count_ids([store.read(spark)], args.key_col,
+                                       typed),
+    }
+
+
+def _erase_index(spark, path, ids, args, *, module, read_meta, compact,
+                 drop_col, tables, id_col, stats) -> dict:
+    """Erase ``ids`` from a persistent index through its compaction's
+    drop rewrite, with the ids typed by the index's recorded id type."""
+    mod = importlib.import_module(f"pyhctsa_spark.operators.{module}")
+    typed = _typed_ids(ids, getattr(mod, read_meta)(path)["id_type"])
+    drop = spark.createDataFrame(
+        [(i,) for i in typed],
+        f"{drop_col} {'long' if isinstance(typed[0], int) else 'string'}",
+    )
+    info = getattr(mod, compact)(spark, path, drop_ids=drop, id_col=drop_col)
+    left = _count_ids([spark.read.parquet(f"{path}/{t}") for t in tables],
+                      id_col, typed)
+    return {**{k: info[k] for k in stats}, "rows_remaining": left}
+
+
+class _Target(NamedTuple):
+    help: str
+    erase: Callable[..., dict]
+    remaining: str = "rows_remaining"
+
+
+_TARGETS = {
+    "store": _Target(
+        "(tier, chunk)-partitioned rollup store path", _erase_tier_store),
+    "cagg_store": _Target(
+        "CaggSnapshotStore path (mutually exclusive)", _erase_cagg_store,
+        "states_remaining"),
+    "minhash_index": _Target(
+        "dedup_index path: erase the ids' searchability "
+        "(compact_minhash_index drop rewrite)",
+        functools.partial(
+            _erase_index, module="dedup_index", read_meta="read_index_meta",
+            compact="compact_minhash_index", drop_col="doc_id",
+            tables=("sigs", "bands"), id_col="doc_id",
+            stats=("sigs", "bands"))),
+    "search_index": _Target(
+        "search_index path: erase the ids from full-text retrieval "
+        "(compact_search_index drop rewrite; df/stats recomputed from "
+        "surviving postings)",
+        functools.partial(
+            _erase_index, module="search_index", read_meta="read_index_meta",
+            compact="compact_search_index", drop_col="doc_id",
+            tables=("postings",), id_col="doc_id", stats=("postings",))),
+    "ivf_index": _Target(
+        "IVF vector-index path: erase the ids from ANN retrieval "
+        "(compact_ivf_index drop rewrite of the inverted lists; "
+        "centroids untouched)",
+        functools.partial(
+            _erase_index, module="similarity", read_meta="read_ivf_meta",
+            compact="compact_ivf_index", drop_col="vec_id",
+            tables=("lists",), id_col="nid", stats=("lists",))),
+    "ivfpq_index": _Target(
+        "IVFPQ code-index path: erase the ids' PQ codes from ANN "
+        "retrieval (compact_ivfpq_index drop rewrite; centroids/codebooks "
+        "untouched)",
+        functools.partial(
+            _erase_index, module="pq", read_meta="read_pq_meta",
+            compact="compact_ivfpq_index", drop_col="vec_id",
+            tables=("lists",), id_col="nid", stats=("lists",))),
+}
+
+
+def _flag(target: str) -> str:
+    return "--" + target.replace("_", "-")
 
 
 def parse_args(argv):
     p = argparse.ArgumentParser()
-    p.add_argument("--store", default=None,
-                   help="(tier, chunk)-partitioned rollup store path")
-    p.add_argument("--cagg-store", default=None,
-                   help="CaggSnapshotStore path (mutually exclusive)")
-    p.add_argument("--minhash-index", default=None,
-                   help="dedup_index path: erase the ids' searchability "
-                        "(compact_minhash_index drop rewrite)")
-    p.add_argument("--search-index", default=None,
-                   help="search_index path: erase the ids from full-text "
-                        "retrieval (compact_search_index drop rewrite; "
-                        "df/stats recomputed from surviving postings)")
-    p.add_argument("--ivf-index", default=None,
-                   help="IVF vector-index path: erase the ids from ANN "
-                        "retrieval (compact_ivf_index drop rewrite of "
-                        "the inverted lists; centroids untouched)")
-    p.add_argument("--ivfpq-index", default=None,
-                   help="IVFPQ code-index path: erase the ids' PQ codes "
-                        "from ANN retrieval (compact_ivfpq_index drop "
-                        "rewrite; centroids/codebooks untouched)")
+    for target, t in _TARGETS.items():
+        p.add_argument(_flag(target), default=None, help=t.help)
     p.add_argument("--ids", default=None, help="comma-separated ids")
     p.add_argument("--ids-file", default=None, help="one id per line")
     p.add_argument("--id-col", default="doc_id")
@@ -66,18 +183,9 @@ def parse_args(argv):
                    help="cagg store: keep time-travel snapshots (audit "
                         "mode) instead of purging them")
     args = p.parse_args(argv)
-    n_targets = sum(
-        1
-        for t in (
-            args.store, args.cagg_store, args.minhash_index,
-            args.search_index, args.ivf_index, args.ivfpq_index,
-        )
-        if t
-    )
-    if n_targets != 1:
-        p.error("exactly one of --store / --cagg-store / --minhash-index "
-                "/ --search-index / --ivf-index / --ivfpq-index is "
-                "required")
+    if sum(1 for target in _TARGETS if getattr(args, target)) != 1:
+        p.error("exactly one of " + " / ".join(map(_flag, _TARGETS))
+                + " is required")
     if bool(args.ids) == bool(args.ids_file):
         p.error("exactly one of --ids / --ids-file is required")
     return args
@@ -94,207 +202,12 @@ def main(argv=None) -> int:
 
     spark = SparkSession.builder.appName("pyhctsa-erasure").getOrCreate()
     t0 = time.perf_counter()
-    if args.store:
-        from pyhctsa_spark.operators.deletion import delete_docs, verify_erased
-
-        info = delete_docs(spark, args.store, ids, id_col=args.id_col)
-        left = verify_erased(spark, args.store, ids, id_col=args.id_col)
-        out = {
-            "store": args.store,
-            "n_ids": len(ids),
-            "rows_deleted": info["rows_deleted"],
-            "touched_chunks": len(info["touched_chunks"]),
-            "chunks_removed": len(info["chunks_removed"]),
-            "rows_remaining": int(left),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print(json.dumps(out))
-        return 0 if left == 0 else 2
-    if args.minhash_index:
-        from pyspark.sql import functions as F
-
-        from pyhctsa_spark.operators.dedup_index import (
-            compact_minhash_index,
-            read_index_meta,
-        )
-
-        # ids coerced to the index's recorded id type (same rationale
-        # as the cagg key coercion below)
-        if read_index_meta(args.minhash_index)["id_type"] in (
-            "tinyint", "smallint", "int", "bigint"
-        ):
-            typed_ids: list = [int(i) for i in ids]
-        else:
-            typed_ids = list(ids)
-        drop = spark.createDataFrame(
-            [(i,) for i in typed_ids],
-            f"doc_id {'long' if isinstance(typed_ids[0], int) else 'string'}",
-        )
-        stats = compact_minhash_index(
-            spark, args.minhash_index, drop_ids=drop, id_col="doc_id"
-        )
-        left = sum(
-            spark.read.parquet(f"{args.minhash_index}/{t}")
-            .where(F.col("doc_id").cast("string").isin(
-                [str(i) for i in typed_ids]))
-            .count()
-            for t in ("sigs", "bands")
-        )
-        out = {
-            "minhash_index": args.minhash_index,
-            "n_ids": len(ids),
-            "sigs": stats["sigs"], "bands": stats["bands"],
-            "rows_remaining": int(left),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print(json.dumps(out))
-        return 0 if left == 0 else 2
-    if args.search_index:
-        from pyspark.sql import functions as F
-
-        from pyhctsa_spark.operators.search_index import (
-            compact_search_index,
-            read_index_meta,
-        )
-
-        if read_index_meta(args.search_index)["id_type"] in (
-            "tinyint", "smallint", "int", "bigint"
-        ):
-            typed_ids = [int(i) for i in ids]
-        else:
-            typed_ids = list(ids)
-        drop = spark.createDataFrame(
-            [(i,) for i in typed_ids],
-            f"doc_id {'long' if isinstance(typed_ids[0], int) else 'string'}",
-        )
-        stats = compact_search_index(
-            spark, args.search_index, drop_ids=drop, id_col="doc_id"
-        )
-        left = (
-            spark.read.parquet(f"{args.search_index}/postings")
-            .where(F.col("doc_id").cast("string").isin(
-                [str(i) for i in typed_ids]))
-            .count()
-        )
-        out = {
-            "search_index": args.search_index,
-            "n_ids": len(ids),
-            "postings": stats["postings"],
-            "rows_remaining": int(left),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print(json.dumps(out))
-        return 0 if left == 0 else 2
-    if args.ivf_index:
-        from pyspark.sql import functions as F
-
-        from pyhctsa_spark.operators.similarity import (
-            compact_ivf_index,
-            read_ivf_meta,
-        )
-
-        if read_ivf_meta(args.ivf_index)["id_type"] in (
-            "tinyint", "smallint", "int", "bigint"
-        ):
-            typed_ids = [int(i) for i in ids]
-        else:
-            typed_ids = list(ids)
-        drop = spark.createDataFrame(
-            [(i,) for i in typed_ids],
-            f"vec_id {'long' if isinstance(typed_ids[0], int) else 'string'}",
-        )
-        stats = compact_ivf_index(
-            spark, args.ivf_index, drop_ids=drop, id_col="vec_id"
-        )
-        left = (
-            spark.read.parquet(f"{args.ivf_index}/lists")
-            .where(F.col("nid").cast("string").isin(
-                [str(i) for i in typed_ids]))
-            .count()
-        )
-        out = {
-            "ivf_index": args.ivf_index,
-            "n_ids": len(ids),
-            "lists": stats["lists"],
-            "rows_remaining": int(left),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print(json.dumps(out))
-        return 0 if left == 0 else 2
-    if args.ivfpq_index:
-        from pyspark.sql import functions as F
-
-        from pyhctsa_spark.operators.pq import (
-            compact_ivfpq_index,
-            read_pq_meta,
-        )
-
-        if read_pq_meta(args.ivfpq_index)["id_type"] in (
-            "tinyint", "smallint", "int", "bigint"
-        ):
-            typed_ids = [int(i) for i in ids]
-        else:
-            typed_ids = list(ids)
-        drop = spark.createDataFrame(
-            [(i,) for i in typed_ids],
-            f"vec_id {'long' if isinstance(typed_ids[0], int) else 'string'}",
-        )
-        stats = compact_ivfpq_index(
-            spark, args.ivfpq_index, drop_ids=drop, id_col="vec_id"
-        )
-        left = (
-            spark.read.parquet(f"{args.ivfpq_index}/lists")
-            .where(F.col("nid").cast("string").isin(
-                [str(i) for i in typed_ids]))
-            .count()
-        )
-        out = {
-            "ivfpq_index": args.ivfpq_index,
-            "n_ids": len(ids),
-            "lists": stats["lists"],
-            "rows_remaining": int(left),
-            "wall_sec": round(time.perf_counter() - t0, 3),
-        }
-        print(json.dumps(out))
-        return 0 if left == 0 else 2
-    from pyhctsa_spark.operators.cagg import CaggSnapshotStore
-
-    # open the store in the layout it was materialized with: writes
-    # through any other layout are refused
-    layout = CaggSnapshotStore(args.cagg_store).manifest().get("layout", {})
-    store = CaggSnapshotStore(args.cagg_store,
-                              **{"by": [args.key_col], **layout})
-    # coerce ALL ids to the STORE's key-column type (per-id best-effort
-    # coercion built mixed int/str batches that crashed sorting and
-    # compared int literals against string columns): numeric key column
-    # -> every id must parse as int (a clear error beats a silent
-    # non-match); string key column -> ids stay strings verbatim
-    kdt = store.read(spark).schema[args.key_col].dataType.simpleString()
-    if kdt in ("tinyint", "smallint", "int", "bigint"):
-        typed: list = [int(i) for i in ids]
-    else:
-        typed = list(ids)
-    info = store.delete_keys(
-        spark, typed, key_col=args.key_col,
-        purge_history=not args.keep_history,
-    )
-    from pyspark.sql import functions as F
-
-    left = (
-        store.read(spark)
-        .where(F.col(args.key_col).cast("string").isin(
-            [str(k) for k in typed]))
-        .count()
-    )
-    out = {
-        "cagg_store": args.cagg_store,
-        "n_ids": len(ids),
-        "states_deleted": info["states_deleted"],
-        "touched_chunks": len(info["touched_chunks"]),
-        "history_purged": not args.keep_history,
-        "states_remaining": int(left),
-        "wall_sec": round(time.perf_counter() - t0, 3),
-    }
+    target = next(target for target in _TARGETS if getattr(args, target))
+    path = getattr(args, target)
+    fields = _TARGETS[target].erase(spark, path, ids, args)
+    left = fields[_TARGETS[target].remaining]
+    out = {target: path, "n_ids": len(ids), **fields,
+           "wall_sec": round(time.perf_counter() - t0, 3)}
     print(json.dumps(out))
     return 0 if left == 0 else 2
 

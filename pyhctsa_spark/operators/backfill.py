@@ -6,7 +6,8 @@ Composition of the two store-surgery primitives the engine already
 trusts:
 
 1. ERASE the stale rows of the target docs (operators/deletion.
-   delete_docs — audit-logged, touched-chunk-only dynamic overwrite);
+   delete_docs — audit-logged, touched-chunk-only stage-and-swap
+   rewrite, each chunk its original or its rewrite after a crash);
 2. RECOMPUTE their rollup from the corrected sequences (the normal
    shuffle-free tier pass over just those docs) and APPEND into the
    same (tier, chunk) partition layout — fresh part files land in the

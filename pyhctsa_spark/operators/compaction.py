@@ -15,26 +15,21 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
   more than ``target_files`` parts AND at least one part below
   ``small_bytes`` (few-but-large parts are healthy and left alone).
   No parquet file is opened to decide.
-- One Spark write rewrites every candidate: one scan of all candidate
-  chunks (``basePath``, so ``tier``/``chunk`` come back as partition
-  columns) through the chunk store's one write shape,
-  ``retention._write_chunks``: a shuffle on (tier, chunk) — plus
-  ``pmod(xxhash64(doc_id), target_files)`` when ``target_files > 1`` —
-  so each chunk's rows land in at most ``target_files`` tasks, a local
-  sort on (tier, chunk, doc_id, window_idx) for run-clustered scans
-  downstream, and one partitioned write into the HIDDEN
-  ``<store>/_compact_stage/`` (underscore-prefixed, so Spark partition
-  discovery and _chunk_dirs never see it). The number of Spark jobs
-  does not grow with the candidate count, so a backlog of many small
-  chunks costs one job's fixed overhead, not one per chunk.
-  ``write_tier_chunked`` writes the same shape, so a freshly written
-  store has no candidates and compacting it runs no Spark job.
-- The driver then moves each staged chunk in through the per-chunk
-  ``tablefs.replace_dir`` swap. A crash during the staged write or
-  before a chunk's swap leaves that chunk's original intact; after it,
-  the compacted version; in the brief two-rename window,
-  ``tablefs.recover`` restores the original on the next invocation,
-  and ``_recover_store`` drops a leftover stage.
+- One Spark write rewrites every candidate, through the chunk store's
+  one rewrite that ``deletion.delete_docs`` also runs. STAGE
+  (``retention._stage_chunks``): one scan of all candidate chunks
+  (``basePath``, so ``tier``/``chunk`` come back as partition columns)
+  in the store's write shape, ``retention._write_chunks`` — a shuffle
+  on (tier, chunk), plus ``pmod(xxhash64(doc_id), target_files)`` when
+  ``target_files > 1``, and a local sort on (tier, chunk, doc_id,
+  window_idx) — into the hidden ``<store>/_compact_stage/``. The Spark
+  job count does not grow with the candidate count; a fresh
+  ``write_tier_chunked`` store has no candidates and runs no job.
+- SWAP (``retention._swap_chunks``): the driver moves each staged chunk
+  in with ``tablefs.replace_dir``. A crash leaves each chunk its
+  original or its compacted version; one caught between the two
+  renames is restored, and a leftover stage dropped, by
+  ``_recover_store``, which the next invocation runs first.
 - Every rewrite appends a lineage row (tier, chunk, files/bytes before
   and after, rows, wall) to ``_compaction_log`` under the store, the
   same audit contract as ``_retention_log``. ``rows`` is summed from
@@ -48,7 +43,6 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import pyarrow as pa
@@ -60,7 +54,9 @@ from pyhctsa_spark.operators.retention import (
     _chunk_dirs,
     _parquet_parts,
     _part_stats,
-    _write_chunks,
+    _recover_store,
+    _stage_chunks,
+    _swap_chunks,
 )
 
 _LOG_SCHEMA = pa.schema([
@@ -69,24 +65,6 @@ _LOG_SCHEMA = pa.schema([
     ("files_after", pa.int64()), ("bytes_after", pa.int64()),
     ("rows", pa.int64()), ("compacted_at", pa.float64()),
 ])
-_STAGE = "_compact_stage"
-
-
-def _recover_store(path: str) -> None:
-    """Drop a leftover stage and repair every tier directory's swap
-    leftovers. The sweep is needed because a chunk that crashed between
-    the two renames has NO live ``chunk=`` directory, so candidate
-    listing alone would never find it. A staged chunk not yet swapped
-    is discarded: its live original is still intact."""
-    if not os.path.isdir(path):
-        return
-    if os.path.exists(os.path.join(path, _STAGE)):
-        shutil.rmtree(os.path.join(path, _STAGE))
-    for tdir in os.listdir(path):
-        if tdir.startswith("tier="):
-            tablefs.recover(os.path.join(path, tdir))
-
-
 def compaction_candidates(
     path: str, target_files: int = 1, small_bytes: int = 8 * 1024 * 1024
 ) -> list[tuple[int, int, str]]:
@@ -126,20 +104,17 @@ def compact_chunks(
     cands = compaction_candidates(path, target_files, small_bytes)
     if not cands:
         return []
-    stage = os.path.join(path, _STAGE)
-    # live chunk dir -> where the one write stages its rewrite
-    staged = {
-        d: os.path.join(stage, f"tier={t}", f"chunk={c}") for t, c, d in cands
-    }
     keys = ((F.pmod(F.xxhash64("doc_id"), F.lit(target_files)),)
             if target_files > 1 else ())
-    _write_chunks(spark.read.option("basePath", path).parquet(*staged),
-                  stage, keys=keys, sort_cols=sort_cols)
+    stage = _stage_chunks(
+        spark.read.option("basePath", path).parquet(*(d for *_, d in cands)),
+        path, keys=keys, sort_cols=sort_cols)
     now = time.time()
     rows = []
     for tier, chunk, d in cands:
+        staged = os.path.join(stage, f"tier={tier}", f"chunk={chunk}")
         files_before, bytes_before = _part_stats(d)
-        files_after, bytes_after = _part_stats(staged[d])
+        files_after, bytes_after = _part_stats(staged)
         rows.append({
             "tier": tier,
             "chunk": chunk,
@@ -148,15 +123,13 @@ def compact_chunks(
             "files_after": files_after,
             "bytes_after": bytes_after,
             "rows": sum(
-                pq.read_metadata(f).num_rows for f in _parquet_parts(staged[d])
+                pq.read_metadata(f).num_rows for f in _parquet_parts(staged)
             ),
             "compacted_at": now,
         })
     tablefs.append_rows(os.path.join(path, "_compaction_log"), rows,
                         _LOG_SCHEMA)
-    for d, src in staged.items():
-        tablefs.replace_dir(src, d)
-    shutil.rmtree(stage)
+    _swap_chunks(path, [(t, c) for t, c, _ in cands])
     return rows
 
 

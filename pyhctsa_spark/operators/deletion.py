@@ -21,15 +21,16 @@ Scale shape:
    log-before-delete contract as retention.apply_retention) — a crash
    mid-run can leave a logged but incomplete erasure, never an unlogged
    one; re-running converges.
-3. REWRITE: the touched partitions are read back (basePath listing of
-   just those directories), filtered, and written in the chunk store's
-   one write shape (``retention._write_chunks``: one sorted file per
-   chunk) with DYNAMIC partition overwrite — untouched chunks are never
-   opened, and a crash mid-job leaves every original partition intact
-   (job-commit atomicity of dynamic partition overwrite).
-4. SWEEP: a chunk whose every row belonged to doomed docs produces no
-   output rows, so dynamic overwrite cannot replace it — those now
-   fully-dead directories are removed explicitly afterwards.
+3. REWRITE through the chunk store's one rewrite, compaction's: STAGE
+   (``retention._stage_chunks``) writes the touched chunks' surviving
+   rows, read through the probe's own relation (partition pruning, no
+   second listing or schema job), into the hidden ``_compact_stage/``;
+   SWAP (``retention._swap_chunks``) moves each in with
+   ``tablefs.replace_dir`` and removes a touched chunk left with no
+   rows. Untouched chunks are never opened. A crash leaves each chunk
+   its original or its rewrite; every run first repairs one caught
+   between renames (``retention._recover_store``), so a re-run
+   converges.
 
 The whole operation touches O(|touched chunks|) data regardless of
 store size.
@@ -38,7 +39,6 @@ store size.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import pyarrow as pa
@@ -47,7 +47,11 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators._local_df import key_set_filter
-from pyhctsa_spark.operators.retention import _write_chunks
+from pyhctsa_spark.operators.retention import (
+    _recover_store,
+    _stage_chunks,
+    _swap_chunks,
+)
 
 _LOG_SCHEMA = pa.schema([
     ("doc_id", pa.string()), ("tier", pa.int32()), ("chunk", pa.int64()),
@@ -62,7 +66,7 @@ def _store_has_data(path: str) -> bool:
     UNABLE_TO_INFER_SCHEMA — the callers must treat that state as
     'zero rows', not crash."""
     for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith("_")]
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         if any(f.endswith(".parquet") for f in files):
             return True
     return False
@@ -79,9 +83,12 @@ def delete_docs(
     chunks_removed}. Idempotent: re-running with the same ids is a
     no-op (including on a store a prior total erasure fully emptied)."""
     ids = sorted({str(d) for d in doc_ids})
-    if not ids or not _store_has_data(path):
-        return {"touched_chunks": [], "rows_deleted": 0,
-                "chunks_removed": []}
+    nothing = {"touched_chunks": [], "rows_deleted": 0, "chunks_removed": []}
+    if not ids:
+        return nothing
+    _recover_store(path)
+    if not _store_has_data(path):
+        return nothing
     store = spark.read.parquet(path)
     key = F.col(id_col).cast("string")
     doomed = key_set_filter(spark, store, key, ids)
@@ -93,8 +100,7 @@ def delete_docs(
         .collect()
     )
     if not probe:
-        return {"touched_chunks": [], "rows_deleted": 0,
-                "chunks_removed": []}
+        return nothing
     now = time.time()
     log_rows = [
         {"doc_id": str(r[id_col]), "tier": int(r["tier"]),
@@ -106,32 +112,14 @@ def delete_docs(
     tablefs.append_rows(os.path.join(path, "_deletion_log"), log_rows,
                         _LOG_SCHEMA)
     touched = sorted({(int(r["tier"]), int(r["chunk"])) for r in probe})
-    paths = [
-        os.path.join(path, f"tier={t}", f"chunk={c}") for t, c in touched
-    ]
-    sub = spark.read.option("basePath", path).parquet(*paths)
-    kept = key_set_filter(spark, sub, key, ids, keep=True)
-    # chunks with survivors get rewritten; fully-dead ones are swept
-    survivors = {
-        (int(r["tier"]), int(r["chunk"]))
-        for r in kept.select("tier", "chunk").distinct().collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        if survivors:
-            _write_chunks(kept, path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    removed = []
-    for t, c in touched:
-        if (t, c) not in survivors:
-            d = os.path.join(path, f"tier={t}", f"chunk={c}")
-            shutil.rmtree(d, ignore_errors=True)
-            removed.append((t, c))
+    in_touched = F.format_string("%d/%d", "tier", "chunk").isin(
+        [f"{t}/{c}" for t, c in touched])
+    _stage_chunks(
+        key_set_filter(spark, store.where(in_touched), key, ids, keep=True),
+        path)
+    removed = _swap_chunks(path, touched)
     # same-session readers hold a cached file listing for this path;
-    # the rewrite replaced files under them
+    # the swap replaced directories under them
     spark.catalog.refreshByPath(path)
     return {
         "touched_chunks": touched,

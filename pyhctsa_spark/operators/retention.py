@@ -113,6 +113,59 @@ def _write_chunks(
     )
 
 
+_STAGE = "_compact_stage"
+
+
+def _recover_store(path: str) -> None:
+    """Drop a leftover stage (its live originals are intact) and repair
+    every tier directory's swap leftovers: a chunk that crashed between
+    the two renames has NO live ``chunk=`` directory, so no listing or
+    read of the store would find it. Compaction and deletion run this
+    before they list or read the store."""
+    if not os.path.isdir(path):
+        return
+    if os.path.exists(os.path.join(path, _STAGE)):
+        shutil.rmtree(os.path.join(path, _STAGE))
+    for tdir in os.listdir(path):
+        if tdir.startswith("tier="):
+            tablefs.recover(os.path.join(path, tdir))
+
+
+def _stage_chunks(
+    df: DataFrame, path: str, keys: tuple = (),
+    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
+) -> str:
+    """Stage step of the chunk store's one rewrite: write the new rows
+    of the chunks being rewritten in the store's write shape into the
+    hidden ``<path>/_compact_stage/`` (no ``=`` in the name, so Spark
+    and ``_chunk_dirs`` never see it). Returns the stage directory."""
+    stage = os.path.join(path, _STAGE)
+    _write_chunks(df, stage, keys=keys, sort_cols=sort_cols)
+    return stage
+
+
+def _swap_chunks(path: str, chunks: list[tuple[int, int]]) -> list:
+    """Swap step: move each staged chunk of ``chunks`` in over its live
+    directory with ``tablefs.replace_dir``, remove each one that staged
+    no rows, then drop the stage; returns the removed (tier, chunk)s.
+    A crash leaves each chunk its original or its rewrite (a chunk that
+    staged no rows may be part removed: all its rows were dropped
+    rows); ``_recover_store`` puts back an original caught between
+    the two renames."""
+    stage = os.path.join(path, _STAGE)
+    removed = []
+    for t, c in chunks:
+        part = os.path.join(f"tier={t}", f"chunk={c}")
+        live = os.path.join(path, part)
+        if os.path.isdir(os.path.join(stage, part)):
+            tablefs.replace_dir(os.path.join(stage, part), live)
+        else:
+            shutil.rmtree(live)
+            removed.append((t, c))
+    shutil.rmtree(stage)
+    return removed
+
+
 def write_tier_chunked(
     tier_df: DataFrame, path: str, chunk_windows: int = 64,
     mode: str = "overwrite",

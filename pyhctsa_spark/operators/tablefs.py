@@ -4,22 +4,27 @@ the four persistent indexes, the rollup checkpoint, the snapshot
 continuous aggregate and the streaming batch markers share.
 
 Directory swap. A table directory ``d`` is rewritten into a sibling and
-moved in with two renames: ``d`` -> ``_compact_old.<base>``, the new
+moved in with two renames: ``d`` -> ``.compact_old.<base>``, the new
 directory -> ``d``, then the old copy is deleted. The hidden sibling
-names (``swap_names``) start with an underscore, so neither Spark
-partition discovery nor retention's ``chunk=`` listing ever reads a
-half-swapped directory as live data. ``_compact_tmp.<base>`` is where
-writers stage the new copy next to ``d``. A crash leaves one of three
-states, and ``recover`` repairs each of them the same way everywhere:
+names (``swap_names``) start with a dot, so neither Spark partition
+discovery nor retention's ``chunk=`` listing ever reads a half-swapped
+directory as live data. (Spark hides a name that starts with ``_``
+only when it holds no ``=``: ``_compact_old.chunk=3`` would be parsed
+as a partition directory and break every read of the store.)
+``.compact_tmp.<base>`` is where writers stage the new copy next to
+``d``. A crash leaves one of three states, and ``recover`` repairs each
+of them the same way everywhere:
 
-- ``_compact_tmp.<base>`` exists (crash before the swap): drop it; the
+- ``.compact_tmp.<base>`` exists (crash before the swap): drop it; the
   live table is intact.
-- ``_compact_old.<base>`` exists and ``d`` does not (crash between the
+- ``.compact_old.<base>`` exists and ``d`` does not (crash between the
   two renames): rename the old copy back to ``d``.
 - both exist (crash before the old copy was deleted): drop the old copy.
 
-``recover`` sweeps a whole parent directory for these names, so a
-caller never lists which of its tables can be mid-swap.
+``recover`` sweeps a whole parent directory for these names, and also
+for the underscore names (``_compact_tmp.``, ``_compact_old.``) that
+the swap used before, so a caller never lists which of its tables can
+be mid-swap.
 
 File publish. ``publish`` writes ``path + ".tmp"`` and moves it over
 ``path`` with ``os.replace``: a reader sees the previous file or the
@@ -50,8 +55,12 @@ from contextlib import contextmanager
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-_TMP = "_compact_tmp."
-_OLD = "_compact_old."
+_TMP = ".compact_tmp."
+_OLD = ".compact_old."
+# with the underscore prefixes of the earlier naming (same length), which
+# a crash under it can have left behind
+_TMPS = (_TMP, "_compact_tmp.")
+_OLDS = (_OLD, "_compact_old.")
 
 
 def swap_names(d: str) -> tuple[str, str]:
@@ -80,9 +89,9 @@ def recover(parent: str) -> None:
         return
     for e in os.listdir(parent):
         p = os.path.join(parent, e)
-        if e.startswith(_TMP):
+        if e.startswith(_TMPS):
             shutil.rmtree(p)
-        elif e.startswith(_OLD):
+        elif e.startswith(_OLDS):
             live = os.path.join(parent, e[len(_OLD):])
             if os.path.exists(live):
                 shutil.rmtree(p)

@@ -161,7 +161,7 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
     shutil.copytree(d0, tmp0)       # crash before swap
     shutil.copytree(d1, old1)       # crash before cleanup
     os.rename(d2, old2)             # crash BETWEEN the renames
-    # the store still reads (hidden _ dirs are invisible to Spark) and
+    # the store still reads (hidden . dirs are invisible to Spark) and
     # retention's _chunk_dirs does not choke on the leftovers
     from pyhctsa_spark.operators.retention import _chunk_dirs
 
@@ -178,7 +178,7 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
     for tdir in os.listdir(path):
         if tdir.startswith("tier="):
             assert not any(
-                e.startswith("_compact")
+                e.startswith((".compact", "_compact"))
                 for e in os.listdir(os.path.join(path, tdir))
             )
     # crash states of the staging directory: the injected crash hits
@@ -225,7 +225,7 @@ def test_compaction_crash_recovery_all_windows(spark, tmp_path, monkeypatch):
         for tdir in os.listdir(p):
             if tdir.startswith("tier="):
                 assert not any(
-                    e.startswith("_compact")
+                    e.startswith((".compact", "_compact"))
                     for e in os.listdir(os.path.join(p, tdir))
                 )
 

@@ -1,10 +1,12 @@
 """Deletion propagation: exactness, touched-chunk-only rewrites, audit
-trail, dead-chunk sweep, idempotence."""
+trail, dead-chunk sweep, idempotence, crash recovery of the staged
+rewrite and its Spark job count."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from test_compaction import _jobs_run
 
 from pyhctsa_spark.operators.deletion import (
     delete_docs,
@@ -120,6 +122,135 @@ def test_fully_dead_chunk_is_swept(spark, tmp_path):
     )
 
 
+def _sorted_rows(df):
+    return df.orderBy("doc_id", "tier", "window_idx").drop("hist_bin").collect()
+
+
+def _first_docs(spark, store, n):
+    return [r["doc_id"] for r in
+            spark.read.parquet(store).select("doc_id").distinct()
+            .orderBy("doc_id").limit(n).collect()]
+
+
+def _no_leftovers(store):
+    """No stage and no tablefs swap sibling anywhere in the store."""
+    assert not os.path.exists(os.path.join(store, "_compact_stage"))
+    for t in os.listdir(store):
+        if t.startswith("tier="):
+            assert not any(e.startswith((".compact", "_compact"))
+                           for e in os.listdir(os.path.join(store, t)))
+
+
+@pytest.mark.parametrize("crash", ["after_stage", "move_0", "move_2"])
+def test_delete_crash_recovery_converges(spark, store, monkeypatch, crash):
+    """A crash after the staged write (before any swap) or at the k-th
+    staged move (k = 0: no chunk swapped yet, the k-th chunk caught
+    between its two renames; k = 2: two chunks swapped): the store
+    still reads, and the next delete_docs converges to the original
+    store filtered by the doomed ids, with no leftover and every doomed
+    id in the audit log."""
+    import pyhctsa_spark.operators.deletion as deletion
+
+    doomed = _first_docs(spark, store, 3)
+    want = _sorted_rows(
+        spark.read.parquet(store).where(~F.col("doc_id").isin(doomed)))
+    if crash == "after_stage":
+        def crashing_swap(*args):
+            raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(deletion, "_swap_chunks", crashing_swap)
+    else:
+        k = int(crash[-1])
+        real_rename = os.rename
+        moved = []
+
+        def crashing_rename(src, dst):
+            if "_compact_stage" in str(src):
+                if len(moved) == k:
+                    raise RuntimeError("injected crash")
+                moved.append(src)
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        delete_docs(spark, store, doomed)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(store, "_compact_stage"))
+    spark.catalog.refreshByPath(store)
+    # the half-done rewrite never breaks a read of the store
+    spark.read.parquet(store).count()
+    info = delete_docs(spark, store, doomed)
+    assert info["rows_deleted"] > 0
+    assert verify_erased(spark, store, doomed) == 0
+    assert _sorted_rows(spark.read.parquet(store)) == want
+    _no_leftovers(store)
+    logged = {r["doc_id"] for r in deletion_log(spark, store).collect()}
+    assert logged == set(doomed)
+
+
+def test_delete_after_compaction_crash_between_renames(spark, tmp_path,
+                                                       monkeypatch):
+    """A compaction that crashed between the two renames of a chunk
+    leaves its rows only in the swap sibling. delete_docs repairs the
+    store before its probe, so the erasure reaches those rows and a
+    later compaction cannot bring them back."""
+    from pyhctsa_spark.operators.compaction import compact_chunks
+    from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
+    from pyhctsa_spark.sources.synthetic import sequences_df
+
+    tiers = rollup_quantile_tiers(sequences_df(spark, 12), window=8,
+                                  group=4, n_tiers=2)
+    d = str(tmp_path / "store")
+    # two appends: every chunk holding docs of both halves has two parts
+    for half in (0, 1):
+        write_tier_chunked(
+            tiers.where(F.abs(F.hash("doc_id")) % 2 == half), d,
+            chunk_windows=16, mode="append")
+    doomed = _first_docs(spark, d, 3)
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if "_compact_stage" in str(src):
+            raise RuntimeError("injected crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_chunks(spark, d)
+    monkeypatch.undo()
+    # the first candidate's live directory is gone, its rows sit in the
+    # old sibling only
+    assert any(e.startswith((".compact_old.", "_compact_old."))
+               for e in os.listdir(os.path.join(d, "tier=0")))
+    delete_docs(spark, d, doomed)
+    assert verify_erased(spark, d, doomed) == 0
+    compact_chunks(spark, d)
+    assert verify_erased(spark, d, doomed) == 0
+    _no_leftovers(d)
+
+
+def test_delete_job_count_does_not_grow_with_touched_chunks(spark, store,
+                                                            tmp_path):
+    """One delete_docs runs the same Spark jobs for 10 and for all 154
+    touched chunks of the fixture store: the store read (listing and
+    schema), the probe and the staged write, 6 in all. The touched
+    chunks are re-read through the probe's relation, so their listing
+    and schema cost no job, and no job collects the surviving chunks."""
+    import shutil
+
+    all_ids = _first_docs(spark, store, 1000)
+    jobs, touched = [], []
+    for n in (1, len(all_ids)):
+        d = str(tmp_path / f"copy{n}")
+        shutil.copytree(store, d)
+        info, n_jobs = _jobs_run(spark, delete_docs, spark, d, all_ids[:n])
+        assert verify_erased(spark, d, all_ids[:n]) == 0
+        jobs.append(n_jobs)
+        touched.append(len(info["touched_chunks"]))
+    assert touched[0] < touched[1]
+    assert jobs[0] == jobs[1] <= 6
+
+
 def test_erasure_job_cli_tier_store(spark, store, capsys, monkeypatch, tmp_path):
     import json
 
@@ -164,6 +295,33 @@ def test_erasure_job_cli_cagg_store(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["states_deleted"] > 0 and out["states_remaining"] == 0
     assert out["history_purged"] is True
+
+
+def test_erasure_job_cagg_key_type_from_one_chunk(spark, tmp_path, capsys):
+    """The cagg branch takes the key column's type from one manifest
+    chunk: on a 49-chunk store it runs fewer Spark jobs than the 14 it
+    ran with a read of the whole store (a listing job and a footer job)
+    for the type alone."""
+    import json
+
+    from jobs.erasure_job import main
+    from pyhctsa_spark.operators.cagg import CaggSnapshotStore
+
+    ev = spark.range(1500).select(
+        (F.col("id") % 3).alias("user_id"),
+        F.timestamp_micros(
+            F.lit(1_700_000_000_000_000) + F.col("id") * 913_789_123
+        ).alias("ts"),
+        (F.col("id") % 50).cast("double").alias("value"),
+    )
+    path = str(tmp_path / "cs")
+    CaggSnapshotStore(path, chunk_windows=16).materialize(ev)
+    assert len(CaggSnapshotStore(path).manifest()["chunks"]) == 49
+    rc, n_jobs = _jobs_run(spark, main, ["--cagg-store", path, "--ids", "1"])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["states_deleted"] > 0 and out["states_remaining"] == 0
+    assert n_jobs < 14
 
 
 def test_erasure_job_cli_minhash_index(spark, tmp_path, capsys):

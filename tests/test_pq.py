@@ -326,7 +326,7 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
 
 def test_ivfpq_crash_recovery_restores_live_tables(spark, tmp_path):
     """A compact that crashed between the two renames of its lists/
-    swap leaves only _compact_old.lists; the next compact_ivfpq_index
+    swap leaves only .compact_old.lists; the next compact_ivfpq_index
     restores it before reading, so no row is lost or changed."""
     import os
 

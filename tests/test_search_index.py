@@ -159,18 +159,18 @@ def test_recover_after_crashed_swap(spark, corpus, tmp_path):
     # simulate a crash between the two renames of a df/ swap: live
     # missing, old present (plus a stale tmp for the postings table)
     d = os.path.join(path, "df")
-    os.rename(d, os.path.join(path, "_compact_old.df"))
+    os.rename(d, os.path.join(path, ".compact_old.df"))
     shutil.copytree(
         os.path.join(path, "postings"),
-        os.path.join(path, "_compact_tmp.postings"),
+        os.path.join(path, ".compact_tmp.postings"),
     )
 
     got = _rows(query_search_index(spark, path, QUERY, k=10))
     want = _rows(bm25_topk(corpus, QUERY, k=10))
     assert got == want
     assert os.path.exists(d)
-    assert not os.path.exists(os.path.join(path, "_compact_old.df"))
-    assert not os.path.exists(os.path.join(path, "_compact_tmp.postings"))
+    assert not os.path.exists(os.path.join(path, ".compact_old.df"))
+    assert not os.path.exists(os.path.join(path, ".compact_tmp.postings"))
 
 
 def test_empty_query_raises(spark, built):

@@ -49,6 +49,47 @@ def test_recover_repairs_each_crash_state(tmp_path):
     recover(os.path.join(parent, "missing"))  # no parent: a no-op
 
 
+def test_recover_repairs_underscore_named_leftovers(tmp_path):
+    """The swap siblings were once named ``_compact_tmp.<base>`` and
+    ``_compact_old.<base>``; a crash under that naming is repaired the
+    same way."""
+    parent = str(tmp_path)
+    a, b, c = (os.path.join(parent, n) for n in "abc")
+    _table(a, "a-live")
+    _table(os.path.join(parent, "_compact_tmp.a"), "a-new")
+    _table(os.path.join(parent, "_compact_old.b"), "b-live")
+    _table(c, "c-new")
+    _table(os.path.join(parent, "_compact_old.c"), "c-old")
+    recover(parent)
+    assert (_tag(a), _tag(b), _tag(c)) == ("a-live", "b-live", "c-new")
+    assert sorted(os.listdir(parent)) == ["a", "b", "c"]
+
+
+@pytest.mark.parametrize("leftover", ["tmp", "old"])
+def test_spark_reads_chunk_store_beside_swap_leftovers(spark, tmp_path,
+                                                       leftover):
+    """Spark hides a name starting with ``_`` only when it holds no
+    ``=``, so the swap siblings of a ``chunk=`` directory must not be
+    parsed as partitions: a store beside a staged tmp copy, or beside
+    an old copy next to its live chunk, reads exactly its live rows."""
+    import shutil
+
+    from pyhctsa_spark.operators.retention import write_tier_chunked
+
+    rows = [(f"d{i}", 0, w, float(w)) for i in range(3) for w in range(8)]
+    store = str(tmp_path / "store")
+    write_tier_chunked(
+        spark.createDataFrame(
+            rows, "doc_id string, tier int, window_idx long, mean double"),
+        store, chunk_windows=4)
+    live = os.path.join(store, "tier=0", "chunk=1")
+    tmp, old = swap_names(live)
+    shutil.copytree(live, tmp if leftover == "tmp" else old)
+    got = (spark.read.parquet(store)
+           .select("doc_id", "tier", "window_idx", "mean").collect())
+    assert sorted(tuple(r) for r in got) == sorted(rows)
+
+
 def test_replace_dir_with_and_without_live_table(tmp_path):
     d = str(tmp_path / "t")
     tmp, old = swap_names(d)
