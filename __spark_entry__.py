@@ -10,8 +10,11 @@ queries are registered first so the driver's scored window covers them.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +23,15 @@ _ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _ROOT)
 
 from pyhctsa_spark.plans import oracle_queries as OQ  # noqa: E402
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory for a query's store or index, removed
+    when the interpreter exits: the DataFrame a query returns is lazy
+    and reads the directory until then."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _sequences_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,8 +412,7 @@ def _rollup_gapfill_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY user_id
         """
     )
-    r = rollup_tiers(gapped, window=4, group=4, n_tiers=2, lags=[1, 2],
-                     gapped=True)
+    r = rollup_tiers(gapped, window=4, group=4, n_tiers=2, lags=[1, 2])
     return r.select(
         "doc_id", "source", "tier", "window_idx", "n",
         _f6("mean", "mean_v"), _f6("variance", "var_v"),
@@ -448,8 +459,6 @@ def _minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard, so the DuckDB oracle is the exhaustive cross-side
     exact-Jaccard pair set (full LSH recall at this corpus's J>=0.9
     near-dups, same argument as minhash_dedup_pairs)."""
-    import tempfile
-
     from pyhctsa_spark.operators.dedup_index import (
         build_minhash_index,
         query_minhash_index,
@@ -458,7 +467,7 @@ def _minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base = docs.where("doc_id % 5 != 0")
     delta = docs.where("doc_id % 5 = 0")
-    path = tempfile.mkdtemp(prefix="mh_index_") + "/idx"
+    path = _scratch_dir("mh_index_") + "/idx"
     build_minhash_index(base, path, threshold=0.3)
     return query_minhash_index(delta, path, base)
 
@@ -502,8 +511,6 @@ def _knn_ivf_index_delta_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     index appends), then answer at full probe. Must reproduce the exact
     brute-force top-3 over the UNION corpus — same SQL oracle as
     knn_ivf, now exercising the append path end-to-end."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyhctsa_spark.operators.similarity import (
@@ -516,7 +523,7 @@ def _knn_ivf_index_delta_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     base = emb.where(F.col("vec_id") % 5 != 0)
     delta = emb.where(F.col("vec_id") % 5 == 0)
-    path = tempfile.mkdtemp(prefix="ivf_index_") + "/idx"
+    path = _scratch_dir("ivf_index_") + "/idx"
     ivf_write_index(base, path, num_centroids=16)
     append_to_ivf_index(delta, path)
     qs = emb.where(F.col("vec_id") < 5)
@@ -931,15 +938,13 @@ def _delete_docs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the rollup from raw events EXCLUDING the erased
     users — the store after erasure must be indistinguishable from a
     world where those docs never existed."""
-    import tempfile
-
     from pyhctsa_spark.operators.deletion import delete_docs, verify_erased
     from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
     from pyhctsa_spark.operators.retention import write_tier_chunked
 
     seq = _sequences_from_events(spark, sf_dir)
     tiers = rollup_quantile_tiers(seq, window=4, group=4, n_tiers=3)
-    d = tempfile.mkdtemp(prefix="delstore_")
+    d = _scratch_dir("delstore_")
     write_tier_chunked(tiers, d, chunk_windows=8)
     # doomed set = distinct user ids with id % 7 == 3. The old code
     # re-ran the whole collect_list/array_sort sequence build just to
@@ -1497,8 +1502,6 @@ def _cagg_realtime_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     are read), newer windows from an on-the-fly partial over raw.
     Oracle = full recompute — the view must be indistinguishable from
     recomputing everything."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyhctsa_spark.operators.cagg import CaggSnapshotStore, cagg_realtime
@@ -1510,7 +1513,7 @@ def _cagg_realtime_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     wm_ts = ev.agg(F.expr("percentile(unix_micros(ts), 0.8)")).first()[0]
     wm_widx = int(wm_ts // win)
     hist = ev.where(F.floor(F.unix_micros("ts") / F.lit(win)) <= wm_widx)
-    store = CaggSnapshotStore(tempfile.mkdtemp(prefix="cagg_rt_") + "/store",
+    store = CaggSnapshotStore(_scratch_dir("cagg_rt_") + "/store",
                               window_micros=win, chunk_windows=48)
     store.materialize(hist)
     out = cagg_realtime(spark, store, ev, wm_widx)
@@ -1562,8 +1565,6 @@ def _cagg_refresh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh == full recompute. Refresh writes only the touched chunks
     as a new snapshot generation; cost scales with the delta, never
     the store."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from pyhctsa_spark.operators.cagg import CaggSnapshotStore, cagg_finalize
@@ -1574,7 +1575,7 @@ def _cagg_refresh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     win = 30 * 60 * 1_000_000
     store = CaggSnapshotStore(
-        tempfile.mkdtemp(prefix="cagg_store_") + "/store",
+        _scratch_dir("cagg_store_") + "/store",
         window_micros=win, chunk_windows=48,
     )
     store.materialize(ev.where("event_id % 5 != 4"))
@@ -1745,8 +1746,6 @@ def _hybrid_rrf_indexed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused with RRF. Must value-match the scan-based doc_hybrid_rrf
     (same SQL oracle): the indexed BM25 tower is bit-equal by its own
     gate and the full-probe IVF tower is exact."""
-    import tempfile
-
     from pyhctsa_spark.operators.search import hybrid_rrf_indexed
     from pyhctsa_spark.operators.search_index import (
         append_to_search_index,
@@ -1760,10 +1759,10 @@ def _hybrid_rrf_indexed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sidx = tempfile.mkdtemp(prefix="hybrid_sidx_") + "/idx"
+    sidx = _scratch_dir("hybrid_sidx_") + "/idx"
     build_search_index(docs.where("doc_id % 5 != 0"), sidx, n_buckets=16)
     append_to_search_index(docs.where("doc_id % 5 = 0"), sidx)
-    vidx = tempfile.mkdtemp(prefix="hybrid_vidx_") + "/idx"
+    vidx = _scratch_dir("hybrid_vidx_") + "/idx"
     ivf_write_index(emb.where("vec_id % 5 != 0"), vidx, num_centroids=16)
     append_to_ivf_index(emb.where("vec_id % 5 = 0"), vidx)
     return hybrid_rrf_indexed(
@@ -1841,8 +1840,6 @@ def _bm25_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned to the query's term buckets. Scores must equal the ad-hoc
     corpus-scan scorer bit-for-bit at round-6, so the oracle is the
     same SQL as doc_bm25_topk."""
-    import tempfile
-
     from pyhctsa_spark.operators.search_index import (
         append_to_search_index,
         build_search_index,
@@ -1850,7 +1847,7 @@ def _bm25_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    path = tempfile.mkdtemp(prefix="search_index_") + "/idx"
+    path = _scratch_dir("search_index_") + "/idx"
     build_search_index(docs.where("doc_id % 5 != 0"), path, n_buckets=16)
     append_to_search_index(docs.where("doc_id % 5 = 0"), path)
     return query_search_index(spark, path, ["dup", "spark", "hash", "join"], k=10)

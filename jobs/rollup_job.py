@@ -30,7 +30,8 @@ def parse_args(argv):
 
     p = argparse.ArgumentParser(description="pyhctsa_spark tiered rollup job")
     p.add_argument("--input", required=True,
-                   help="parquet directory of sequences (doc_id, tokens|tokens_bin, n_tok, source[, tok_checksum])")
+                   help="parquet directory of sequences (doc_id, tokens|tokens_bin, n_tok, source[, tok_checksum]), "
+                        "or of gapped sequences (doc_id, offsets, values, n_tok, source)")
     p.add_argument("--store", required=True,
                    help="output store root (tier_data/ + _manifest/ + _SNAPSHOT.json)")
     p.add_argument("--window", type=int, default=32)
@@ -44,8 +45,6 @@ def parse_args(argv):
                    choices=list(FAMILIES),
                    help="tier aggregate family (moments / exact order "
                         "statistics / HLL distinct / all three fused)")
-    p.add_argument("--gapped", action="store_true",
-                   help="input is sparse (offsets, values) — gap-fill first")
     p.add_argument("--stream-chunks", action="store_true",
                    help="input is a growing directory of CHUNKED sequences "
                         "(doc_id, source, chunk_idx, tokens_bin): run the "

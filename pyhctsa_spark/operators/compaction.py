@@ -91,7 +91,6 @@ def compact_chunks(
     path: str,
     target_files: int = 1,
     small_bytes: int = 8 * 1024 * 1024,
-    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
 ) -> list[dict]:
     """Rewrite every fragmented (tier, chunk) partition into at most
     ``target_files`` sorted parquet parts; append lineage to
@@ -108,7 +107,7 @@ def compact_chunks(
             if target_files > 1 else ())
     stage = _stage_chunks(
         spark.read.option("basePath", path).parquet(*(d for *_, d in cands)),
-        path, keys=keys, sort_cols=sort_cols)
+        path, keys=keys)
     now = time.time()
     rows = []
     for tier, chunk, d in cands:

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from pyhctsa_spark.operators.cagg import cagg_finalize, cagg_partial
+
 
 def counter_agg(
     events: DataFrame,
@@ -88,30 +90,14 @@ def ohlc_agg(
     aggregates, all JVM built-ins, map-side partial aggregation applies.
     At 10^12 rows this is the cheapest possible shape: one exchange of
     pre-combined per-window structs, no window functions, no sort.
-    The earliest-t-at-extreme rule uses max(struct(v, -t)): among rows
-    with the max value, -t is largest for the earliest timestamp.
+    The aggregate is the continuous-aggregate state's
+    (``cagg.cagg_partial``, finalized by ``cagg.cagg_finalize``) without
+    its moment columns; the earliest-t-at-extreme rule there uses
+    max(struct(v, -t)): among rows with the max value, -t is largest for
+    the earliest timestamp.
     """
-    by = list(by or ["user_id"])
-    tus = F.unix_micros(F.col(on))
-    v = F.col(value_col).cast("double")
-    staged = events.select(
-        *by,
-        F.floor(tus / F.lit(int(window_micros))).alias("widx"),
-        tus.alias("_t"),
-        v.alias("_v"),
-    )
-    t, val = F.col("_t"), F.col("_v")
-    return staged.groupBy(*by, "widx").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(F.struct(t.alias("t"), val.alias("v")))["v"].alias("open"),
-        F.max(F.struct(t.alias("t"), val.alias("v")))["v"].alias("close"),
-        F.max("_v").alias("high"),
-        F.min("_v").alias("low"),
-        (-F.max(F.struct(val.alias("v"), (-t).alias("nt")))["nt"]).alias(
-            "t_high"
-        ),
-        F.min(F.struct(val.alias("v"), t.alias("t")))["t"].alias("t_low"),
-    )
+    states = cagg_partial(events, on, by, value_col, window_micros)
+    return cagg_finalize(states, by).drop("mean", "variance")
 
 
 def gap_detect(

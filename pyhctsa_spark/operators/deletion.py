@@ -143,8 +143,11 @@ def verify_erased(
     """Compliance check: remaining row count for the given ids (0 after
     a completed erasure). Column-pruned + stats-skipped scan; a store a
     total erasure fully emptied verifies as 0 instead of crashing the
-    schema-less read."""
+    schema-less read. The store is repaired first
+    (``retention._recover_store``), so rows of a chunk caught between
+    the two renames of a swap are counted too."""
     ids = sorted({str(d) for d in doc_ids})
+    _recover_store(path)
     if not _store_has_data(path):
         return 0
     store = spark.read.parquet(path)

@@ -92,18 +92,21 @@ class RetentionPolicy:
         return keep_from_widx // self.chunk_windows
 
 
+# Row order inside each chunk file: tight row-group statistics on doc_id
+_SORT_COLS = ("doc_id", "window_idx")
+
+
 def _write_chunks(
     df: DataFrame, path: str, mode: str = "overwrite", keys: tuple = (),
-    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
 ) -> None:
     """The one write shape of the chunk store: a shuffle on (tier,
     chunk) plus ``keys``, so each chunk's rows land in one task per
-    distinct ``keys`` value, a local sort on (tier, chunk, *sort_cols)
+    distinct ``keys`` value, a local sort on (tier, chunk, *_SORT_COLS)
     and a write partitioned by (tier, chunk). (tier, chunk) lead the
     sort so the partitioned writer's required ordering is already met:
-    it adds no second sort that could undo the ``sort_cols`` order
+    it adds no second sort that could undo the ``_SORT_COLS`` order
     inside each file."""
-    present = [c for c in sort_cols if c in df.columns]
+    present = [c for c in _SORT_COLS if c in df.columns]
     (
         df.repartition("tier", "chunk", *keys)
         .sortWithinPartitions("tier", "chunk", *present)
@@ -131,16 +134,13 @@ def _recover_store(path: str) -> None:
             tablefs.recover(os.path.join(path, tdir))
 
 
-def _stage_chunks(
-    df: DataFrame, path: str, keys: tuple = (),
-    sort_cols: tuple[str, ...] = ("doc_id", "window_idx"),
-) -> str:
+def _stage_chunks(df: DataFrame, path: str, keys: tuple = ()) -> str:
     """Stage step of the chunk store's one rewrite: write the new rows
     of the chunks being rewritten in the store's write shape into the
     hidden ``<path>/_compact_stage/`` (no ``=`` in the name, so Spark
     and ``_chunk_dirs`` never see it). Returns the stage directory."""
     stage = os.path.join(path, _STAGE)
-    _write_chunks(df, stage, keys=keys, sort_cols=sort_cols)
+    _write_chunks(df, stage, keys=keys)
     return stage
 
 

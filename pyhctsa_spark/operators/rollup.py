@@ -406,7 +406,6 @@ def walk_tiers(
     window: int = DEFAULT_WINDOW,
     group: int = DEFAULT_GROUP,
     n_tiers: int = 3,
-    gapped: bool = False,
     counters: dict | None = None,
     seg_tokens: int = _SEG_TOKENS,
 ) -> DataFrame:
@@ -414,14 +413,15 @@ def walk_tiers(
     ``mapInArrow`` pass over documents -> windows -> tiers.
 
     Per document it decodes the tokens (dense ``tokens_bin``/``tokens``,
-    or gapped ``offsets``/``values`` through gap_fill), builds every
+    or, when the input has ``offsets`` and no token column, gapped
+    ``offsets``/``values``/``n_tok`` through gap_fill), builds every
     family's tier-0 states from the same windows and merges them tier by
     tier; each family adds only its output columns. ``counters``
     (make_counters) receive rows read, windows emitted and — when the
     input carries ``tok_checksum`` — token checksum mismatches.
     """
     src, fn, schema = _tier_walker(df, families, window, group, n_tiers,
-                                   gapped, counters, seg_tokens)
+                                   counters, seg_tokens)
     return src.mapInArrow(fn, schema=from_arrow_schema(schema))
 
 
@@ -431,7 +431,6 @@ def _tier_walker(
     window: int,
     group: int,
     n_tiers: int,
-    gapped: bool = False,
     counters: dict | None = None,
     seg_tokens: int = _SEG_TOKENS,
 ) -> tuple[DataFrame, Callable, pa.Schema]:
@@ -439,6 +438,8 @@ def _tier_walker(
     RecordBatch function, its output Arrow schema), for a caller that
     consumes the batches inside the task (``checkpoint.RollupJob``
     writes them to parquet there)."""
+    gapped = "offsets" in df.columns and not (
+        {"tokens", "tokens_bin"} & set(df.columns))
     if gapped and any(f.dtype is not np.float64 for f in families):
         raise ValueError("gap-filled values only feed float families")
     schema, wanted = _layout(families)
@@ -547,7 +548,6 @@ def rollup_tiers(
     group: int = DEFAULT_GROUP,
     n_tiers: int = 3,
     lags: list[int] | None = None,
-    gapped: bool = False,
     counters: dict | None = None,
     feature_set=None,
     seg_tokens: int = _SEG_TOKENS,
@@ -555,13 +555,14 @@ def rollup_tiers(
     """Single-pass 3-tier ALG rollup (see module docstring).
 
     Input: sequences table (dense: doc_id/tokens|tokens_bin/source
-    [/tok_checksum]; gapped=True: doc_id/offsets/values/n_tok/source).
+    [/tok_checksum]; gapped, with no token column:
+    doc_id/offsets/values/n_tok/source).
     Only the needed columns cross the Arrow boundary (explicit pruning —
     mapInArrow ships every column of its input otherwise). A compiled
     FeatureSet (plans/registry) adds one double column per label.
     """
     return walk_tiers(df, [alg_family(lags or DEFAULT_LAGS, feature_set)],
-                      window, group, n_tiers, gapped, counters, seg_tokens)
+                      window, group, n_tiers, counters, seg_tokens)
 
 
 # ---------------------------------------------------------------------------

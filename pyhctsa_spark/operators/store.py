@@ -10,16 +10,19 @@ doubles while staying random-accessible per doc.
 ``write_compressed_store`` groups by (doc_id, tier) — fine-grained keys,
 so the shuffle has no source-level skew — and encodes each group in one
 ``applyInArrow`` call. ``read_compressed_store`` restores the plain
-per-window table (ALG + HOL feature columns).
+per-window table (ALG + HOL feature columns): a scalar Arrow UDF turns
+each block into a list of window structs that ``inline`` expands, so the
+key columns stay plain scan columns and a ``doc_id``/``source``/``tier``
+filter above the read is pushed into the parquet scan — a one-document
+read decodes that document's blocks only. No pandas on either path.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, from_arrow_type
 
 from pyhctsa_spark.functions.codec import (
     dod_decode,
@@ -108,34 +111,38 @@ def read_tier_table(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
-_DECODED_SCHEMA = (
-    "doc_id string, source string, tier int, window_idx long, n long, "
-    + ", ".join(f"{f} double" for f in FEATURES)
-)
+_ROWS_TYPE = pa.list_(pa.struct(
+    [("window_idx", pa.int64())] + [(f, pa.float64()) for f in FEATURES]))
 
 
-def _decode_blocks(batches):
-    for pdf in batches:
-        outs = []
-        for row in pdf.itertuples(index=False):
-            widx = dod_decode(row.widx_bin)
-            cols = {
-                "doc_id": [row.doc_id] * len(widx),
-                "source": [row.source] * len(widx),
-                "tier": np.full(len(widx), row.tier, dtype=np.int32),
-                "window_idx": widx,
-                "n": np.full(len(widx), row.n, dtype=np.int64),
-            }
-            for f in FEATURES:
-                cols[f] = gorilla_decode(getattr(row, f"{f}_bin"))
-            outs.append(pd.DataFrame(cols))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+def _decode_rows(widx_bin: pa.Array, *feature_bins: pa.Array) -> pa.Array:
+    """Each block's windows as one list of (window_idx, *FEATURES)
+    structs, built from numpy; a NaN feature comes back NULL."""
+    widx = [dod_decode(b) for b in widx_bin.to_pylist()]
+    cols = [np.concatenate([np.empty(0, np.int64), *widx])] + [
+        np.concatenate([np.empty(0), *map(gorilla_decode, c.to_pylist())])
+        for c in feature_bins
+    ]
+    rows = pa.StructArray.from_arrays(
+        [pa.array(c, from_pandas=True) for c in cols],
+        fields=list(_ROWS_TYPE.value_type))
+    offsets = np.cumsum([0] + [len(w) for w in widx], dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), rows)
+
+
+_decode = F.arrow_udf(_decode_rows, from_arrow_type(_ROWS_TYPE))
 
 
 def read_compressed_store(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path).mapInPandas(
-        _decode_blocks, schema=_DECODED_SCHEMA
+    """The plain per-window table of a compressed store. The decode is
+    a scalar Arrow UDF expanded by ``inline``, so a caller's filter on
+    ``doc_id``, ``source`` or ``tier`` reaches the parquet scan and
+    only the blocks it names are decoded."""
+    rows = _decode("widx_bin", *(f"{f}_bin" for f in FEATURES))
+    return (
+        spark.read.parquet(path)
+        .select("doc_id", "source", "tier", "n", F.inline(rows))
+        .select("doc_id", "source", "tier", "window_idx", "n", *FEATURES)
     )
 
 

@@ -9,17 +9,38 @@ source directory flow into new tier rows; combined with
 ``cascade_from_store`` this gives a continuously-maintained continuous
 aggregate (the streaming analogue of a TSDB's refresh policy).
 
+Documents that arrive in chunks (``stream_rollup_chunks``) need
+per-document state, so they run under ``applyInPandasWithState``; each
+trigger's tier-0 rows still come from the walker's ALG family and
+Arrow assembly, converted to pandas only at that operator's boundary.
+
 The reference has no streaming surface (SURVEY.md §2.0); this is the
 engine-native extension mandated by the Spark-first design.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from pyhctsa_spark.operators.rollup import FAMILIES, walk_tiers
-from pyhctsa_spark.sources.synthetic import SEQ_BIN_SCHEMA, SEQ_SCHEMA
+from pyhctsa_spark.functions import kernels as K
+from pyhctsa_spark.operators.rollup import (
+    DEFAULT_LAGS,
+    FAMILIES,
+    _assemble,
+    _block,
+    _layout,
+    alg_family,
+    walk_tiers,
+)
+from pyhctsa_spark.sources.synthetic import (
+    CHUNK_SCHEMA,
+    SEQ_BIN_SCHEMA,
+    SEQ_SCHEMA,
+)
 
 
 def _sink(df: DataFrame, sink_dir: str, checkpoint_dir: str,
@@ -91,33 +112,21 @@ def stream_rollup_chunks(
     redelivered, in- or cross-trigger) keep the first copy; stale
     chunks below the consumed watermark are dropped.
 
-    This is the engine's ``applyInPandasWithState`` surface (SURVEY §2.0
-    streaming mandate); the stateless variant (whole docs per row) is
-    ``stream_rollup`` above.
+    The completed windows become rows through the walker's own ALG
+    family (``rollup.alg_family``, ``_block``, ``_assemble``), so the
+    sink has exactly the columns and values of ``rollup_tiers(...,
+    n_tiers=1)``, merge states included: ``cascade_from_store`` runs on
+    it. The stateless variant (whole docs per row) is ``stream_rollup``
+    above.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from pyhctsa_spark.functions import kernels as K
-    from pyhctsa_spark.functions import stats_state as S
-    from pyhctsa_spark.sources.synthetic import CHUNK_SCHEMA
-
-    lags = lags or [1, 2]
-    out_schema = (
-        "doc_id string, source string, tier int, window_idx long, n long, "
-        "mean double, variance double, spread_std double, "
-        "spread_iqr double, ac1_td double, ac2_td double, "
-        "ac1_fourier double, burst_b double, burst_b_kim double"
-    )
+    family = alg_family(lags or DEFAULT_LAGS)
+    schema, wanted = _layout([family])
     state_schema = (
         "next_chunk int, win_base long, carry binary, "
         "pending_idx array<int>, pending_bin array<binary>"
     )
 
-    def fn(key, pdfs, state: "GroupState"):
-        doc_id = key[0]
-        chunks = pd.concat(list(pdfs), ignore_index=True)
+    def fn(key, pdfs, state: GroupState):
         if state.exists:
             next_chunk, win_base, carry, p_idx, p_bin = state.get
             carry = bytes(carry) if carry is not None else b""
@@ -129,45 +138,28 @@ def stream_rollup_chunks(
             next_chunk, win_base, carry, pending = 0, 0, b"", {}
         # stage arrivals: future chunks buffer, duplicates keep the
         # first copy, stale (< next_chunk, already consumed) drop
-        for _, row in chunks.iterrows():
-            ci = int(row["chunk_idx"])
-            if ci >= next_chunk:
-                pending.setdefault(ci, bytes(row["tokens_bin"]))
+        source = None
+        for pdf in pdfs:
+            for ci, src, blob in zip(pdf["chunk_idx"], pdf["source"],
+                                     pdf["tokens_bin"]):
+                source = src if source is None else source
+                if ci >= next_chunk:
+                    pending.setdefault(int(ci), bytes(blob))
         # assemble the contiguous prefix now available
         parts = [carry]
         while next_chunk in pending:
             parts.append(pending.pop(next_chunk))
             next_chunk += 1
         buf = b"".join(parts)
-        toks = np.frombuffer(buf, dtype="<i4")
-        nwin = len(toks) // window
+        Y = K.make_buffer(np.frombuffer(buf, dtype="<i4").astype(np.float64),
+                          window)
+        nwin = len(Y)
         if nwin:
-            Y = toks[: nwin * window].reshape(nwin, window).astype(np.float64)
-            st = S.states_from_windows(Y, lags)
-            fin = S.finalize(st, lags)
-            out = pd.DataFrame(
-                {
-                    "doc_id": [doc_id] * nwin,
-                    "source": chunks["source"].iloc[0]
-                    if len(chunks)
-                    else None,
-                    "tier": np.zeros(nwin, dtype=np.int32),
-                    "window_idx": win_base + np.arange(nwin, dtype=np.int64),
-                    "n": st["n"],
-                    "mean": fin["mean"],
-                    "variance": fin["variance"],
-                    "spread_std": fin["spread_std"],
-                    "spread_iqr": K.iqr_hazen_2d(Y),
-                    "ac1_td": fin.get("ac1_td", np.full(nwin, np.nan)),
-                    "ac2_td": fin.get("ac2_td", np.full(nwin, np.nan)),
-                    "ac1_fourier": fin.get(
-                        "ac1_fourier", np.full(nwin, np.nan)
-                    ),
-                    "burst_b": fin["burst_b"],
-                    "burst_b_kim": fin["burst_b_kim"],
-                }
+            block = _block(
+                [family], wanted, [family.from_windows(Y)], key[0], source,
+                0, win_base + np.arange(nwin, dtype=np.int64), lambda _: Y,
             )
-            yield out
+            yield _assemble([block], schema, family.pack).to_pandas()
         keys = sorted(pending)
         state.update((
             next_chunk, win_base + nwin, buf[nwin * window * 4:],
@@ -176,7 +168,8 @@ def stream_rollup_chunks(
 
     reader = spark.readStream.schema(CHUNK_SCHEMA).parquet(source_dir)
     rolled = reader.groupBy("doc_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        fn, from_arrow_schema(schema), state_schema, "append",
+        GroupStateTimeout.NoTimeout,
     )
     return _sink(rolled, sink_dir, checkpoint_dir, available_now)
 

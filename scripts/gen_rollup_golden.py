@@ -65,7 +65,7 @@ def _cases(spark) -> dict:
         "alg": rollup_tiers(seq),
         "alg_bin": rollup_tiers(seq_bin),
         "alg_small": rollup_tiers(seq, lags=[1], **small),
-        "alg_gapped": rollup_tiers(gapped, gapped=True),
+        "alg_gapped": rollup_tiers(gapped),
         "alg_features": rollup_tiers(seq, n_tiers=2,
                                      feature_set=_feature_set()),
         "quantile": rollup_quantile_tiers(seq_bin),

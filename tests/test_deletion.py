@@ -229,6 +229,44 @@ def test_delete_after_compaction_crash_between_renames(spark, tmp_path,
     _no_leftovers(d)
 
 
+def test_verify_erased_counts_a_chunk_caught_mid_swap(spark, tmp_path,
+                                                     monkeypatch):
+    """A compaction that crashed between the two renames of a chunk
+    leaves its rows only in the swap sibling; verify_erased repairs the
+    store before it counts, so it still finds every row of the ids,
+    even after a reader listed the crashed store."""
+    from pyhctsa_spark.operators.compaction import compact_chunks
+    from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
+    from pyhctsa_spark.sources.synthetic import sequences_df
+
+    tiers = rollup_quantile_tiers(sequences_df(spark, 12), window=8,
+                                  group=4, n_tiers=2)
+    d = str(tmp_path / "store")
+    for half in (0, 1):
+        write_tier_chunked(
+            tiers.where(F.abs(F.hash("doc_id")) % 2 == half), d,
+            chunk_windows=16, mode="append")
+    ids = _first_docs(spark, d, 3)
+    want = spark.read.parquet(d).where(F.col("doc_id").isin(ids)).count()
+    real_rename = os.rename
+
+    def crashing_rename(src, dst):
+        if "_compact_stage" in str(src):
+            raise RuntimeError("injected crash")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        compact_chunks(spark, d)
+    monkeypatch.undo()
+    assert any(e.startswith((".compact_old.", "_compact_old."))
+               for e in os.listdir(os.path.join(d, "tier=0")))
+    spark.catalog.refreshByPath(d)
+    assert spark.read.parquet(d).where(
+        F.col("doc_id").isin(ids)).count() < want
+    assert verify_erased(spark, d, ids) == want
+
+
 def test_delete_job_count_does_not_grow_with_touched_chunks(spark, store,
                                                             tmp_path):
     """One delete_docs runs the same Spark jobs for 10 and for all 154

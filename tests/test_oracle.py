@@ -27,6 +27,31 @@ def test_entry_smoke(spark):
     assert "mean" in df.columns and "tier" in df.columns
 
 
+def test_query_scratch_dirs_removed_at_exit(tmp_path):
+    """A driver query's store or index directory (``_scratch_dir``)
+    outlives the query, whose DataFrame is lazy, and is removed when the
+    interpreter exits."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, sys; sys.path.insert(0, sys.argv[1]); "
+        "import __spark_entry__ as em; "
+        "d = em._scratch_dir('store_'); "
+        "os.makedirs(os.path.join(d, 'idx', 'part')); "
+        "print(d, os.path.isdir(d))"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code, repo], capture_output=True, text=True,
+        timeout=120, env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    assert run.returncode == 0, run.stderr[-500:]
+    d, alive = run.stdout.split()
+    assert alive == "True"
+    assert os.path.dirname(d) == str(tmp_path)
+    assert not os.path.exists(d)
+
+
 def test_queries_oracle_keys_consistent():
     import __spark_entry__ as em
 

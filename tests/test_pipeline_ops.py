@@ -422,11 +422,10 @@ def test_streaming_chunked_rollup_stateful(spark, tmp_path_factory):
         spark.read.parquet(sink).toPandas()
         .sort_values(["doc_id", "window_idx"]).reset_index(drop=True)
     )
-    want_cols = list(got.columns)
     want = (
         rollup_tiers(sequences_df(spark, 12, partitions=2, binary=True),
                      window=32, n_tiers=1)
-        .toPandas()[want_cols]
+        .toPandas()
         .sort_values(["doc_id", "window_idx"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
@@ -774,15 +773,52 @@ def test_streaming_chunked_rollup_out_of_order_and_duplicates(
         spark.read.parquet(sink).toPandas()
         .sort_values(["doc_id", "window_idx"]).reset_index(drop=True)
     )
-    want_cols = list(got.columns)
     want = (
         rollup_tiers(sequences_df(spark, 8, partitions=2, binary=True),
-                     window=32, n_tiers=1)
-        .select(*want_cols).toPandas()
+                     window=32, n_tiers=1).toPandas()
         .sort_values(["doc_id", "window_idx"]).reset_index(drop=True)
     )
-    pd.testing.assert_frame_equal(got.round(9), want.round(9))
+    pd.testing.assert_frame_equal(got, want)
     chunks.unpersist()
+
+
+def test_streaming_chunked_sink_cascades_like_batch(spark, tmp_path_factory):
+    """The chunked stream's sink carries the ALG merge states, so
+    cascade_from_store runs on it: its tier 1 is the cascade of the
+    batch tier 0 exactly, and the batch tier 1 on every ALG column."""
+    from pyhctsa_spark.operators.rollup import cascade_from_store, rollup_tiers
+    from pyhctsa_spark.sources.synthetic import (
+        chunked_sequences_df,
+        sequences_df,
+    )
+    from pyhctsa_spark.streaming.rollup_stream import stream_rollup_chunks
+
+    base = tmp_path_factory.mktemp("chunkcascade")
+    src, sink, ckpt = str(base / "src"), str(base / "sink"), str(base / "ckpt")
+    chunked_sequences_df(spark, 10, chunk_tokens=300, partitions=2) \
+        .write.parquet(src)
+    stream_rollup_chunks(spark, src, sink, ckpt, window=32,
+                         available_now=True).awaitTermination(120)
+    key = ["doc_id", "window_idx"]
+    batch = rollup_tiers(sequences_df(spark, 10, partitions=2, binary=True),
+                         window=32, n_tiers=2)
+
+    def cascade(tier0):
+        return (cascade_from_store(tier0).toPandas()
+                .sort_values(key).reset_index(drop=True))
+
+    got = cascade(spark.read.parquet(sink))
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, cascade(batch.where("tier = 0")))
+    direct = (batch.where("tier = 1").toPandas()
+              .sort_values(key).reset_index(drop=True))
+    assert got[key].equals(direct[key])
+    for col in ["n", "mean", "variance", "spread_std", "ac1_td", "ac2_td",
+                "burst_b", "burst_b_kim", "s1", "s2"]:
+        np.testing.assert_allclose(got[col].to_numpy(np.float64),
+                                   direct[col].to_numpy(np.float64),
+                                   rtol=1e-9, err_msg=col)
+    assert got["spread_iqr"].isna().all()
 
 
 def test_simhash_collapse_is_invisible(spark, docs):

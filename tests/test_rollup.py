@@ -113,7 +113,7 @@ def test_cascade_from_store_matches_single_pass(spark):
 def test_gapped_rollup_matches_gapfilled_golden(spark):
     df = gapped_sequences_df(spark, 20, gap_frac=0.05, partitions=2)
     pdf_in = df.toPandas()
-    out = rollup_tiers(df, window=32, group=16, n_tiers=1, lags=LAGS, gapped=True).toPandas()
+    out = rollup_tiers(df, window=32, group=16, n_tiers=1, lags=LAGS).toPandas()
     for row in pdf_in.itertuples(index=False):
         dense = gap_fill(
             np.asarray(row.offsets), np.asarray(row.values, dtype=np.float64), row.n_tok

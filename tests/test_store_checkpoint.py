@@ -3,12 +3,14 @@
 import glob
 import os
 import pathlib
+import re
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from pyhctsa_spark.operators import checkpoint
 from pyhctsa_spark.operators.checkpoint import RollupJob
@@ -19,7 +21,7 @@ from pyhctsa_spark.operators.store import (
     read_compressed_store,
     write_compressed_store,
 )
-from pyhctsa_spark.sources.synthetic import sequences_df
+from pyhctsa_spark.sources.synthetic import gapped_sequences_df, sequences_df
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 SMALL = {"window": 16, "group": 4, "n_tiers": 2}
@@ -49,6 +51,50 @@ def test_store_roundtrip_identity(spark, tier_df, tmp_path_factory):
             err_msg=f,
         )
         assert np.isnan(av).sum() == np.isnan(bv).sum()
+
+
+def test_keyed_decode_filters_reach_the_scan(spark, tier_df,
+                                             tmp_path_factory):
+    """A doc_id and tier filter above read_compressed_store is pushed
+    into the parquet scan, so a one-document decode decodes only that
+    document's blocks; its rows are the full decode's rows."""
+    path = str(tmp_path_factory.mktemp("store_keyed") / "tiers")
+    write_compressed_store(tier_df, path)
+    doc = tier_df.where("tier = 1").select("doc_id").first()[0]
+    q = read_compressed_store(spark, path).where(
+        (F.col("doc_id") == doc) & (F.col("tier") == 1))
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+    assert f"EqualTo(doc_id,{doc})" in pushed
+    assert "EqualTo(tier,1)" in pushed
+    key = ["window_idx"]
+    got = q.toPandas().sort_values(key).reset_index(drop=True)
+    full = read_compressed_store(spark, path).toPandas()
+    want = (full[(full.doc_id == doc) & (full.tier == 1)]
+            .sort_values(key).reset_index(drop=True))
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_nan_feature_decodes_as_null(spark, tier_df, tmp_path_factory):
+    """Gorilla stores a NaN's bits; the decode returns it as NULL, and
+    every other value of the column unchanged."""
+    path = str(tmp_path_factory.mktemp("store_nan") / "tiers")
+    nanned = tier_df.withColumn(
+        "ac1_td",
+        F.when(F.col("window_idx") % 3 == 0, F.lit(float("nan")))
+        .otherwise(F.col("ac1_td")),
+    )
+    write_compressed_store(nanned, path)
+    back = read_compressed_store(spark, path)
+    n_nan = nanned.where(F.isnan("ac1_td")).count()
+    assert n_nan > 0
+    assert back.where(F.isnan("ac1_td")).count() == 0
+    assert back.where(F.col("ac1_td").isNull()).count() == n_nan
+    kept = ["doc_id", "tier", "window_idx", "ac1_td"]
+    assert sorted(back.where(F.col("ac1_td").isNotNull()).select(*kept)
+                  .collect()) == sorted(nanned.where(~F.isnan("ac1_td"))
+                                        .select(*kept).collect())
 
 
 def test_store_compression_wins(spark, tier_df, tmp_path_factory):
@@ -178,6 +224,22 @@ def test_rollup_job_families(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="unknown rollup family"):
         RollupJob(str(tmp_path / "x"), family="nope")
+
+
+def test_rollup_job_gapped_input_equals_rollup_tiers(spark, tmp_path):
+    """A gapped input (offsets/values, no token column) is recognised
+    from its columns: RollupJob's committed rows equal rollup_tiers'
+    over the same table bit for bit."""
+    seq = gapped_sequences_df(spark, 12, gap_frac=0.3, partitions=2).cache()
+    job = RollupJob(str(tmp_path / "store"), n_buckets=2, **SMALL)
+    snap = job.run(spark, seq)
+    assert snap["complete"] and snap["rows_read"] == 12
+    want = rollup_tiers(seq, **SMALL)
+    got = job.result(spark).drop("bucket")
+    assert got.schema == want.schema
+    assert _bits(got.toArrow()).equals(_bits(want.toArrow()))
+    assert want.count() > 0
+    seq.unpersist()
 
 
 @pytest.mark.parametrize("family", ["alg", "quantile", "hll", "fused"])
