@@ -38,6 +38,7 @@ store size.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -143,14 +144,13 @@ def verify_erased(
     """Compliance check: remaining row count for the given ids (0 after
     a completed erasure). Column-pruned + stats-skipped scan; a store a
     total erasure fully emptied verifies as 0 instead of crashing the
-    schema-less read. The store is repaired first
-    (``retention._recover_store``), so rows of a chunk caught between
-    the two renames of a swap are counted too."""
+    schema-less read. Read-only, so it may run beside a rewrite: a
+    chunk caught between a swap's two renames counts from its hidden
+    old copy (``tablefs.stranded``)."""
     ids = sorted({str(d) for d in doc_ids})
-    _recover_store(path)
-    if not _store_has_data(path):
-        return 0
-    store = spark.read.parquet(path)
-    return key_set_filter(
-        spark, store, F.col(id_col).cast("string"), ids
-    ).count()
+    stranded = [p for t in glob.glob(os.path.join(glob.escape(path), "tier=*"))
+                for p in tablefs.stranded(t)]
+    reads = [spark.read.parquet(path)] if _store_has_data(path) else []
+    reads += [spark.read.parquet(*stranded)] if stranded else []
+    key = F.col(id_col).cast("string")
+    return sum(key_set_filter(spark, df, key, ids).count() for df in reads)

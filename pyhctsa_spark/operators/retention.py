@@ -42,6 +42,7 @@ tier's own resolution, so one policy object covers every tier: e.g.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -125,13 +126,11 @@ def _recover_store(path: str) -> None:
     the two renames has NO live ``chunk=`` directory, so no listing or
     read of the store would find it. Compaction and deletion run this
     before they list or read the store."""
-    if not os.path.isdir(path):
-        return
-    if os.path.exists(os.path.join(path, _STAGE)):
-        shutil.rmtree(os.path.join(path, _STAGE))
-    for tdir in os.listdir(path):
-        if tdir.startswith("tier="):
-            tablefs.recover(os.path.join(path, tdir))
+    stage = os.path.join(path, _STAGE)
+    if os.path.isdir(stage):
+        shutil.rmtree(stage)
+    for tdir in glob.glob(os.path.join(glob.escape(path), "tier=*")):
+        tablefs.recover(tdir)
 
 
 def _stage_chunks(df: DataFrame, path: str, keys: tuple = ()) -> str:

@@ -313,6 +313,21 @@ def _assemble(blocks: list[dict], schema: pa.Schema, pack: dict,
     return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
+def family_schema(family: Family) -> pa.Schema:
+    """Output schema of one family's rows: key columns, then its fields."""
+    return _layout([family])[0]
+
+
+def family_run(family: Family, state, doc_id, source, tier, widx,
+               raw=None, nan_as_null=False) -> pa.RecordBatch:
+    """One (doc, tier) run of ``family``'s rows as one RecordBatch of
+    ``family_schema(family)``: a store cascade group's output, and the
+    chunked stream's tier-0 rows. ``raw`` as in ``_block``."""
+    schema, wanted = _layout([family])
+    block = _block([family], wanted, [state], doc_id, source, tier, widx, raw)
+    return _assemble([block], schema, family.pack, nan_as_null)
+
+
 def _var_width_view(col: pa.Array) -> tuple[np.ndarray, np.ndarray, bool]:
     """Zero-copy (flat_values, offsets, is_binary) view of a list<int> or
     binary Arrow column. Row i's payload is flat[offs[i]:offs[i+1]]
@@ -608,7 +623,7 @@ def store_cascade(
     ``merge_groups`` and emits the tier k+1 rows through the walker's
     column functions and assembler.
     """
-    schema, wanted = _layout([family])
+    schema = family_schema(family)
     empty = schema.empty_table()
 
     def run(tbl):
@@ -619,14 +634,12 @@ def store_cascade(
         if not len(parents):
             return empty
         state = family.merge_groups(family.from_store(tbl.filter(keep)), group)
-        block = _block(
-            [family], wanted, [state], tbl.column("doc_id")[0].as_py(),
+        return pa.Table.from_batches([family_run(
+            family, state, tbl.column("doc_id")[0].as_py(),
             tbl.column("source")[0].as_py(),
-            tbl.column("tier")[0].as_py() + 1, parents, None,
-        )
-        return pa.Table.from_batches(
-            [_assemble([block], schema, family.pack, nan_as_null)]
-        )
+            tbl.column("tier")[0].as_py() + 1, parents,
+            nan_as_null=nan_as_null,
+        )])
 
     return (
         tier_df.select("doc_id", "source", "tier", "window_idx",

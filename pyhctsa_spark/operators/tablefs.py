@@ -24,7 +24,8 @@ of them the same way everywhere:
 ``recover`` sweeps a whole parent directory for these names, and also
 for the underscore names (``_compact_tmp.``, ``_compact_old.``) that
 the swap used before, so a caller never lists which of its tables can
-be mid-swap.
+be mid-swap. ``stranded`` lists the second state's old copies without
+touching them, for a reader that must count every row.
 
 File publish. ``publish`` writes ``path + ".tmp"`` and moves it over
 ``path`` with ``os.replace``: a reader sees the previous file or the
@@ -88,15 +89,20 @@ def recover(parent: str) -> None:
     if not os.path.isdir(parent):
         return
     for e in os.listdir(parent):
-        p = os.path.join(parent, e)
-        if e.startswith(_TMPS):
+        p, live = os.path.join(parent, e), os.path.join(parent, e[len(_OLD):])
+        if e.startswith(_OLDS) and not os.path.exists(live):
+            os.rename(p, live)
+        elif e.startswith(_TMPS + _OLDS):
             shutil.rmtree(p)
-        elif e.startswith(_OLDS):
-            live = os.path.join(parent, e[len(_OLD):])
-            if os.path.exists(live):
-                shutil.rmtree(p)
-            else:
-                os.rename(p, live)
+
+
+def stranded(parent: str) -> list[str]:
+    """Read-only: the old copies under ``parent`` whose live directory is
+    missing (a swap between its two renames), each the only copy of its
+    table until ``recover`` renames it back."""
+    names = os.listdir(parent) if os.path.isdir(parent) else []
+    return [os.path.join(parent, e) for e in sorted(names)
+            if e.startswith(_OLDS) and e[len(_OLD):] not in names]
 
 
 @contextmanager

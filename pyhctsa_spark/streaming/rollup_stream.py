@@ -30,10 +30,9 @@ from pyhctsa_spark.functions import kernels as K
 from pyhctsa_spark.operators.rollup import (
     DEFAULT_LAGS,
     FAMILIES,
-    _assemble,
-    _block,
-    _layout,
     alg_family,
+    family_run,
+    family_schema,
     walk_tiers,
 )
 from pyhctsa_spark.sources.synthetic import (
@@ -113,27 +112,21 @@ def stream_rollup_chunks(
     chunks below the consumed watermark are dropped.
 
     The completed windows become rows through the walker's own ALG
-    family (``rollup.alg_family``, ``_block``, ``_assemble``), so the
+    family (``rollup.alg_family``, ``rollup.family_run``), so the
     sink has exactly the columns and values of ``rollup_tiers(...,
     n_tiers=1)``, merge states included: ``cascade_from_store`` runs on
     it. The stateless variant (whole docs per row) is ``stream_rollup``
     above.
     """
     family = alg_family(lags or DEFAULT_LAGS)
-    schema, wanted = _layout([family])
-    state_schema = (
-        "next_chunk int, win_base long, carry binary, "
-        "pending_idx array<int>, pending_bin array<binary>"
-    )
+    state_schema = ("next_chunk int, win_base long, carry binary, "
+                    "pending_idx array<int>, pending_bin array<binary>")
 
     def fn(key, pdfs, state: GroupState):
         if state.exists:
             next_chunk, win_base, carry, p_idx, p_bin = state.get
-            carry = bytes(carry) if carry is not None else b""
-            pending = {
-                int(i): bytes(b)
-                for i, b in zip(p_idx or [], p_bin or [])
-            }
+            carry = bytes(carry or b"")
+            pending = dict(zip(map(int, p_idx or []), map(bytes, p_bin or [])))
         else:
             next_chunk, win_base, carry, pending = 0, 0, b"", {}
         # stage arrivals: future chunks buffer, duplicates keep the
@@ -155,11 +148,10 @@ def stream_rollup_chunks(
                           window)
         nwin = len(Y)
         if nwin:
-            block = _block(
-                [family], wanted, [family.from_windows(Y)], key[0], source,
-                0, win_base + np.arange(nwin, dtype=np.int64), lambda _: Y,
-            )
-            yield _assemble([block], schema, family.pack).to_pandas()
+            yield family_run(
+                family, family.from_windows(Y), key[0], source, 0,
+                win_base + np.arange(nwin, dtype=np.int64), lambda _: Y,
+            ).to_pandas()
         keys = sorted(pending)
         state.update((
             next_chunk, win_base + nwin, buf[nwin * window * 4:],
@@ -168,7 +160,7 @@ def stream_rollup_chunks(
 
     reader = spark.readStream.schema(CHUNK_SCHEMA).parquet(source_dir)
     rolled = reader.groupBy("doc_id").applyInPandasWithState(
-        fn, from_arrow_schema(schema), state_schema, "append",
+        fn, from_arrow_schema(family_schema(family)), state_schema, "append",
         GroupStateTimeout.NoTimeout,
     )
     return _sink(rolled, sink_dir, checkpoint_dir, available_now)

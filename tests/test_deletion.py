@@ -232,9 +232,10 @@ def test_delete_after_compaction_crash_between_renames(spark, tmp_path,
 def test_verify_erased_counts_a_chunk_caught_mid_swap(spark, tmp_path,
                                                      monkeypatch):
     """A compaction that crashed between the two renames of a chunk
-    leaves its rows only in the swap sibling; verify_erased repairs the
-    store before it counts, so it still finds every row of the ids,
-    even after a reader listed the crashed store."""
+    leaves its rows only in the swap sibling; verify_erased counts them
+    from there, so it still finds every row of the ids, and it leaves
+    the stage and the swap siblings exactly as it found them (a writer
+    may still be running)."""
     from pyhctsa_spark.operators.compaction import compact_chunks
     from pyhctsa_spark.operators.quantile_rollup import rollup_quantile_tiers
     from pyhctsa_spark.sources.synthetic import sequences_df
@@ -261,10 +262,18 @@ def test_verify_erased_counts_a_chunk_caught_mid_swap(spark, tmp_path,
     monkeypatch.undo()
     assert any(e.startswith((".compact_old.", "_compact_old."))
                for e in os.listdir(os.path.join(d, "tier=0")))
+    assert os.path.isdir(os.path.join(d, "_compact_stage"))
     spark.catalog.refreshByPath(d)
     assert spark.read.parquet(d).where(
         F.col("doc_id").isin(ids)).count() < want
+
+    def tree():
+        return sorted(os.path.relpath(os.path.join(r, n), d)
+                      for r, ds, fs in os.walk(d) for n in ds + fs)
+
+    before = tree()
     assert verify_erased(spark, d, ids) == want
+    assert tree() == before
 
 
 def test_delete_job_count_does_not_grow_with_touched_chunks(spark, store,

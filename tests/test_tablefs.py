@@ -11,7 +11,12 @@ import os
 
 import pytest
 
-from pyhctsa_spark.operators.tablefs import recover, replace_dir, swap_names
+from pyhctsa_spark.operators.tablefs import (
+    recover,
+    replace_dir,
+    stranded,
+    swap_names,
+)
 
 
 def _table(d, tag):
@@ -39,7 +44,12 @@ def test_recover_repairs_each_crash_state(tmp_path):
     _table(c, "c-new")
     _table(swap_names(c)[1], "c-old")
 
+    # a reader finds b's only copy and moves nothing
+    listing = sorted(os.listdir(parent))
+    assert stranded(parent) == [swap_names(b)[1]]
+    assert sorted(os.listdir(parent)) == listing
     recover(parent)
+    assert stranded(parent) == []
     assert (_tag(a), _tag(b), _tag(c)) == ("a-live", "b-live", "c-new")
     assert sorted(os.listdir(parent)) == ["a", "b", "c"]
     # a second pass finds nothing to repair and changes nothing
@@ -60,6 +70,7 @@ def test_recover_repairs_underscore_named_leftovers(tmp_path):
     _table(os.path.join(parent, "_compact_old.b"), "b-live")
     _table(c, "c-new")
     _table(os.path.join(parent, "_compact_old.c"), "c-old")
+    assert stranded(parent) == [os.path.join(parent, "_compact_old.b")]
     recover(parent)
     assert (_tag(a), _tag(b), _tag(c)) == ("a-live", "b-live", "c-new")
     assert sorted(os.listdir(parent)) == ["a", "b", "c"]
