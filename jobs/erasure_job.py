@@ -103,19 +103,25 @@ def _erase_cagg_store(spark, path, ids, args) -> dict:
     }
 
 
-def _erase_index(spark, path, ids, args, *, module, read_meta, compact,
-                 drop_col, tables, id_col, stats) -> dict:
+def _erase_index(spark, path, ids, args, *, module, compact, drop_col,
+                 tables, id_col, stats) -> dict:
     """Erase ``ids`` from a persistent index through its compaction's
-    drop rewrite, with the ids typed by the index's recorded id type."""
-    mod = importlib.import_module(f"pyhctsa_spark.operators.{module}")
-    typed = _typed_ids(ids, getattr(mod, read_meta)(path)["id_type"])
+    drop rewrite, with the ids typed by the index's recorded id type,
+    and count what is left through the index's snapshot table over
+    every sub-table that holds ids."""
+    from pyhctsa_spark.operators.tablefs import SnapshotTable
+
+    table = SnapshotTable(path)
+    typed = _typed_ids(ids, table.manifest()["props"]["id_type"])
     drop = spark.createDataFrame(
         [(i,) for i in typed],
         f"{drop_col} {'long' if isinstance(typed[0], int) else 'string'}",
     )
+    mod = importlib.import_module(f"pyhctsa_spark.operators.{module}")
     info = getattr(mod, compact)(spark, path, drop_ids=drop, id_col=drop_col)
-    left = _count_ids([spark.read.parquet(f"{path}/{t}") for t in tables],
-                      id_col, typed)
+    left = _count_ids(
+        [df for df in (table.read(spark, t) for t in tables)
+         if df is not None], id_col, typed)
     return {**{k: info[k] for k in stats}, "rows_remaining": left}
 
 
@@ -135,7 +141,7 @@ _TARGETS = {
         "dedup_index path: erase the ids' searchability "
         "(compact_minhash_index drop rewrite)",
         functools.partial(
-            _erase_index, module="dedup_index", read_meta="read_index_meta",
+            _erase_index, module="dedup_index",
             compact="compact_minhash_index", drop_col="doc_id",
             tables=("sigs", "bands"), id_col="doc_id",
             stats=("sigs", "bands"))),
@@ -144,7 +150,7 @@ _TARGETS = {
         "(compact_search_index drop rewrite; df/stats recomputed from "
         "surviving postings)",
         functools.partial(
-            _erase_index, module="search_index", read_meta="read_index_meta",
+            _erase_index, module="search_index",
             compact="compact_search_index", drop_col="doc_id",
             tables=("postings",), id_col="doc_id", stats=("postings",))),
     "ivf_index": _Target(
@@ -152,17 +158,19 @@ _TARGETS = {
         "(compact_ivf_index drop rewrite of the inverted lists; "
         "centroids untouched)",
         functools.partial(
-            _erase_index, module="similarity", read_meta="read_ivf_meta",
+            _erase_index, module="similarity",
             compact="compact_ivf_index", drop_col="vec_id",
-            tables=("lists",), id_col="nid", stats=("lists",))),
+            tables=("lists", "lists_delta"), id_col="nid",
+            stats=("lists",))),
     "ivfpq_index": _Target(
         "IVFPQ code-index path: erase the ids' PQ codes from ANN "
         "retrieval (compact_ivfpq_index drop rewrite; centroids/codebooks "
         "untouched)",
         functools.partial(
-            _erase_index, module="pq", read_meta="read_pq_meta",
+            _erase_index, module="pq",
             compact="compact_ivfpq_index", drop_col="vec_id",
-            tables=("lists",), id_col="nid", stats=("lists",))),
+            tables=("lists", "lists_delta"), id_col="nid",
+            stats=("lists",))),
 }
 
 

@@ -42,9 +42,6 @@ late rows landing in old windows.
 from __future__ import annotations
 
 import os
-import shutil
-import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -147,49 +144,43 @@ def _with_chunk(df: DataFrame, chunk_windows: int) -> DataFrame:
     )
 
 
+def _chunk_map(dirs: list[str]) -> dict[str, int]:
+    """{chunk: generation} of live ``gen=G/chunk=C`` directories."""
+    return {c.split("=", 1)[1]: int(g.split("=", 1)[1])
+            for g, c in (d.split("/") for d in dirs)}
+
+
 class CaggSnapshotStore:
     """Snapshot-committed continuous-aggregate store (Iceberg-lite).
 
     Rewriting chunk directories in place is not crash-atomic: a failure
     mid-refresh (or a replayed streaming batch after a crash between
-    data write and commit marker) could double-merge a delta. This
-    store removes that window the way a table format does:
+    data write and commit) could double-merge a delta. This store is a
+    ``tablefs.SnapshotTable`` whose one sub-table holds the states:
 
     - chunk data lives under ``<path>/gen=<G>/chunk=<C>/`` — generation
       directories are IMMUTABLE once referenced;
-    - ``_MANIFEST.json`` maps each chunk to the generation that owns it,
-      plus the committed-batch high-water mark; it is the ONLY mutable state
-      and is published atomically (``tablefs.publish``);
+    - the table's manifest names each chunk's live directory, the store
+      layout and the committed-batch high-water mark;
     - a refresh writes its touched chunks into a brand-new generation,
-      then publishes a manifest pointing those chunks at it. Crash
-      before publish: the old manifest still references the old chunk
+      then commits a manifest pointing those chunks at it. Crash before
+      the commit: the old manifest still references the old chunk
       versions, so a replay recomputes from unchanged inputs —
       exactly-once without coordination. The orphaned generation is
-      garbage-collected by the next successful commit;
+      deleted by the next writer;
     - a committed ``batch_id`` makes the refresh a no-op (streaming
       foreachBatch redelivery).
 
-    Concurrency: mutating operations (materialize / refresh / expire)
-    serialize on a lease-file writer lock (``_WRITER.lock``), so two
-    concurrent refreshes cannot interleave read-manifest → publish and
-    lose a generation — the second writer blocks, then sees the first
-    writer's manifest. Crashed writers are recovered by lease expiry
-    (stale locks are atomically renamed away, so two waiters cannot
-    both "take over"). Readers need no lock: GC keeps every chunk
-    directory referenced by the current OR the immediately previous
-    manifest, so a reader that resolved paths just before a commit
-    still finds its files; only generations superseded TWICE are
-    deleted. (One-commit grace, the same contract as Iceberg's
-    snapshot-expiry retention window.)
+    Writes serialize on the table's writer lease; readers need no lock
+    and keep the files of the previous snapshot for one commit. The
+    last ``snapshot_retain`` snapshots stay readable through
+    ``read_at``.
 
     On a real warehouse this is an Iceberg/Delta snapshot commit; the
     manifest here is the sandbox stand-in with identical semantics.
     """
 
-    MANIFEST = "_MANIFEST.json"
-    WRITER_LOCK = "_WRITER.lock"
-    SNAPSHOT_DIR = "_snapshots"
-    LEASE_SEC = 300.0
+    MANIFEST = tablefs.SnapshotTable.MANIFEST
 
     def __init__(
         self,
@@ -210,7 +201,9 @@ class CaggSnapshotStore:
         bound via functools.partial) to snapshot-commit a different
         aggregate. The only contract: merge(partial(A) ∪ partial(B))
         == partial(A ∪ B), states keyed by (by..., widx), and every
-        merge-fn group key present in the partial output."""
+        merge-fn group key present in the partial output.
+        ``snapshot_retain`` (at least 2) is how many committed
+        snapshots stay readable, Iceberg's snapshot-expiry knob."""
         self.path = path
         self.by = list(by or ["user_id"])
         self.on = on
@@ -219,125 +212,49 @@ class CaggSnapshotStore:
         self.chunk_windows = chunk_windows
         self._partial = partial_fn or cagg_partial
         self._merge = merge_fn or cagg_merge
-        # how many committed snapshots stay readable (time travel +
-        # reader grace). 2 == the original current+previous contract;
-        # raising it trades disk for a deeper read_at() horizon,
-        # exactly Iceberg's snapshot-expiry retention knob.
-        self.snapshot_retain = max(2, int(snapshot_retain))
+        self.table = tablefs.SnapshotTable(path, retain=snapshot_retain)
+        self.snapshot_retain = self.table.retain
 
     # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, self.MANIFEST)
-
     def manifest(self) -> dict:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return {"gen": -1, "chunks": {}, "last_batch": None}
-        import json
-
-        with open(p) as f:
-            return json.load(f)
+        """The committed snapshot: ``gen``, ``chunks`` ({chunk:
+        generation}), ``last_batch`` and, when recorded, ``layout``."""
+        man = self.table.manifest()
+        return {"gen": man["gen"],
+                "chunks": _chunk_map(man["tables"].get("", [])),
+                "last_batch": man["last_batch"], **man["props"]}
 
     def _layout(self) -> dict:
         return {"window_micros": int(self.window_micros),
                 "chunk_windows": int(self.chunk_windows), "by": self.by}
 
-    def _checked_manifest(self) -> dict:
-        """The manifest, once this object's layout is known to be the
-        store's. Windows are numbered per ``window_micros`` and chunks
-        per ``chunk_windows``, so a write through another layout would
-        miss the states it must merge or evict and commit duplicate
-        (key, window) states. A manifest that records no layout (a store
-        written before layouts were recorded) is accepted as it is."""
-        man = self.manifest()
-        have = man.get("layout")
+    def _check_layout(self, man: dict) -> None:
+        """Refuse a write through another layout. Windows are numbered
+        per ``window_micros`` and chunks per ``chunk_windows``, so such a
+        write would miss the states it must merge or evict and commit
+        duplicate (key, window) states. A manifest that records no
+        layout (a store written before layouts were recorded) is
+        accepted as it is."""
+        have = man["props"].get("layout")
         if have is not None and have != self._layout():
             raise ValueError(
                 f"cagg store {self.path} was materialized with layout "
                 f"{have}; this store object has {self._layout()}"
             )
-        return man
-
-    def _publish(self, man: dict, prev: dict | None = None) -> None:
-        import json
-
-        # carry the superseded manifest's chunk map so GC can grant it
-        # a one-commit grace period (readers mid-scan on the previous
-        # snapshot keep their files until the NEXT commit)
-        if prev is not None:
-            man["prev_chunks"] = dict(prev.get("chunks", {}))
-        # last-moment ownership check: if our lease expired during a
-        # long Spark write and another writer took over, abort LOUDLY
-        # instead of publishing over its commit (silent lost update).
-        # A steal between this read and the publish remains possible in
-        # a microsecond window — content-CAS needs a real catalog
-        # (Iceberg/Delta commit); this is the sandbox stand-in.
-        tok = getattr(self, "_lease_token", None)
-        if tok is not None:
-            try:
-                with open(self._lock_path()) as f:
-                    held = f.read().split()[0]
-            except OSError:
-                held = None
-            if held != tok:
-                raise RuntimeError(
-                    f"writer lease on {self._lock_path()} was lost before "
-                    "commit (lease expired mid-write and another writer "
-                    "took over) — aborting publish; re-run the refresh"
-                )
-        tablefs.publish(self._manifest_path(), json.dumps(man))
-        # record the committed snapshot for time travel: a copy of the
-        # chunk map keyed by generation, written AFTER the commit point
-        # (a crash between the two leaves the store fully consistent —
-        # the snapshot is then recorded lazily by _snapshot_maps's
-        # current-manifest fallback)
-        tablefs.publish(
-            os.path.join(
-                self.path, self.SNAPSHOT_DIR, f"gen={man['gen']}.json"
-            ),
-            json.dumps({"gen": man["gen"],
-                        "chunks": dict(man["chunks"]),
-                        "last_batch": man.get("last_batch"),
-                        "committed_at": time.time()}),
-        )
 
     # -- snapshots (time travel) -------------------------------------------
-    def _snapshot_maps(self) -> dict[int, dict]:
-        """gen -> snapshot descriptor for every retained snapshot file,
-        always including the current manifest (covers stores written
-        before snapshots existed and the crash window above)."""
-        import json
-
-        out: dict[int, dict] = {}
-        sdir = os.path.join(self.path, self.SNAPSHOT_DIR)
-        if os.path.isdir(sdir):
-            for fn in os.listdir(sdir):
-                if fn.startswith("gen=") and fn.endswith(".json"):
-                    try:
-                        with open(os.path.join(sdir, fn)) as f:
-                            s = json.load(f)
-                        out[int(s["gen"])] = s
-                    except (OSError, ValueError, KeyError):
-                        continue
-            out.pop(-1, None)
-        man = self.manifest()
-        if man["gen"] >= 0 and man["gen"] not in out:
-            out[man["gen"]] = {"gen": man["gen"],
-                               "chunks": dict(man["chunks"]),
-                               "last_batch": man.get("last_batch"),
-                               "committed_at": None}
-        return out
+    def _snapshots(self) -> dict[int, dict]:
+        man = self.table.manifest()
+        return {s["gen"]: s for s in (*man["history"], man) if s["gen"] >= 0}
 
     def snapshots(self) -> list[dict]:
         """Retained snapshot descriptors, oldest first — the read_at()
         horizon."""
-        maps = self._snapshot_maps()
-        gens = sorted(maps)[-self.snapshot_retain:]
         return [
-            {"gen": g, "n_chunks": len(maps[g]["chunks"]),
-             "committed_at": maps[g].get("committed_at"),
-             "last_batch": maps[g].get("last_batch")}
-            for g in gens
+            {"gen": g, "n_chunks": len(s["tables"].get("", [])),
+             "committed_at": s.get("committed_at"),
+             "last_batch": s["last_batch"]}
+            for g, s in sorted(self._snapshots().items())
         ]
 
     def read_at(self, spark: SparkSession, gen: int) -> DataFrame:
@@ -346,151 +263,36 @@ class CaggSnapshotStore:
         its exact chunk versions — a refresh after a bad delta can be
         audited against the pre-refresh snapshot, the Iceberg
         ``VERSION AS OF`` read."""
-        maps = self._snapshot_maps()
-        retained = sorted(maps)[-self.snapshot_retain:]
-        if gen not in retained:
+        snaps = self._snapshots()
+        if gen not in snaps:
             raise ValueError(
                 f"generation {gen} is not a retained snapshot "
-                f"(retained: {retained}; snapshot_retain="
+                f"(retained: {sorted(snaps)}; snapshot_retain="
                 f"{self.snapshot_retain})"
             )
-        paths = self._chunk_paths({"chunks": maps[gen]["chunks"]})
-        if not paths:
+        df = self.table.read(spark, "", snaps[gen])
+        if df is None:
             raise ValueError(f"snapshot gen={gen} references no chunks")
-        return (
-            spark.read.option("basePath", self.path)
-            .parquet(*paths)
-            .drop("gen")
-        )
-
-    # -- writer lease --------------------------------------------------------
-    def _lock_path(self) -> str:
-        return os.path.join(self.path, self.WRITER_LOCK)
-
-    @contextmanager
-    def _writer_lease(self, timeout: float = 60.0):
-        """Exclusive writer lease via O_CREAT|O_EXCL lock file.
-
-        The lock records ``<token> <expiry>`` where token is unique per
-        acquisition. Stale-lease takeover renames the lock to a unique
-        name (atomic — one winner per file) and then RE-READS the
-        renamed file: if its content differs from the expired lease that
-        was inspected, the rename grabbed a FRESH lock a racing waiter
-        created in between, so it is renamed back and the poll resumes
-        (closes the inspect/rename TOCTOU). An unreadable lock (writer
-        crashed between create and write, or disk-full truncation) gets
-        a short mtime-based grace instead of blocking forever. Release
-        and publish are ownership-checked by token, so a writer whose
-        lease expired mid-job can neither delete the usurper's lock nor
-        silently publish over its commit. Not fair, but safe, and
-        readers never block.
-        """
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        lock = self._lock_path()
-        token = f"{os.getpid()}.{uuid.uuid4().hex}"
-        deadline = time.time() + timeout
-        while True:
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, f"{token} {time.time() + self.LEASE_SEC}"
-                         .encode())
-                os.close(fd)
-                break
-            except FileExistsError:
-                held: str | None
-                try:
-                    with open(lock) as f:
-                        held = f.read()
-                    expiry = float(held.split()[1])
-                except (IndexError, ValueError):
-                    # created but not yet (or never) written: grace from
-                    # file mtime covers the in-flight writer's
-                    # create->write window, then it's recoverable junk
-                    held = None
-                    try:
-                        expiry = os.stat(lock).st_mtime + 5.0
-                    except OSError:
-                        continue  # vanished under us; re-poll
-                except OSError:
-                    continue  # vanished under us; re-poll
-                if time.time() > expiry:
-                    stale = f"{lock}.stale.{os.getpid()}.{time.time_ns()}"
-                    try:
-                        os.rename(lock, stale)  # atomic: one winner
-                    except OSError:
-                        continue  # lost the takeover race; re-poll
-                    try:
-                        with open(stale) as f:
-                            got = f.read()
-                    except OSError:
-                        got = None
-                    if held is not None and got is not None and got != held:
-                        # we renamed a FRESH lock, not the expired one —
-                        # restore it and keep waiting
-                        try:
-                            os.rename(stale, lock)
-                        except OSError:
-                            pass
-                        continue
-                    try:
-                        os.unlink(stale)
-                    except OSError:
-                        pass
-                    continue
-                if time.time() > deadline:
-                    raise TimeoutError(
-                        f"writer lease on {lock} not acquired in "
-                        f"{timeout}s (held, expires {expiry:.0f})"
-                    )
-                time.sleep(0.05)
-        self._lease_token = token
-        try:
-            yield
-        finally:
-            self._lease_token = None
-            # release only OUR lease: rename-out, verify token, unlink —
-            # if the lease expired and a usurper holds the path now, its
-            # lock is put back untouched
-            out = f"{lock}.rel.{os.getpid()}.{time.time_ns()}"
-            try:
-                os.rename(lock, out)
-                with open(out) as f:
-                    mine = f.read().split()[0] == token
-                if mine:
-                    os.unlink(out)
-                else:
-                    os.rename(out, lock)
-            except OSError:
-                pass
+        return df
 
     # -- io ----------------------------------------------------------------
-    def _chunk_paths(self, man: dict, chunks=None) -> list[str]:
-        items = man["chunks"].items()
-        if chunks is not None:
-            want = {str(c) for c in chunks}
-            items = [(c, g) for c, g in items if c in want]
-        return [
-            os.path.join(self.path, f"gen={g}", f"chunk={c}")
-            for c, g in items
-        ]
-
     def read(self, spark: SparkSession, chunks=None) -> DataFrame:
         """The committed view (optionally restricted to given chunks).
         Pruning is structural: only the referenced chunk directories are
         ever listed — no filter needed, no orphan generation is read."""
-        man = self.manifest()
-        paths = self._chunk_paths(man, chunks)
-        if not paths:
+        dirs = self.table.manifest()["tables"].get("", [])
+        if chunks is not None:
+            want = {f"chunk={c}" for c in chunks}
+            dirs = [d for d in dirs if d.split("/")[1] in want]
+        df = self.table.read(spark, "", dirs=dirs)
+        if df is None:
             raise ValueError("snapshot store is empty — materialize first")
-        return (
-            spark.read.option("basePath", self.path)
-            .parquet(*paths)
-            .drop("gen")
-        )
+        return df
 
-    def _write_generation(self, states: DataFrame, gen: int) -> None:
+    def _write_generation(self, states: DataFrame, man: dict) -> set[str]:
+        """Write ``states`` as the pending commit's generation; returns
+        the chunks it holds."""
+        d = self.table.gen_dir("", man)
         (
             # repartition on chunk: each chunk dir gets ONE part file
             # instead of one per shuffle task — an exchange of merged
@@ -498,141 +300,82 @@ class CaggSnapshotStore:
             states.repartition("chunk")
             .write.mode("overwrite")  # clobbers a crashed attempt
             .partitionBy("chunk")
-            .parquet(os.path.join(self.path, f"gen={gen}"))
+            .parquet(d)
         )
+        return {e.split("=", 1)[1] for e in os.listdir(d)
+                if e.startswith("chunk=")}
 
-    def _gc(self, man: dict) -> None:
-        """Delete chunk dirs no RETAINED snapshot references (orphans
-        from crashed refreshes + versions superseded beyond the
-        retention window), and expire snapshot files that fell out of
-        the window. With the default snapshot_retain=2 this is the
-        original contract: the previous manifest's chunks get a
-        one-commit grace period so a reader that resolved paths from it
-        never has files removed mid-scan. Best-effort."""
-        if not os.path.isdir(self.path):
-            return
-        live = {(str(c), int(g)) for c, g in man["chunks"].items()}
-        live |= {(str(c), int(g))
-                 for c, g in man.get("prev_chunks", {}).items()}
-        maps = self._snapshot_maps()
-        retained = sorted(maps)[-self.snapshot_retain:]
-        for g0 in retained:
-            live |= {(str(c), int(g))
-                     for c, g in maps[g0]["chunks"].items()}
-        sdir = os.path.join(self.path, self.SNAPSHOT_DIR)
-        if os.path.isdir(sdir):
-            for fn in os.listdir(sdir):
-                if fn.startswith("gen=") and fn.endswith(".json"):
-                    try:
-                        g = int(fn[len("gen="):-len(".json")])
-                    except ValueError:
-                        continue
-                    if g not in retained:
-                        try:
-                            os.unlink(os.path.join(sdir, fn))
-                        except OSError:
-                            pass
-        for gdir in os.listdir(self.path):
-            if not gdir.startswith("gen="):
-                continue
-            g = int(gdir.split("=", 1)[1])
-            gpath = os.path.join(self.path, gdir)
-            for cdir in os.listdir(gpath):
-                if not cdir.startswith("chunk="):
-                    continue
-                if (cdir.split("=", 1)[1], g) not in live:
-                    shutil.rmtree(os.path.join(gpath, cdir))
-            if not any(e.startswith("chunk=") for e in os.listdir(gpath)):
-                shutil.rmtree(gpath)
+    def _commit(self, man: dict, touched, written: set[str], batch_id=None,
+                keep_history: bool = True) -> None:
+        """Point each touched chunk at the pending generation, or drop it
+        when the generation holds none of its states, and commit."""
+        chunks = _chunk_map(man["tables"].get("", []))
+        for c in map(str, touched):
+            if c in written:
+                chunks[c] = man["gen"]
+            else:
+                chunks.pop(c, None)
+        man["tables"][""] = sorted(f"gen={g}/chunk={c}"
+                                   for c, g in chunks.items())
+        if batch_id is not None:
+            man["last_batch"] = batch_id
+        self.table.commit(man, keep_history=keep_history)
 
     # -- operations ---------------------------------------------------------
     def materialize(self, events: DataFrame) -> None:
-        with self._writer_lease():
-            # a (re-)materialize starts a new history: stale snapshot
-            # descriptors from a previous store life must not leak into
-            # the new retention window
-            sdir = os.path.join(self.path, self.SNAPSHOT_DIR)
-            if os.path.isdir(sdir):
-                shutil.rmtree(sdir, ignore_errors=True)
+        """(Re)build the store from ``events``; starts a new history."""
+        with self.table.writer() as man:
             states = _with_chunk(
                 self._partial(events, self.on, self.by, self.value_col,
                               self.window_micros),
                 self.chunk_windows,
             )
-            self._write_generation(states, 0)
-            chunks = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(os.path.join(self.path, "gen=0"))
-                if d.startswith("chunk=")
-            )
-            self._publish({
-                "gen": 0,
-                "chunks": {str(c): 0 for c in chunks},
-                "last_batch": None,
-                "layout": self._layout(),
-            })
+            written = self._write_generation(states, man)
+            man.update(tables={}, props={"layout": self._layout()},
+                       last_batch=None)
+            self._commit(man, written, written, keep_history=False)
 
     def refresh(
         self, spark: SparkSession, delta: DataFrame, batch_id=None
     ) -> dict:
-        with self._writer_lease():
-            return self._refresh_locked(spark, delta, batch_id)
-
-    def _refresh_locked(
-        self, spark: SparkSession, delta: DataFrame, batch_id=None
-    ) -> dict:
-        # manifest is read UNDER the lease — a concurrent refresh that
-        # committed while we waited is visible here, so its generation
-        # cannot be lost
-        man = self._checked_manifest()
-        if man["gen"] < 0:  # this refresh creates the store
-            man["layout"] = self._layout()
-        # streaming batch ids are MONOTONIC per checkpoint, so the
-        # committed-batch state is a single high-water mark (a list
-        # would grow without bound over a long-lived stream and cost a
-        # linear scan + full rewrite every commit)
-        if (
-            batch_id is not None
-            and man["last_batch"] is not None
-            and batch_id <= man["last_batch"]
-        ):
-            return {"touched_chunks": [], "delta_states": 0,
-                    "skipped_committed_batch": True}
-        dp = _with_chunk(
-            self._partial(delta, self.on, self.by, self.value_col,
-                          self.window_micros),
-            self.chunk_windows,
-        ).persist()
-        # one probe job gives both the touched chunks and the delta's
-        # state count
-        probe = dp.groupBy("chunk").count().collect()
-        touched = [r["chunk"] for r in probe]
-        if not touched:
-            dp.unpersist()
-            return {"touched_chunks": [], "delta_states": 0}
-        n_delta = sum(int(r["count"]) for r in probe)
-        have = [c for c in touched if str(c) in man["chunks"]]
-        combined = dp.drop("chunk")
-        if have:
-            combined = combined.unionByName(
-                self.read(spark, chunks=have).drop("chunk")
+        # the manifest is read UNDER the lease — a concurrent refresh
+        # that committed while we waited is visible here, so its
+        # generation cannot be lost
+        with self.table.writer() as man:
+            self._check_layout(man)
+            if man["gen"] == 0:  # this refresh creates the store
+                man["props"]["layout"] = self._layout()
+            if self.table.committed(batch_id, man):
+                return {"touched_chunks": [], "delta_states": 0,
+                        "skipped_committed_batch": True}
+            dp = _with_chunk(
+                self._partial(delta, self.on, self.by, self.value_col,
+                              self.window_micros),
+                self.chunk_windows,
+            ).persist()
+            # one probe job gives both the touched chunks and the
+            # delta's state count
+            probe = dp.groupBy("chunk").count().collect()
+            touched = [r["chunk"] for r in probe]
+            if not touched:
+                dp.unpersist()
+                return {"touched_chunks": [], "delta_states": 0}
+            n_delta = sum(int(r["count"]) for r in probe)
+            chunks = _chunk_map(man["tables"].get("", []))
+            have = [c for c in touched if str(c) in chunks]
+            combined = dp.drop("chunk")
+            if have:
+                combined = combined.unionByName(
+                    self.read(spark, chunks=have).drop("chunk")
+                )
+            merged = _with_chunk(
+                self._merge(combined, self.by), self.chunk_windows
             )
-        merged = _with_chunk(
-            self._merge(combined, self.by), self.chunk_windows
-        )
-        gen = man["gen"] + 1
-        self._write_generation(merged, gen)
-        prev = {"chunks": dict(man["chunks"])}
-        man["gen"] = gen
-        for c in touched:
-            man["chunks"][str(c)] = gen
-        if batch_id is not None:
-            man["last_batch"] = batch_id
-        self._publish(man, prev=prev)  # <- the commit point; everything
-        #    before is invisible to readers and replayed safely
-        self._gc(man)
-        dp.unpersist()
-        return {"touched_chunks": sorted(touched), "delta_states": n_delta}
+            self._commit(man, touched, self._write_generation(merged, man),
+                         batch_id)
+            dp.unpersist()
+            return {"touched_chunks": sorted(touched),
+                    "delta_states": n_delta}
 
     def delete_keys(
         self, spark: SparkSession, keys: list, key_col: str | None = None,
@@ -643,18 +386,19 @@ class CaggSnapshotStore:
         the normal snapshot path (a crash mid-erasure leaves the prior
         snapshot fully intact; re-run converges).
 
-        ``purge_history=True`` (the compliance default) also truncates
-        the time-travel history to THIS commit — retained snapshots
-        would otherwise keep resolving chunk versions that still
-        contain the erased keys. ``False`` preserves the read_at()
-        window (audit use; the erased data stays readable until the
-        older snapshots age out of the retention window)."""
+        ``purge_history=True`` (the compliance default) drops the
+        time-travel history in the erasure's own commit, and the
+        superseded chunk versions leave disk right after it (or, after
+        a crash, when the next writer takes the lease). ``False``
+        preserves the read_at() window (audit use; the erased data stays
+        readable until the older snapshots age out of the retention
+        window)."""
         key_col = key_col or self.by[0]
         raw_keys = set(keys)
         if not raw_keys:
             return {"touched_chunks": [], "states_deleted": 0}
-        with self._writer_lease():
-            man = self._checked_manifest()
+        with self.table.writer() as man:
+            self._check_layout(man)
             store = self.read(spark)
             # normalize the batch against the STORE's key type: a mixed
             # int/str list must neither crash Python's cross-type sort
@@ -689,64 +433,25 @@ class CaggSnapshotStore:
             kept = key_set_filter(
                 spark, self.read(spark, chunks=touched), key, ks, keep=True
             )
-            gen = man["gen"] + 1
-            self._write_generation(kept, gen)
-            written = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(os.path.join(self.path, f"gen={gen}"))
-                if d.startswith("chunk=")
-            }
-            prev = {"chunks": dict(man["chunks"])}
-            man["gen"] = gen
-            for c in touched:
-                if c in written:
-                    man["chunks"][str(c)] = gen
-                else:
-                    # every state in the chunk belonged to erased keys
-                    del man["chunks"][str(c)]
-            self._publish(man, prev=prev)
-            if purge_history:
-                sdir = os.path.join(self.path, self.SNAPSHOT_DIR)
-                if os.path.isdir(sdir):
-                    for fn in os.listdir(sdir):
-                        if (fn.startswith("gen=") and fn.endswith(".json")
-                                and fn != f"gen={gen}.json"):
-                            try:
-                                os.unlink(os.path.join(sdir, fn))
-                            except OSError:
-                                pass
-                # prev_chunks would also grant the superseded (dirty)
-                # chunk versions a one-commit GC grace — drop it so the
-                # erased bytes leave disk NOW
-                man.pop("prev_chunks", None)
-                self._publish(man)
-            self._gc(man)
+            self._commit(man, touched, self._write_generation(kept, man),
+                         keep_history=not purge_history)
             return {"touched_chunks": touched, "states_deleted": n_del}
 
     def expire(self, keep_from_widx: int) -> list[int]:
         """Retention on the snapshot store: drop every chunk whose LAST
         window is older than ``keep_from_widx``. Eviction here is a
-        pure manifest edit — one atomic file replace de-references the
-        expired chunks; their directories go in the same best-effort GC
-        that cleans superseded generations. Boundary chunks containing
-        any live window are kept (same floor rule as
-        retention.RetentionPolicy.cutoff_chunk)."""
-        with self._writer_lease():
+        pure manifest edit — one commit de-references the expired
+        chunks (with its own generation number, though it writes no
+        data); their directories go after the one-commit reader grace.
+        Boundary chunks containing any live window are kept (same floor
+        rule as retention.RetentionPolicy.cutoff_chunk)."""
+        with self.table.writer() as man:
+            self._check_layout(man)
             cut = keep_from_widx // self.chunk_windows
-            man = self._checked_manifest()
-            doomed = sorted(int(c) for c in man["chunks"] if int(c) < cut)
-            if not doomed:
-                return []
-            prev = {"chunks": dict(man["chunks"])}
-            for c in doomed:
-                del man["chunks"][str(c)]
-            # an eviction is a COMMIT: bump the manifest generation so
-            # its snapshot gets its own id instead of overwriting the
-            # last refresh's (no gen=N data directory is written — gen
-            # directory numbers may skip, which readers never see)
-            man["gen"] = man["gen"] + 1
-            self._publish(man, prev=prev)
-            self._gc(man)
+            chunks = _chunk_map(man["tables"].get("", []))
+            doomed = sorted(int(c) for c in chunks if int(c) < cut)
+            if doomed:
+                self._commit(man, doomed, set())
             return doomed
 
 

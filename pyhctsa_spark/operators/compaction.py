@@ -26,7 +26,7 @@ Design (mirrors TimescaleDB ``compress_chunk`` / Iceberg ``rewrite_data_files``)
   job count does not grow with the candidate count; a fresh
   ``write_tier_chunked`` store has no candidates and runs no job.
 - SWAP (``retention._swap_chunks``): the driver moves each staged chunk
-  in with ``tablefs.replace_dir``. A crash leaves each chunk its
+  in with the ``tablefs`` directory swap. A crash leaves each chunk its
   original or its compacted version; one caught between the two
   renames is restored, and a leftover stage dropped, by
   ``_recover_store``, which the next invocation runs first.

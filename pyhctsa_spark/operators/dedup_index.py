@@ -3,13 +3,14 @@ detection — the "daily crawl delta" shape: index the corpus once, then
 screen each new batch against it without re-shingling or re-shuffling
 the indexed documents.
 
-Layout under ``path`` (plain parquet, same manifest-less append-only
-convention as the rollup chunk store):
+Layout under ``path`` (a ``tablefs.SnapshotTable``: every write adds
+a ``gen=G`` directory and commits it by publishing the manifest):
 
-    sigs/    (doc_id, minhash_sig: array<bigint>)   one row per doc
-    bands/   (band_id: int, band_hash: bigint, doc_id)  bands x docs rows
-    _index_meta.json   {num_hashes, bands, rows_per_band, shingle_k,
-                        threshold, id_type}
+    sigs/gen=G/    (doc_id, minhash_sig: array<bigint>)   one row per doc
+    bands/gen=G/   (band_id: int, band_hash: bigint, doc_id)  bands x docs
+    _MANIFEST.json live generations, props {num_hashes, bands,
+                   rows_per_band, shingle_k, threshold, id_type},
+                   last committed stream batch
 
 Scale contract (what makes this the 100 TB shape):
 
@@ -24,10 +25,10 @@ Scale contract (what makes this the 100 TB shape):
   scan + one base scan, both map-side, with shuffles bounded by the
   DELTA (its shingle table and the candidate pairs), never the corpus.
   A daily 0.1% delta against a 100 TB index probes at scan speed.
-- ``append_to_minhash_index`` appends the delta's sigs/bands parquet —
-  no read-modify-write of existing index files, so repeated appends are
-  cheap and a crashed append leaves at worst duplicate band rows
-  (harmless: candidates are de-duplicated per pair at query time).
+- ``append_to_minhash_index`` adds the delta's sigs/bands as a new
+  generation — no read-modify-write of existing index files, so
+  repeated appends are cheap; a crashed append commits nothing, and a
+  stream's ``batch_id`` makes a replayed append a no-op.
 
 Verification is EXACT shingle Jaccard (like dedup.minhash_verified_pairs):
 the index prunes the pair space; every surviving candidate is verified
@@ -41,9 +42,6 @@ of operators/dedup.py.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators import tablefs
@@ -53,8 +51,6 @@ from pyhctsa_spark.operators.dedup import (
     derive_lsh_banding,
     minhash_signatures,
 )
-
-_META = "_index_meta.json"
 
 
 def _band_table(
@@ -155,14 +151,6 @@ def build_minhash_index(
         sigs = minhash_signatures(
             df, text_col, id_col, num_hashes, shingle_k, shingles=sh
         ).persist()
-    sigs.write.mode("overwrite").parquet(os.path.join(path, "sigs"))
-    _band_table(sigs, id_col, bands, rpb).write.mode("overwrite").parquet(
-        os.path.join(path, "bands")
-    )
-    sigs.unpersist()
-    sh.unpersist()
-    if collapse_exact:
-        with_rep.unpersist()
     meta = {
         "num_hashes": int(num_hashes),
         "bands": int(bands),
@@ -171,13 +159,33 @@ def build_minhash_index(
         "threshold": float(threshold),
         "id_type": df.select(id_col).schema[0].dataType.simpleString(),
     }
-    tablefs.publish(os.path.join(path, _META), json.dumps(meta))
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        man.update(tables={}, props=meta)
+        _write_sigs(table, man, sigs, id_col, replace=True)
+        table.commit(man)
+    sigs.unpersist()
+    sh.unpersist()
+    if collapse_exact:
+        with_rep.unpersist()
     return meta
 
 
+def _write_sigs(table, man: dict, sigs: DataFrame, id_col: str,
+                replace: bool) -> None:
+    """Write a signature batch and its band table as the pending
+    generation of ``sigs`` and ``bands``."""
+    meta = man["props"]
+    for name, out in (
+        ("sigs", sigs),
+        ("bands", _band_table(sigs, id_col, meta["bands"],
+                              meta["rows_per_band"])),
+    ):
+        table.write(man, name, out, replace=replace)
+
+
 def read_index_meta(path: str) -> dict:
-    with open(os.path.join(path, _META)) as fh:
-        return json.load(fh)
+    return tablefs.SnapshotTable(path).manifest()["props"]
 
 
 def compact_minhash_index(
@@ -186,41 +194,35 @@ def compact_minhash_index(
     drop_ids: DataFrame | None = None,
     id_col: str = "doc_id",
 ) -> dict:
-    """Rewrite the index in place: de-duplicate rows left by replayed
-    appends (crash between an append and its commit marker) and, when
-    ``drop_ids`` is given, ERASE those documents from the index — the
-    right-to-be-forgotten path (operators/deletion.py removes the
-    documents; this removes their searchability). Atomic per table via
-    the tablefs swap (crash-recoverable by tablefs.recover, which every
-    entry point runs first); a reader holding the old DataFrame may
-    need to re-read after the swap — same single-writer convention as
-    the chunk-store compactor.
+    """Rewrite the index as one generation: de-duplicate rows left by
+    appends of an id already present and, when ``drop_ids`` is given,
+    ERASE those documents from the index — the right-to-be-forgotten
+    path (operators/deletion.py removes the documents; this removes
+    their searchability). Both tables commit in one snapshot; an erasure
+    drops the index's history in that commit, so no file still holds
+    an erased id once it returns.
 
-    Returns {table: (rows_before, rows_after)} lineage counts.
+    Returns {table: (rows_before, rows_after)} lineage counts, the
+    rows after summed from the written parquet footers.
     """
-    tablefs.recover(path)
+    table = tablefs.SnapshotTable(path)
     stats: dict = {}
     drops = (
         F.broadcast(drop_ids.select(F.col(id_col).alias("doc_id")).distinct())
         if drop_ids is not None else None
     )
-    for table in ("sigs", "bands"):
-        d = os.path.join(path, table)
-        df = spark.read.parquet(d)
-        before = df.count()
-        if table == "sigs":
-            # one signature per doc: crash-replayed appends duplicate
-            # whole rows, so any representative per id is exact
-            clean = df.dropDuplicates(["doc_id"])
-        else:
-            clean = df.dropDuplicates(["band_id", "band_hash", "doc_id"])
-        if drops is not None:
-            clean = clean.join(drops, "doc_id", "left_anti")
-        tmp = tablefs.swap_names(d)[0]
-        clean.write.mode("overwrite").parquet(tmp)
-        after = spark.read.parquet(tmp).count()
-        tablefs.replace_dir(tmp, d)
-        stats[table] = (int(before), int(after))
+    with table.writer() as man:
+        for name, key in (("sigs", ["doc_id"]),
+                          ("bands", ["band_id", "band_hash", "doc_id"])):
+            df = table.read(spark, name, man)
+            # one signature per doc: re-appended ids duplicate whole
+            # rows, so any representative per key is exact
+            clean = df.dropDuplicates(key)
+            if drops is not None:
+                clean = clean.join(drops, "doc_id", "left_anti")
+            d = table.write(man, name, clean)
+            stats[name] = (int(df.count()), tablefs.footer_rows(d))
+        table.commit(man, keep_history=drop_ids is None)
     return stats
 
 
@@ -230,26 +232,32 @@ def append_to_minhash_index(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
+    batch_id: int | None = None,
 ) -> None:
     """Append a batch's signatures + bands to an existing index using
-    the INDEX's own parameters (read from meta — a mismatched banding
-    would silently miss every cross-batch pair). Caller contract: ids
-    not already present (re-appending a doc duplicates its band rows;
-    query-time pair dedup keeps results correct but wastes probes —
-    compact_minhash_index cleans them up)."""
-    tablefs.recover(path)
-    meta = read_index_meta(path)
-    sh = _shingle_df(df, text_col, id_col, meta["shingle_k"]).persist()
-    sigs = minhash_signatures(
-        df, text_col, id_col, meta["num_hashes"], meta["shingle_k"],
-        shingles=sh,
-    ).persist()
-    sigs.write.mode("append").parquet(os.path.join(path, "sigs"))
-    _band_table(
-        sigs, id_col, meta["bands"], meta["rows_per_band"]
-    ).write.mode("append").parquet(os.path.join(path, "bands"))
-    sigs.unpersist()
-    sh.unpersist()
+    the INDEX's own parameters (read from its props — a mismatched
+    banding would silently miss every cross-batch pair), as one new
+    generation. A stream passes its ``batch_id``: it is committed with
+    the data, and a batch already committed is skipped. Caller
+    contract: ids not already present (re-appending a doc duplicates
+    its band rows; query-time pair dedup keeps results correct but
+    wastes probes — compact_minhash_index cleans them up)."""
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        if table.committed(batch_id, man):
+            return
+        meta = man["props"]
+        sh = _shingle_df(df, text_col, id_col, meta["shingle_k"]).persist()
+        sigs = minhash_signatures(
+            df, text_col, id_col, meta["num_hashes"], meta["shingle_k"],
+            shingles=sh,
+        ).persist()
+        _write_sigs(table, man, sigs, id_col, replace=False)
+        if batch_id is not None:
+            man["last_batch"] = batch_id
+        table.commit(man)
+        sigs.unpersist()
+        sh.unpersist()
 
 
 def query_minhash_index(
@@ -283,8 +291,9 @@ def query_minhash_index(
     the result is materialized, so per-batch cache does not accumulate.
     """
     spark: SparkSession = delta.sparkSession
-    tablefs.recover(path)
-    meta = read_index_meta(path)
+    table = tablefs.SnapshotTable(path)
+    man = table.manifest()
+    meta = man["props"]
     if threshold is None:
         threshold = float(meta["threshold"])
     k = int(meta["shingle_k"])
@@ -298,7 +307,7 @@ def query_minhash_index(
         d_sigs, id_col, meta["bands"], meta["rows_per_band"]
     ).withColumnsRenamed({"doc_id": "d2", "band_hash": "bh2"})
 
-    idx_bands = spark.read.parquet(os.path.join(path, "bands"))
+    idx_bands = table.read(spark, "bands", man)
     cands = (
         idx_bands.join(
             F.broadcast(d_bands),

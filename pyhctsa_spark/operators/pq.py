@@ -39,8 +39,6 @@ lists next to brute-force and IVF ANN.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 from pyhctsa_spark.operators import tablefs
@@ -518,7 +516,8 @@ def ivfpq_write_index(
     """Materialize the composed index (faiss IndexIVFPQ on disk):
     cid-partitioned inverted lists holding ONLY (nid, code) — m*2 bytes
     of payload per vector — plus the centroid table and the PQ
-    codebooks. The one corpus shuffle (codes -> lists) happens here,
+    codebooks, committed as one snapshot of a ``tablefs.SnapshotTable``
+    at ``path``. The one corpus shuffle (codes -> lists) happens here,
     once, salted so a skewed list fans out over ``write_salt`` write
     tasks. Raw vectors are NOT stored: that is the point of PQ — a
     100 TB float corpus becomes a ~3-6 TB code index; exact rerank at
@@ -526,24 +525,17 @@ def ivfpq_write_index(
     table (stats-pruned point lookups).
 
     Returns inverted-list skew stats (ivf_list_stats)."""
+    from pyhctsa_spark.operators._local_df import one_slice_df
     from pyhctsa_spark.operators.similarity import (
-        _pick_num_centroids,
+        _ivf_sizes,
+        _write_lists,
         ivf_build,
         ivf_list_stats,
     )
 
-    tablefs.recover(path)
-    if num_centroids is None or write_salt is None:
-        # same salt derivation as ivf_write_index: one salt bucket per
-        # ~100k rows of a list (PQ rows are ~m*2 bytes, so this is
-        # conservative); a small index writes one file per list
-        n_corpus = corpus.count()
-        if num_centroids is None:
-            num_centroids = _pick_num_centroids(n_corpus)
-        if write_salt is None:
-            write_salt = max(
-                1, min(64, -(-n_corpus // (max(1, num_centroids) * 100_000)))
-            )
+    # same salt derivation as ivf_write_index (PQ rows are ~m*2 bytes,
+    # so one salt bucket per ~100k rows of a list is conservative)
+    num_centroids, write_salt = _ivf_sizes(corpus, num_centroids, write_salt)
     cents, assigned = ivf_build(
         corpus, num_centroids, vec_col, id_col,
         train_sample=train_sample, train_iters=ivf_train_iters,
@@ -552,46 +544,32 @@ def ivfpq_write_index(
                      train_iters=pq_train_iters,
                      train_sample=train_sample)
     codes = pq_encode(corpus, books, vec_col, id_col)
-    lists = codes.join(assigned.select("nid", "cid"), "nid")
-    lists = lists.repartition(
-        F.col("cid"),
-        F.pmod(F.xxhash64(F.col("nid").cast("string")), F.lit(write_salt)),
-    )
-    lists.write.mode("overwrite").partitionBy("cid").parquet(
-        f"{path}/lists"
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
     spark = corpus.sparkSession
     mm, kk, dsub = books.shape
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    one_slice_df(
-        spark,
-        [(int(s), int(j), [float(x) for x in books[s, j]])
-         for s in range(mm) for j in range(kk)],
-        "s int, j int, c array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    import json
-
-    n_cents = cents.count()
-    meta = {
-        "nlist": int(n_cents),
-        "m": int(mm), "ksub": int(kk), "dim": int(mm * dsub),
-        "write_salt": int(write_salt),
-        "id_type": corpus.select(id_col).schema[0].dataType.simpleString(),
-    }
-    tablefs.publish(os.path.join(path, _PQ_META), json.dumps(meta))
-    return ivf_list_stats(spark.read.parquet(f"{path}/lists"))
-
-
-_PQ_META = "_pq_meta.json"
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        man["tables"] = {}
+        _write_lists(table, man, codes.join(assigned.select("nid", "cid"),
+                                            "nid"), write_salt)
+        table.write(man, "centroids", cents)
+        table.write(man, "codebooks", one_slice_df(
+            spark,
+            [(int(s), int(j), [float(x) for x in books[s, j]])
+             for s in range(mm) for j in range(kk)],
+            "s int, j int, c array<double>",
+        ))
+        man["props"] = {
+            "nlist": int(table.read(spark, "centroids", man).count()),
+            "m": int(mm), "ksub": int(kk), "dim": int(mm * dsub),
+            "write_salt": int(write_salt),
+            "id_type": corpus.select(id_col).schema[0].dataType.simpleString(),
+        }
+        table.commit(man)
+    return ivf_list_stats(table.read(spark, "lists", man))
 
 
 def read_pq_meta(path: str) -> dict:
-    import json
-
-    with open(os.path.join(path, _PQ_META)) as fh:
-        return json.load(fh)
+    return tablefs.SnapshotTable(path).manifest()["props"]
 
 
 def append_to_ivfpq_index(
@@ -605,46 +583,43 @@ def append_to_ivfpq_index(
     the batch is assigned map-side against the index's own centroids
     and encoded against its own CODEBOOKS (both frozen at build — the
     faiss train-then-add contract), then the (nid, code, cid) rows
-    append into the ``lists_delta/`` heap. No existing file is read or
-    rewritten; probes union the heap; ``compact_ivfpq_index`` folds it.
+    are added as a new generation of the ``lists_delta`` heap. No
+    existing file is read or rewritten; probes union the heap;
+    ``compact_ivfpq_index`` folds it.
 
     Caller contract (same as the sibling indexes): ids not already
-    present; a replayed append duplicates rows until compaction.
+    present; appending an id again duplicates its row until compaction.
 
     Returns {appended, assign_cos_mean} — the drift counter reads
     against the IVF quantizer; codebook drift shows up the same way
     (both are trained on the same corpus snapshot)."""
     from pyhctsa_spark.operators.similarity import (
-        _DELTA_ROWS_PER_FILE,
+        _append_heap,
         _assign_cos_mean,
         _centroid_matrix,
         _with_cnorm,
     )
 
     spark = df.sparkSession
-    tablefs.recover(path)
-    C = _centroid_matrix(spark, path)
-    books = read_codebooks(spark, path)
-    base = df.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    # fused Arrow norm + assignment (r6), bit-identical to the old
-    # interpreted _norm + _nearest_cid_udf pair
-    assigned = _with_cnorm(base, centroids=C).persist()
-    try:
-        codes = pq_encode(df, books, vec_col, id_col)
-        delta = codes.join(assigned.select("nid", "cid"), "nid")
-        n = assigned.count()
-        files = max(1, -(-n // _DELTA_ROWS_PER_FILE))
-        (
-            delta.repartition(files)
-            .sortWithinPartitions("cid")  # row-group stats prune probes
-            .write.mode("append")
-            .parquet(os.path.join(path, "lists_delta"))
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        cents = table.read(spark, "centroids", man)
+        books = _codebooks(table.read(spark, "codebooks", man))
+        base = df.select(
+            F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("cv")
         )
-        drift = _assign_cos_mean(assigned, spark, path)
-    finally:
-        assigned.unpersist()
+        # fused Arrow norm + assignment (r6), bit-identical to the old
+        # interpreted _norm + _nearest_cid_udf pair
+        assigned = _with_cnorm(base, centroids=_centroid_matrix(cents)).persist()
+        try:
+            codes = pq_encode(df, books, vec_col, id_col)
+            n = assigned.count()
+            _append_heap(table, man,
+                         codes.join(assigned.select("nid", "cid"), "nid"), n)
+            drift = _assign_cos_mean(assigned, cents)
+        finally:
+            assigned.unpersist()
+        table.commit(man)
     return {"appended": int(n), "assign_cos_mean": drift}
 
 
@@ -655,25 +630,27 @@ def compact_ivfpq_index(
     id_col: str = "vec_id",
 ) -> dict:
     """Fold the append heap into the cid= partition layout,
-    de-duplicate replayed appends, and erase ``drop_ids`` (the
+    de-duplicate re-appended ids, and erase ``drop_ids`` (the
     right-to-be-forgotten path for the code index). The same list fold
     as ``similarity.compact_ivf_index``, salted by this index's own
-    ``write_salt``: atomic via the ``tablefs`` swap, heap dropped only
-    after the swap lands (a crash in between leaves re-dedupable
-    duplicates, never lost rows).
+    ``write_salt`` and committed in one publish (a crash leaves the
+    index as it was).
 
     Returns {"lists": (rows_before, rows_after)} lineage counts."""
-    return _compact_ivf_lists(
-        spark, path, drop_ids, id_col, read_pq_meta(path)["write_salt"]
-    )
+    return _compact_ivf_lists(spark, path, drop_ids, id_col)
 
 
 def read_codebooks(spark: SparkSession, path: str):
-    """Codebook parquet -> the numpy (m, ksub, dsub) tensor, bit-exact
+    """The index's codebooks as the numpy (m, ksub, dsub) tensor."""
+    return _codebooks(tablefs.SnapshotTable(path).read(spark, "codebooks"))
+
+
+def _codebooks(df: DataFrame):
+    """Codebook rows -> the numpy (m, ksub, dsub) tensor, bit-exact
     (doubles round-trip parquet losslessly)."""
     import numpy as np
 
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
+    rows = df.collect()
     mm = max(r["s"] for r in rows) + 1
     kk = max(r["j"] for r in rows) + 1
     dsub = len(rows[0]["c"])
@@ -708,10 +685,10 @@ def knn_ivfpq_index(
         )
     from pyhctsa_spark.operators.similarity import _probes_for, _with_delta
 
-    tablefs.recover(path)
-
-    cents = spark.read.parquet(f"{path}/centroids")
-    books = read_codebooks(spark, path)
+    table = tablefs.SnapshotTable(path)
+    man = table.manifest()
+    cents = table.read(spark, "centroids", man)
+    books = _codebooks(table.read(spark, "codebooks", man))
     qids, Qn = _collect_queries(queries, vec_col, id_col,
                                 max_broadcast_queries)
     probes = _probes_for(queries, cents, nprobe, vec_col, id_col).persist()
@@ -719,11 +696,11 @@ def knn_ivfpq_index(
         probed = sorted(
             r["cid"] for r in probes.select("cid").distinct().collect()
         )  # bounded: <= nlist values
-        lists = spark.read.parquet(f"{path}/lists").where(
+        lists = table.read(spark, "lists", man).where(
             F.col("cid").isin(probed)
         )
         # plus the append heap (codes added since the last compaction)
-        lists = _with_delta(spark, path, lists, cid_filter=probed)
+        lists = _with_delta(table, man, spark, lists, cid_filter=probed)
         cand = F.broadcast(probes.select("qid", "cid")).join(
             lists, "cid"
         ).select("qid", "nid", "code")

@@ -8,17 +8,20 @@ query cannot survive 100 TB. This module materializes the postings once
 and makes query cost proportional to the query's own term buckets,
 independent of corpus size.
 
-Layout under ``path`` (plain parquet, the same manifest-less convention
-as the MinHash index in operators/dedup_index.py):
+Layout under ``path`` (a ``tablefs.SnapshotTable``: every write adds
+``gen=G`` directories and commits them in one manifest publish):
 
-    postings/term_bucket=B/   (term, doc_id, tf, dl)  hash-partitioned
-    df/term_bucket=B/         (term, df_t) PARTIAL rows, same
-                              partitioning — each build/append batch
-                              appends its own partial counts; readers
-                              SUM them (so appends never rewrite the
-                              vocabulary-sized table), compaction merges
-    stats/                    1 row (n_docs, n_dl, sum_dl)  BM25 constants
-    _search_meta.json         {n_buckets, k_shingle n/a, id_type, ...}
+    postings/gen=G/term_bucket=B/  (term, doc_id, tf, dl) hash-partitioned
+    df/gen=G/term_bucket=B/        (term, df_t) PARTIAL rows, same
+                                   partitioning — each build/append batch
+                                   adds its own partial counts; readers
+                                   SUM them (so appends never rewrite the
+                                   vocabulary-sized table), compaction
+                                   merges
+    stats/gen=G/                   1 row (n_docs, n_dl, sum_dl)  BM25
+                                   constants
+    _MANIFEST.json                 live generations, props {n_buckets,
+                                   tokenizer, id_type}, last stream batch
 
 Scale contract:
 
@@ -37,11 +40,11 @@ Scale contract:
   layout (a per-append rewrite of the full vocabulary table would be
   the scale killer — web-corpus vocabularies run to billions of hapax
   tokens); ``stats/`` merges exactly (sums, not averages, are stored
-  so the merge is associative) through a crash-recoverable swap.
+  so the merge is associative), all three in one commit.
 - ``compact_search_index(drop_ids=...)`` is the right-to-be-forgotten
   path (the searchability sibling of operators/deletion.py): rewrites
   postings without the dropped docs and RECOMPUTES df/stats from the
-  surviving postings, atomic per table via the ``tablefs`` swap.
+  surviving postings, the three tables committed in one publish.
 
 Scores are identical (to the 6-decimal in-query rounding) to
 ``search.bm25_topk`` run against the same corpus — the equality is a
@@ -53,15 +56,11 @@ this is training-data-pipeline infrastructure.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pyhctsa_spark.operators import tablefs
+from pyhctsa_spark.operators._local_df import one_slice_df
 from pyhctsa_spark.operators.search import BM25_B, BM25_K1, _doc_words
-
-_META = "_search_meta.json"
 
 
 def _bucket_expr(term_col, n_buckets: int):
@@ -164,32 +163,38 @@ def build_search_index(
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     post = _postings(df, text_col, id_col, n_buckets).persist()
-    (
-        post.repartition("term_bucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    _df_from_postings(post).repartition("term_bucket").write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(os.path.join(path, "df"))
-    _stats_from_base(df, text_col, id_col).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "stats"))
-    post.unpersist()
     meta = {
         "n_buckets": int(n_buckets),
         "tokenizer": "whitespace",
         "id_type": df.select(id_col).schema[0].dataType.simpleString(),
     }
-    tablefs.publish(os.path.join(path, _META), json.dumps(meta))
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        man.update(tables={}, props=meta)
+        _write_tables(table, man, post, _df_from_postings(post),
+                      _stats_from_base(df, text_col, id_col))
+        table.commit(man)
+    post.unpersist()
     return meta
 
 
 def read_index_meta(path: str) -> dict:
-    with open(os.path.join(path, _META)) as fh:
-        return json.load(fh)
+    return tablefs.SnapshotTable(path).manifest()["props"]
+
+
+def _write_tables(table, man: dict, post: DataFrame, df_t: DataFrame,
+                  stats: DataFrame, replace: bool = True) -> None:
+    """Write postings, df partials and stats as the pending generation.
+    ``replace=False`` adds the postings and df partials beside the live
+    ones (an append); stats always replace."""
+    for name, out, part in (
+        ("postings",
+         post.repartition("term_bucket").sortWithinPartitions("term"),
+         ["term_bucket"]),
+        ("df", df_t.repartition("term_bucket"), ["term_bucket"]),
+        ("stats", stats.coalesce(1), []),
+    ):
+        table.write(man, name, out, *part, replace=replace or name == "stats")
 
 
 def _postings_schema(meta: dict) -> str:
@@ -199,15 +204,14 @@ def _postings_schema(meta: dict) -> str:
     )
 
 
-def _read_or_empty(spark: SparkSession, d: str, schema: str) -> DataFrame:
-    """Read a table dir, falling back to an empty frame with the known
-    schema. A partitionBy write of ZERO rows leaves only _SUCCESS (no
-    part files), so an index bootstrapped over an empty corpus — the
-    from-nothing streaming start — is unreadable by schema inference."""
-    try:
-        return spark.read.parquet(d)
-    except Exception:
-        return spark.createDataFrame([], schema)
+def _read_or_empty(spark: SparkSession, table, man: dict, name: str,
+                   schema: str) -> DataFrame:
+    """A sub-table, or an empty frame with the known schema when no
+    generation holds a row: a partitionBy write of ZERO rows leaves no
+    part file, so an index bootstrapped over an empty corpus — the
+    from-nothing streaming start — has no live postings or df."""
+    df = table.read(spark, name, man)
+    return spark.createDataFrame([], schema) if df is None else df
 
 
 def query_search_index(
@@ -228,29 +232,29 @@ def query_search_index(
     TakeOrderedAndProject. Nothing in the plan scales with corpus size
     except the pruned bucket scan itself.
     """
-    tablefs.recover(path)
-    meta = read_index_meta(path)
+    table = tablefs.SnapshotTable(path)
+    man = table.manifest()
+    meta = man["props"]
     terms = sorted(set(query_terms))
     if not terms:
         raise ValueError("query_search_index needs at least one query term")
     buckets = _term_buckets(spark, terms, meta["n_buckets"])
 
     post = _read_or_empty(
-        spark, os.path.join(path, "postings"), _postings_schema(meta)
+        spark, table, man, "postings", _postings_schema(meta)
     ).where(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
     # df rows are per-batch PARTIALS — sum them (pruned read: ≤|q|
     # buckets, then ≤|q| grouped rows)
     dft = (
         _read_or_empty(
-            spark,
-            os.path.join(path, "df"),
+            spark, table, man, "df",
             "term string, df_t bigint, term_bucket int",
         )
         .where(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
         .groupBy("term")
         .agg(F.sum("df_t").cast("long").alias("df_t"))
     )
-    stats = spark.read.parquet(os.path.join(path, "stats")).select(
+    stats = table.read(spark, "stats", man).select(
         "n_docs",
         (
             F.col("sum_dl").cast("double")
@@ -300,55 +304,43 @@ def append_to_search_index(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
+    batch_id: int | None = None,
 ) -> None:
     """Add a document batch. Delta-proportional in every table: the
-    batch's postings and its df PARTIALS append into the partition
-    layout (no rewrite of any existing file); only the 1-row ``stats``
-    merges through a crash-recoverable swap.
+    batch's postings and its df PARTIALS are added as a new generation
+    (no rewrite of any existing file); only the 1-row ``stats`` is
+    rewritten, merged, and all three commit in one publish. A stream
+    passes its ``batch_id``: it is committed with the data, and a batch
+    already committed is skipped, so a replay never double-counts df_t
+    or the corpus stats.
 
     Caller contract (same as the MinHash index): ids not already
-    present. A replayed append duplicates (term, doc) rows and df
+    present. Appending an id again duplicates (term, doc) rows and df
     partials — ``compact_search_index`` repairs both.
     """
-    tablefs.recover(path)
-    meta = read_index_meta(path)
     spark = df.sparkSession
-    nb = int(meta["n_buckets"])
-
-    post = _postings(df, text_col, id_col, nb).persist()
-    (
-        post.repartition("term_bucket")
-        .sortWithinPartitions("term")
-        .write.mode("append")
-        .partitionBy("term_bucket")
-        .parquet(os.path.join(path, "postings"))
-    )
-    # df: append the DELTA's partial counts only — readers sum
-    # partials, so the vocabulary-sized table is never rewritten here
-    _df_from_postings(post).repartition("term_bucket").write.mode(
-        "append"
-    ).partitionBy("term_bucket").parquet(os.path.join(path, "df"))
-
-    d_stats_row = _stats_from_base(df, text_col, id_col).head()
-    old_stats = spark.read.parquet(os.path.join(path, "stats")).head()
-    from pyhctsa_spark.operators._local_df import one_slice_df
-
-    merged_stats = one_slice_df(
-        spark,
-        [
-            (
-                int(old_stats["n_docs"]) + int(d_stats_row["n_docs"]),
-                int(old_stats["n_dl"]) + int(d_stats_row["n_dl"]),
-                int(old_stats["sum_dl"]) + int(d_stats_row["sum_dl"]),
-            )
-        ],
-        "n_docs long, n_dl long, sum_dl long",
-    )
-    d = os.path.join(path, "stats")
-    tmp = tablefs.swap_names(d)[0]
-    merged_stats.write.mode("overwrite").parquet(tmp)
-    tablefs.replace_dir(tmp, d)
-    post.unpersist()
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        if table.committed(batch_id, man):
+            return
+        post = _postings(df, text_col, id_col,
+                         int(man["props"]["n_buckets"])).persist()
+        d_stats = _stats_from_base(df, text_col, id_col).head()
+        old_stats = table.read(spark, "stats", man).head()
+        merged_stats = one_slice_df(
+            spark,
+            [tuple(int(old_stats[c]) + int(d_stats[c])
+                   for c in ("n_docs", "n_dl", "sum_dl"))],
+            "n_docs long, n_dl long, sum_dl long",
+        )
+        # df: add the DELTA's partial counts only — readers sum
+        # partials, so the vocabulary-sized table is never rewritten
+        _write_tables(table, man, post, _df_from_postings(post),
+                      merged_stats, replace=False)
+        if batch_id is not None:
+            man["last_batch"] = batch_id
+        table.commit(man)
+        post.unpersist()
 
 
 def compact_search_index(
@@ -357,12 +349,15 @@ def compact_search_index(
     drop_ids: DataFrame | None = None,
     id_col: str = "doc_id",
 ) -> dict:
-    """Rewrite the index in place: de-duplicate rows left by replayed
-    appends and, when ``drop_ids`` is given, ERASE those documents from
-    searchability (the governance sibling of operators/deletion.py).
-    df/ and stats/ are RECOMPUTED from the surviving postings, so a
-    compacted index is self-consistent whatever state appends left it
-    in. Atomic per table via the ``tablefs`` swap.
+    """Rewrite the index as one generation: de-duplicate rows left by
+    appends of an id already present and, when ``drop_ids`` is given,
+    ERASE those documents from searchability (the governance sibling of
+    operators/deletion.py). df/ and stats/ are RECOMPUTED from the
+    surviving postings, so a compacted index is self-consistent
+    whatever state appends left it in, and the three tables commit in
+    one publish: a crash leaves the index answering exactly as before.
+    An erasure drops the index's history in that commit, so no file
+    still holds an erased id once it returns.
 
     Returns {"postings": (rows_before, rows_after)}.
 
@@ -371,38 +366,24 @@ def compact_search_index(
     ``bm25_topk`` over the erased base table, which is the invariant
     that matters.
     """
-    tablefs.recover(path)
-    meta = read_index_meta(path)
-    post = _read_or_empty(
-        spark, os.path.join(path, "postings"), _postings_schema(meta)
-    )
-    before = post.count()
-    clean = post.dropDuplicates(["term", "doc_id"])
-    if drop_ids is not None:
-        drops = F.broadcast(
-            drop_ids.select(F.col(id_col).alias("doc_id")).distinct()
-        )
-        clean = clean.join(drops, "doc_id", "left_anti")
-    # eager checkpoint severs lineage from the OLD postings directory —
-    # the swap below renames it away, so clean must never recompute
-    clean = clean.select(
-        "term_bucket", "term", "doc_id", "tf", "dl"
-    ).localCheckpoint(eager=True)
-    after = clean.count()
-
-    for table, out, part in (
-        ("postings",
-         clean.repartition("term_bucket").sortWithinPartitions("term"),
-         ["term_bucket"]),
-        ("df", _df_from_postings(clean).repartition("term_bucket"),
-         ["term_bucket"]),
-        ("stats", _stats_from_postings(clean).coalesce(1), []),
-    ):
-        d = os.path.join(path, table)
-        tmp = tablefs.swap_names(d)[0]
-        out.write.mode("overwrite").partitionBy(*part).parquet(tmp)
-        tablefs.replace_dir(tmp, d)
-    from pyhctsa_spark.operators.dedup import _release_local_checkpoint
-
-    _release_local_checkpoint(clean)
-    return {"postings": (int(before), int(after))}
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        post = _read_or_empty(spark, table, man, "postings",
+                              _postings_schema(man["props"]))
+        before = post.count()
+        clean = post.dropDuplicates(["term", "doc_id"])
+        if drop_ids is not None:
+            drops = F.broadcast(
+                drop_ids.select(F.col(id_col).alias("doc_id")).distinct()
+            )
+            clean = clean.join(drops, "doc_id", "left_anti")
+        # persisted: feeds the postings, df and stats writes
+        clean = clean.select(
+            "term_bucket", "term", "doc_id", "tf", "dl"
+        ).persist()
+        _write_tables(table, man, clean, _df_from_postings(clean),
+                      _stats_from_postings(clean))
+        after = tablefs.footer_rows(table.gen_dir("postings", man))
+        table.commit(man, keep_history=drop_ids is None)
+        clean.unpersist()
+    return {"postings": (int(before), after)}

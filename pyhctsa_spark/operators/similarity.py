@@ -30,8 +30,9 @@ index's own centroids, written to a small cid-sorted append heap that
 probes union in — the LSM shape, so a batch never shatters into
 nlist tiny files — with a quantizer-drift counter), and
 ``compact_ivf_index`` folds the heap into the partition layout,
-de-duplicates replayed appends, and erases dropped ids
-(right-to-be-forgotten) through the crash-recoverable ``tablefs`` swap.
+de-duplicates re-appended ids, and erases dropped ids
+(right-to-be-forgotten). Every write commits through one
+``tablefs.SnapshotTable`` manifest publish.
 
 Everything stays in DataFrame expressions (zip_with/aggregate dot
 products in whole-stage codegen); the one Python stage is the
@@ -39,9 +40,6 @@ Arrow-batched centroid argmax / local-top-k, both O(batch).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -484,11 +482,12 @@ def ivf_write_index(
     train_iters: int = 10,
 ) -> dict:
     """Materialize the IVF index: inverted lists as cid-partitioned
-    parquet under ``<path>/lists`` plus the centroid table at
-    ``<path>/centroids``. The one corpus shuffle an IVF structure needs
-    happens HERE, once, at build time — and it is salted
-    (cid, xxhash64(nid) % write_salt) so a skewed list fans out over
-    ``write_salt`` write tasks instead of serializing into one
+    parquet in sub-table ``lists`` plus the centroid table
+    ``centroids``, committed as one snapshot of a
+    ``tablefs.SnapshotTable`` at ``path``. The one corpus shuffle an IVF
+    structure needs happens HERE, once, at build time — and it is
+    salted (cid, xxhash64(nid) % write_salt) so a skewed list fans out
+    over ``write_salt`` write tasks instead of serializing into one
     straggler. ``write_salt=None`` (default) derives the salt from the
     corpus/list ratio — one salt bucket per ~100k rows of a list, so a
     small index writes exactly one file per list instead of fanning
@@ -497,7 +496,42 @@ def ivf_write_index(
     skewed lists still fan out. Returns the list-size skew stats
     (``ivf_list_stats``) so the caller can gate on quantizer health at
     build time."""
-    tablefs.recover(path)
+    num_centroids, write_salt = _ivf_sizes(corpus, num_centroids, write_salt)
+    cents, assigned = ivf_build(
+        corpus, num_centroids, vec_col, id_col, train_sample, train_iters
+    )
+    spark = corpus.sparkSession
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        man["tables"] = {}
+        _write_lists(table, man, assigned, write_salt)
+        table.write(man, "centroids", cents)
+        cents = table.read(spark, "centroids", man)
+        crows = cents.select("cid", "centroid").collect()  # <= nlist rows
+        lists = table.read(spark, "lists", man)
+        # quantizer-health baseline on a bounded sample of the written
+        # lists: mean cosine(vector, assigned centroid). Appends report
+        # the same statistic for their delta, so drift (new data the
+        # centroids no longer describe -> falling assign cosine -> worse
+        # partial-probe recall) is visible without ever rescanning the
+        # corpus.
+        man["props"] = {
+            "nlist": len(crows),
+            "dim": len(crows[0]["centroid"]),
+            "write_salt": int(write_salt),
+            "metric": "cosine",
+            "id_type": corpus.select(id_col).schema[0].dataType.simpleString(),
+            "build_assign_cos_mean": _assign_cos_mean(lists.limit(4096),
+                                                      cents),
+        }
+        table.commit(man)
+    return ivf_list_stats(lists)
+
+
+def _ivf_sizes(corpus: DataFrame, num_centroids: int | None,
+               write_salt: int | None) -> tuple[int, int]:
+    """(num_centroids, write_salt), each derived from the corpus size
+    when not given: one salt bucket per ~100k rows of a list."""
     if num_centroids is None or write_salt is None:
         n_corpus = corpus.count()
         if num_centroids is None:
@@ -506,91 +540,67 @@ def ivf_write_index(
             write_salt = max(
                 1, min(64, -(-n_corpus // (max(1, num_centroids) * 100_000)))
             )
-    cents, assigned = ivf_build(
-        corpus, num_centroids, vec_col, id_col, train_sample, train_iters
-    )
-    assigned = assigned.repartition(
+    return num_centroids, write_salt
+
+
+def _write_lists(table, man: dict, lists: DataFrame, write_salt: int) -> None:
+    """Write the inverted lists (rows carrying ``cid`` and ``nid``) as
+    the pending generation of ``lists``, salted by (cid, xxhash64(nid) %
+    write_salt) and partitioned by cid; the append heap is emptied."""
+    table.write(man, "lists", lists.repartition(
         F.col("cid"),
         F.pmod(F.xxhash64(F.col("nid").cast("string")), F.lit(write_salt)),
-    )
-    assigned.write.mode("overwrite").partitionBy("cid").parquet(
-        f"{path}/lists"
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    spark = corpus.sparkSession
-    crows = cents.select("cid", "centroid").collect()  # <= nlist rows
-    # quantizer-health baseline on a bounded sample of the written
-    # lists: mean cosine(vector, assigned centroid). Appends report the
-    # same statistic for their delta, so drift (new data the centroids
-    # no longer describe -> falling assign cosine -> worse partial-probe
-    # recall) is visible without ever rescanning the corpus.
-    meta = {
-        "nlist": len(crows),
-        "dim": len(crows[0]["centroid"]),
-        "write_salt": int(write_salt),
-        "metric": "cosine",
-        "id_type": corpus.select(id_col).schema[0].dataType.simpleString(),
-        "build_assign_cos_mean": _assign_cos_mean(
-            spark.read.parquet(f"{path}/lists").limit(4096), spark, path
-        ),
-    }
-    import json
+    ), "cid")
+    man["tables"]["lists_delta"] = []
 
-    tablefs.publish(os.path.join(path, _IVF_META), json.dumps(meta))
-    return ivf_list_stats(spark.read.parquet(f"{path}/lists"))
-
-
-_IVF_META = "_ivf_meta.json"
 
 # append heap file sizing: ~one output file per this many delta rows
 # (~0.5 GB of 64-dim doubles per file)
 _DELTA_ROWS_PER_FILE = 1_000_000
 
 
-def _delta_dir(path: str) -> str:
-    return os.path.join(path, "lists_delta")
+def _append_heap(table, man: dict, delta: DataFrame, n: int) -> None:
+    """Write ``n`` delta rows as a new generation of the ``lists_delta``
+    heap: O(n / _DELTA_ROWS_PER_FILE) files, cid-sorted so row-group
+    stats prune probes."""
+    files = max(1, -(-n // _DELTA_ROWS_PER_FILE))
+    table.write(man, "lists_delta",
+                delta.repartition(files).sortWithinPartitions("cid"),
+                replace=False)
 
 
-def _with_delta(spark: SparkSession, path: str, lists: DataFrame,
+def _with_delta(table, man: dict, spark: SparkSession, lists: DataFrame,
                 cid_filter=None) -> DataFrame:
     """Union the partitioned lists with the append heap (if any).
     ``cid_filter`` restricts the heap scan to the probed lists — heap
     files are written cid-sorted, so the predicate prunes row groups
     by min/max stats even without directory partitioning."""
-    d = _delta_dir(path)
-    if not os.path.isdir(d) or not any(
-        f.endswith(".parquet") for f in os.listdir(d)
-    ):
+    delta = table.read(spark, "lists_delta", man)
+    if delta is None:
         return lists
-    delta = spark.read.parquet(d)
     if cid_filter is not None:
         delta = delta.where(F.col("cid").isin(cid_filter))
     return lists.unionByName(delta.select(*lists.columns))
 
 
 def read_ivf_meta(path: str) -> dict:
-    import json
-
-    with open(os.path.join(path, _IVF_META)) as fh:
-        return json.load(fh)
+    return tablefs.SnapshotTable(path).manifest()["props"]
 
 
-def _centroid_matrix(spark: SparkSession, path: str):
-    """The index's centroid table as a cid-ordered numpy matrix —
-    bounded by nlist (<= 65536 rows), never the corpus."""
+def _centroid_matrix(cents: DataFrame):
+    """A centroid table as a cid-ordered numpy matrix — bounded by
+    nlist (<= 65536 rows), never the corpus."""
     import numpy as np
 
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
+    rows = cents.orderBy("cid").collect()
     if [r["cid"] for r in rows] != list(range(len(rows))):
-        raise ValueError(f"centroid table at {path} has non-contiguous cids")
+        raise ValueError("centroid table has non-contiguous cids")
     return np.asarray([r["centroid"] for r in rows], dtype=np.float64)
 
 
-def _assign_cos_mean(assigned: DataFrame, spark: SparkSession,
-                     path: str) -> float:
+def _assign_cos_mean(assigned: DataFrame, cents: DataFrame) -> float:
     """Mean cosine(vector, its assigned centroid) over ``assigned``
     rows (nid, cv, cnorm, cid) — the quantizer-drift statistic."""
-    cents = spark.read.parquet(f"{path}/centroids")
     denom = F.col("cnorm") * F.col("centnorm")
     acos = F.when(
         denom > 0, _dot(F.col("cv"), F.col("centroid")) / denom
@@ -608,17 +618,18 @@ def append_to_ivf_index(
     path: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    batch_id: int | None = None,
 ) -> dict:
     """Add a vector batch to a materialized IVF index — the "daily
     embedding delta" path, completing the persistent-index triad
     (MinHash dedup_index, BM25 search_index, this). Delta-proportional:
     the batch is assigned map-side against the index's OWN centroids
     (``_nearest_cid_udf``, bit-identical to the build assignment) and
-    APPENDED — no existing file is read or rewritten, so append cost
-    is O(delta) regardless of index size.
+    added as a new generation — no existing file is read or rewritten,
+    so append cost is O(delta) regardless of index size.
 
-    The delta lands in the ``lists_delta/`` append HEAP (plain parquet,
-    cid as a sorted data column), not the ``lists/`` partition tree: a
+    The delta lands in the ``lists_delta`` append HEAP (plain parquet,
+    cid as a sorted data column), not the ``lists`` partition tree: a
     dynamic-partition append writes one file per TOUCHED LIST — nlist
     near-empty files for a small batch (measured 6x the useful work at
     20k rows vs a 1000-list index), and repeated appends would rot the
@@ -629,10 +640,12 @@ def append_to_ivf_index(
     partition layout. The LSM shape, same as the search index's df
     partials.
 
-    Caller contract (same as the sibling indexes): ids not already
-    present. A replayed append duplicates (cid, nid) rows — a
-    duplicated neighbor can occupy two top-k slots until
-    ``compact_ivf_index`` repairs the lists.
+    A stream passes its ``batch_id``: it is committed with the data,
+    and a batch already committed is skipped
+    (``{"skipped_committed_batch": True}``). Caller contract (same as
+    the sibling indexes): ids not already present. Appending an id again
+    duplicates its (cid, nid) row — a duplicated neighbor can occupy two
+    top-k slots until ``compact_ivf_index`` repairs the lists.
 
     Returns lineage counters: rows appended, the delta's mean
     assign-cosine, and the build-time baseline — a delta cosine well
@@ -641,31 +654,31 @@ def append_to_ivf_index(
     centroids rather than continuing to append.
     """
     spark = df.sparkSession
-    tablefs.recover(path)
-    meta = read_ivf_meta(path)
-    C = _centroid_matrix(spark, path)
-    base = df.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    # fused Arrow norm + assignment, bit-identical to the build path's
-    assigned = _with_cnorm(base, centroids=C).persist()
-    # persisted: feeds the file sizing, the write, and the drift agg
-    try:
-        n = assigned.count()
-        files = max(1, -(-n // _DELTA_ROWS_PER_FILE))
-        (
-            assigned.repartition(files)
-            .sortWithinPartitions("cid")  # row-group stats prune probes
-            .write.mode("append")
-            .parquet(_delta_dir(path))
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        if table.committed(batch_id, man):
+            return {"appended": 0, "skipped_committed_batch": True}
+        cents = table.read(spark, "centroids", man)
+        base = df.select(
+            F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("cv")
         )
-        drift = _assign_cos_mean(assigned, spark, path)
-    finally:
-        assigned.unpersist()
+        # fused Arrow norm + assignment, bit-identical to the build
+        # path's; persisted: feeds the file sizing, the write, and the
+        # drift agg
+        assigned = _with_cnorm(base, centroids=_centroid_matrix(cents)).persist()
+        try:
+            n = assigned.count()
+            _append_heap(table, man, assigned, n)
+            drift = _assign_cos_mean(assigned, cents)
+        finally:
+            assigned.unpersist()
+        if batch_id is not None:
+            man["last_batch"] = batch_id
+        table.commit(man)
     return {
         "appended": int(n),
         "assign_cos_mean": drift,
-        "build_assign_cos_mean": meta.get("build_assign_cos_mean"),
+        "build_assign_cos_mean": man["props"].get("build_assign_cos_mean"),
     }
 
 
@@ -675,21 +688,16 @@ def compact_ivf_index(
     drop_ids: DataFrame | None = None,
     id_col: str = "vec_id",
 ) -> dict:
-    """Rewrite the inverted lists in place: de-duplicate rows left by
-    replayed appends and, when ``drop_ids`` is given, ERASE those
-    vectors — the right-to-be-forgotten path for the vector index (the
-    searchability sibling of operators/deletion.py, same as
-    compact_minhash_index / compact_search_index). Centroids are
-    untouched: removing vectors never moves an assignment. Atomic via
-    the ``tablefs`` swap (crash-recoverable by tablefs.recover, which
-    every entry point runs first); single-writer convention as the
-    chunk-store compactor.
+    """Rewrite the inverted lists as one generation: fold the append
+    heap in, de-duplicate re-appended ids and, when ``drop_ids`` is
+    given, ERASE those vectors — the right-to-be-forgotten path for the
+    vector index (the searchability sibling of operators/deletion.py,
+    same as compact_minhash_index / compact_search_index). Centroids are
+    untouched: removing vectors never moves an assignment.
 
     Returns {"lists": (rows_before, rows_after)} lineage counts.
     """
-    return _compact_ivf_lists(
-        spark, path, drop_ids, id_col, read_ivf_meta(path)["write_salt"]
-    )
+    return _compact_ivf_lists(spark, path, drop_ids, id_col)
 
 
 def _compact_ivf_lists(
@@ -697,40 +705,31 @@ def _compact_ivf_lists(
     path: str,
     drop_ids: DataFrame | None,
     id_col: str,
-    write_salt: int,
 ) -> dict:
     """The list fold shared by the IVF and IVFPQ indexes: union the
-    append heap into ``lists/``, keep one row per nid, anti-join
-    ``drop_ids``, rewrite salted by (cid, xxhash64(nid) % write_salt)
-    and swap the result in; the heap is dropped last."""
-    tablefs.recover(path)
-    d = f"{path}/lists"
-    df = _with_delta(spark, path, spark.read.parquet(d))
-    before = df.count()
-    # one list per vector: assignment is deterministic, so replayed
-    # appends duplicate WHOLE rows and any representative per nid is
-    # exact
-    clean = df.dropDuplicates(["nid"])
-    if drop_ids is not None:
-        drops = F.broadcast(
-            drop_ids.select(F.col(id_col).alias("nid")).distinct()
-        )
-        clean = clean.join(drops, "nid", "left_anti")
-    clean = clean.repartition(
-        F.col("cid"),
-        F.pmod(F.xxhash64(F.col("nid").cast("string")), F.lit(write_salt)),
-    )
-    tmp = tablefs.swap_names(d)[0]
-    clean.write.mode("overwrite").partitionBy("cid").parquet(tmp)
-    after = spark.read.parquet(tmp).count()
-    tablefs.replace_dir(tmp, d)
-    # the heap is folded into the rewritten lists — drop it LAST: a
-    # crash here leaves its rows duplicated in both places, which the
-    # next compact's nid-dedup repairs (same class as a replayed
-    # append); dropping it any earlier could LOSE the heap if the swap
-    # never lands
-    shutil.rmtree(_delta_dir(path), ignore_errors=True)
-    return {"lists": (int(before), int(after))}
+    append heap into ``lists``, keep one row per nid, anti-join
+    ``drop_ids``, rewrite salted by the index's ``write_salt`` and
+    commit the new lists with an empty heap in one publish. An erasure
+    drops the index's history in that commit, so no file still holds
+    an erased id once it returns. The rows after come from the written
+    parquet footers."""
+    table = tablefs.SnapshotTable(path)
+    with table.writer() as man:
+        df = _with_delta(table, man, spark, table.read(spark, "lists", man))
+        before = df.count()
+        # one list per vector: assignment is deterministic, so
+        # re-appended ids duplicate WHOLE rows and any representative
+        # per nid is exact
+        clean = df.dropDuplicates(["nid"])
+        if drop_ids is not None:
+            drops = F.broadcast(
+                drop_ids.select(F.col(id_col).alias("nid")).distinct()
+            )
+            clean = clean.join(drops, "nid", "left_anti")
+        _write_lists(table, man, clean, man["props"]["write_salt"])
+        after = tablefs.footer_rows(table.gen_dir("lists", man))
+        table.commit(man, keep_history=drop_ids is None)
+    return {"lists": (int(before), after)}
 
 
 def knn_ivf_index(
@@ -749,25 +748,26 @@ def knn_ivf_index(
     other nlist - |probed| directories entirely). Scan cost is
     ~nprobe/nlist of the corpus in actual I/O, not just in compute —
     the property that makes IVF worth materializing."""
-    tablefs.recover(path)
     if queries.limit(max_broadcast_queries + 1).count() > max_broadcast_queries:
         raise ValueError(
             f"query batch exceeds max_broadcast_queries="
             f"{max_broadcast_queries}; split the queries into batches"
         )
-    cents = spark.read.parquet(f"{path}/centroids")
+    table = tablefs.SnapshotTable(path)
+    man = table.manifest()
+    cents = table.read(spark, "centroids", man)
     probes = _probes_for(queries, cents, nprobe, vec_col, id_col).persist()
     try:
         probed = sorted(
             r["cid"] for r in probes.select("cid").distinct().collect()
         )  # bounded: <= |queries| x nprobe values
-        lists = spark.read.parquet(f"{path}/lists").where(
+        lists = table.read(spark, "lists", man).where(
             F.col("cid").isin(probed)
         )
         # plus the append heap (vectors added since the last compaction
         # — small by the LSM contract; cid-sorted files, so the same
         # isin prunes its row groups)
-        lists = _with_delta(spark, path, lists, cid_filter=probed)
+        lists = _with_delta(table, man, spark, lists, cid_filter=probed)
         cand = F.broadcast(probes).join(lists, "cid").where(
             F.col("qid") != F.col("nid")
         )

@@ -25,8 +25,10 @@ snapshot store closes the gap on BOTH sides of the commit —
   after a successful commit);
 - a crash BEFORE the manifest publish leaves the previous manifest (and
   the chunk versions it references) untouched, so the replay recomputes
-  from unchanged inputs; the orphaned generation directory is
-  garbage-collected by the next successful commit.
+  from unchanged inputs; the orphaned generation directory is deleted
+  when the next writer takes the lease. The search, vector and
+  near-dup streams commit their batch ids through the same snapshot
+  table (``tablefs.SnapshotTable``).
 """
 
 from __future__ import annotations

@@ -25,14 +25,12 @@ Exactly-once contract under foreachBatch's at-least-once replays:
 - The SINK is exactly-once: survivors are written partitioned by
   ``batch`` with dynamic partition overwrite, so a replay rewrites the
   same ``batch=N`` directory instead of duplicating rows.
-- The INDEX is at-least-once: a crash between the index append and the
-  commit marker leaves duplicate signature/band rows for one batch.
-  That is deliberate — duplicate band rows are harmless to every probe
-  (candidates are de-duplicated per pair) and the alternative (a
-  transactional index rewrite per batch) would turn an append-only
-  O(batch) step into a read-modify-write of the whole index.
-- A batch id with a commit marker is skipped outright (redelivery
-  after a successful commit).
+- The INDEX is exactly-once: the append commits the stream's
+  ``batch_id`` in the same manifest publish as the batch's signature
+  and band rows, so a crash before the publish leaves nothing of the
+  batch in the index, and a committed batch id is skipped outright
+  (redelivery after a successful commit). A batch with no survivors
+  appends nothing and is simply recomputed on redelivery.
 
 The reference has no streaming surface (SURVEY.md §2.0); this extends
 the engine-native streaming family (rollup, exact dedup, cagg) with the
@@ -40,8 +38,6 @@ near-dup case — the screen a crawl pipeline runs continuously.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -57,10 +53,6 @@ from pyhctsa_spark.operators.dedup_index import (
 DOC_STREAM_SCHEMA = "doc_id long, text string, source string"
 
 
-def _commit_marker(index_path: str, batch_id: int) -> str:
-    return os.path.join(index_path, "_stream_commits", str(int(batch_id)))
-
-
 def process_neardup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -74,8 +66,8 @@ def process_neardup_batch(
 ) -> None:
     """The foreachBatch body, callable directly for batch-mode replays
     and tests. Idempotent per ``batch_id`` (see module docstring)."""
-    marker = _commit_marker(index_path, batch_id)
-    if os.path.exists(marker):
+    table = tablefs.SnapshotTable(index_path)
+    if table.committed(batch_id):
         return
     spark = batch_df.sparkSession
     meta = read_index_meta(index_path)
@@ -113,8 +105,8 @@ def process_neardup_batch(
         # no verify corpus — only legal when the index is still empty
         # (a prebuilt index REQUIRES its corpus via ``bootstrap``; a
         # silent skip here would pass every duplicate straight through)
-        idx_bands = spark.read.parquet(os.path.join(index_path, "bands"))
-        if idx_bands.limit(1).count():
+        idx_bands = table.read(spark, "bands")
+        if idx_bands is not None and idx_bands.limit(1).count():
             raise ValueError(
                 "index at %r is non-empty but no bootstrap corpus was "
                 "given and the sink is empty — probes cannot "
@@ -146,13 +138,13 @@ def process_neardup_batch(
     )
     if survivors.limit(1).count():
         append_to_minhash_index(
-            survivors, index_path, text_col=text_col, id_col=id_col
+            survivors, index_path, text_col=text_col, id_col=id_col,
+            batch_id=batch_id,
         )
     reps.unpersist()
     survivors.unpersist()
     for df in probe_cache:  # per-batch probe caches must not accumulate
         df.unpersist()
-    tablefs.publish(marker, "committed")
 
 
 def stream_neardup_dedup(

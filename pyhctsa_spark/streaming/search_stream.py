@@ -8,28 +8,18 @@ Per micro-batch (``foreachBatch``):
      by ``batch`` with dynamic partition overwrite (exactly-once under
      replays: a redelivered batch rewrites its own ``batch=N``
      directory);
-  2. index append — ``append_to_search_index`` (delta-proportional:
-     postings append, df/stats merge through crash-recoverable swaps).
+  2. index append — ``append_to_search_index`` with the stream's
+     ``batch_id`` (delta-proportional: postings and df partials are
+     added, stats merged, all in one commit).
 
 Exactly-once contract. Unlike the MinHash index (where a replayed
 append only duplicates band rows, harmless to probes), a replayed
 SEARCH-index append is NOT harmless: duplicated postings double df_t
-and the corpus stats for that batch, which skews every BM25 score. So
-the batch body brackets the index append with two markers:
-
-    _stream_pending/<batch>   written BEFORE the index append
-    _stream_commits/<batch>   written after everything succeeded
-
-- commit marker present  -> the batch is done; a redelivery is a no-op.
-- pending marker present without its commit -> a previous attempt
-  crashed somewhere inside the index append; the body SELF-HEALS by
-  running ``compact_search_index`` (drops duplicate (term, doc) rows
-  and recomputes df/stats from the surviving postings) before
-  re-appending — restoring exactness without operator intervention.
-- neither -> first delivery, normal path.
-
-The sink append itself is idempotent (partition overwrite), so it sits
-safely before the pending marker.
+and the corpus stats for that batch, which skews every BM25 score. The
+index's snapshot table closes that gap: the batch id is committed in
+the same manifest publish as the batch's rows, so a crash before the
+publish leaves nothing of the batch in the index, and a redelivery of
+a committed batch is skipped before it touches the sink.
 
 The reference has no streaming or search surface (SURVEY.md §2.0); this
 extends the engine-native streaming family (rollup, exact dedup,
@@ -38,22 +28,13 @@ near-dup screen, cagg) with continuous retrieval-index maintenance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from pyhctsa_spark.operators import tablefs
-from pyhctsa_spark.operators.search_index import (
-    append_to_search_index,
-    compact_search_index,
-)
+from pyhctsa_spark.operators.search_index import append_to_search_index
 
 DOC_STREAM_SCHEMA = "doc_id long, text string, source string"
-
-
-def _marker(index_path: str, kind: str, batch_id: int) -> str:
-    return os.path.join(index_path, kind, str(int(batch_id)))
 
 
 def process_index_batch(
@@ -66,40 +47,31 @@ def process_index_batch(
     id_col: str = "doc_id",
 ) -> None:
     """The foreachBatch body, callable directly for batch-mode replays
-    and tests. Idempotent per ``batch_id``; self-heals a crash-window
-    replay by compacting before re-appending (see module docstring)."""
-    _marked_index_batch(
+    and tests. Idempotent per ``batch_id`` (see module docstring)."""
+    _sink_and_append(
         batch_df, batch_id, index_path, sink_dir,
         append=lambda b: append_to_search_index(
-            b, index_path, text_col=text_col, id_col=id_col
-        ),
-        drop_batch=lambda b: compact_search_index(
-            b.sparkSession, index_path,
-            drop_ids=b.select(F.col(id_col).alias("doc_id")),
+            b, index_path, text_col=text_col, id_col=id_col,
+            batch_id=batch_id,
         ),
     )
 
 
-def _marked_index_batch(
+def _sink_and_append(
     batch_df: DataFrame,
     batch_id: int,
     index_path: str,
     sink_dir: str,
     append,
-    drop_batch,
 ) -> None:
-    """The exactly-once batch body shared by the search and vector
-    streams: sink the batch, then ``append(batch)`` to the index between
-    the pending and commit markers. ``drop_batch(batch)`` compacts the
-    batch's own ids out of the index; it runs only on a replay of a
-    batch whose earlier attempt crashed inside its append."""
-    commit = _marker(index_path, "_stream_commits", batch_id)
-    if os.path.exists(commit):
+    """The batch body shared by the search and vector streams: skip a
+    batch the index already committed, sink the batch, then
+    ``append(batch)`` to the index (which commits ``batch_id`` with the
+    rows)."""
+    if tablefs.SnapshotTable(index_path).committed(batch_id):
         return
-    pending = _marker(index_path, "_stream_pending", batch_id)
     batch_df = batch_df.persist()
-
-    # 1. sink, exactly-once via batch-partition overwrite
+    # sink, exactly-once via batch-partition overwrite
     (
         batch_df.withColumn("batch", F.lit(int(batch_id)))
         .write.mode("overwrite")
@@ -107,19 +79,8 @@ def _marked_index_batch(
         .partitionBy("batch")
         .parquet(sink_dir)
     )
-
-    # 2. index append, bracketed by the pending/commit markers
-    if os.path.exists(pending):
-        # a previous attempt died inside its append — some of the
-        # batch's rows (and, for the search index, possibly its df/stats
-        # merge) may already be in the index. One compact that DROPS the
-        # batch's own ids erases whatever the crashed attempt landed, so
-        # the re-append below starts exact.
-        drop_batch(batch_df)
-    tablefs.publish(pending, "x")
     if batch_df.limit(1).count():
         append(batch_df)
-    tablefs.publish(commit, "x")
     batch_df.unpersist()
 
 

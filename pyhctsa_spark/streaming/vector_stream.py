@@ -12,21 +12,12 @@ Per micro-batch (``foreachBatch``):
      map-side assignment against the index's own centroids, written to
      the cid-sorted LSM append heap).
 
-Exactly-once contract, the search stream's batch body and markers: a
-replayed IVF append duplicates (cid, nid) rows, and a duplicated
-neighbor occupies two top-k slots — wrong results, not just waste. So
-the batch body brackets the index append with two markers:
-
-    _stream_pending/<batch>   written BEFORE the index append
-    _stream_commits/<batch>   written after everything succeeded
-
-- commit marker present  -> the batch is done; a redelivery is a no-op.
-- pending marker present without its commit -> a previous attempt
-  crashed somewhere inside the index append; the body SELF-HEALS by
-  running ``compact_ivf_index`` dropping the batch's own ids (erasing
-  whatever the crashed attempt landed in the heap) before re-appending
-  — restoring exactness without operator intervention.
-- neither -> first delivery, normal path.
+Exactly-once contract, the search stream's batch body: a replayed IVF
+append would duplicate (cid, nid) rows, and a duplicated neighbor
+occupies two top-k slots — wrong results, not just waste. The append
+commits the stream's ``batch_id`` in the same manifest publish as the
+batch's heap rows, so a crash before the publish leaves nothing of the
+batch in the index, and a redelivery of a committed batch is skipped.
 
 Unlike the search index, the IVF index cannot bootstrap from an empty
 corpus: the coarse quantizer needs training vectors. ``index_path``
@@ -44,14 +35,11 @@ maintenance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from pyhctsa_spark.operators.similarity import (
-    append_to_ivf_index,
-    compact_ivf_index,
-)
-from pyhctsa_spark.streaming.search_stream import _marked_index_batch
+from pyhctsa_spark.operators.similarity import append_to_ivf_index
+from pyhctsa_spark.streaming.search_stream import _sink_and_append
 
 VEC_STREAM_SCHEMA = "vec_id long, embedding array<double>"
 
@@ -66,18 +54,12 @@ def process_vector_batch(
     id_col: str = "vec_id",
 ) -> None:
     """The foreachBatch body, callable directly for batch-mode replays
-    and tests. Idempotent per ``batch_id``; self-heals a crash-window
-    replay by compacting out the batch's own ids before re-appending
-    (see module docstring)."""
-    _marked_index_batch(
+    and tests. Idempotent per ``batch_id`` (see module docstring)."""
+    _sink_and_append(
         batch_df, batch_id, index_path, sink_dir,
         append=lambda b: append_to_ivf_index(
-            b, index_path, vec_col=vec_col, id_col=id_col
-        ),
-        drop_batch=lambda b: compact_ivf_index(
-            b.sparkSession, index_path,
-            drop_ids=b.select(F.col(id_col).alias("vec_id")),
-            id_col="vec_id",
+            b, index_path, vec_col=vec_col, id_col=id_col,
+            batch_id=batch_id,
         ),
     )
 

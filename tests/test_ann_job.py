@@ -67,9 +67,9 @@ def test_lifecycle_through_cli(spark, tmp_path, capsys):
                  "--mode", "compact"]) == 0
     compacted = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert compacted["lists"] == [80, 80]
-    import os
+    from pyhctsa_spark.operators.tablefs import SnapshotTable
 
-    assert not os.path.exists(f"{idx}/lists_delta")
+    assert SnapshotTable(idx).manifest()["tables"]["lists_delta"] == []
 
 
 def test_probe_requires_output(tmp_path):

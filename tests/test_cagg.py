@@ -263,9 +263,11 @@ def test_write_through_another_layout_is_refused(spark, tmp_path):
     assert sorted(os.listdir(store.path)) == files
     pd.testing.assert_frame_equal(_view(spark, store), before)
     # a manifest that records no layout is written through as it is
-    del man["layout"]
+    with open(os.path.join(store.path, store.MANIFEST)) as f:
+        raw = json.load(f)
+    del raw["props"]["layout"]
     with open(os.path.join(store.path, store.MANIFEST), "w") as f:
-        json.dump(man, f)
+        json.dump(raw, f)
     store.refresh(spark, ev.where("id >= 6000"))
     assert "layout" not in store.manifest()
     want = _sorted_pd(cagg_finalize(cagg_partial(

@@ -106,18 +106,18 @@ def test_snapshot_refresh_crash_before_commit_replays_cleanly(
     store.materialize(ev.where("event_id % 5 != 4"))
     delta = ev.where("event_id % 5 = 4")
 
-    real_publish = store._publish
+    real_commit = store.table.commit
     calls = {"n": 0}
 
-    def crashing_publish(man, prev=None):
+    def crashing_commit(man, keep_history=True):
         calls["n"] += 1
         raise RuntimeError("simulated crash before manifest commit")
 
-    store._publish = crashing_publish
+    store.table.commit = crashing_commit
     with pytest.raises(RuntimeError, match="simulated crash"):
         store.refresh(spark, delta, batch_id=7)
     assert calls["n"] == 1
-    store._publish = real_publish
+    store.table.commit = real_commit
     # pre-replay view is the PRE-refresh state (manifest unchanged)
     man = store.manifest()
     assert man["gen"] == 0 and man["last_batch"] is None
@@ -132,6 +132,13 @@ def test_snapshot_refresh_crash_before_commit_replays_cleanly(
     assert again.get("skipped_committed_batch")
 
 
+def _prev_chunks(store):
+    """{chunk: gen} of the snapshot before the committed one."""
+    prev = store.table.manifest()["history"][-1]
+    return {c.split("=", 1)[1]: int(g.split("=", 1)[1])
+            for g, c in (d.split("/") for d in prev["tables"][""])}
+
+
 def test_snapshot_gc_removes_superseded_and_orphaned_generations(
     spark, tmp_path
 ):
@@ -144,12 +151,13 @@ def test_snapshot_gc_removes_superseded_and_orphaned_generations(
     os.makedirs(orphan)
     store.refresh(spark, ev.where("event_id >= 1000"), batch_id=0)
     man = store.manifest()
+    prev = _prev_chunks(store)
     # GC grants the immediately-superseded versions a one-commit grace
     # (in-flight readers of the previous manifest keep their files), so
     # on-disk dirs = current ∪ previous manifest's chunks — but never
     # the uncommitted orphan
     live = {(c, g) for c, g in man["chunks"].items()}
-    live |= {(c, g) for c, g in man.get("prev_chunks", {}).items()}
+    live |= {(c, g) for c, g in prev.items()}
     for gdir in os.listdir(store.path):
         if not gdir.startswith("gen="):
             continue
@@ -168,7 +176,7 @@ def test_snapshot_gc_removes_superseded_and_orphaned_generations(
         spark, ev.where("event_id >= 1400"), batch_id=1)["touched_chunks"]
     man2 = store.manifest()
     for c in touched2:
-        if man.get("prev_chunks", {}).get(str(c)) == 0 \
+        if prev.get(str(c)) == 0 \
                 and man["chunks"].get(str(c), 0) != 0 \
                 and man2["chunks"][str(c)] != 0:
             assert not os.path.exists(
@@ -249,21 +257,21 @@ def test_snapshot_concurrent_refreshes_lose_no_update(spark, tmp_path):
     want = cagg_finalize(cagg_partial(ev, window_micros=WIN))
     pd.testing.assert_frame_equal(_sorted_pd(got), _sorted_pd(want))
     # the lock is released after the storm
-    assert not os.path.exists(store._lock_path())
+    assert not os.path.exists(store.table.lock)
 
 
 def test_writer_lease_blocks_and_times_out(spark, tmp_path):
     store = CaggSnapshotStore(str(tmp_path / "snap"),
                               window_micros=WIN, chunk_windows=16)
     os.makedirs(store.path, exist_ok=True)
-    with store._writer_lease():
+    with store.table.writer():
         other = CaggSnapshotStore(store.path, window_micros=WIN,
                                   chunk_windows=16)
         with pytest.raises(TimeoutError):
-            with other._writer_lease(timeout=0.3):
+            with other.table.writer(timeout=0.3):
                 pass  # pragma: no cover
     # released — a new writer acquires immediately
-    with store._writer_lease(timeout=1.0):
+    with store.table.writer(timeout=1.0):
         pass
 
 
@@ -273,25 +281,25 @@ def test_writer_lease_stale_lock_is_recovered(spark, tmp_path):
     store = CaggSnapshotStore(str(tmp_path / "snap"),
                               window_micros=WIN, chunk_windows=16)
     os.makedirs(store.path, exist_ok=True)
-    with open(store._lock_path(), "w") as f:
+    with open(store.table.lock, "w") as f:
         f.write("99999 0.0")  # dead pid, lease expired at epoch
-    with store._writer_lease(timeout=2.0):
+    with store.table.writer(timeout=2.0):
         pass
     # a garbage lock file gets a short mtime-based grace (it may be a
     # healthy writer caught between create and write), so an immediate
     # attempt times out...
-    with open(store._lock_path(), "w") as f:
+    with open(store.table.lock, "w") as f:
         f.write("not-a-lease")
     with pytest.raises(TimeoutError):
-        with store._writer_lease(timeout=0.3):
+        with store.table.writer(timeout=0.3):
             pass  # pragma: no cover
     # ...but once the grace passes it is recovered — a crash artifact
     # must not wedge the store forever
     past = time.time() - 60
-    os.utime(store._lock_path(), (past, past))
-    with store._writer_lease(timeout=2.0):
+    os.utime(store.table.lock, (past, past))
+    with store.table.writer(timeout=2.0):
         pass
-    assert not os.path.exists(store._lock_path())
+    assert not os.path.exists(store.table.lock)
 
 
 def test_writer_lease_lost_midjob_fails_loudly_and_spares_usurper(
@@ -304,13 +312,13 @@ def test_writer_lease_lost_midjob_fails_loudly_and_spares_usurper(
     store = CaggSnapshotStore(str(tmp_path / "snap"),
                               window_micros=WIN, chunk_windows=16)
     os.makedirs(store.path, exist_ok=True)
-    with store._writer_lease():
+    with store.table.writer() as man:
         # simulate expiry + takeover: the lock now belongs to a thief
-        with open(store._lock_path(), "w") as f:
+        with open(store.table.lock, "w") as f:
             f.write(f"thief.feed {time.time() + 300}")
         with pytest.raises(RuntimeError, match="lost before commit"):
-            store._publish({"gen": 0, "chunks": {}, "last_batch": None})
+            store.table.commit(man)
     # release must not delete a lock it no longer owns
-    with open(store._lock_path()) as f:
+    with open(store.table.lock) as f:
         assert f.read().split()[0] == "thief.feed"
-    os.unlink(store._lock_path())
+    os.unlink(store.table.lock)

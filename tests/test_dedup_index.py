@@ -8,9 +8,6 @@ catalog entry; these tests pin equivalence, append semantics, meta
 validation, and the no-index-shuffle plan shape.
 """
 
-import json
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,7 +19,7 @@ from pyhctsa_spark.operators.dedup_index import (
     query_minhash_index,
     read_index_meta,
 )
-from pyhctsa_spark.operators.tablefs import swap_names
+from pyhctsa_spark.operators.tablefs import SnapshotTable
 
 WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 
@@ -126,12 +123,13 @@ def test_compact_dedupes_replayed_appends_and_erases(spark, corpus, tmp_path):
     # a crash-replayed append: the same batch lands twice
     append_to_minhash_index(delta, path)
     append_to_minhash_index(delta, path)
-    bands = spark.read.parquet(path + "/bands")
+    table = SnapshotTable(path)
+    bands = table.read(spark, "bands")
     dup_rows = bands.count()
     stats = compact_minhash_index(spark, path)
     assert stats["bands"][0] == dup_rows
     assert stats["bands"][1] < dup_rows  # duplicates gone
-    clean = spark.read.parquet(path + "/bands")
+    clean = table.read(spark, "bands")
     assert clean.count() == clean.dropDuplicates().count()
     # probe results unchanged by compaction
     got = _pairs_set(query_minhash_index(
@@ -149,23 +147,7 @@ def test_compact_dedupes_replayed_appends_and_erases(spark, corpus, tmp_path):
         path, base.unionByName(delta),
     ))
     assert all(d1 != 7 for d1, _d2, _j in got2)
-    assert spark.read.parquet(path + "/sigs").where(
-        "doc_id = 7"
-    ).count() == 0
-
-
-def test_crash_recovery_restores_live_tables(spark, corpus, tmp_path):
-    base, _ = corpus
-    path = str(tmp_path / "idx")
-    build_minhash_index(base, path, threshold=0.3)
-    live = os.path.join(path, "bands")
-    tmp, old = swap_names(live)
-    # simulate a crash between the two renames: live missing, old present
-    os.rename(live, old)
-    assert not os.path.exists(live)
-    stats = compact_minhash_index(spark, path)  # entry recovers first
-    assert os.path.exists(live) and not os.path.exists(old)
-    assert stats["bands"][1] > 0
+    assert table.read(spark, "sigs").where("doc_id = 7").count() == 0
 
 
 def test_probe_plan_never_shuffles_the_index(spark, corpus, tmp_path):

@@ -50,7 +50,7 @@ def test_index_build_then_probe_then_append(spark, tmp_path, capsys):
                  "--mode", "index-build", "--index", idx]) == 0
     built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert built["docs_in"] == 5 and os.path.exists(
-        os.path.join(idx, "_index_meta.json")
+        os.path.join(idx, "_MANIFEST.json")
     )
 
     assert main(["--input", batch_dir, "--output", out1,

@@ -1,7 +1,7 @@
 """Streaming near-dup dedup (streaming/neardup_stream.py): survivor
 semantics across micro-batches (intra-batch collapse, index screening,
-survivor indexing), foreachBatch replay idempotence, and the
-bootstrap-required guard. The heavy probe machinery itself is oracled
+survivor indexing), foreachBatch replay idempotence (after a commit and
+after a crash at it), and the bootstrap-required guard. The heavy probe machinery itself is oracled
 via minhash_index_delta_pairs; these tests pin the STREAM contract.
 """
 
@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.dedup_index import build_minhash_index
 from pyhctsa_spark.streaming.neardup_stream import (
     process_neardup_batch,
@@ -82,19 +83,30 @@ def test_sequential_batches_survivor_semantics(spark, stores):
     assert (21, 1) in got and (31, 2) in got
 
 
-def test_replay_is_idempotent(spark, stores):
+def test_replay_is_idempotent(spark, stores, tmp_path, monkeypatch):
     idx, sink = stores
     build_minhash_index(_empty(spark), idx, threshold=0.3)
     b0, b1, _ = _batches(spark)
     process_neardup_batch(b0, 0, index_path=idx, sink_dir=sink)
-    # committed replay: marker short-circuits, sink unchanged
+    # committed replay: the committed batch id short-circuits, sink
+    # unchanged
     before = _sink_ids(spark, sink)
     process_neardup_batch(b0, 0, index_path=idx, sink_dir=sink)
     assert _sink_ids(spark, sink) == before
-    # crash-before-marker replay: marker removed, batch reprocessed —
-    # same survivor set, no sink duplication (batch=0 dir overwritten),
-    # and later batches still decide identically
-    os.remove(os.path.join(idx, "_stream_commits", "0"))
+    # crash-before-commit replay: batch 0 crashes at its index commit
+    # on a fresh index and is redelivered — same survivor set, no sink
+    # duplication (batch=0 dir overwritten), and later batches still
+    # decide identically
+    idx, sink = str(tmp_path / "idx2"), str(tmp_path / "sink2")
+    build_minhash_index(_empty(spark), idx, threshold=0.3)
+
+    def crash(path, text):
+        raise RuntimeError("injected crash at the commit")
+
+    monkeypatch.setattr(tablefs, "publish", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        process_neardup_batch(b0, 0, index_path=idx, sink_dir=sink)
+    monkeypatch.undo()
     process_neardup_batch(b0, 0, index_path=idx, sink_dir=sink)
     rows = spark.read.parquet(sink).where("batch = 0").collect()
     assert {r["doc_id"] for r in rows} == before

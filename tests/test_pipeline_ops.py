@@ -186,7 +186,9 @@ def test_ivf_materialized_index_roundtrip(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     stats = ivf_write_index(emb, path, num_centroids=8)
     assert stats["nlist"] <= 8
-    lists = spark.read.parquet(f"{path}/lists")
+    from pyhctsa_spark.operators.tablefs import SnapshotTable
+
+    lists = SnapshotTable(path).read(spark, "lists")
     assert lists.count() == emb.count()
 
     q = emb.where(F.col("vec_id") < 5)

@@ -267,8 +267,6 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
     build-time quantizer/codebooks — faiss train-then-add), and the
     appended index with a corpus-wide rerank must equal exact cosine
     top-k over the union. Compaction folds the heap; drop_ids erases."""
-    import os
-
     from pyhctsa_spark.operators.pq import (
         append_to_ivfpq_index,
         compact_ivfpq_index,
@@ -276,6 +274,7 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
         knn_ivfpq_index,
         read_pq_meta,
     )
+    from pyhctsa_spark.operators.tablefs import SnapshotTable
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     base = emb.where("vec_id % 5 != 0")
@@ -291,10 +290,9 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
     assert counters["appended"] == delta.count()
     assert 0.0 < counters["assign_cos_mean"] <= 1.0
     # heap holds the delta's codes; the partition tree is untouched
-    assert spark.read.parquet(f"{idx}/lists").count() == base.count()
-    assert (
-        spark.read.parquet(f"{idx}/lists_delta").count() == delta.count()
-    )
+    table = SnapshotTable(idx)
+    assert table.read(spark, "lists").count() == base.count()
+    assert table.read(spark, "lists_delta").count() == delta.count()
 
     exact = {
         (r["qid"], r["rank"]): r["nid"]
@@ -311,7 +309,7 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
     stats = compact_ivfpq_index(spark, idx,
                                 drop_ids=delta.select("vec_id"))
     assert stats["lists"] == (emb.count(), base.count())
-    assert not os.path.exists(f"{idx}/lists_delta")
+    assert table.read(spark, "lists_delta") is None
     base_exact = {
         (r["qid"], r["rank"]): r["nid"]
         for r in knn_bruteforce(base, qs, k=3).collect()
@@ -322,38 +320,3 @@ def test_ivfpq_index_append_erase_lifecycle(spark, tmp_path):
                                  rerank=500, corpus=base).collect()
     }
     assert got2 == base_exact
-
-
-def test_ivfpq_crash_recovery_restores_live_tables(spark, tmp_path):
-    """A compact that crashed between the two renames of its lists/
-    swap leaves only .compact_old.lists; the next compact_ivfpq_index
-    restores it before reading, so no row is lost or changed."""
-    import os
-
-    from pyhctsa_spark.operators.pq import (
-        compact_ivfpq_index,
-        ivfpq_write_index,
-    )
-    from pyhctsa_spark.operators.tablefs import swap_names
-
-    emb = _emb_df(spark, np.random.default_rng(5).normal(size=(200, 16)))
-    idx = str(tmp_path / "ivfpq")
-    ivfpq_write_index(emb, idx, m=8, ksub=16, num_centroids=4,
-                      pq_train_iters=0, ivf_train_iters=2)
-    live = os.path.join(idx, "lists")
-
-    def rows():
-        return sorted(
-            (r["nid"], r["cid"], tuple(r["code"]))
-            for r in spark.read.parquet(live).collect()
-        )
-
-    want = rows()
-    _, old = swap_names(live)
-    # simulate a crash between the two renames: live missing, old present
-    os.rename(live, old)
-    assert not os.path.exists(live)
-    stats = compact_ivfpq_index(spark, idx)  # entry recovers first
-    assert os.path.exists(live) and not os.path.exists(old)
-    assert stats["lists"] == (emb.count(), emb.count())
-    assert rows() == want

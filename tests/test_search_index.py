@@ -2,7 +2,8 @@
 must equal the ad-hoc scorer (search.bm25_topk) bit-for-bit at the
 6-decimal rounding, query scans must be partition-pruned to the query's
 term buckets, appends must be delta-proportional and exact, and
-compaction must repair replayed appends and erase documents."""
+compaction must repair replayed appends and erase documents. Crashes
+at the commit are in tests/test_snapshot_table.py."""
 
 import os
 
@@ -79,21 +80,31 @@ def test_append_delta_equals_full_rebuild(spark, corpus, tmp_path):
     build_search_index(old, path, n_buckets=16)
     append_to_search_index(delta, path)
 
-    got = _rows(query_search_index(spark, path, QUERY, k=10))
+    out = query_search_index(spark, path, QUERY, k=10)
+    got = _rows(out)
     want = _rows(bm25_topk(corpus, QUERY, k=10))
     assert got == want
+    # the scan over both live generations still prunes to the query's
+    # term buckets
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "term_bucket" in plan.split("PartitionFilters:")[1][:300]
 
-    # postings/ accumulated the delta without rewriting the old files:
-    # appended buckets contain >1 parquet file
+    # postings/ accumulated the delta as a second live generation
+    # without rewriting the old files: appended buckets hold >1 file
+    from pyhctsa_spark.operators.tablefs import SnapshotTable
+
     post_dir = os.path.join(path, "postings")
-    nfiles = sum(
-        len([f for f in files if f.endswith(".parquet")])
-        for _, _, files in os.walk(post_dir)
-    )
-    nbuckets = len(
-        [d for d in os.listdir(post_dir) if d.startswith("term_bucket=")]
-    )
-    assert nfiles > nbuckets
+    live = SnapshotTable(path).manifest()["tables"]["postings"]
+    assert len(live) == 2
+    files = [
+        (b, f)
+        for g in live
+        for b in os.listdir(os.path.join(post_dir, g))
+        if b.startswith("term_bucket=")
+        for f in os.listdir(os.path.join(post_dir, g, b))
+        if f.endswith(".parquet")
+    ]
+    assert len(files) > len({b for b, _ in files})
 
 
 def test_compact_repairs_replayed_append(spark, corpus, tmp_path):
@@ -143,34 +154,6 @@ def test_compact_erases_documents(spark, corpus, tmp_path):
     want = _rows(bm25_topk(survivors, QUERY, k=10))
     assert got == want
     assert not set(top3) & {r[1] for r in got}
-
-
-def test_recover_after_crashed_swap(spark, corpus, tmp_path):
-    import shutil
-
-    from pyhctsa_spark.operators.search import bm25_topk
-    from pyhctsa_spark.operators.search_index import (
-        build_search_index,
-        query_search_index,
-    )
-
-    path = str(tmp_path / "idx")
-    build_search_index(corpus, path, n_buckets=8)
-    # simulate a crash between the two renames of a df/ swap: live
-    # missing, old present (plus a stale tmp for the postings table)
-    d = os.path.join(path, "df")
-    os.rename(d, os.path.join(path, ".compact_old.df"))
-    shutil.copytree(
-        os.path.join(path, "postings"),
-        os.path.join(path, ".compact_tmp.postings"),
-    )
-
-    got = _rows(query_search_index(spark, path, QUERY, k=10))
-    want = _rows(bm25_topk(corpus, QUERY, k=10))
-    assert got == want
-    assert os.path.exists(d)
-    assert not os.path.exists(os.path.join(path, ".compact_old.df"))
-    assert not os.path.exists(os.path.join(path, ".compact_tmp.postings"))
 
 
 def test_empty_query_raises(spark, built):

@@ -1,21 +1,22 @@
 """Streaming search-index maintenance (streaming/search_stream.py):
 stream == batch (indexed scores after N micro-batches equal an ad-hoc
-BM25 over everything ingested), replay idempotence via the commit
-marker, and crash-window self-healing (pending marker -> compact ->
-re-append) — the contract that keeps df_t/stats exact when foreachBatch
-redelivers a batch whose index append partially landed."""
+BM25 over everything ingested), replay idempotence via the batch id
+committed with the index rows, and a crash inside the index append
+followed by a redelivery — the contract that keeps df_t/stats exact
+when foreachBatch redelivers a batch whose append did not commit."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.search import bm25_topk
 from pyhctsa_spark.operators.search_index import (
-    append_to_search_index,
     build_search_index,
     query_search_index,
 )
+from pyhctsa_spark.operators.tablefs import SnapshotTable
 from pyhctsa_spark.streaming.search_stream import (
     process_index_batch,
     stream_search_indexing,
@@ -79,36 +80,38 @@ def test_replay_after_commit_is_noop(spark, stores):
     b0 = _df(spark, 0, 8)
     process_index_batch(b0, 0, index_path=idx, sink_dir=sink)
     before = _rows(query_search_index(spark, idx, QUERY, k=8))
-    n_post = spark.read.parquet(f"{idx}/postings").count()
+    n_post = SnapshotTable(idx).read(spark, "postings").count()
     # foreachBatch redelivery after a successful commit
     process_index_batch(b0, 0, index_path=idx, sink_dir=sink)
-    assert spark.read.parquet(f"{idx}/postings").count() == n_post
+    assert SnapshotTable(idx).read(spark, "postings").count() == n_post
     assert _rows(query_search_index(spark, idx, QUERY, k=8)) == before
 
 
-def test_crash_window_replay_self_heals(spark, stores):
+def test_crash_window_replay_self_heals(spark, stores, monkeypatch):
     idx, sink = stores
     build_search_index(_empty(spark), idx, n_buckets=8)
     process_index_batch(
         _df(spark, 0, 6), 0, index_path=idx, sink_dir=sink
     )
-    # simulate batch 1 crashing INSIDE its index append: the pending
-    # marker exists, the append (fully, here) landed, no commit marker
+    # batch 1 crashes INSIDE its index append: its postings, df partials
+    # and merged stats are written, the manifest publish fails
     b1 = _df(spark, 6, 10)
-    pend = os.path.join(idx, "_stream_pending", "1")
-    os.makedirs(os.path.dirname(pend), exist_ok=True)
-    with open(pend, "w") as fh:
-        fh.write("x")
-    append_to_search_index(b1, idx)
-    # redelivery: without self-healing this would double-count batch 1's
-    # postings, df_t and stats
+
+    def crash(path, text):
+        raise RuntimeError("injected crash at the commit")
+
+    monkeypatch.setattr(tablefs, "publish", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        process_index_batch(b1, 1, index_path=idx, sink_dir=sink)
+    monkeypatch.undo()
+    # redelivery: batch 1's postings, df_t and stats count once
     process_index_batch(b1, 1, index_path=idx, sink_dir=sink)
     got = _rows(query_search_index(spark, idx, QUERY, k=10))
     want = _rows(bm25_topk(_df(spark, 0, 10), QUERY, k=10))
     assert got == want
     # exactly one posting row per (term, doc)
     dup = (
-        spark.read.parquet(f"{idx}/postings")
+        SnapshotTable(idx).read(spark, "postings")
         .groupBy("term", "doc_id").count().where(F.col("count") > 1).count()
     )
     assert dup == 0

@@ -1,8 +1,8 @@
 """The table lifecycle (operators/tablefs.py): crash repair of the
 tmp/old directory swap on plain directories, the swap itself, and the
-atomic file publish that the checkpoint snapshot and the index meta
-files go through — a write that fails halfway must leave the previous
-file byte-identical and no ``.tmp`` behind."""
+atomic file publish that the checkpoint snapshot and the snapshot
+table's manifest go through — a write that fails halfway must leave the
+previous file byte-identical and no ``.tmp`` behind."""
 
 import builtins
 import errno
@@ -191,11 +191,11 @@ def test_failed_index_meta_write_keeps_previous_meta(
     )
     idx = str(tmp_path / "idx")
     meta = build_search_index(docs, idx, n_buckets=4)
-    path = os.path.join(idx, "_search_meta.json")
+    path = os.path.join(idx, "_MANIFEST.json")
     with open(path, "rb") as f:
         before = f.read()
 
-    torn_write("_search_meta.json")
+    torn_write("_MANIFEST.json")
     with pytest.raises(OSError, match="disk full"):
         build_search_index(docs, idx, n_buckets=4)
     _assert_survived(path, before)

@@ -9,7 +9,8 @@ this). The invariants pinned here:
 - append assigns the delta with the index's OWN centroids, bit-equal
   to what the build assignment would produce for the same vectors;
 - replayed appends are repaired by compaction; drop_ids erases vectors
-  from searchability; a crashed swap is recovered by any entry point.
+  from searchability (crashes at the commit are in
+  tests/test_snapshot_table.py).
 
 The value-level cross-engine check is the knn_ivf_index_delta catalog
 entry (same DuckDB brute-force-cosine oracle as knn_ivf).
@@ -29,9 +30,14 @@ from pyhctsa_spark.operators.similarity import (
     knn_ivf_index,
     read_ivf_meta,
 )
-from pyhctsa_spark.operators.tablefs import swap_names
+from pyhctsa_spark.operators.tablefs import SnapshotTable
 
 SF = "/root/testdata/sf0.001"
+
+
+def _read(spark, path, name):
+    """Sub-table ``name`` of the index at ``path`` (None when empty)."""
+    return SnapshotTable(path).read(spark, name)
 
 
 @pytest.fixture(scope="module")
@@ -77,10 +83,8 @@ def test_append_then_full_probe_equals_bruteforce(spark, emb, split,
     assert counters["build_assign_cos_mean"] > 0.0
 
     # the delta lands in the append heap; the partition tree is untouched
-    assert spark.read.parquet(f"{path}/lists").count() == base.count()
-    assert (
-        spark.read.parquet(f"{path}/lists_delta").count() == delta.count()
-    )
+    assert _read(spark, path, "lists").count() == base.count()
+    assert _read(spark, path, "lists_delta").count() == delta.count()
 
     q = emb.where(F.col("vec_id") < 5)
     nlist = read_ivf_meta(path)["nlist"]
@@ -101,12 +105,10 @@ def test_append_assignment_matches_build_centroids(spark, emb, split,
     path = str(tmp_path / "ivf")
     ivf_write_index(base, path, num_centroids=8)
     append_to_ivf_index(delta, path)
-    cents = (
-        spark.read.parquet(f"{path}/centroids").orderBy("cid").toPandas()
-    )
+    cents = _read(spark, path, "centroids").orderBy("cid").toPandas()
     C = np.stack(cents.centroid.to_numpy())
     got = (
-        spark.read.parquet(f"{path}/lists_delta")
+        _read(spark, path, "lists_delta")
         .join(delta.select(F.col("vec_id").alias("nid")), "nid", "semi")
         .select("nid", "cv", "cid")
         .toPandas()
@@ -124,15 +126,15 @@ def test_compact_repairs_replayed_append(spark, emb, split, tmp_path):
     append_to_ivf_index(delta, path)
     append_to_ivf_index(delta, path)  # replay (crash-retry semantics)
     n_dup = (
-        spark.read.parquet(f"{path}/lists").count()
-        + spark.read.parquet(f"{path}/lists_delta").count()
+        _read(spark, path, "lists").count()
+        + _read(spark, path, "lists_delta").count()
     )
     assert n_dup == base.count() + 2 * delta.count()
     stats = compact_ivf_index(spark, path)
     assert stats["lists"] == (n_dup, emb.count())
     # compaction folded the heap into the partition tree
-    assert not os.path.exists(f"{path}/lists_delta")
-    assert spark.read.parquet(f"{path}/lists").count() == emb.count()
+    assert _read(spark, path, "lists_delta") is None
+    assert _read(spark, path, "lists").count() == emb.count()
     # post-compact full probe still exact
     q = emb.where(F.col("vec_id") < 3)
     nlist = read_ivf_meta(path)["nlist"]
@@ -160,19 +162,6 @@ def test_compact_erases_vectors(spark, emb, split, tmp_path):
     assert not (set(full.nid) & dropped)
 
 
-def test_crash_recovery_restores_live_tables(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
-    ivf_write_index(emb, path, num_centroids=8)
-    live = os.path.join(path, "lists")
-    tmp, old = swap_names(live)
-    # simulate a crash between the two renames: live missing, old present
-    os.rename(live, old)
-    assert not os.path.exists(live)
-    stats = compact_ivf_index(spark, path)  # entry recovers first
-    assert os.path.exists(live) and not os.path.exists(old)
-    assert stats["lists"][1] == emb.count()
-
-
 def test_append_heap_is_small_and_folds_away(spark, emb, split, tmp_path):
     """The LSM contract: an append writes O(delta-bytes) files into the
     heap — NEVER one file per touched list in the partition tree (the
@@ -182,13 +171,15 @@ def test_append_heap_is_small_and_folds_away(spark, emb, split, tmp_path):
     base, delta = split
     path = str(tmp_path / "ivf")
     ivf_write_index(base, path, num_centroids=8)
+    table = SnapshotTable(path)
     lists_dir = os.path.join(path, "lists")
-    heap_dir = os.path.join(path, "lists_delta")
     tree_files0 = sum(len(fs) for _, _, fs in os.walk(lists_dir))
 
     append_to_ivf_index(delta, path)
     # partition tree untouched; heap holds O(delta/0.5GB) files -> 1 here
     assert sum(len(fs) for _, _, fs in os.walk(lists_dir)) == tree_files0
+    (heap_gen,) = table.manifest()["tables"]["lists_delta"]
+    heap_dir = os.path.join(path, "lists_delta", heap_gen)
     heap_files = [f for f in os.listdir(heap_dir) if f.endswith(".parquet")]
     assert len(heap_files) == 1
     # heap rows carry cid as a data column (probe-side filterable)
@@ -196,10 +187,39 @@ def test_append_heap_is_small_and_folds_away(spark, emb, split, tmp_path):
     assert heap.where(F.col("cid").isNull()).count() == 0
 
     compact_ivf_index(spark, path)
-    assert not os.path.exists(heap_dir)
-    lists = spark.read.parquet(lists_dir)
+    assert table.manifest()["tables"]["lists_delta"] == []
+    (lists_gen,) = table.manifest()["tables"]["lists"]
+    lists = table.read(spark, "lists")
     assert lists.count() == emb.count()
     assert all(
         f.startswith("cid=") or not f.endswith(".parquet")
-        for f in os.listdir(lists_dir)
+        for f in os.listdir(os.path.join(lists_dir, lists_gen))
     )
+
+
+def test_probe_after_append_prunes_lists_on_cid(spark, emb, split,
+                                                 tmp_path, monkeypatch):
+    """With the build's lists and the append heap both live, the probe's
+    lists scan still reads only the probed cid partitions."""
+    from pyhctsa_spark.operators import similarity
+
+    base, delta = split
+    path = str(tmp_path / "ivf")
+    ivf_write_index(base, path, num_centroids=8)
+    append_to_ivf_index(delta, path)
+    plans = []
+    score = similarity._score_and_rank
+
+    def recording(cand, k):
+        plans.append(cand._jdf.queryExecution().executedPlan().toString())
+        return score(cand, k)
+
+    monkeypatch.setattr(similarity, "_score_and_rank", recording)
+    knn_ivf_index(spark, path, emb.where(F.col("vec_id") < 2), k=3,
+                  nprobe=1)
+    (plan,) = plans
+    lists_scan = [seg for seg in plan.split("FileScan")[1:]
+                  if "PartitionFilters: [" in seg
+                  and "PartitionFilters: []" not in seg]
+    assert lists_scan and "cid" in \
+        lists_scan[0].split("PartitionFilters:")[1][:200]

@@ -1,10 +1,9 @@
 """Streaming IVF-index maintenance (streaming/vector_stream.py):
 stream == batch (full-probe answers after N micro-batches equal brute
-force over everything ingested), replay idempotence via the commit
-marker, and crash-window self-healing (pending marker -> compact out
-the batch's ids -> re-append) — the contract that keeps top-k exact
-when foreachBatch redelivers a batch whose heap append partially
-landed."""
+force over everything ingested), replay idempotence via the batch id
+committed with the heap rows, and a crash inside the heap append
+followed by a redelivery — the contract that keeps top-k exact when
+foreachBatch redelivers a batch whose append did not commit."""
 
 import os
 
@@ -12,13 +11,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyhctsa_spark.operators import tablefs
 from pyhctsa_spark.operators.similarity import (
-    append_to_ivf_index,
     ivf_write_index,
     knn_bruteforce,
     knn_ivf_index,
     read_ivf_meta,
 )
+from pyhctsa_spark.operators.tablefs import SnapshotTable
 from pyhctsa_spark.streaming.vector_stream import (
     process_vector_batch,
     stream_vector_indexing,
@@ -77,36 +77,37 @@ def test_replay_after_commit_is_noop(spark, stores):
     idx, sink = stores
     b0 = _vecs(spark, 40, 60)
     process_vector_batch(b0, 0, index_path=idx, sink_dir=sink)
-    n_heap = spark.read.parquet(f"{idx}/lists_delta").count()
+    n_heap = SnapshotTable(idx).read(spark, "lists_delta").count()
     # foreachBatch redelivery after a successful commit
     process_vector_batch(b0, 0, index_path=idx, sink_dir=sink)
-    assert spark.read.parquet(f"{idx}/lists_delta").count() == n_heap
+    assert SnapshotTable(idx).read(spark, "lists_delta").count() == n_heap
     assert _probe_equals_bruteforce(spark, idx, _vecs(spark, 0, 60))
 
 
-def test_crash_window_replay_self_heals(spark, stores):
+def test_crash_window_replay_self_heals(spark, stores, monkeypatch):
     idx, sink = stores
     process_vector_batch(
         _vecs(spark, 40, 60), 0, index_path=idx, sink_dir=sink
     )
-    # simulate batch 1 crashing INSIDE its index append: the pending
-    # marker exists, the append (fully, here) landed, no commit marker
+    # batch 1 crashes INSIDE its index append: its heap rows are
+    # written, the manifest publish fails
     b1 = _vecs(spark, 60, 75)
-    pend = os.path.join(idx, "_stream_pending", "1")
-    os.makedirs(os.path.dirname(pend), exist_ok=True)
-    with open(pend, "w") as fh:
-        fh.write("x")
-    append_to_ivf_index(b1, idx)
-    # redelivery: without self-healing, batch 1's vectors would sit in
-    # the heap twice and occupy duplicate top-k slots
+
+    def crash(path, text):
+        raise RuntimeError("injected crash at the commit")
+
+    monkeypatch.setattr(tablefs, "publish", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        process_vector_batch(b1, 1, index_path=idx, sink_dir=sink)
+    monkeypatch.undo()
+    # redelivery: batch 1's vectors sit in the index once, so no
+    # duplicate occupies a top-k slot
     process_vector_batch(b1, 1, index_path=idx, sink_dir=sink)
     assert _probe_equals_bruteforce(spark, idx, _vecs(spark, 0, 75))
+    table = SnapshotTable(idx)
     dup = (
-        spark.read.parquet(f"{idx}/lists")
-        .select("nid")
-        .unionByName(
-            spark.read.parquet(f"{idx}/lists_delta").select("nid")
-        )
+        table.read(spark, "lists").select("nid")
+        .unionByName(table.read(spark, "lists_delta").select("nid"))
         .groupBy("nid").count().where(F.col("count") > 1).count()
     )
     assert dup == 0
